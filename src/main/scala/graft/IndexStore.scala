@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -68,15 +67,12 @@ object IndexStore {
       .foreach(deleteRecursively)
   }
 
-  private val fpCache =
-    new ConcurrentHashMap[(SparkSession, String, String), (Long, Long)]()
-
   /** (rows, crc32 content sum) of `$dir/$table.parquet` — the
     * staleness key. Reads the parquet directly (not Tables.load) so
     * the fingerprint is a pure scan with no balance() shuffle. */
   private def fingerprint(spark: SparkSession, dir: String,
                           table: String): (Long, Long) =
-    fpCache.computeIfAbsent((spark, dir, table), { _ =>
+    SessionCaches.memo(spark, "indexStore.fingerprint", (dir, table)) {
       import spark.implicits._
       val df = spark.read.parquet(s"$dir/$table.parquet")
       // crc32 wants a string: fingerprint the row's json rendering —
@@ -84,7 +80,7 @@ object IndexStore {
       df.agg(count(lit(1)), coalesce(sum(crc32(to_json(struct(
           df.columns.map(col).toIndexedSeq: _*)))), lit(0L)))
         .as[(Long, Long)].head()
-    })
+    }
 
   /** The content-keyed directory for index `kind` derived from
     * (`dir`, `table`). `params` is the builder's ALGORITHM-parameter
@@ -323,9 +319,4 @@ object IndexStore {
     if (cs != null) cs.foreach(deleteRecursively)
     f.delete(); ()
   }
-
-  /** Drop a session's memoized fingerprints (the artifacts themselves
-    * are cross-session by design and are never swept here). */
-  def clearCaches(spark: SparkSession): Unit =
-    fpCache.keySet.removeIf(_._1 eq spark)
 }

@@ -30,24 +30,24 @@ object Tables {
     * file-listing-cache move, applied at the API boundary). Safe
     * because a (dir, name) pair is immutable for a session's lifetime
     * everywhere this engine reads: the driver's testdata is read-only
-    * and test fixtures use fresh temp dirs per suite. Writers that DO
-    * regenerate a path in-session (none today) must call
-    * [[clearCache]]. */
-  private val loadCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  /** Drop this session's memoized load plans (lifecycle hook, same
-    * contract as the module clearCaches hooks — needed only if a
-    * session rewrites a table path it already loaded). */
-  def clearCache(spark: SparkSession): Unit =
-    loadCache.keySet.removeIf(_._1 eq spark)
-
+    * and test fixtures use fresh temp dirs per suite. A session that
+    * regenerates a path it already loaded calls
+    * [[SessionCaches.release]]. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadCache.computeIfAbsent((spark, dir, name), { _ =>
+    SessionCaches.memo(spark, "tables.load", (dir, name)) {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       val norm = if (name == "events") normalizeEventTs(df) else df
       if (KernelTables(name)) balance(spark, norm) else norm
-    })
+    }
+
+  /** Row count of `$dir/$table.parquet`, memoized per session. Reads
+    * the parquet directly (not [[load]]) so the count is a pure
+    * metadata job: the kernel-table [[balance]] guard would otherwise
+    * put a repartition shuffle under a row count. */
+  def rowCount(spark: SparkSession, dir: String, table: String): Long =
+    SessionCaches.memo(spark, "tables.rowCount", (dir, table)) {
+      spark.read.parquet(s"$dir/$table.parquet").count()
+    }
 
   /** Tables whose consumers are CPU-bound per-row kernels (shingling,
     * minhash, BPE, PII scrub, dot products) rather than

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{IndexStore, Tables}
+import graft.{IndexStore, SessionCaches, Tables}
 import graft.operators.ConnectedComponents
 
 /** The PERSISTED form of the near-dup machinery's standing state —
@@ -72,20 +72,16 @@ object BandIndex {
 
   /** Bands of the incoming batch — the ONLY signature-kernel pass in
     * the indexed queries' plans. Session-memoized per corpus (round-16
-    * optimization, the [[Dedup.cachedCorpusBands]] discipline): five
-    * indexed queries consume this frame and each re-ran the batch-half
-    * kernel per invocation. The memo's lineage hashes ONLY the batch
-    * half, so the indexed plans' "no corpus-side signature pass"
-    * contract (BandIndexSpec's one-kernel pin) is untouched. */
-  private val batchBandsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+    * optimization): five indexed queries consume this frame and each
+    * re-ran the batch-half kernel per invocation. The memo's lineage
+    * hashes ONLY the batch half, so the indexed plans' "no corpus-side
+    * signature pass" contract (BandIndexSpec's one-kernel pin) is
+    * untouched. */
   private[graft] def batchBands(spark: SparkSession, dir: String): DataFrame =
-    batchBandsCache.computeIfAbsent((spark, dir), { _ =>
+    SessionCaches.persisted(spark, "bandIndex.batchBands", dir) {
       Dedup.bandsOf(Dedup.minhashSignaturesOf(spark,
           Dedup.cachedDocShingles(spark, dir).filter(batchFilter)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The indexed acceptance decision, parameterized by WHICH corpus
     * band frame plays the index — [[minhashIncrementalIndexed]] passes
@@ -159,9 +155,6 @@ object BandIndex {
     * module's stated 100 TB posture — round-9 advice). */
   val ClusterBroadcastMaxRows = 1000000L
 
-  private val clusterCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
   /** [[Dedup.neardupClusters]] over the stored label artifact — the
     * session that ANSWERS cluster queries is rarely the session that
     * RESOLVED them; this is the read path. The size join's strategy is
@@ -171,8 +164,8 @@ object BandIndex {
     val comp = storedComponents(spark, dir)
     val sizes = comp.groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
-    val nClusters = clusterCountCache.computeIfAbsent((spark, dir),
-      { _ => Long.box(sizes.count()) }).longValue()
+    val nClusters =
+      SessionCaches.memo(spark, "bandIndex.clusterCount", dir)(sizes.count())
     val hinted =
       if (nClusters <= ClusterBroadcastMaxRows) broadcast(sizes)
       else sizes.hint("merge")
@@ -272,36 +265,26 @@ object BandIndex {
         coalesce(!col("m_after"), lit(true)).as("accepted_after"))
   }
 
-  /** Session-memoized resolution of the RETRACTED pair graph — the
-    * [[Dedup.neardupComponents]] clusterCache discipline applied to the
-    * erased-free graph (round-16 optimization): the label propagation
-    * is a ~12-job synchronous loop (measured 2.3 s warm at sf0.1, the
-    * bulk of `index_retract`), and its input — the memoized pair frame
-    * minus erased endpoints — is session-constant, so resolving it once
-    * per (session, corpus) and re-PUBLISHING per invocation keeps the
-    * declared operation (every run publishes a fresh versioned
-    * artifact) while paying the resolution where every other cluster
-    * query pays it: once. */
-  private val retractedCcCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  def clearCaches(spark: SparkSession): Unit = {
-    graft.SessionCaches.clear(spark, Seq(retractedCcCache, batchBandsCache))
-    clusterCountCache.keySet.removeIf(_._1 eq spark)
-    ()
-  }
-
   /** The retracted CC label artifact: a fresh resolution over the
     * near-dup pair graph with every pair touching an erased doc
     * removed, published as a versioned sibling of the standing label
     * artifact. Returned for the spec; `index_retract`'s oracle covers
-    * the band side, this covers the label side. */
+    * the band side, this covers the label side.
+    *
+    * The resolution is session-memoized (round-16 optimization): the
+    * label propagation is a ~12-job synchronous loop (measured 2.3 s
+    * warm at sf0.1, the bulk of `index_retract`), and its input — the
+    * memoized pair frame minus erased endpoints — is session-constant,
+    * so resolving it once per (session, corpus) and re-PUBLISHING per
+    * invocation keeps the declared operation (every run publishes a
+    * fresh versioned artifact) while paying the resolution where every
+    * other cluster query pays it: once. */
   private[graft] def retractedComponents(spark: SparkSession, dir: String): DataFrame = {
-    val resolved = retractedCcCache.computeIfAbsent((spark, dir), { _ =>
+    val resolved = SessionCaches.memo(spark, "bandIndex.retractedComponents", dir) {
       val pairs = Dedup.cachedMinhashPairs(spark, dir)
         .filter(!(col("d1") % 10 === 4) && !(col("d2") % 10 === 4))
       ConnectedComponents.resolve(pairs.select("d1", "d2"), "d1", "d2")
-    })
+    }
     IndexStore.writeVersioned(spark, dir, "documents", "neardup_cc_labels_retracted",
       resolved, Dedup.MinhashIndexParams)
   }

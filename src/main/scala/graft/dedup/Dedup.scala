@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Tables
+import graft.{SessionCaches, Tables}
 import graft.operators.ConnectedComponents
 
 /** Deduplication operators for a training-data pipeline, smallest to
@@ -91,29 +91,9 @@ object Dedup {
     * per-CALL `.persist()` (round 2 initially) leaked one cached RDD
     * per invocation for the session lifetime; the memo bounds the
     * cache at one entry per corpus and makes repeated queries reuse
-    * it. Spark evicts MEMORY_AND_DISK blocks under pressure, so the
-    * bound is a ceiling, not a pin. */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
+    * it. */
   def cachedDocShingles(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.computeIfAbsent((spark, dir), { _ =>
-      docShingles(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  /** Explicit lifecycle hook for the session-scoped memos: unpersist
-    * and drop every cached frame belonging to `spark`. The memos are
-    * bounded (one entry per corpus) and MEMORY_AND_DISK-evictable, so
-    * the driver harness never needs this — a long-lived multi-tenant
-    * session calls it when a corpus is retired. */
-  def clearCaches(spark: SparkSession): Unit = {
-    graft.SessionCaches.clear(spark,
-      Seq(shingleCache, bandsCache, pairsCache, clusterCache, clusterCacheAlt))
-    clusterGateCache.keySet.removeIf(_._1 eq spark)
-    docCountCache.keySet.removeIf(_._1 eq spark)
-    ()
-  }
+    SessionCaches.persisted(spark, "dedup.shingles", dir)(docShingles(spark, dir))
 
   private val shinglesSql =
     """list_distinct(CASE WHEN len(ws) < 3 THEN []
@@ -472,17 +452,10 @@ object Dedup {
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardCapped(spark, dir, AuditMaxDocs)
 
-  /** Memoized per-corpus doc count for the audit-cap guard — the
-    * guard must not re-pay a count job on every bench rep. */
-  private val docCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private[graft] def ngramJaccardCapped(spark: SparkSession, dir: String,
                                         maxDocs: Long): DataFrame = {
-    // zero-column parquet count (column-pruned scan over footer
-    // row-counts), memoized per corpus dir
-    val nDocs: Long = docCountMemo.computeIfAbsent(dir,
-      _ => spark.read.parquet(s"$dir/documents.parquet").count())
+    // memoized, so the guard does not re-pay a count job per rep
+    val nDocs = Tables.rowCount(spark, dir, "documents")
     require(nDocs <= maxDocs,
       s"ngram_jaccard is the declared O(n^2) audit-tier baseline: " +
         s"$nDocs docs exceeds the $maxDocs-doc cap (measured sf10 engine " +
@@ -622,26 +595,20 @@ object Dedup {
 
   /** Session-memoized full-corpus banding frame — the (doc_id, band,
     * sig) output of the 32-hash signature kernel + banding over
-    * [[cachedDocShingles]], persisted per (session, corpus) exactly
-    * like the shingle frame it derives from (round-16 optimization).
-    * Through r15 every consumer — the self-dedup candidates,
+    * [[cachedDocShingles]], persisted per (session, corpus) (round-16
+    * optimization). Through r15 every consumer — the self-dedup candidates,
     * containment, the recall certification, the bucket audit, the
     * probe slices — re-ran the signature kernel per INVOCATION; the
     * memo runs it once per session and the ~6 consumers share the
-    * materialized rows. Bounded at one entry per corpus,
-    * MEMORY_AND_DISK-evictable; the first-vs-median split in the bench
+    * materialized rows; the first-vs-median split in the bench
     * keeps the materialization cost visible. (The incremental twin
     * `minhash_incremental` deliberately keeps its own two per-parity
     * kernel passes — its spec-pinned contract is "recomputes both
     * sides", contrasted against the indexed form.) */
-  private val bandsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def cachedCorpusBands(spark: SparkSession, dir: String): DataFrame =
-    bandsCache.computeIfAbsent((spark, dir), { _ =>
+    SessionCaches.persisted(spark, "dedup.bands", dir) {
       bandsOf(minhashSignaturesOf(spark, cachedDocShingles(spark, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Self-join candidate pairs (d1 < d2) from shared band buckets —
     * built via group-by-bucket + local pair expansion rather than a
@@ -760,54 +727,38 @@ object Dedup {
 
   // ---- near-dup cluster resolution (pairs -> components -> survivors) ----
 
-  /** Session-scoped persisted VERIFIED-PAIRS frame (same memo policy as
-    * [[cachedDocShingles]]): the pair list feeds the `minhash_neardup`
-    * result, the component resolution, and through it the training-set
-    * selection — three consumers of a frame that is tiny (one row per
+  /** Session-scoped persisted VERIFIED-PAIRS frame: the pair list feeds
+    * the `minhash_neardup` result, the component resolution, and through
+    * it the training-set selection — three consumers of a frame that is tiny (one row per
     * verified near-dup pair) but expensive to produce (the whole
     * signature pipeline). Computing pairs once and clustering the
     * materialized list is exactly how the 100 TB pipeline stages it. */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def cachedMinhashPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsCache.computeIfAbsent((spark, dir), { _ =>
-      minhashNeardup(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    SessionCaches.persisted(spark, "dedup.pairs", dir)(minhashNeardup(spark, dir))
 
   /** (id, label) connected components of the minhash near-dup pair
     * graph — label = min doc_id of the component, which IS the elected
     * survivor (min-id election falls out of min-label propagation for
     * free, see [[graft.operators.ConnectedComponents]]). Memoized per
-    * (session, corpus) like [[cachedDocShingles]]: the component
-    * resolution runs once and its persisted label frame is shared by
-    * `neardup_clusters` and `training_set_select_neardup`. */
+    * (session, corpus): the component resolution runs once and its
+    * checkpointed label frame is shared by `neardup_clusters` and
+    * `training_set_select_neardup`. */
   def neardupComponents(spark: SparkSession, dir: String): DataFrame =
-    clusterCache.computeIfAbsent((spark, dir), { _ =>
+    SessionCaches.memo(spark, "dedup.components", dir) {
       ConnectedComponents.resolve(
         cachedMinhashPairs(spark, dir).select("d1", "d2"), "d1", "d2")
-    })
-
-  private val clusterCacheAlt =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    }
 
   /** [[neardupComponents]] resolved by the alternating large-star /
     * small-star algorithm ([[ConnectedComponents.resolveAlternating]])
     * instead of diameter-bound label propagation — the mode a
     * long-chain pair graph needs at 100 TB (O(log n) rounds vs O(n)).
-    * Same memo discipline, same (id, label = component min) contract. */
+    * Same (id, label = component min) contract. */
   def neardupComponentsBigstar(spark: SparkSession, dir: String): DataFrame =
-    clusterCacheAlt.computeIfAbsent((spark, dir), { _ =>
+    SessionCaches.memo(spark, "dedup.componentsBigstar", dir) {
       ConnectedComponents.resolveAlternating(
         cachedMinhashPairs(spark, dir).select("d1", "d2"), "d1", "d2")
-    })
-
-  private val clusterGateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
+    }
 
   /** Shared (labels → clusters) tail of both resolution modes: size
     * census per label, then a CARDINALITY-GATED size join — broadcast
@@ -817,12 +768,12 @@ object Dedup {
     * of a corpus-scale cluster census is a driver OOM at 100 TB). The
     * gate count runs over the memoized, truncated label frame, so it
     * costs one cheap job, memoized per (session, corpus, mode). */
-  private def clustersFrom(comp: DataFrame,
-                           gateKey: (SparkSession, String, String)): DataFrame = {
+  private def clustersFrom(spark: SparkSession, dir: String, mode: String,
+                           comp: DataFrame): DataFrame = {
     val sizes = comp.groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
-    val nClusters = clusterGateCache.computeIfAbsent(gateKey,
-      { _ => Long.box(sizes.count()) }).longValue()
+    val nClusters =
+      SessionCaches.memo(spark, "dedup.clusterCount", (dir, mode))(sizes.count())
     val hinted =
       if (nClusters <= BandIndex.ClusterBroadcastMaxRows) broadcast(sizes)
       else sizes.hint("merge")
@@ -836,7 +787,7 @@ object Dedup {
     * with its cluster id (= min member id = survivor) and cluster size.
     * Docs in no near-dup pair are absent (they survive trivially). */
   def neardupClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersFrom(neardupComponents(spark, dir), (spark, dir, "prop"))
+    clustersFrom(spark, dir, "prop", neardupComponents(spark, dir))
 
   /** [[neardupClusters]] with the components resolved by the
     * alternating-star algorithm — declared as its own query (oracle =
@@ -844,7 +795,7 @@ object Dedup {
     * certified at the ORACLE level, not only by the result-equality
     * spec on hand-built graphs. */
   def neardupClustersBigstar(spark: SparkSession, dir: String): DataFrame =
-    clustersFrom(neardupComponentsBigstar(spark, dir), (spark, dir, "bigstar"))
+    clustersFrom(spark, dir, "bigstar", neardupComponentsBigstar(spark, dir))
 
   // ---- SimHash ----
 
@@ -942,15 +893,8 @@ object Dedup {
     * .cellsFor]] replay contract). */
   def recallEvery(n: Long): Long = math.max(1L, n / RecallProbes)
 
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
-  /** Corpus doc count, memoized per (session, corpus). Reads the
-    * parquet directly (not Tables.load) so the count is a pure metadata
-    * job — the [[graft.similarity.Similarity]] vecCount idiom. */
   private def docCount(spark: SparkSession, dir: String): Long =
-    docCountCache.computeIfAbsent((spark, dir),
-      { _ => Long.box(spark.read.parquet(s"$dir/documents.parquet").count()) })
+    Tables.rowCount(spark, dir, "documents")
 
   /** MinHash banding RECALL certification — the quality number the
     * whole text near-dup family rides on, put under the oracle (round-10
@@ -1168,7 +1112,7 @@ object Dedup {
     val prePersisted =
       bands.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val b = if (prePersisted) bands
-      else bands.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else SessionCaches.persist(bands)
     // Bucket occupancy is a property of the BANDS FRAME ALONE — the
     // old per-round shape (semi-join the corpus bands down to
     // frontier-hit buckets, then window-count within) recomputed the

@@ -1,12 +1,10 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Tables
+import graft.{SessionCaches, Tables}
 
 /** Bucketed CO-LOCATED fact-fact join — the shuffle-elimination
   * mitigation for the one join class broadcast can't save: both sides
@@ -40,9 +38,6 @@ object Bucketed {
 
   val NumBuckets = 32
 
-  private val dbCache =
-    new ConcurrentHashMap[(SparkSession, String), String]()
-
   /** Ensure bucketed twins of orders/lineitem exist for `dir`; returns
     * the database name. Memoized per (session, corpus). NOTE on fresh
     * sessions: the in-memory catalog dies with the session, so
@@ -57,7 +52,7 @@ object Bucketed {
     * lineitem — or a changed o_totalprice with keys and count
     * unchanged — silently reuse stale buckets). */
   def ensureBucketed(spark: SparkSession, dir: String): String =
-    dbCache.computeIfAbsent((spark, dir), { _ =>
+    SessionCaches.memo(spark, "bucketed.db", dir) {
       import spark.implicits._
       def fingerprint(table: String, cols: Seq[String]): (Long, Long) =
         Tables.load(spark, dir, table)
@@ -98,7 +93,7 @@ object Bucketed {
         Tables.load(spark, dir, "lineitem")
           .select("l_orderkey", "l_quantity", "l_extendedprice"), "l_orderkey")
       db
-    })
+    }
 
   /** Per-order item rollup over the bucketed twins: join + aggregate,
     * both on the bucket key, zero exchanges end to end. */

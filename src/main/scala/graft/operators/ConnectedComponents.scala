@@ -1,9 +1,13 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.storage.StorageLevel
+
+import graft.SessionCaches
 
 /** Connected components over an undirected edge list, in pure DataFrame
   * algebra (no graph library): iterative min-label propagation.
@@ -46,6 +50,41 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
+  /** Per-round truncation for one resolution. Eager checkpoint, not
+    * persist: it truncates the logical plan each round (see object
+    * Scaladoc — the plan doubles per round otherwise) AND materializes
+    * the frame in one move. `discard` frees a superseded round's
+    * blocks and, in reliable mode, its ReliableCheckpointRDD directory
+    * (the fs handle comes from the frame's own conf). */
+  private final class Rounds(sc: SparkContext, checkpointDir: Option[String]) {
+    def truncate(df: DataFrame): DataFrame =
+      if (checkpointDir.isDefined) df.checkpoint(true)
+      else df.localCheckpoint(true)
+
+    def discard(df: DataFrame): Unit = {
+      SessionCaches.free(df)
+      if (checkpointDir.isDefined) df.queryExecution.logical match {
+        case lr: LogicalRDD =>
+          lr.rdd.getCheckpointFile.foreach { f =>
+            val p = new Path(f)
+            p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+          }
+        case _ => ()
+      }
+    }
+  }
+
+  /** Run `body` with the GLOBAL checkpoint dir scoped to
+    * `checkpointDir`: the session's own setting (even when unset) is
+    * put back once resolution finishes. */
+  private def withRounds[A](sc: SparkContext, checkpointDir: Option[String])
+                           (body: Rounds => A): A = {
+    val priorDir = org.apache.spark.graft.CheckpointDirAccessor.get(sc)
+    checkpointDir.foreach(sc.setCheckpointDir)
+    try body(new Rounds(sc, checkpointDir))
+    finally org.apache.spark.graft.CheckpointDirAccessor.restore(sc, priorDir)
+  }
+
   /** @param edges     two-column frame of undirected edges
     * @param srcCol    left endpoint column name
     * @param dstCol    right endpoint column name
@@ -69,80 +108,49 @@ object ConnectedComponents {
     * @return columns (id, label): one row per distinct node in
     *         `edges`, label = min node id of its component. The
     *         returned frame is checkpointed (materialized); callers
-    *         own the unpersist.
+    *         own its release ([[graft.SessionCaches.free]]).
     */
   def resolve(edges: DataFrame, srcCol: String, dstCol: String,
               maxIters: Int = 50,
-              checkpointDir: Option[String] = None): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
-    // scoped override of the GLOBAL checkpoint dir — remember the
-    // session's own setting so it can be put back (even when it was
-    // unset) once resolution finishes
-    val priorDir = org.apache.spark.graft.CheckpointDirAccessor.get(sc)
-    checkpointDir.foreach(sc.setCheckpointDir)
-    // eager checkpoint, not persist: truncates the logical plan each
-    // round (see object Scaladoc — the plan doubles per round
-    // otherwise) AND materializes the frame in one move
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-
-    // reliable-mode rounds leave one ReliableCheckpointRDD directory
-    // each; delete a superseded round's files as soon as its successor
-    // is materialized (the fs handle comes from the frame's own conf)
-    def dropCheckpointFiles(df: DataFrame): Unit =
-      if (checkpointDir.isDefined) df.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.getCheckpointFile.foreach { f =>
-            val p = new org.apache.hadoop.fs.Path(f)
-            val fs = p.getFileSystem(sc.hadoopConfiguration)
-            fs.delete(p, true)
-          }
-        case _ => ()
-      }
-
-    try {
+              checkpointDir: Option[String] = None): DataFrame =
+    withRounds(edges.sparkSession.sparkContext, checkpointDir) { r =>
       val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       // symmetrize once; both propagation sides read this frame each round
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val sym = SessionCaches.persist(
+        e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
 
-      var labels = truncate(sym.select(col("src").as("id")).distinct()
+      var labels = r.truncate(sym.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")))
       var prevSum: Option[java.math.BigDecimal] = None
       var iter = 0
-      while (iter < maxIters) {
+      var converged = false
+      while (!converged && iter < maxIters) {
         val prop = sym.join(labels, sym("src") === labels("id"))
           .select(sym("dst").as("id"), labels("label"))
-        val next = truncate(labels.select("id", "label").union(prop)
+        val next = r.truncate(labels.select("id", "label").union(prop)
           .groupBy("id").agg(min("label").as("label")))
         // null sum <=> empty node set: trivially converged
         val s = Option(next.agg(sum(col("label").cast(DecimalType(38, 0))))
           .head().getDecimal(0))
-        val converged = s.isEmpty ||
+        converged = s.isEmpty ||
           prevSum.exists(_.compareTo(s.get) == 0)
-        if (converged) {
-          next.unpersist() // fixpoint: next == labels elementwise
-          dropCheckpointFiles(next)
-          sym.unpersist()
-          return labels
+        if (converged) r.discard(next) // fixpoint: next == labels elementwise
+        else {
+          r.discard(labels) // next is materialized; round N is done
+          labels = next
+          prevSum = s
+          iter += 1
         }
-        labels.unpersist()
-        dropCheckpointFiles(labels) // next is materialized; round N files done
-        labels = next
-        prevSum = s
-        iter += 1
       }
       sym.unpersist()
-      labels.unpersist()
-      dropCheckpointFiles(labels)
-      throw new IllegalStateException(
-        s"connected components did not converge in $maxIters rounds")
-    } finally
-      org.apache.spark.graft.CheckpointDirAccessor.restore(sc, priorDir)
-  }
+      if (!converged) {
+        r.discard(labels)
+        throw new IllegalStateException(
+          s"connected components did not converge in $maxIters rounds")
+      }
+      labels
+    }
 
   /** Alternating large-star/small-star connected components (Kiveris,
     * Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected
@@ -184,24 +192,8 @@ object ConnectedComponents {
   private[graft] def resolveAlternatingWithRounds(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIters: Int = 50,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val sc = edges.sparkSession.sparkContext
-    val priorDir = org.apache.spark.graft.CheckpointDirAccessor.get(sc)
-    checkpointDir.foreach(sc.setCheckpointDir)
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    def dropCheckpointFiles(df: DataFrame): Unit =
-      if (checkpointDir.isDefined) df.queryExecution.logical match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.getCheckpointFile.foreach { f =>
-            val p = new org.apache.hadoop.fs.Path(f)
-            val fs = p.getFileSystem(sc.hadoopConfiguration)
-            fs.delete(p, true)
-          }
-        case _ => ()
-      }
-
+      checkpointDir: Option[String] = None): (DataFrame, Int) =
+    withRounds(edges.sparkSession.sparkContext, checkpointDir) { r =>
     // m(u) = min(N(u) ∪ {u}) over the symmetrized frame, then link
     // strictly larger neighbors to it; emitted edges are naturally
     // (hi → lo) oriented since m ≤ u < v
@@ -226,37 +218,36 @@ object ConnectedComponents {
         .distinct()
     }
 
-    try {
       val raw = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       // the node universe (kept through to the label read-off: star
       // contraction drops self-loop-only and fully-contracted nodes
       // from the edge frame, but the contract is one row per node)
-      val nodes = truncate(
+      val nodes = r.truncate(
         raw.select(col("src").as("id"))
           .union(raw.select(col("dst").as("id"))).distinct())
-      var e = truncate(raw.filter(col("src") =!= col("dst"))
+      var e = r.truncate(raw.filter(col("src") =!= col("dst"))
         .select(greatest(col("src"), col("dst")).as("src"),
           least(col("src"), col("dst")).as("dst"))
         .distinct())
       var iter = 0
       var converged = false
       while (!converged && iter < maxIters) {
-        val next = truncate(smallStar(largeStar(e)))
+        val next = r.truncate(smallStar(largeStar(e)))
         // equality of two distinct frames: |next| = |e| and next ⊆ e
         converged = next.count() == e.count() &&
           next.except(e).isEmpty
         if (!converged) {
-          e.unpersist(); dropCheckpointFiles(e)
+          r.discard(e)
           e = next
           iter += 1
         } else {
-          next.unpersist(); dropCheckpointFiles(next)
+          r.discard(next)
         }
       }
       if (!converged) {
-        nodes.unpersist(); dropCheckpointFiles(nodes)
-        e.unpersist(); dropCheckpointFiles(e)
+        r.discard(nodes)
+        r.discard(e)
         throw new IllegalStateException(
           s"alternating connected components did not converge in $maxIters rounds")
       }
@@ -267,11 +258,9 @@ object ConnectedComponents {
         .join(e.select(col("src").as("id"), col("dst").as("star")),
           Seq("id"), "left")
         .select(col("id"), coalesce(col("star"), col("id")).as("label"))
-      val out = truncate(labels)
-      nodes.unpersist(); dropCheckpointFiles(nodes)
-      e.unpersist(); dropCheckpointFiles(e)
+      val out = r.truncate(labels)
+      r.discard(nodes)
+      r.discard(e)
       (out, iter + 1)
-    } finally
-      org.apache.spark.graft.CheckpointDirAccessor.restore(sc, priorDir)
-  }
+    }
 }

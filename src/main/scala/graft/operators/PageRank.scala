@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionCaches, Tables}
 
 /** PageRank over the customer–supplier trade network — the fourth
   * iterative-algebra family in the engine (after connected components,
@@ -39,24 +39,6 @@ object PageRank {
   val RankInit = 1000000L
   val Teleport = 150000L
 
-  /** (session, corpus)-memoized edge+outdeg table — the per-CALL
-    * `.cache()` alternative leaks one cached RDD per invocation for the
-    * session lifetime (the round-2 lesson recorded in Dedup.scala:90);
-    * the memo bounds it at one entry per corpus and repeated runs reuse
-    * the materialization. */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val nodeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val nodeCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
-  def clearCaches(spark: SparkSession): Unit = {
-    graft.SessionCaches.clear(spark, Seq(edgeCache, nodeCache))
-    nodeCountCache.keySet.removeIf(_._1 eq spark)
-    ()
-  }
-
   /** Node-count ceiling for broadcasting the per-round rank/inflow
     * frames (round-16 optimization; guide §3.1 — pick the join
     * strategy deliberately). Ranks are one (node, long) row per graph
@@ -73,13 +55,18 @@ object PageRank {
   /** Broadcast the per-round small side iff the node census (memoized,
     * one count job per session+corpus) fits the ceiling. */
   private def rankSideHint(spark: SparkSession, dir: String): DataFrame => DataFrame = {
-    val n = nodeCountCache.computeIfAbsent((spark, dir),
-      { _ => Long.box(cachedNodes(spark, dir).count()) }).longValue()
+    val n = SessionCaches.memo(spark, "pagerank.nodeCount", dir) {
+      cachedNodes(spark, dir).count()
+    }
     if (n <= RankBroadcastMaxRows) df => broadcast(df) else identity
   }
 
+  /** (session, corpus)-memoized edge+outdeg table — the per-CALL
+    * `.cache()` alternative leaks one cached RDD per invocation for the
+    * session lifetime; the memo bounds it at one entry per corpus and
+    * repeated runs reuse the materialization. */
   private def cachedEdgeDeg(spark: SparkSession, dir: String): DataFrame =
-    edgeCache.computeIfAbsent((spark, dir), { _ =>
+    SessionCaches.persisted(spark, "pagerank.edges", dir) {
       val pairs = Tables.load(spark, dir, "orders")
         .join(Tables.load(spark, dir, "lineitem"),
           col("o_orderkey") === col("l_orderkey"))
@@ -102,17 +89,15 @@ object PageRank {
       // is simply unused — one extra build-time exchange, nothing per
       // round.
       edges.join(deg, "src").repartition(col("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The node set is referenced Rounds+1 times in the unrolled plan —
     * memoized alongside the edges so each reference is an in-memory
     * scan, not a recomputed distinct. */
   private def cachedNodes(spark: SparkSession, dir: String): DataFrame =
-    nodeCache.computeIfAbsent((spark, dir), { _ =>
+    SessionCaches.persisted(spark, "pagerank.nodes", dir) {
       cachedEdgeDeg(spark, dir).select(col("src").as("node")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   def pagerankTradeGraph(spark: SparkSession, dir: String): DataFrame = {
     val edgeDeg = cachedEdgeDeg(spark, dir)
@@ -175,7 +160,7 @@ object PageRank {
         .localCheckpoint(true)
       delta = stepped.agg(max(abs(col("rank_u") - col("rank_prev"))))
         .first().getLong(0)
-      if (lastCp != null) lastCp.unpersist()
+      if (lastCp != null) SessionCaches.free(lastCp)
       lastCp = stepped
       ranks = stepped.select("node", "rank_u")
       round += 1

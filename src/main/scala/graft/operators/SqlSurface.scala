@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionCaches, Tables}
 
 /** The `spark.sql(...)` entry path: tables registered as temp views,
   * queries written in ANSI SQL. `sql_pricing_summary` (a TPC-H Q1
@@ -26,9 +26,9 @@ object SqlSurface {
     * shuffles ≈ the whole of lineitem PER CALL (7.1 M / 6.2 M shuffle
     * records at sf1, twice in Q2's case). The relation is a pure
     * function of the corpus, so it is memoized once per (session,
-    * corpus) — the `PageRank.edgeCache` pattern — with every column
-    * any of the three consumers needs; Catalyst's column pruning
-    * drops the unused ones per query. Oracle SQL keeps the inline
+    * corpus), persisted, with every column any of the three consumers
+    * needs; Catalyst's column pruning drops the unused ones per
+    * query. Oracle SQL keeps the inline
     * `WITH partsupp AS (...)` form (textually the same derivation),
     * so DuckDB recomputes what Spark reads from the memo — the hash
     * compare certifies the memo IS the derivation. */
@@ -38,21 +38,11 @@ object SqlSurface {
       |       CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DECIMAL(18,2)) AS ps_availqty
       |FROM lineitem GROUP BY l_partkey, l_suppkey""".stripMargin
 
-  private val partsuppCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Unpersist + drop this session's partsupp memos (lifecycle hook,
-    * same contract as `Dedup.clearCaches`). */
-  def clearCaches(spark: SparkSession): Unit =
-    graft.SessionCaches.clear(spark, Seq(partsuppCache))
-
   /** Register `partsupp` as a temp view over the session-memoized
     * materialization (and `lineitem`, which the derivation reads). */
   private def registerPartsupp(spark: SparkSession, dir: String): Unit = {
     Tables.load(spark, dir, "lineitem").createOrReplaceTempView("lineitem")
-    partsuppCache.computeIfAbsent((spark, dir), _ =>
-      spark.sql(derivedPartsuppSql)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionCaches.persisted(spark, "sql.partsupp", dir)(spark.sql(derivedPartsuppSql))
       .createOrReplaceTempView("partsupp")
   }
 

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.avro.mapred.AvroKey
@@ -10,8 +8,6 @@ import org.apache.hadoop.io.NullWritable
 import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** Avro source/sink round-trip — the mainstream ROW-oriented ingest
   * format beside the columnar parquet/ORC pair (Kafka pipelines and
@@ -49,51 +45,36 @@ object AvroSource {
       |  {"name":"text","type":"string"}
       |]}""".stripMargin
 
-  private val dirCache =
-    new ConcurrentHashMap[(SparkSession, String), String]()
-
-  /** Write the documents table as Avro container files once per
-    * (session, corpus); returns the directory. The fingerprint covers
-    * count + text crc so regenerated fixtures get a fresh dir;
-    * `FileOutputCommitter`'s `_SUCCESS` marker gates cross-session
-    * reuse. */
+  /** The documents table staged as Avro container files
+    * ([[StagedCopy]]; `FileOutputCommitter` writes the `_SUCCESS`
+    * marker). */
   def avroDir(spark: SparkSession, dir: String): String =
-    dirCache.computeIfAbsent((spark, dir), { _ =>
-      import spark.implicits._
-      val (n, fp) = Tables.load(spark, dir, "documents")
-        .agg(count(lit(1)), sum(crc32(col("text"))))
-        .as[(Long, Long)].head()
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_avro_${key}_${n}_$fp")
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
-        AvroJob.setOutputKeySchema(job, new Schema.Parser().parse(SchemaJson))
-        Tables.load(spark, dir, "documents")
-          .select("doc_id", "lang", "source", "text")
-          .rdd
-          .mapPartitions { it =>
-            // Schema is parsed per partition: cheaper than shipping a
-            // parsed Schema through the closure and immune to its
-            // serialization quirks across avro versions
-            val schema = new Schema.Parser().parse(SchemaJson)
-            it.map { row =>
-              val r = new GenericData.Record(schema)
-              r.put("doc_id", row.getLong(0))
-              r.put("lang", row.getString(1))
-              r.put("source", row.getString(2))
-              r.put("text", row.getString(3))
-              (new AvroKey[GenericRecord](r), NullWritable.get())
-            }
+    StagedCopy.path(spark, dir, "avro") { (docs, out) =>
+      val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+      AvroJob.setOutputKeySchema(job, new Schema.Parser().parse(SchemaJson))
+      docs
+        .select("doc_id", "lang", "source", "text")
+        .rdd
+        .mapPartitions { it =>
+          // Schema is parsed per partition: cheaper than shipping a
+          // parsed Schema through the closure and immune to its
+          // serialization quirks across avro versions
+          val schema = new Schema.Parser().parse(SchemaJson)
+          it.map { row =>
+            val r = new GenericData.Record(schema)
+            r.put("doc_id", row.getLong(0))
+            r.put("lang", row.getString(1))
+            r.put("source", row.getString(2))
+            r.put("text", row.getString(3))
+            (new AvroKey[GenericRecord](r), NullWritable.get())
           }
-          .saveAsNewAPIHadoopFile(
-            out.getAbsolutePath,
-            classOf[AvroKey[GenericRecord]], classOf[NullWritable],
-            classOf[AvroKeyOutputFormat[GenericRecord]],
-            job.getConfiguration)
-      }
-      out.getAbsolutePath
-    })
+        }
+        .saveAsNewAPIHadoopFile(
+          out,
+          classOf[AvroKey[GenericRecord]], classOf[NullWritable],
+          classOf[AvroKeyOutputFormat[GenericRecord]],
+          job.getConfiguration)
+    }
 
   /** Per-(lang, source) doc count, char total, and id checksum,
     * computed FROM THE AVRO COPY; the oracle computes the same from

@@ -1,12 +1,8 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-
-import graft.Tables
 
 /** CSV + JSON source/sink round-trips — the two most common ingest
   * formats, certified end-to-end on the [[OrcSource]] pattern: write
@@ -58,45 +54,28 @@ object CsvJsonSource {
     StructField("n_chars", LongType),
     StructField("tricky", StringType)))
 
-  private val dirCache =
-    new ConcurrentHashMap[(SparkSession, String, String), String]()
-
-  /** Write documents (+ tricky) as `fmt` once per (session, corpus,
-    * fmt); fingerprint-keyed dir, `_SUCCESS` gates cross-session
-    * reuse — a regenerated fixture gets a fresh dir. */
+  /** Documents (+ tricky) staged as `fmt` ([[StagedCopy]]). */
   private def stagedDir(spark: SparkSession, dir: String, fmt: String): String =
-    dirCache.computeIfAbsent((spark, dir, fmt), { _ =>
-      import spark.implicits._
-      val docs = Tables.load(spark, dir, "documents")
-      val (n, fp) = docs.agg(count(lit(1)), sum(crc32(col("text"))))
-        .as[(Long, Long)].head()
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_${fmt}_${key}_${n}_$fp")
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        val staged = docs.withColumn("tricky", tricky)
-        fmt match {
-          case "csv" => staged.write.mode("overwrite")
-            .option("header", "true").csv(out.getAbsolutePath)
-          case "json" => staged.write.mode("overwrite")
-            .json(out.getAbsolutePath)
-          case "textgz" => docs
-            .select(concat_ws("\t",
-              col("doc_id"), col("lang"), col("text")).as("value"))
-            .write.mode("overwrite").option("compression", "gzip")
-            .text(out.getAbsolutePath)
-          case "jsondirty" => docs
-            .select(when(col("doc_id") % 10 === 7,
-              // truncate every 10th record mid-object: structurally
-              // invalid JSON, deterministic from doc_id
-              expr("substring(to_json(struct(doc_id, lang, text)), 1, 9)"))
-              .otherwise(to_json(struct(col("doc_id"), col("lang"), col("text"))))
-              .as("value"))
-            .write.mode("overwrite").text(out.getAbsolutePath)
-        }
+    StagedCopy.path(spark, dir, fmt) { (docs, out) =>
+      val staged = docs.withColumn("tricky", tricky)
+      fmt match {
+        case "csv" => staged.write.mode("overwrite")
+          .option("header", "true").csv(out)
+        case "json" => staged.write.mode("overwrite").json(out)
+        case "textgz" => docs
+          .select(concat_ws("\t",
+            col("doc_id"), col("lang"), col("text")).as("value"))
+          .write.mode("overwrite").option("compression", "gzip").text(out)
+        case "jsondirty" => docs
+          .select(when(col("doc_id") % 10 === 7,
+            // truncate every 10th record mid-object: structurally
+            // invalid JSON, deterministic from doc_id
+            expr("substring(to_json(struct(doc_id, lang, text)), 1, 9)"))
+            .otherwise(to_json(struct(col("doc_id"), col("lang"), col("text"))))
+            .as("value"))
+          .write.mode("overwrite").text(out)
       }
-      out.getAbsolutePath
-    })
+    }
 
   /** Per-lang fidelity aggregate over a parsed-back copy: row count,
     * text char total, and 60-bit-md5 fingerprint sums of both the text

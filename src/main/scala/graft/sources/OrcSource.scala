@@ -1,11 +1,7 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** ORC source/sink round-trip — the second columnar format beside
   * parquet (built into Spark; vectorized reader, predicate pushdown,
@@ -23,27 +19,10 @@ import graft.Tables
   * compare is the driver's oracle harness itself. */
 object OrcSource {
 
-  private val dirCache =
-    new ConcurrentHashMap[(SparkSession, String), String]()
-
-  /** Write the documents table as ORC once per (session, corpus);
-    * returns the directory. Spark's `_SUCCESS` marker gates reuse
-    * across sessions. */
+  /** The documents table staged as ORC ([[StagedCopy]]). */
   def orcDir(spark: SparkSession, dir: String): String =
-    dirCache.computeIfAbsent((spark, dir), { _ =>
-      import spark.implicits._
-      val (n, fp) = Tables.load(spark, dir, "documents")
-        .agg(count(lit(1)), sum(crc32(col("text"))))
-        .as[(Long, Long)].head()
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_orc_${key}_${n}_$fp")
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        Tables.load(spark, dir, "documents")
-          .write.mode("overwrite").orc(out.getAbsolutePath)
-      }
-      out.getAbsolutePath
-    })
+    StagedCopy.path(spark, dir, "orc")((docs, out) =>
+      docs.write.mode("overwrite").orc(out))
 
   /** Per-lang doc count + total text chars, computed FROM THE ORC COPY;
     * the oracle computes the same from the original parquet. */

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,27 +25,11 @@ import graft.Tables
   */
 object PartitionedParquetSource {
 
-  private val dirCache =
-    new ConcurrentHashMap[(SparkSession, String), String]()
-
-  /** Write documents partitioned by `lang` once per (session, corpus);
-    * fingerprint-keyed dir, `_SUCCESS` gates cross-session reuse. */
+  /** The documents table staged partitioned by `lang`
+    * ([[StagedCopy]]). */
   def partitionedDir(spark: SparkSession, dir: String): String =
-    dirCache.computeIfAbsent((spark, dir), { _ =>
-      import spark.implicits._
-      val (n, fp) = Tables.load(spark, dir, "documents")
-        .agg(count(lit(1)), sum(crc32(col("text"))))
-        .as[(Long, Long)].head()
-      val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val out = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_partpq_${key}_${n}_$fp")
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        Tables.load(spark, dir, "documents")
-          .write.mode("overwrite").partitionBy("lang")
-          .parquet(out.getAbsolutePath)
-      }
-      out.getAbsolutePath
-    })
+    StagedCopy.path(spark, dir, "partpq")((docs, out) =>
+      docs.write.mode("overwrite").partitionBy("lang").parquet(out))
 
   /** Per-source census of ONE language, read through the partitioned
     * layout — the partition filter prunes every other lang directory

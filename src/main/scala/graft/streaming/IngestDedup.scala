@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.Tables
+import graft.{SessionCaches, Tables}
 import graft.dedup.{BandIndex, Dedup}
 
 /** Streaming ingest dedup — the composition of the persisted standing
@@ -140,11 +140,8 @@ object IngestDedup {
     * every accepted doc_id. The DuckDB oracle unrolls the same fold
     * over from-scratch bands, so acceptance, ordering effects, and
     * the index-growth semantics are all under the hash. */
-  private val foldCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def ingestDedupFold(spark: SparkSession, dir: String): DataFrame =
-    foldCache.computeIfAbsent((spark, dir), { _ =>
+    SessionCaches.memo(spark, "ingest.fold", dir) {
       val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
       // Every frame the fold shingles is a SUBSET OF THE CORPUS, so
       // ride the session-memoized corpus shingle frame instead of
@@ -182,19 +179,15 @@ object IngestDedup {
         accepted = Some(accepted.fold(acc)(_.unionByName(acc)))
       }
       // the fold is inherently sequential state — memoized per
-      // (session, corpus) like Dedup.cachedMinhashPairs, so one
-      // session runs the three barriers ONCE. Materialize the (tiny:
-      // accepted doc_ids only) union eagerly, then unpersist the
-      // per-step caches immediately: only the result frame stays
-      // cached, and it is swept by [[clearCaches]] — the per-step
-      // frames no longer outlive the call unreachable by any sweep
-      // (round-9 advice).
-      val result = accepted.get
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // (session, corpus), so one session runs the three barriers
+      // ONCE. Materialize the (tiny: accepted doc_ids only) union
+      // eagerly. The entry also owns the step checkpoints: the union
+      // recomputes from them if its cached blocks are lost, so they
+      // are freed with it by SessionCaches.release, never before.
+      val result = SessionCaches.persist(accepted.get)
       result.count()
-      steps.foreach { s => s.unpersist(); () }
-      result
-    })
+      (result, steps.toList)
+    }._1
 
   /** Rows per compacted output file — the file-count bound the
     * compaction writes toward. Constant-width (doc_id, band, sig)
@@ -433,10 +426,9 @@ object IngestDedup {
     // micro-batch (round-12 advice) — the one corpus-sized cost in the
     // gate, paid once for the stream's lifetime.
     val refCids = quantizer.map { q =>
-      val cids = graft.similarity.Similarity
+      val cids = SessionCaches.persist(graft.similarity.Similarity
         .assignToCentroids(spark, vecsOf(refDocs), q)
-        .select("cid")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select("cid"))
       cids.count()
       cids
     }
@@ -691,10 +683,6 @@ object IngestDedup {
       }
       .foreach(rmTree)
   }
-
-  /** Lifecycle hook, [[graft.dedup.Dedup.clearCaches]]'s contract. */
-  def clearCaches(spark: SparkSession): Unit =
-    graft.SessionCaches.clear(spark, Seq(foldCache))
 
   /** [[ingestDedupFold]]'s probe slice: the fold's accepted rows for
     * [[Dedup.sliceProbe]] docs (the fold is inherently sequential

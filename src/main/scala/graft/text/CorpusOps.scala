@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Tables
+import graft.{SessionCaches, Tables}
 import graft.operators.WordCount
 
 /** Corpus-assembly operators — the steps between "cleaned documents"
@@ -351,25 +351,13 @@ object CorpusOps {
   }
 
   /** The training loop behind [[bpeMergeRounds]] and
-    * [[bpeEncodeStats]], memoized per (session, corpus) on the house
-    * pattern (`Dedup.cachedDocShingles`, the decontamination Bloom):
-    * the merge table is immutable per corpus and BOUNDED driver state
-    * (6 pairs — the artifact a trainer ships), so training runs once
-    * and every consumer (the merge-table query, the encoder, bench
-    * reps) reuses it. */
-  private val mergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(Long, String, Long)]]()
-
-  /** Lifecycle hook on the [[graft.SessionCaches]] pattern: plain
-    * driver values (no persisted frames, no broadcasts), so dropping
-    * the entries is the whole cleanup. */
-  def clearCaches(spark: SparkSession): Unit = {
-    val it = mergeCache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey._1 eq spark) it.remove()
-  }
-
+    * [[bpeEncodeStats]], memoized per (session, corpus): the merge
+    * table is immutable per corpus and BOUNDED driver state (6 pairs —
+    * the artifact a trainer ships), so training runs once and every
+    * consumer (the merge-table query, the encoder, bench reps) reuses
+    * it. */
   def bpeLearnMerges(spark: SparkSession, dir: String): Seq[(Long, String, Long)] =
-    mergeCache.computeIfAbsent((spark, dir), { _ =>
+    SessionCaches.memo(spark, "corpus.bpeMerges", dir) {
       import spark.implicits._
       val vocab0 = bpeInitVocab(Tables.load(spark, dir, "documents")).persist()
       try {
@@ -385,7 +373,7 @@ object CorpusOps {
         }
         merges.result()
       } finally vocab0.unpersist(false)
-    })
+    }
 
   /** ENCODE with the learned tokenizer — the other half of the BPE
     * loop ([[bpeMergeRounds]] trains; this applies): run the merge

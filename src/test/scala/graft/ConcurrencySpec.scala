@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.Dedup
 
 /** Multi-tenant correctness (round-9 verdict #6): the session-scoped
-  * memos' `computeIfAbsent` + persist pattern under real racing
+  * memos ([[SessionCaches.memo]]) under real racing
   * threads, and result equality between concurrent and serial runs of
   * the same queries. BenchConcurrent measures the throughput side;
   * this spec pins the correctness side at test SF. */
@@ -31,8 +31,8 @@ class ConcurrencySpec extends AnyFunSuite with SharedSpark {
   test("racing memo builds: 4 threads hit cold caches, all get identical pair lists") {
     import spark.implicits._
     // drop this session's memos so all four threads race the SAME
-    // computeIfAbsent on a cold cache
-    Dedup.clearCaches(spark)
+    // memo on a cold registry
+    SessionCaches.release(spark)
     val results = inThreads(4) { _ =>
       Dedup.cachedMinhashPairs(spark, sfDir)
         .as[(Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
@@ -40,6 +40,26 @@ class ConcurrencySpec extends AnyFunSuite with SharedSpark {
     assert(results.nonEmpty)
     assert(results.forall(_ == results.head),
       "racing builders returned different pair lists")
+  }
+
+  test("nested memo chain: 4 threads cold-build neardupComponents, each key built once") {
+    import spark.implicits._
+    // a fresh session: every memo of the components -> pairs -> bands
+    // -> shingles chain is cold, and the builds nest inside each other
+    val s = spark.newSession()
+    val chain = Seq("dedup.components", "dedup.pairs", "dedup.bands", "dedup.shingles")
+    val before = chain.map(SessionCaches.buildCount)
+    val results = inThreads(4) { _ =>
+      Dedup.neardupComponents(s, sfDir)
+        .as[(Long, Long)].collect().sorted.toSeq
+    }
+    assert(chain.map(SessionCaches.buildCount).zip(before).map { case (a, b) => a - b } ==
+      Seq(1L, 1L, 1L, 1L), s"builds per key of $chain")
+    assert(results.size == 4 && results.forall(_ == results.head),
+      "racing builders returned different components")
+    assert(results.head == Dedup.neardupComponents(spark, sfDir)
+      .as[(Long, Long)].collect().sorted.toSeq)
+    SessionCaches.release(s)
   }
 
   test("getOrBuildLayout: racing builders publish one store, losers clean up, reads agree") {

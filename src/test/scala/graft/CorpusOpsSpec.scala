@@ -206,7 +206,7 @@ class CorpusOpsSpec extends AnyFunSuite with SharedSpark {
     val a = CorpusOps.bpeLearnMerges(spark, sfDir)
     val b = CorpusOps.bpeLearnMerges(spark, sfDir)
     assert(a eq b, "second call must hit the memo")
-    CorpusOps.clearCaches(spark)
+    SessionCaches.release(spark)
     val c = CorpusOps.bpeLearnMerges(spark, sfDir)
     assert(!(a eq c) && a == c, "post-clear retrain must rebuild equal merges")
   }

@@ -318,17 +318,12 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
     assert(pairs == Set((9000L, 9001L)))
   }
 
-  test("clearCaches drops session memos; queries rebuild cleanly after") {
+  test("release drops session memos; queries rebuild cleanly after") {
     Dedup.cachedDocShingles(spark, sfDir).count()
     Dedup.cachedMinhashPairs(spark, sfDir).count()
     graft.operators.SqlSurface.minCostSupplier(spark, sfDir).count()
     graft.streaming.IngestDedup.ingestDedupFold(spark, sfDir).count()
-    Dedup.clearCaches(spark)
-    graft.similarity.Similarity.clearCaches(spark)
-    graft.operators.PageRank.clearCaches(spark)
-    graft.text.CorpusOps.clearCaches(spark)
-    graft.operators.SqlSurface.clearCaches(spark)
-    graft.streaming.IngestDedup.clearCaches(spark)
+    SessionCaches.release(spark)
     assert(graft.streaming.IngestDedup.ingestDedupFold(spark, sfDir).count() > 0)
     assert(Dedup.neardupClusters(spark, sfDir).count() > 0)
     assert(graft.similarity.Similarity.similarAnnIvf(spark, sfDir).count() > 0)

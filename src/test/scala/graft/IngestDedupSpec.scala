@@ -115,6 +115,31 @@ class IngestDedupSpec extends AnyFunSuite with SharedSpark {
       "post-restart accepted set diverged from the fold")
   }
 
+  test("ingestDedupFold: the result recomputes from its step checkpoints; release frees the steps") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    val s = spark.newSession()
+    val fold = IngestDedup.ingestDedupFold(s, sfDir)
+    val n = fold.count()
+    // the fold's registry entry owns its three step checkpoints
+    val stepIds = SessionCaches.valuesOf(s).collect {
+      case (r: AnyRef, steps: Seq[_]) if r eq fold =>
+        steps.map(_.asInstanceOf[DataFrame].queryExecution.logical match {
+          case lr: LogicalRDD => lr.rdd.id
+          case other => fail(s"step is not checkpointed: ${other.nodeName}")
+        })
+    }.flatten
+    assert(stepIds.size == 3)
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet
+    assert(stepIds.forall(persistent.contains), "step checkpoints freed before the result")
+    // lost result blocks recompute from the step checkpoints
+    fold.unpersist(blocking = true)
+    assert(fold.count() == n)
+    SessionCaches.release(s)
+    val left = stepIds.filter(persistent.contains)
+    assert(left.isEmpty, s"release left step checkpoints $left")
+  }
+
   test("startWithRetraction: an erasure flips a suppressed near-dup to accepted, erased state unreadable, replay exactly-once") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
