@@ -3,7 +3,7 @@ package graft.similarity
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -105,9 +105,7 @@ object Similarity {
       // re-reading 2 k embedding rows from parquet fuses into the
       // consumer's codegen and is cheaper than the cache round-trip at
       // every scale (the scan cost grows linearly; so does the decode).
-      Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .withColumn("nrm", norm(col("v")))
+      rawVectors(spark, dir).withColumn("nrm", norm(col("v")))
     }
 
   /** Exact top-k: broadcast the probes, one pass over candidates, heap
@@ -273,8 +271,7 @@ object Similarity {
     * touched by nothing but the final assignment/encode pass. At 100 TB
     * that is the difference between an overnight index build
     * ([[IvfIters]]+[[PqIters]] full corpus passes) and a lunchtime one
-    * (bounded training + ONE scoring pass) — the claim the PQ docstring
-    * used to make in prose, implemented (round-11 verdict #4). */
+    * (bounded training + ONE scoring pass). */
   val TrainPointsPerCell = 256
 
   /** Sampling stride for an n-vector corpus: every vector whose
@@ -318,107 +315,79 @@ object Similarity {
     s
   }
 
-  /** Deterministic Lloyd's k-means over the embedding column — replaces
-    * round 2's "first C vectors" placeholder quantizer with a trained
-    * index. Seeded with the first [[IvfCells]] vectors by id (the
-    * deterministic seed), then [[IvfIters]] rounds of: broadcast
-    * centroids → one narrow assignment pass (argmax cosine, ties to the
-    * lower cell id) → per-cell elementwise sum of the QUANTIZED vectors
-    * via `reduceGroups` (an Aggregator under the hood: map-side partial
-    * merge, so the shuffle carries ≤ C rows per partition, never
-    * vectors) → collect C tiny (sum, count) rows to the driver for the
-    * next broadcast (the same bounded driver loop Spark MLlib's KMeans
-    * uses — C·Dim doubles, not data). Empty cells keep their previous
-    * centroid. Returns movements per iteration alongside the centroids
-    * so SimilaritySpec can assert convergence. */
-  private[graft] def trainIvfCentroidsWithTrace(
-      spark: SparkSession, dir: String): (Array[Array[Double]], Array[Double]) =
-    trainIvfCentroidsWithTrace(spark, dir, everyOverride = None)
-
-  /** `everyOverride` exists for the Scratch `train-ab` measurement arm
-    * ONLY (Some(1) = the pre-sampling full-corpus training, timed
-    * against the production stride); production callers always take
-    * the [[trainEvery]] path. */
-  private[graft] def trainIvfCentroidsWithTrace(
-      spark: SparkSession, dir: String,
-      everyOverride: Option[Long]): (Array[Array[Double]], Array[Double]) = {
-    val every = everyOverride.getOrElse(trainEvery(vecCount(spark, dir)))
-    val base = sampleBase(spark, dir, every)
-    val numCells = ivfCellCount(spark, dir)
-    try lloydTrain(spark, base, numCells, every, dir)
-    finally { base.unpersist(); () }
+  /** floor(x·[[QuantScale]]) per coordinate — the Long form every
+    * Lloyd mean sums and every PQ error compares. */
+  private def quantized(v: Array[Double]): Array[Long] = {
+    val q = new Array[Long](v.length)
+    var d = 0
+    while (d < v.length) { q(d) = math.floor(v(d) * QuantScale).toLong; d += 1 }
+    q
   }
 
-  /** The persisted training-sample frame (id, v, quantized v, norm) —
-    * one materialization for the whole training loop: the quantized
-    * vector and the norm are centroid-independent, so they are
-    * computed once and persisted — without this, each of the
-    * IvfIters+1 passes re-scans the parquet, re-casts float→double,
-    * and re-quantizes (the review-caught round-3 redundancy).
-    * SAMPLED: only the [[trainEvery]]/[[trainSampleCond]] sample
-    * trains — every training pass runs over ≈TrainPointsPerCell·C
-    * rows, never the corpus; the corpus is scanned only by the final
-    * assignment pass (ivfAssign). */
-  private def sampleBase(spark: SparkSession, dir: String, every: Long)
-      : org.apache.spark.sql.Dataset[(Long, Array[Double], Array[Long], Double)] = {
-    import spark.implicits._
-    SessionCaches.persist(Tables.load(spark, dir, "embeddings")
+  /** (vec_id, v) over the raw embedding column, cast to double. */
+  private def rawVectors(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .filter(trainSampleCond(every))
-      .as[(Long, Array[Double])]
-      .map { case (id, v) =>
-        val q = new Array[Long](v.length)
-        var d = 0
-        while (d < v.length) {
-          q(d) = math.floor(v(d) * QuantScale).toLong; d += 1
-        }
-        (id, v, q, math.sqrt(dotA(v, v)))
-      })
+
+  /** A nearest-centroid election: given one centroid set, the function
+    * electing a point's cell. Built once per partition, so per-centroid
+    * state is computed once per broadcast, not once per point. */
+  private type Election = Array[Array[Double]] => Array[Double] => Int
+
+  /** Cosine election: argmax dot(v, c)/(‖v‖·‖c‖) over precomputed
+    * centroid norms, strict `>` over ascending ids so ties keep the
+    * lower id — the oracles' min-over-(−s, cid), bit-for-bit (same
+    * [[dotA]] fold, same division). */
+  private val cosineArgmax: Election = { cs =>
+    val cn = cs.map(c => math.sqrt(dotA(c, c)))
+    v => {
+      val nv = math.sqrt(dotA(v, v))
+      var best = 0; var bs = Double.NegativeInfinity; var j = 0
+      while (j < cs.length) {
+        val s = dotA(v, cs(j)) / (nv * cn(j))
+        if (s > bs) { bs = s; best = j }
+        j += 1
+      }
+      best
+    }
   }
 
-  /** The Lloyd loop over a persisted sample, factored so the FLAT
-    * quantizer (k = C) and the two-level quantizer's supercluster
-    * stage (k = √C) run the IDENTICAL arithmetic: seeds = the k
-    * LOWEST sampled vec_ids, cell id = rank — reduces to "first k
-    * vectors, cid = vec_id" when every == 1 over dense ids, so the
-    * unsampled SFs stay bit-exact. Seeds are selected DISTRIBUTIVELY
-    * (orderBy + limit plans as TakeOrdered), so only k ids ever reach
-    * the driver: the sample itself saturates at a constant 1/16 of
-    * the corpus, and collecting every sampled id would be ~n/16 longs
-    * of driver heap at production n (round-12 advice). Each round:
-    * broadcast centroids → narrow argmax-cosine assignment (strict >,
-    * ties keep the lower cid) → per-cell elementwise sum of QUANTIZED
-    * vectors via reduceGroups (map-side partial merge; the shuffle
-    * carries ≤ k rows per partition, never vectors) → collect k tiny
-    * rows for the next broadcast. Empty cells keep their centroid. */
-  private def lloydTrain(spark: SparkSession,
-      base: org.apache.spark.sql.Dataset[(Long, Array[Double], Array[Long], Double)],
-      k: Int, every: Long, dir: String): (Array[Array[Double]], Array[Double]) = {
+  /** Squared-L2 election: argmin [[sqDist]], strict `<`, ties keep the
+    * lower id. */
+  private val l2Argmin: Election = cs => s => {
+    var best = 0; var bd = Double.PositiveInfinity; var j = 0
+    while (j < cs.length) {
+      val d2 = sqDist(s, cs(j))
+      if (d2 < bd) { bd = d2; best = j }
+      j += 1
+    }
+    best
+  }
+
+  /** Training rows: (group, id, point, quantized point). */
+  private type Train = (Int, Long, Array[Double], Array[Long])
+
+  /** The Lloyd loop every quantizer trains with — one map and one
+    * reduce per round over persisted [[Train]] rows, each group with
+    * its own centroids: broadcast the centroids → elect every row's
+    * cell within its group → sum the QUANTIZED points and count per
+    * (group, cell) in one keyed reduce (map-side partial merge: the
+    * shuffle carries at most one row per cell per partition, never
+    * vectors) → collect those rows and move each cell to its mean. A
+    * cell that drew no row keeps its centroid. Long sums are exact and
+    * associative, so the result is independent of partition order.
+    * Returns the centroids and the total L1 movement of each round. */
+  private def lloyd(spark: SparkSession, rows: Dataset[Train],
+      seeds: Array[Array[Array[Double]]], iters: Int, elect: Election)
+      : (Array[Array[Array[Double]]], Array[Double]) = {
     import spark.implicits._
-    val seedIds = base.map(_._1).orderBy("value").limit(k)
-      .collect().sorted
-    require(seedIds.length == k,
-      s"IVF training sample at $dir has only ${seedIds.length} vectors " +
-        s"for $k cells (every=$every)")
-    val seedSet = seedIds.toSet
-    var cents: Array[Array[Double]] = base.filter(t => seedSet.contains(t._1))
-      .map(t => (t._1, t._2)).collect().sortBy(_._1).map(_._2)
-    val movements = Array.ofDim[Double](IvfIters)
-    for (iter <- 0 until IvfIters) {
+    var cents = seeds
+    val movements = Array.ofDim[Double](iters)
+    for (iter <- 0 until iters) {
       val bc = spark.sparkContext.broadcast(cents)
-      val sums = base.mapPartitions { it =>
-        val cs = bc.value
-        val cn = cs.map(c => math.sqrt(dotA(c, c)))
-        it.map { case (_, v, q, nv) =>
-          var best = 0; var bs = Double.NegativeInfinity
-          var j = 0
-          while (j < cs.length) {
-            val s = dotA(v, cs(j)) / (nv * cn(j))
-            if (s > bs) { bs = s; best = j } // strict > : ties keep min cid
-            j += 1
-          }
-          (best, q, 1L)
-        }
+      val sums = rows.mapPartitions { it =>
+        val electors = bc.value.map(elect)
+        it.map { case (g, _, p, q) => ((g, electors(g)(p)), q, 1L) }
       }
         .groupByKey(_._1)
         .reduceGroups { (a, b) =>
@@ -427,15 +396,14 @@ object Similarity {
           while (d < q.length) { q(d) = a._2(d) + b._2(d); d += 1 }
           (a._1, q, a._3 + b._3)
         }
-        .map { case (cid, (_, q, n)) => (cid, q, n) }
         .collect()
-      val next = cents.map(_.clone())
-      sums.foreach { case (cid, q, n) =>
-        next(cid) = q.map(s => (s.toDouble / n) / QuantScale)
+      val next = cents.map(_.map(_.clone()))
+      sums.foreach { case ((g, c), (_, q, n)) =>
+        next(g)(c) = q.map(z => (z.toDouble / n) / QuantScale)
       }
       var move = 0.0
-      for (j <- cents.indices; d <- cents(j).indices)
-        move += math.abs(next(j)(d) - cents(j)(d))
+      for (g <- cents.indices; j <- cents(g).indices; d <- cents(g)(j).indices)
+        move += math.abs(next(g)(j)(d) - cents(g)(j)(d))
       movements(iter) = move
       cents = next
       bc.unpersist()
@@ -443,13 +411,63 @@ object Similarity {
     (cents, movements)
   }
 
-  /** Session memo over a PERSISTED artifact (the PQ-codebook pattern):
-    * the first session to train a corpus's IVF centroids publishes
-    * them as fingerprint-keyed parquet (cid, centroid) and every later
-    * session reads C rows back instead of paying [[IvfIters]] corpus
-    * passes — doubles round-trip parquet losslessly, so stored and
-    * fresh centroids are bit-identical (BandIndexSpec pins the PQ
-    * twin; the mechanism is shared). */
+  /** Lowest-id seeds: the `k` lowest ids among group 0's rows (a
+    * distributed TakeOrdered — only k ids reach the driver, never the
+    * sample's id list), and their points in every one of `groups`
+    * groups. Cell id = id rank, so over dense ids with every == 1 the
+    * seeds are "the first k vectors, cell = vec_id". */
+  private def lowestIdSeeds(spark: SparkSession, rows: Dataset[Train],
+      groups: Int, k: Int, dir: String, every: Long): Array[Array[Array[Double]]] = {
+    import spark.implicits._
+    val ids = rows.where(col("_1") === 0).select(col("_2").as("id"))
+      .orderBy("id").limit(k).as[Long].collect()
+    require(ids.length == k,
+      s"training sample at $dir has only ${ids.length} vectors " +
+        s"for $k seeds (every=$every)")
+    seedPoints(rows, ids, groups)
+  }
+
+  /** The points of `ids`, per group, in id order. */
+  private def seedPoints(rows: Dataset[Train], ids: Array[Long],
+      groups: Int): Array[Array[Array[Double]]] = {
+    val pts = rows.where(col("_2").isInCollection(ids)).collect()
+    Array.tabulate(groups)(g => pts.filter(_._1 == g).sortBy(_._2).map(_._3))
+  }
+
+  /** The flat coarse quantizer: Lloyd's over the training sample as one
+    * group of [[ivfCellCount]] cells, [[cosineArgmax]] election,
+    * lowest-id seeds. Returns the centroids with the per-round
+    * movement so SimilaritySpec can assert convergence. */
+  private[graft] def trainIvfCentroidsWithTrace(
+      spark: SparkSession, dir: String): (Array[Array[Double]], Array[Double]) = {
+    val every = trainEvery(vecCount(spark, dir))
+    val base = sampleBase(spark, dir, every)
+    try {
+      val seeds = lowestIdSeeds(spark, base, 1, ivfCellCount(spark, dir), dir, every)
+      val (cents, moves) = lloyd(spark, base, seeds, IvfIters, cosineArgmax)
+      (cents(0), moves)
+    } finally { base.unpersist(); () }
+  }
+
+  /** The persisted training sample as group-0 [[Train]] rows: the
+    * quantized vector is centroid-independent, so it is computed once
+    * for all IvfIters+1 passes. SAMPLED: only the
+    * [[trainEvery]]/[[trainSampleCond]] sample trains; the corpus is
+    * scanned only by the final assignment pass ([[ivfAssign]]). */
+  private def sampleBase(spark: SparkSession, dir: String, every: Long): Dataset[Train] = {
+    import spark.implicits._
+    SessionCaches.persist(rawVectors(spark, dir)
+      .filter(trainSampleCond(every))
+      .as[(Long, Array[Double])]
+      .map { case (id, v) => (0, id, v, quantized(v)) })
+  }
+
+  /** The deployed coarse quantizer's centroids, memoized per session
+    * over a PERSISTED artifact: the first session to train a corpus's
+    * IVF centroids publishes them as fingerprint-keyed parquet
+    * (cid, centroid) and every later session reads C rows back instead
+    * of retraining — doubles round-trip parquet losslessly, so stored
+    * and fresh centroids are bit-identical. */
   def trainIvfCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
     SessionCaches.memo(spark, "similarity.centroids", dir) {
       import spark.implicits._
@@ -468,7 +486,7 @@ object Similarity {
       }
     }
 
-  // ---- two-level (hierarchical) coarse quantizer (round-12 verdict #3) ----
+  // ---- two-level (hierarchical) coarse quantizer ----
 
   /** Cell count above which training/assignment go TWO-LEVEL. The flat
     * quantizer's training-sample assignment and [[ivfAssign]] kernel
@@ -476,9 +494,9 @@ object Similarity {
     * unbounded — measured linear-ish through sf100 (C = 488) but ~10¹³
     * dot products at 100× (n = 2×10⁸ → C ≈ 48 k). Above this
     * threshold the quantizer trains √C SUPERCLUSTERS, splits the cell
-    * budget across them by sample mass, trains each group's cells in
-    * ONE keyed Lloyd loop (the PQ-codebook trick: all groups per
-    * pass), and assigns via supercluster-then-cell — n·(√C + C/√C)
+    * budget across them by sample mass, trains every group's cells in
+    * one [[lloyd]] run (all groups per pass), and assigns via
+    * supercluster-then-cell — n·(√C + C/√C)
     * work, the standard billion-scale FAISS move. 512 keeps every
     * certified rung (sf100 inclusive) on the BIT-STABLE flat path;
     * the hier path is certified by the S=1 equivalence spec (one
@@ -518,46 +536,34 @@ object Similarity {
 
   /** Train the two-level quantizer: (supercentroids S×Dim, per-group
     * cell centroids — global cid of group g's local cell j is
-    * Σ_{h<g} cells_h + j). Stage 1 is [[lloydTrain]] at k = S over the
-    * SAME sample; stage 2 groups the sample by nearest supercluster
-    * (one pass, persisted), allocates the C-cell budget by sample
-    * mass, seeds each group with its lowest sampled ids (bounded-heap
-    * per group, ≤ C ids total on the driver; a group whose sample is
+    * Σ_{h<g} cells_h + j). Stage 1 is [[lloyd]] over the sample as one
+    * group of S cells. Stage 2 groups the sample by nearest supercluster
+    * (one pass, persisted), allocates the C-cell budget by sample mass,
+    * seeds each group with its lowest sampled ids (bounded heap per
+    * group, ≤ C ids total on the driver; a group whose sample is
     * smaller than its budget pads with its supercentroid — duplicate
     * centroids are harmless under the strict-> election), and runs
-    * ONE keyed Lloyd loop for ALL groups per pass — the
-    * [[trainPqCodebooksFresh]] shape, so training cost stays
-    * IvfIters+1 sample passes regardless of S. With
+    * [[lloyd]] over all S groups at once, so training costs IvfIters+1
+    * sample passes per stage regardless of S. With
     * `superOverride = Some(1)` every stage degenerates to the flat
     * quantizer bit-for-bit (one group holding the whole sample, C
-    * seeds = the C lowest ids, per-pass argmax over all C cells) —
-    * the equivalence SimilaritySpec pins. */
-  private[graft] def trainIvfCentroidsHier(
-      spark: SparkSession, dir: String,
-      superOverride: Option[Int] = None,
-      everyOverride: Option[Long] = None)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    * seeds = the C lowest ids) — the equivalence SimilaritySpec pins.
+    * Also returns stage 2's per-round movement. */
+  private[graft] def trainIvfCentroidsHierWithTrace(
+      spark: SparkSession, dir: String, superOverride: Option[Int] = None)
+      : (Array[Array[Double]], Array[Array[Array[Double]]], Array[Double]) = {
     import spark.implicits._
-    val every = everyOverride.getOrElse(trainEvery(vecCount(spark, dir)))
+    val every = trainEvery(vecCount(spark, dir))
     val numCells = ivfCellCount(spark, dir)
     val s = superOverride.getOrElse(superCountFor(numCells))
     val base = sampleBase(spark, dir, every)
     try {
-      val superCents = lloydTrain(spark, base, s, every, dir)._1
+      val superCents = lloyd(spark, base, lowestIdSeeds(spark, base, 1, s, dir, every),
+        IvfIters, cosineArgmax)._1(0)
       val bcS = spark.sparkContext.broadcast(superCents)
       val grouped = SessionCaches.persist(base.mapPartitions { it =>
-        val cs = bcS.value
-        val cn = cs.map(c => math.sqrt(dotA(c, c)))
-        it.map { case (id, v, q, nv) =>
-          var best = 0; var bs = Double.NegativeInfinity
-          var j = 0
-          while (j < cs.length) {
-            val sc = dotA(v, cs(j)) / (nv * cn(j))
-            if (sc > bs) { bs = sc; best = j }
-            j += 1
-          }
-          (best, id, v, q, nv)
-        }
+        val nearest = cosineArgmax(bcS.value)
+        it.map { case (_, id, v, q) => (nearest(v), id, v, q) }
       })
       try {
         val sizeArr = Array.fill(s)(0L)
@@ -567,7 +573,7 @@ object Similarity {
         val bcBudget = spark.sparkContext.broadcast(cellsPer)
         // per-group seed ids: bounded max-heap of the budget lowest —
         // ≤ C longs total cross the wire, never the sample id list
-        val seeds = grouped.map(t => (t._1, t._2)).groupByKey(_._1)
+        val ids = grouped.map(t => (t._1, t._2)).groupByKey(_._1)
           .flatMapGroups { (g, it) =>
             val k = bcBudget.value(g)
             val pq = scala.collection.mutable.PriorityQueue.empty[Long]
@@ -575,58 +581,28 @@ object Similarity {
               if (pq.size < k) pq.enqueue(id)
               else if (id < pq.head) { pq.dequeue(); pq.enqueue(id); () }
             }
-            pq.toArray.sorted.iterator.map(id => (g, id))
+            pq.iterator
           }.collect()
-        val seedSet = seeds.map(_._2).toSet
-        val seedVecs = grouped.filter(t => seedSet.contains(t._2))
-          .map(t => (t._1, t._2, t._3)).collect()
-        var cells: Array[Array[Array[Double]]] = Array.tabulate(s) { g =>
-          val own = seedVecs.filter(_._1 == g).sortBy(_._2).map(_._3)
+        val seeds = seedPoints(grouped, ids, s).zipWithIndex.map { case (own, g) =>
           own ++ Array.fill(cellsPer(g) - own.length)(superCents(g).clone())
         }
-        for (_ <- 0 until IvfIters) {
-          val bc = spark.sparkContext.broadcast(cells)
-          val sums = grouped.mapPartitions { it =>
-            val all = bc.value
-            val norms = all.map(_.map(c => math.sqrt(dotA(c, c))))
-            it.map { case (g, _, v, q, nv) =>
-              val cs = all(g); val cn = norms(g)
-              var best = 0; var bs = Double.NegativeInfinity
-              var j = 0
-              while (j < cs.length) {
-                val sc = dotA(v, cs(j)) / (nv * cn(j))
-                if (sc > bs) { bs = sc; best = j } // strict > : min local id
-                j += 1
-              }
-              ((g, best), q, 1L)
-            }
-          }
-            .groupByKey(_._1)
-            .reduceGroups { (a, b) =>
-              val q = new Array[Long](a._2.length)
-              var d = 0
-              while (d < q.length) { q(d) = a._2(d) + b._2(d); d += 1 }
-              (a._1, q, a._3 + b._3)
-            }
-            .map { case ((g, c), (_, q, n)) => (g, c, q, n) }
-            .collect()
-          val next = cells.map(_.map(_.clone()))
-          sums.foreach { case (g, c, q, n) =>
-            next(g)(c) = q.map(z => (z.toDouble / n) / QuantScale)
-          }
-          cells = next
-          bc.unpersist()
-        }
-        (superCents, cells)
+        val (cells, moves) = lloyd(spark, grouped, seeds, IvfIters, cosineArgmax)
+        (superCents, cells, moves)
       } finally { grouped.unpersist(); () }
     } finally { base.unpersist(); () }
   }
 
-  /** Two-level assignment: ONE narrow pass, per vector argmax over the
-    * S supercentroids then argmax within that group's cells —
-    * n·(S + C/S) dot products instead of the flat kernel's n·C.
-    * Same strict-> min-id election at both levels; global cid =
-    * group offset + local cell. */
+  private[graft] def trainIvfCentroidsHier(
+      spark: SparkSession, dir: String, superOverride: Option[Int] = None)
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val (sup, cells, _) = trainIvfCentroidsHierWithTrace(spark, dir, superOverride)
+    (sup, cells)
+  }
+
+  /** Two-level assignment: ONE narrow pass, per vector the
+    * [[cosineArgmax]] over the S supercentroids, then over that group's
+    * cells — n·(S + C/S) dot products instead of the flat kernel's
+    * n·C. Global cid = group offset + local cell. */
   private[graft] def ivfAssignHierOf(
       spark: SparkSession, dir: String,
       superCents: Array[Array[Double]],
@@ -634,31 +610,15 @@ object Similarity {
     import spark.implicits._
     val offsets = cells.map(_.length).scanLeft(0)(_ + _)
     val bc = spark.sparkContext.broadcast((superCents, cells, offsets))
-    Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    rawVectors(spark, dir)
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val (sup, all, off) = bc.value
-        val supN = sup.map(c => math.sqrt(dotA(c, c)))
-        val norms = all.map(_.map(c => math.sqrt(dotA(c, c))))
+        val nearestGroup = cosineArgmax(sup)
+        val nearestCell = all.map(cosineArgmax)
         it.map { case (id, v) =>
-          val nv = math.sqrt(dotA(v, v))
-          var g = 0; var bg = Double.NegativeInfinity
-          var j = 0
-          while (j < sup.length) {
-            val sc = dotA(v, sup(j)) / (nv * supN(j))
-            if (sc > bg) { bg = sc; g = j }
-            j += 1
-          }
-          val cs = all(g); val cn = norms(g)
-          var best = 0; var bs = Double.NegativeInfinity
-          j = 0
-          while (j < cs.length) {
-            val sc = dotA(v, cs(j)) / (nv * cn(j))
-            if (sc > bs) { bs = sc; best = j }
-            j += 1
-          }
-          (id, (off(g) + best).toLong)
+          val g = nearestGroup(v)
+          (id, (off(g) + nearestCell(g)(v)).toLong)
         }
       }
       .toDF("vec_id", "cid")
@@ -667,8 +627,7 @@ object Similarity {
   /** Memoized + IndexStore-persisted two-level quantizer state for a
     * corpus: two fingerprint-keyed artifacts (supercentroids with
     * their groups' cell budgets; the flattened cell centroids), so a
-    * cold session reads S + C rows instead of retraining — the same
-    * persistence discipline as the flat centroids and PQ codebooks. */
+    * cold session reads S + C rows instead of retraining. */
   private[graft] def hierState(spark: SparkSession, dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) =
     SessionCaches.memo(spark, "similarity.hier", dir) {
@@ -729,56 +688,25 @@ object Similarity {
       .select(col("vec_id"), col("cid"), s.as("s"))
   }
 
-  /** Every vector's trained-cluster assignment: argmax centroid, ties
-    * to the lower cid — ONE NARROW PASS (the training loop's own
-    * assignment kernel over broadcast centroids), persisted and
-    * memoized per (session, corpus) as n two-column rows.
-    *
-    * This replaces the round-2..11 shape that materialized the full
-    * n×C score frame and argmax'd it relationally: at sf100 that
-    * frame was 976 M rows (~25 GB persisted — the dominant cold cost
-    * of every IVF consumer, 222 s for similar_ann_ivf), and at a real
-    * deployment's n=10⁹, C=4096 it is 4×10¹² rows — a shape that
-    * cannot exist. The kernel emits n rows and never stores a score;
-    * probe-side consumers (which DO need per-cell scores, for
-    * [[IvfProbeCells]] election) read the tiny [[probeSims]] frame
-    * instead. Strict `>` with ascending scan order reproduces the
-    * min-over-(−s, cid) election bit-for-bit — same dotA fold, same
-    * division — so every oracle hash is unchanged. */
+  /** Every vector's trained-cluster assignment — ONE NARROW PASS of
+    * [[cosineArgmax]] over broadcast centroids ([[nearestCells]]),
+    * persisted and memoized per (session, corpus) as n two-column rows.
+    * It never stores a score: an n×C score frame argmax'd relationally
+    * is 4×10¹² rows at n = 10⁹, C = 4096. Probe-side consumers, which
+    * do need per-cell scores for [[IvfProbeCells]] election, read the
+    * tiny [[probeSims]] frame instead. Beyond [[HierCellThreshold]]
+    * cells the flat n·C kernel is the scale wall, so assignment goes
+    * supercluster-first ([[ivfAssignHierOf]]); every certified rung
+    * stays below the threshold, on the flat branch. */
   private[graft] def ivfAssign(spark: SparkSession, dir: String): DataFrame =
     SessionCaches.persisted(spark, "similarity.ivfAssign", dir) {
       import spark.implicits._
-      // beyond [[HierCellThreshold]] cells the flat n·C kernel is the
-      // scale wall (round-12 verdict #3): assign supercluster-first —
-      // n·(√C + C/√C). Every certified rung stays below the threshold,
-      // so all existing hashes ride the flat branch bit-stable.
-      val assigned =
-        if (useHier(ivfCellCount(spark, dir))) {
-          val (sup, cells) = hierState(spark, dir)
-          ivfAssignHierOf(spark, dir, sup, cells)
-        } else {
-          val bc = spark.sparkContext.broadcast(trainIvfCentroids(spark, dir))
-          Tables.load(spark, dir, "embeddings")
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-            .as[(Long, Array[Double])]
-            .mapPartitions { it =>
-              val cs = bc.value
-              val cn = cs.map(c => math.sqrt(dotA(c, c)))
-              it.map { case (id, v) =>
-                val nv = math.sqrt(dotA(v, v))
-                var best = 0; var bs = Double.NegativeInfinity
-                var j = 0
-                while (j < cs.length) {
-                  val s = dotA(v, cs(j)) / (nv * cn(j))
-                  if (s > bs) { bs = s; best = j } // strict > : ties keep min cid
-                  j += 1
-                }
-                (id, best.toLong)
-              }
-            }
-            .toDF("vec_id", "cid")
-        }
-      assigned
+      if (useHier(ivfCellCount(spark, dir))) {
+        val (sup, cells) = hierState(spark, dir)
+        ivfAssignHierOf(spark, dir, sup, cells)
+      } else
+        nearestCells(spark, rawVectors(spark, dir).as[(Long, Array[Double])],
+          trainIvfCentroids(spark, dir)).toDF("vec_id", "cid")
     }
 
   /** Cluster-balance profile of the corpus over the TRAINED k-means
@@ -797,18 +725,16 @@ object Similarity {
 
   /** Per-cell census over the FORCED two-level quantizer — the
     * certification twin of [[embeddingClusterBalance]] for the hier
-    * path (round-13 verdict #3: every DuckDB certificate rode the
-    * flat branch because all oracle-gated rungs sit below
-    * [[HierCellThreshold]]). [[hierState]] always trains S = ⌈√C⌉
-    * superclusters regardless of the threshold, so here the
-    * supercluster Lloyd stage, the largest-deficit cell allocation,
-    * the per-group seeding/padding, the keyed group Lloyd loop, and
-    * the two-stage assignment all face a DuckDB hash-match at EVERY
-    * oracle-gated SF (S = 4 groups at sf0.01 through sf3 where C = 16;
-    * multi-group coverage widens only on the bigger fixtures — S = 7
-    * at n=200k, 39 at the n=6M production rung,
-    * `artifacts/correctness_hier_r14.json`)
-    * — the certification form the S = 1 bit-equivalence spec and the
+    * path (all oracle-gated rungs sit below [[HierCellThreshold]], so
+    * [[ivfAssign]] rides the flat branch there). [[hierState]] always
+    * trains S = ⌈√C⌉ superclusters regardless of the threshold, so
+    * here the supercluster Lloyd stage, the largest-deficit cell
+    * allocation, the per-group seeding/padding, the grouped Lloyd
+    * stage, and the two-stage assignment all face a DuckDB hash-match
+    * at EVERY oracle-gated SF (S = 4 groups at sf0.01 through sf3
+    * where C = 16; multi-group coverage widens only on the bigger
+    * fixtures — S = 7 at n=200k, 39 at the n=6M production rung,
+    * `artifacts/correctness_hier_r14.json`) — the certification form the S = 1 bit-equivalence spec and the
     * recall-parity A/Bs could not provide. Above the threshold
     * (C > 512), where [[ivfAssign]] dispatches to the identical
     * hierState + [[ivfAssignHierOf]] pair on its own, this query IS
@@ -887,25 +813,28 @@ object Similarity {
         round(col("psi_total").cast("double"), 6).as("psi"))
   }
 
-  /** Nearest-centroid assignment of explicit (id, v) rows against a
-    * PROVIDED quantizer (argmax cosine, ties to the lower cell id —
-    * the [[ivfAssign]] election over broadcast centroids): the entry
-    * point a streaming monitor uses to score a micro-batch in the
-    * DEPLOYED index's cell space without touching the training path. */
+  /** (id, cell) of every (id, v) row: one narrow `mapPartitions` pass
+    * of [[cosineArgmax]] over broadcast centroids, no shuffle — the
+    * kernel behind [[ivfAssign]] and [[assignToCentroids]]. */
+  private def nearestCells(spark: SparkSession, vecs: Dataset[(Long, Array[Double])],
+                           cents: Array[Array[Double]]): Dataset[(Long, Long)] = {
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(cents)
+    vecs.mapPartitions { it =>
+      val nearest = cosineArgmax(bc.value)
+      it.map { case (id, v) => (id, nearest(v).toLong) }
+    }
+  }
+
+  /** Nearest-centroid assignment of explicit (id: Long, v) rows against
+    * a PROVIDED quantizer ([[nearestCells]]): the entry point a
+    * streaming monitor uses to score a micro-batch in the DEPLOYED
+    * index's cell space without touching the training path. */
   private[graft] def assignToCentroids(spark: SparkSession, vecs: DataFrame,
                                        cents: Array[Array[Double]]): DataFrame = {
     import spark.implicits._
-    val cdf = spark.createDataset(
-        cents.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) })
-      .toDF("cid", "cv")
-      .withColumn("cnrm", norm(col("cv")))
-    val s = dot(col("v"), col("cv")) / (col("nrm") * col("cnrm"))
-    vecs.withColumn("nrm", norm(col("v")))
-      .crossJoin(broadcast(cdf))
-      .select(col("id"), col("cid"), s.as("s"))
-      .groupBy("id")
-      .agg(min(struct(negate(col("s")).as("ns"), col("cid"))).as("b"))
-      .select(col("id"), col("b.cid").as("cid"))
+    nearestCells(spark, vecs.select(col("id"), col("v")).as[(Long, Array[Double])], cents)
+      .toDF("id", "cid")
   }
 
   def similarAnnIvf(spark: SparkSession, dir: String): DataFrame = {
@@ -984,16 +913,13 @@ object Similarity {
   def similarAnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cents = trainPqCodebooks(spark, dir)
-    val qcents: Array[Array[Array[Long]]] =
-      cents.map(_.map(_.map(x => math.floor(x * QuantScale).toLong)))
+    val qcents = cents.map(_.map(quantized))
     val ivfCents = trainIvfCentroids(spark, dir)
     // probe raw vectors: NumProbes·Dim doubles of driver state — the
     // residual ADC needs them per PROBED CELL (q − centroid(cell)),
     // which is not any single stored residual
     val probeVecs: Map[Long, Array[Double]] =
-      Tables.load(spark, dir, "embeddings")
-        .filter(col("vec_id") < NumProbes)
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
+      rawVectors(spark, dir).filter(col("vec_id") < NumProbes)
         .as[(Long, Array[Double])].collect().toMap
 
     // IVF candidate generation — same shape as similarAnnIvf
@@ -1257,32 +1183,28 @@ object Similarity {
   /** PQ twin of [[IvfIndexParams]] — keys the codebook and codes
     * artifacts on the constants they were trained/encoded with. The
     * `res=ivf(...)` component records that codes are RESIDUAL-encoded
-    * against the IVF coarse quantizer (round-10 verdict #5): a coarse
-    * quantizer parameter change re-keys the PQ artifacts too, because
-    * residuals — and so codebooks and codes — depend on it. */
+    * against the IVF coarse quantizer: a coarse quantizer parameter
+    * change re-keys the PQ artifacts too, because residuals — and so
+    * codebooks and codes — depend on it. */
   private[graft] def PqIndexParams =
     s"dim=$Dim,m=$PqSubspaces,k=$PqK,iters=$PqIters,q=$QuantScale,res=ivf($IvfIndexParams)"
 
-  /** The per-subspace (vec_id, m, subvector, quantized subvector)
-    * exploded frame the PQ trainer and scorer both consume — RESIDUAL
-    * form (the FAISS IVF-PQ layout, round-10 verdict #5): each vector's
-    * assigned coarse centroid is subtracted BEFORE slicing, so the
-    * codebooks quantize what the coarse quantizer failed to explain
-    * (the residual's dynamic range is a fraction of the raw vector's,
-    * worth ~2× code efficiency at the same M×K). The assignment rides
-    * the memoized [[ivfAssign]] frame and the centroids broadcast as
-    * bounded driver state — the residual pass stays one narrow
-    * flatMap, no new corpus shuffle. */
-  /** `preFilter` applies BEFORE the subvector kernel so a probe-only
-    * caller reads its handful of rows with parquet pushdown instead of
-    * running the kernel over the corpus (the sf10 probe measured the
-    * unfiltered form paying a full corpus pass for 40 rows). */
+  /** The per-subspace [[Train]] rows (m, vec_id, subvector, quantized
+    * subvector) the PQ trainer and encoder both consume — RESIDUAL
+    * form (the FAISS IVF-PQ layout): each vector's assigned coarse
+    * centroid is subtracted BEFORE slicing, so the codebooks quantize
+    * what the coarse quantizer failed to explain (the residual's
+    * dynamic range is a fraction of the raw vector's, worth ~2× code
+    * efficiency at the same M×K). The assignment rides the memoized
+    * [[ivfAssign]] frame and the centroids broadcast as bounded driver
+    * state — one narrow flatMap, no new corpus shuffle. `preFilter`
+    * applies BEFORE the subvector kernel, so the training sample never
+    * runs it over the whole corpus. */
   private def pqSubvectors(spark: SparkSession, dir: String,
-                           preFilter: Option[Column] = None) = {
+                           preFilter: Option[Column] = None): Dataset[Train] = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(trainIvfCentroids(spark, dir))
-    val base = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val base = rawVectors(spark, dir)
     preFilter.fold(base)(base.filter)
       .join(ivfAssign(spark, dir), "vec_id")
       .select(col("vec_id"), col("v"), col("cid"))
@@ -1294,10 +1216,7 @@ object Similarity {
         while (d0 < v.length) { r(d0) = v(d0) - c(d0); d0 += 1 }
         (0 until PqSubspaces).iterator.map { m =>
           val s = java.util.Arrays.copyOfRange(r, m * PqSubDim, (m + 1) * PqSubDim)
-          val q = new Array[Long](PqSubDim)
-          var d = 0
-          while (d < PqSubDim) { q(d) = math.floor(s(d) * QuantScale).toLong; d += 1 }
-          (id, m, s, q)
+          (m, id, s, quantized(s))
         }
       }
   }
@@ -1309,23 +1228,13 @@ object Similarity {
   private def sqDist(s: Array[Double], c: Array[Double]): Double =
     dotA(s, s) - 2.0 * dotA(s, c) + dotA(c, c)
 
-  /** Deterministic per-subspace Lloyd's for the PQ codebooks —
-    * structurally [[trainIvfCentroidsWithTrace]] (quantized-long mean
-    * sums, empty cells keep their centroid, driver state = codebooks
-    * only), but ALL [[PqSubspaces]] codebooks train in each single
-    * corpus pass: the subvector explode keys rows by (m, cid), so one
-    * shuffle per iteration carries ≤ M·K quantized sum rows per
-    * partition. Seeds are the first [[PqK]] vectors' subvectors.
-    * Assignment is argmin squared-L2 ([[sqDist]]), ties to the lower
-    * code. Memoized per (session, corpus) AND persisted: the first
-    * session to train a corpus's codebooks publishes them as a
-    * fingerprint-keyed parquet artifact ([[graft.IndexStore]], rows of
-    * (m, cid, centroid)); every later session — cold JVMs included —
-    * reads M·K rows back instead of paying [[PqIters]] corpus passes.
-    * Doubles round-trip parquet losslessly, so stored-vs-fresh
-    * codebooks are bit-identical (spec-pinned). Training itself reads
-    * only the [[trainEvery]] sample — at 100 TB nothing but the final
-    * encode pass touches the corpus. */
+  /** The PQ codebooks, memoized per (session, corpus) AND persisted:
+    * the first session to train a corpus's codebooks publishes them as
+    * a fingerprint-keyed parquet artifact ([[graft.IndexStore]], rows
+    * of (m, cid, centroid)); every later session — cold JVMs included —
+    * reads M·K rows back instead of retraining. Doubles round-trip
+    * parquet losslessly, so stored-vs-fresh codebooks are bit-identical
+    * (spec-pinned). */
   private[graft] def trainPqCodebooks(
       spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
     SessionCaches.memo(spark, "similarity.pq", dir) {
@@ -1348,66 +1257,19 @@ object Similarity {
       Array.tabulate(PqSubspaces, PqK)((m, c) => byKey((m, c)))
     }
 
+  /** Train the PQ codebooks: [[lloyd]] over the residual subvectors of
+    * the [[trainEvery]] sample as [[PqSubspaces]] groups of [[PqK]]
+    * codes, [[l2Argmin]] election, seeded with the [[PqK]] lowest
+    * sampled ids' subvectors. At 100 TB nothing but the final encode
+    * pass touches the corpus. */
   private[graft] def trainPqCodebooksFresh(
       spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
-      import spark.implicits._
-      // SAMPLED like the coarse quantizer: the residual subvector
-      // kernel and both Lloyd rounds touch only the training sample;
-      // the full corpus pays nothing until the encode pass
-      val every = trainEvery(vecCount(spark, dir))
-      val base =
-        SessionCaches.persist(pqSubvectors(spark, dir, Some(trainSampleCond(every))))
-      // seeds: the PqK lowest sampled vec_ids' subvectors, code id =
-      // rank — identical to "vec_id 0..PqK-1, code = vec_id" when
-      // every == 1 over dense ids. Distributed TakeOrdered like the
-      // coarse-quantizer seeds: only PqK ids reach the driver, never
-      // the full (1/16-of-corpus) sample-id list (round-12 advice).
-      val seedIds = base.map(_._1).distinct().orderBy("value").limit(PqK)
-        .collect().sorted
-      require(seedIds.length == PqK,
-        s"PQ training sample at $dir has only ${seedIds.length} vectors " +
-          s"for $PqK codes (every=$every)")
-      val seedSet = seedIds.toSet
-      val seeds = base.filter(t => seedSet.contains(t._1))
-        .map(t => (t._1, t._2, t._3)).collect()
-      var cents: Array[Array[Array[Double]]] =
-        Array.tabulate(PqSubspaces, PqK) { (m, c) =>
-          seeds.find(t => t._2 == m && t._1 == seedIds(c)).get._3
-        }
-      for (_ <- 0 until PqIters) {
-        val bc = spark.sparkContext.broadcast(cents)
-        val sums = base.mapPartitions { it =>
-          val cs = bc.value
-          it.map { case (_, m, s, q) =>
-            val cb = cs(m)
-            var best = 0; var bd = Double.PositiveInfinity
-            var j = 0
-            while (j < cb.length) {
-              val d2 = sqDist(s, cb(j))
-              if (d2 < bd) { bd = d2; best = j } // strict < : ties keep min code
-              j += 1
-            }
-            ((m, best), q, 1L)
-          }
-        }
-          .groupByKey(_._1)
-          .reduceGroups { (a, b) =>
-            val q = new Array[Long](a._2.length)
-            var d = 0
-            while (d < q.length) { q(d) = a._2(d) + b._2(d); d += 1 }
-            (a._1, q, a._3 + b._3)
-          }
-          .map { case ((m, cid), (_, q, n)) => (m, cid, q, n) }
-          .collect()
-        val next = cents.map(_.map(_.clone()))
-        sums.foreach { case (m, cid, q, n) =>
-          next(m)(cid) = q.map(s => (s.toDouble / n) / QuantScale)
-        }
-        cents = next
-        bc.unpersist()
-      }
-      base.unpersist()
-      cents
+    val every = trainEvery(vecCount(spark, dir))
+    val base = SessionCaches.persist(pqSubvectors(spark, dir, Some(trainSampleCond(every))))
+    try {
+      val seeds = lowestIdSeeds(spark, base, PqSubspaces, PqK, dir, every)
+      lloyd(spark, base, seeds, PqIters, l2Argmin)._1
+    } finally { base.unpersist(); () }
   }
 
   /** Product-quantization codes + reconstruction error — the vector
@@ -1415,39 +1277,30 @@ object Similarity {
     * sits on, in the RESIDUAL layout production FAISS IVF-PQ uses: the
     * m-th subvector of each vector's residual against its assigned
     * coarse centroid (x − c_ivf(x)) is replaced by the id of its
-    * nearest codebook centroid — the codebooks themselves are trained
-    * on residuals, so the M×K budget models the part of the vector the
-    * coarse quantizer cannot, worth ~2× code efficiency over raw-vector
-    * PQ at the same size. Output is one row per (vector, subspace):
-    * the code and the INTEGER quantized reconstruction error
-    * err_q = Σ_d (floor(r_d·10⁶) − floor(c_d·10⁶))² — exact int64
-    * arithmetic, so the hash compare is immune to aggregation order
-    * (the assignment itself rides double [[sqDist]], whose operation
-    * sequence both engines share).
+    * nearest codebook centroid ([[l2Argmin]]) — the codebooks
+    * themselves are trained on residuals, so the M×K budget models the
+    * part of the vector the coarse quantizer cannot, worth ~2× code
+    * efficiency over raw-vector PQ at the same size. Output is one row
+    * per (vector, subspace): the code and the INTEGER quantized
+    * reconstruction error err_q = Σ_d (floor(r_d·10⁶) − floor(c_d·10⁶))²
+    * — exact int64 arithmetic, so the hash compare is immune to
+    * aggregation order (the assignment itself rides double [[sqDist]],
+    * whose operation sequence both engines share).
     *
     * Plan: codebooks broadcast (M·K·subdim doubles); scoring is ONE
-    * narrow flatMap pass over the corpus — after the training memo the
-    * only addition over raw-vector PQ is the assignment join against
-    * the memoized [[ivfAssign]] frame, which is the 100 TB posture: PQ
+    * narrow pass over the corpus — after the training memo the only
+    * addition over raw-vector PQ is the assignment join against the
+    * memoized [[ivfAssign]] frame, which is the 100 TB posture: PQ
     * encode is embarrassingly parallel, the only hard part is the
     * codebook, and that is bounded driver state. */
   def embeddingPqCodes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cents = trainPqCodebooks(spark, dir)
-    val qcents: Array[Array[Array[Long]]] =
-      cents.map(_.map(_.map(x => math.floor(x * QuantScale).toLong)))
-    val bc = spark.sparkContext.broadcast((cents, qcents))
+    val bc = spark.sparkContext.broadcast((cents, cents.map(_.map(quantized))))
     pqSubvectors(spark, dir)
-      .map { case (id, m, s, q) =>
+      .map { case (m, id, s, q) =>
         val (cs, qcs) = bc.value
-        val cb = cs(m)
-        var best = 0; var bd = Double.PositiveInfinity
-        var j = 0
-        while (j < cb.length) {
-          val d2 = sqDist(s, cb(j))
-          if (d2 < bd) { bd = d2; best = j }
-          j += 1
-        }
+        val best = l2Argmin(cs(m))(s)
         val qc = qcs(m)(best)
         var e = 0L; var d = 0
         while (d < PqSubDim) { val dd = q(d) - qc(d); e += dd * dd; d += 1 }

@@ -195,6 +195,38 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
     // two trainings agree exactly (quantized-long sums are order-free)
     val (cents2, _) = Similarity.trainIvfCentroidsWithTrace(spark, sfDir)
     assert(cents.flatten.toSeq == cents2.flatten.toSeq)
+    // the two-level and PQ trainers run the same loop: bit-equal
+    // reruns, and the two-level cells' movement decays too
+    val (sup, cells, hierMoves) = Similarity.trainIvfCentroidsHierWithTrace(spark, sfDir)
+    assert(hierMoves.last < hierMoves.head, hierMoves.toSeq)
+    val (sup2, cells2) = Similarity.trainIvfCentroidsHier(spark, sfDir)
+    assert(sup.flatten.toSeq == sup2.flatten.toSeq)
+    assert(cells.flatten.flatten.toSeq == cells2.flatten.flatten.toSeq)
+    val pq = Similarity.trainPqCodebooksFresh(spark, sfDir)
+    val pq2 = Similarity.trainPqCodebooksFresh(spark, sfDir)
+    assert(pq.flatten.flatten.toSeq == pq2.flatten.flatten.toSeq)
+  }
+
+  test("streaming gate cells: assignToCentroids equals ivfAssign in one " +
+    "shuffle-free pass") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.functions.col
+    // the sf0.01 fixture beside the suite's shared sf0.001 one
+    val dir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    val vecs = Tables.load(spark, dir, "embeddings")
+      .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("v"))
+    val gate = Similarity.assignToCentroids(spark, vecs,
+      Similarity.trainIvfCentroids(spark, dir))
+    val got = gate.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = Similarity.ivfAssign(spark, dir).as[(Long, Long)].collect().toMap
+    assert(got.size == vecs.count())
+    assert(got == want, "the gate's cell space diverged from the IVF index's")
+    val shuffles = new AdaptiveSparkPlanHelper {}
+      .collect(gate.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }
+    assert(shuffles.isEmpty,
+      s"assignment must be one narrow pass:\n${gate.queryExecution.executedPlan}")
   }
 
   test("knn_graph_lsh: ranks contiguous, sims non-increasing, rank-1 bounded by exact top-1") {
