@@ -37,8 +37,9 @@ object DriftMonitor {
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        CorpusOps.psiBetween(spark, refFeats, CorpusOps.qualityFeats(batch))
-          .write.mode("overwrite").parquet(s"$sinkPath/batch=$id")
+        val (psi, state) = CorpusOps.psiWithCheckpoints(spark, refFeats, CorpusOps.qualityFeats(batch))
+        try psi.write.mode("overwrite").parquet(s"$sinkPath/batch=$id")
+        finally state.foreach(graft.SessionCaches.free)
       }
       .start()
   }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 import graft.{SessionCaches, Tables}
 import graft.dedup.{BandIndex, Dedup}
@@ -31,11 +32,17 @@ import graft.dedup.{BandIndex, Dedup}
   * stream == fold over the same feed and exactly-once across a
   * kill + torn-commit restart.
   *
-  * Scale: per batch, the signature kernel touches only the batch; the
-  * index contributes a parquet scan of constant-width (band, sig)
-  * keys; verify shingles only the corpus docs that actually collide
-  * (semi-join pushdown before the shingle kernel). The per-batch cost
-  * tracks batch size + matched-bucket corpus rows — never the corpus.
+  * Scale: one micro-batch step ([[ingestBatch]]) serves all three
+  * streams. It shingles, signs and bands the batch once and broadcasts
+  * what it derives from the batch: its bands (to probe the index), the
+  * candidate pairs (to fetch colliding corpus text) and its shingles
+  * (to verify). One trigger bounds a micro-batch, so those sides are
+  * bounded by batch size times bucket occupancy. The index and the
+  * accepted-text store only stream through scans: neither is ever
+  * shuffled, so the per-batch cost tracks the batch plus the
+  * matched-bucket corpus rows — never the corpus. The batch fold
+  * [[ingestDedupFold]] is not trigger-bounded (each step is a sixth of
+  * the corpus) and keeps [[dedupStep]]'s shuffle joins.
   */
 object IngestDedup {
 
@@ -51,14 +58,13 @@ object IngestDedup {
     dedupStepWith(spark, batchDocs, indexBands, knownDocs,
       shinglesOf(spark, _))
 
-  /** [[dedupStep]] with an injectable shingle source. The streaming
-    * path shingles its incoming frames directly (the default above);
-    * the batch FOLD's frames are all subsets of the corpus, so it
-    * passes a semi-join against the session-memoized corpus shingle
-    * frame instead (round-17, guide §1.2): the r16 fold re-ran the
-    * single-task shingle kernel ~4× per step (batch bands, the verify
-    * union, the candidate-corpus side, the index update) — identical
-    * rows either way, the kernel is the same `Dedup.shingleSet`. */
+  /** [[dedupStep]] with an injectable shingle source. The default
+    * above shingles its frames directly; the batch FOLD's frames are
+    * all subsets of the corpus, so it passes a semi-join against the
+    * session-memoized corpus shingle frame instead, which saves the
+    * shingle kernel about four passes per step (batch bands, the verify
+    * union, the candidate-corpus side, the index update). The rows are
+    * identical either way: the kernel is the same `Dedup.shingleSet`. */
   private[graft] def dedupStepWith(spark: SparkSession, batchDocs: DataFrame,
                 indexBands: DataFrame, knownDocs: DataFrame,
                 shingler: DataFrame => DataFrame): DataFrame = {
@@ -108,29 +114,64 @@ object IngestDedup {
     * `indexPath/batch=<id>`. Idempotent per batch (see object doc). */
   def start(spark: SparkSession, docsStream: DataFrame, indexPath: String,
             acceptedPath: String, checkpoint: String): StreamingQuery =
-    docsStream.writeStream
+    eachBatch(docsStream, checkpoint) { (batch, id) =>
+      ingestBatch(batch, id, indexPath, acceptedPath)
+    }
+
+  private def eachBatch(rows: DataFrame, checkpoint: String)
+                       (step: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // list + filter BEFORE writing this batch's partitions; the
-        // batch < id guard makes torn-commit replays read the same
-        // state the first attempt saw
-        val index = spark.read.parquet(indexPath)
-          .filter(col("batch") < id).select("doc_id", "band", "sig")
-        val known = spark.read.parquet(acceptedPath)
-          .filter(col("batch") < id).select("doc_id", "text")
-        val accepted = batch.select("doc_id", "text")
-          .join(dedupStep(spark, batch.select("doc_id", "text"), index, known),
-            Seq("doc_id"), "left_semi")
-          .persist()
-        try {
-          accepted.write.mode("overwrite").parquet(s"$acceptedPath/batch=$id")
-          Dedup.bandsOf(Dedup.minhashSignaturesOf(spark,
-              shinglesOf(spark, accepted)))
-            .write.mode("overwrite").parquet(s"$indexPath/batch=$id")
-        } finally { accepted.unpersist(); () }
-      }
+      .foreachBatch(step)
       .start()
+
+  /** One micro-batch of every ingest stream: dedup `docs` (doc_id, text)
+    * against the stores as of batch `id` and write the accepted docs and
+    * their bands as the stores' `batch=<id>` partitions. `live` narrows
+    * a store read (given the store's path) before the dedup, e.g. to
+    * drop tombstoned rows.
+    *
+    * The stores are read BEFORE this batch's partitions are written,
+    * with fixed schemas (no inference job) and the `batch < id` guard,
+    * so a torn-commit replay reads the same state the first attempt
+    * saw. They are read on the micro-batch's own session, so the whole
+    * step plans the way the stream plans its batch. The acceptance rule
+    * is [[dedupStep]]'s: a doc is rejected iff it shares a band bucket
+    * with an index doc whose text is at exact Jaccard ≥ 0.5. Every join
+    * broadcasts its batch-derived side (see the object doc): each
+    * (batch doc, colliding corpus doc) row shingles the corpus text it
+    * fetched, once per shared bucket. The rejected ids — a subset of
+    * the batch — come back to the driver, so both writes filter rows
+    * already computed. */
+  private def ingestBatch(docs: DataFrame, id: Long, indexPath: String, acceptedPath: String,
+                          live: (DataFrame, String) => DataFrame = (store, _) => store): Unit = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    def read(path: String, schema: StructType) =
+      live(readStore(spark, path, schema, id), path)
+    val sh = SessionCaches.persist(shinglesOf(spark, docs))
+    val bands = SessionCaches.persist(Dedup.bandsOf(Dedup.minhashSignaturesOf(spark, sh)))
+    try {
+      val cand = read(indexPath, IndexSchema)
+        .join(broadcast(bands.select(col("doc_id").as("dn"), col("band"), col("sig"))),
+          Seq("band", "sig"))
+      // (batch doc, text of a corpus doc sharing one of its buckets)
+      val partners = read(acceptedPath, AcceptedSchema)
+        .join(broadcast(cand.select(col("dn"), col("doc_id").as("dc"))),
+          col("doc_id") === col("dc"))
+        .select(col("dn").as("doc_id"), col("text"))
+      val c = size(array_intersect(col("sh1"), col("sh2")))
+      val dups = shinglesOf(spark, partners).select(col("doc_id"), col("sh").as("sh2"))
+        .join(broadcast(sh.select(col("doc_id"), col("sh").as("sh1"))), "doc_id")
+        .filter(c.cast("double") / (size(col("sh1")) + size(col("sh2")) - c) >= 0.5)
+        .select("doc_id").as[Long].collect()
+      val fresh = !col("doc_id").isin(dups.distinct.toSeq: _*)
+      docs.select("doc_id", "text").filter(fresh)
+        .write.mode("overwrite").parquet(s"$acceptedPath/batch=$id")
+      bands.filter(fresh).write.mode("overwrite").parquet(s"$indexPath/batch=$id")
+    } finally { sh.unpersist(); bands.unpersist(); () }
+  }
 
   /** The batch twin, oracled: odd doc_ids arrive as three ingest
     * batches (doc_id % 6 = 1, then 3, then 5) against the standing
@@ -145,11 +186,9 @@ object IngestDedup {
       val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
       // Every frame the fold shingles is a SUBSET OF THE CORPUS, so
       // ride the session-memoized corpus shingle frame instead of
-      // re-running the single-task shingle kernel per consumer
-      // (round-17; the r16 fold paid it ~4× per step — ~12 kernel
-      // passes dominating the 21 s first invocation). Identical rows:
-      // the memo is the same `Dedup.shingleSet` kernel over the same
-      // docs.
+      // re-running the single-task shingle kernel per consumer (about
+      // four passes per step otherwise). Identical rows: the memo is the
+      // same `Dedup.shingleSet` kernel over the same docs.
       val memoShingles: DataFrame => DataFrame = d =>
         Dedup.cachedDocShingles(spark, dir)
           .join(d.select("doc_id"), Seq("doc_id"), "left_semi")
@@ -162,12 +201,11 @@ object IngestDedup {
         val batch = docs.filter(col("doc_id") % 6 === k)
         // eagerly checkpoint each step's accepted ids (tiny: doc_ids
         // only): step k+1's index and the final union both consume
-        // them, and the round-17 plan audit showed the r16 persist-only
-        // form still CARRIED the whole fold prefix in each step's
-        // LOGICAL plan — step 3's lineage re-embedded steps 1-2's
-        // index/known subtrees multiplicatively (11,991 scan nodes in
-        // the slice's printed plan). localCheckpoint truncates to the
-        // materialized rows, so plan growth across the fold is linear.
+        // them, and a persist-only form still CARRIES the whole fold
+        // prefix in each step's LOGICAL plan — step 3's lineage
+        // re-embeds steps 1-2's index/known subtrees multiplicatively.
+        // localCheckpoint truncates to the materialized rows, so plan
+        // growth across the fold is linear.
         val acc = dedupStepWith(spark, batch, index, known, memoShingles)
           .localCheckpoint(true)
         steps += acc
@@ -287,7 +325,7 @@ object IngestDedup {
     * re-ingests a doc_id leaves the re-ingested copy live (a `≤` scope
     * would hide those rows from every later read — and compaction
     * would physically drop them — silently disabling dedup against
-    * that content, the round-11 advice finding).
+    * that content).
     *
     * Scale: an erasure batch costs one tombstone append; the
     * anti-join adds a broadcast-able (tombstones are erased-id rows,
@@ -301,61 +339,37 @@ object IngestDedup {
   def startWithRetraction(spark: SparkSession, eventsStream: DataFrame,
                           indexPath: String, acceptedPath: String,
                           tombPath: String, checkpoint: String): StreamingQuery =
-    eventsStream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val ing = batch.filter(col("op") === "ingest").select("doc_id", "text")
-        val era = batch.filter(col("op") === "erase").select("doc_id")
-        // tombstones visible to THIS batch: all earlier ones plus this
-        // batch's own (erase-before-ingest within the batch); the
-        // union is the same set on a torn-commit replay, because the
-        // replay overwrites its own partition below.
-        //
-        // Erasure is BATCH-SCOPED (round-10 advice): a tombstone at
-        // batch t erases only store rows written at batch < t — strict,
-        // because within a batch erasures apply FIRST, so rows written
-        // at t postdate the erasure (round-11 advice). An unscoped
-        // doc_id anti-join would make erasure permanent — a doc_id
-        // erased once could be re-ingested and ACCEPTED, but its
-        // bands/text would stay invisible to every later read (and be
-        // physically dropped at compaction), silently disabling dedup
-        // against re-crawled content forever.
-        val priorTombs = readStore(spark, tombPath, id)
-          .select(col("doc_id").as("t_id"), col("batch").cast("long").as("t_batch"))
-        val tombs = priorTombs.unionByName(
-          era.select(col("doc_id").as("t_id"), lit(id).as("t_batch")))
-        // tombstones are erased-id rows — tiny relative to the index —
-        // so the scoped anti-join broadcasts them. Rows folded into the
-        // compacted base read as batch=-1; `greatest` lifts them to the
-        // store's compaction floor so a not-yet-swept tombstone ≤ floor
-        // (already APPLIED by the compaction rewrite) cannot re-erase a
-        // re-ingested doc the fold correctly kept.
-        def live(store: DataFrame, floor: Long): DataFrame =
-          store.join(broadcast(tombs),
-            col("doc_id") === col("t_id") &&
-              greatest(col("batch").cast("long"), lit(floor)) < col("t_batch"),
-            "left_anti")
-        val index = live(readStore(spark, indexPath, id)
-            .select(col("doc_id"), col("band"), col("sig"), col("batch")),
-            compactedUpTo(indexPath))
-          .select("doc_id", "band", "sig")
-        val known = live(readStore(spark, acceptedPath, id)
-            .select(col("doc_id"), col("text"), col("batch")),
-            compactedUpTo(acceptedPath))
-          .select("doc_id", "text")
-        val accepted = ing
-          .join(dedupStep(spark, ing, index, known), Seq("doc_id"), "left_semi")
-          .persist()
-        try {
-          accepted.write.mode("overwrite").parquet(s"$acceptedPath/batch=$id")
-          Dedup.bandsOf(Dedup.minhashSignaturesOf(spark,
-              shinglesOf(spark, accepted)))
-            .write.mode("overwrite").parquet(s"$indexPath/batch=$id")
-          era.write.mode("overwrite").parquet(s"$tombPath/batch=$id")
-        } finally { accepted.unpersist(); () }
-      }
-      .start()
+    eachBatch(eventsStream, checkpoint) { (batch, id) =>
+      val era = batch.filter(col("op") === "erase").select("doc_id")
+      // tombstones visible to THIS batch: all earlier ones plus this
+      // batch's own (erase-before-ingest within the batch); the union is
+      // the same set on a torn-commit replay, because the replay
+      // overwrites its own partition below.
+      //
+      // Erasure is BATCH-SCOPED: a tombstone at batch t erases only
+      // store rows written at batch < t — strict, because within a batch
+      // erasures apply FIRST, so rows written at t postdate the erasure.
+      // An unscoped doc_id anti-join would make erasure permanent — a
+      // doc_id erased once could be re-ingested and ACCEPTED, but its
+      // bands/text would stay invisible to every later read (and be
+      // physically dropped at compaction), silently disabling dedup
+      // against re-crawled content forever.
+      val tombs = readStore(spark, tombPath, TombSchema, id)
+        .select(col("doc_id").as("t_id"), col("batch").cast("long").as("t_batch"))
+        .unionByName(era.select(col("doc_id").as("t_id"), lit(id).as("t_batch")))
+      // tombstones are erased-id rows — tiny relative to the index — so
+      // the scoped anti-join broadcasts them. Rows folded into the
+      // compacted base read as batch=-1; `greatest` lifts them to the
+      // store's compaction floor so a not-yet-swept tombstone ≤ floor
+      // (already APPLIED by the compaction rewrite) cannot re-erase a
+      // re-ingested doc the fold correctly kept.
+      ingestBatch(batch.filter(col("op") === "ingest"), id, indexPath, acceptedPath,
+        (store, path) => store.join(broadcast(tombs),
+          col("doc_id") === col("t_id") &&
+            greatest(col("batch").cast("long"), lit(compactedUpTo(path))) < col("t_batch"),
+          "left_anti"))
+      era.write.mode("overwrite").parquet(s"$tombPath/batch=$id")
+    }
 
   /** PSI threshold above which an incoming batch is quarantined by
     * [[startGated]] — the "act" line of the drift convention
@@ -364,7 +378,7 @@ object IngestDedup {
   val PsiGate = 0.25
 
   /** The drift gate COMPOSED with the ingest dedup — the shape a
-    * production crawl actually ships (round-10 verdict #7): each
+    * production crawl actually ships: each
     * micro-batch is first scored against the static reference corpus's
     * quality deciles ([[DriftMonitor]]'s PSI math); a batch whose worst
     * per-feature PSI exceeds [[PsiGate]] is QUARANTINED — its docs land
@@ -376,7 +390,7 @@ object IngestDedup {
     * PSI table is appended to the monitor sink — the drift history is
     * complete even for batches that passed.
     *
-    * EMBEDDING drift gates too (round-11 verdict #8): when a deployed
+    * EMBEDDING drift gates too: when a deployed
     * `quantizer` is supplied and the rows carry an `embedding` column,
     * the batch is also scored in the quantizer's cell space
     * ([[graft.similarity.Similarity.cellPsiBetween]]) and quarantined
@@ -412,8 +426,8 @@ object IngestDedup {
         col("embedding").cast("array<double>").as("v"))
     // a quantizer without an embedding column would otherwise throw
     // inside foreachBatch — killing the query on its first batch with
-    // an AnalysisException far from the misconfiguration (round-12
-    // advice); fail at stream WIRING time with the actual contract
+    // an AnalysisException far from the misconfiguration; fail at
+    // stream WIRING time with the actual contract
     quantizer.foreach { _ =>
       require(docsStream.columns.contains("embedding"),
         "startGated: a quantizer was supplied but the stream rows carry " +
@@ -423,8 +437,8 @@ object IngestDedup {
     // centroids — the same frame every batch's PSI compares to.
     // PERSISTED and materialized at stream start: an unpersisted frame
     // here would re-run the reference-corpus assignment pass on every
-    // micro-batch (round-12 advice) — the one corpus-sized cost in the
-    // gate, paid once for the stream's lifetime.
+    // micro-batch — the one corpus-sized cost in the gate, paid once
+    // for the stream's lifetime.
     val refCids = quantizer.map { q =>
       val cids = SessionCaches.persist(graft.similarity.Similarity
         .assignToCentroids(spark, vecsOf(refDocs), q)
@@ -434,80 +448,58 @@ object IngestDedup {
     }
     val monitorSchema = Seq("feature", "bin", "n_ref", "n_batch",
       "p_ref", "p_batch", "psi_term", "psi")
-    docsStream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = batch.persist()
-        try {
-          val scalarPsi = graft.text.CorpusOps.psiBetween(spark, refFeats,
-            feats(b))
-          // embedding cells ride the scalar monitor schema: feature =
-          // 'embedding', bin = cell id — one sink, one drift history
-          val embPsi = (quantizer zip refCids).map { case (q, ref) =>
-            graft.similarity.Similarity.cellPsiBetween(spark, ref,
-                graft.similarity.Similarity.assignToCentroids(spark, vecsOf(b), q)
-                  .select("cid"),
-                q.length)
-              .select(lit("embedding").as("feature"),
-                col("cid").cast("long").as("bin"),
-                col("n_ref"), col("n_batch"), col("p_ref"), col("p_batch"),
-                col("psi_term"), col("psi"))
-          }
-          val psiTable = embPsi
-            .foldLeft(scalarPsi.select(monitorSchema.map(col): _*))(
-              _ unionByName _)
-            .persist()
-          psiTable.write.mode("overwrite").parquet(s"$monitorPath/batch=$id")
-          val worst = psiTable.agg(max("psi")).head().getDouble(0)
-          psiTable.unpersist()
-          val accepted =
-            if (worst > PsiGate) {
-              b.write.mode("overwrite").parquet(s"$quarantinePath/batch=$id")
-              b.filter(lit(false))
-            } else {
-              // readStore, not a raw parquet read: an UNSEEDED store
-              // (no batch= partitions yet) reads as a typed empty
-              // frame instead of throwing AnalysisException inside
-              // foreachBatch and killing the query on its first
-              // healthy batch (round-11 advice)
-              val index = readStore(spark, indexPath, id)
-                .select("doc_id", "band", "sig")
-              val known = readStore(spark, acceptedPath, id)
-                .select("doc_id", "text")
-              b.join(dedupStep(spark, b, index, known), Seq("doc_id"), "left_semi")
-            }
-          // quarantine keeps the FULL row (a human reviews exactly what
-          // arrived), but the accepted store is (doc_id, text) like its
-          // seed/base partitions: writing the whole stream row would mix
-          // schemas across partitions of one store — parquet schema
-          // inference then depends on which footer Spark samples — and
-          // duplicate embedding payload the reads never select
-          // (round-12 advice)
-          accepted.select("doc_id", "text")
-            .write.mode("overwrite").parquet(s"$acceptedPath/batch=$id")
-          Dedup.bandsOf(Dedup.minhashSignaturesOf(spark,
-              shinglesOf(spark, accepted)))
-            .write.mode("overwrite").parquet(s"$indexPath/batch=$id")
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    eachBatch(docsStream, checkpoint) { (batch, id) =>
+      val b = batch.persist()
+      try {
+        val (scalarPsi, psiState) = graft.text.CorpusOps.psiWithCheckpoints(spark, refFeats, feats(b))
+        // embedding cells ride the scalar monitor schema: feature =
+        // 'embedding', bin = cell id — one sink, one drift history
+        val embPsi = (quantizer zip refCids).map { case (q, ref) =>
+          graft.similarity.Similarity.cellPsiBetween(spark, ref,
+              graft.similarity.Similarity.assignToCentroids(spark, vecsOf(b), q)
+                .select("cid"),
+              q.length)
+            .select(lit("embedding").as("feature"),
+              col("cid").cast("long").as("bin"),
+              col("n_ref"), col("n_batch"), col("p_ref"), col("p_batch"),
+              col("psi_term"), col("psi"))
+        }
+        val psiTable = embPsi
+          .foldLeft(scalarPsi.select(monitorSchema.map(col): _*))(
+            _ unionByName _)
+          .persist()
+        psiTable.write.mode("overwrite").parquet(s"$monitorPath/batch=$id")
+        val worst = psiTable.agg(max("psi")).head().getDouble(0)
+        psiTable.unpersist()
+        psiState.foreach(SessionCaches.free)
+        // quarantine keeps the FULL row (a human reviews exactly what
+        // arrived); a gated batch still writes EMPTY accepted/index
+        // partitions, so a replay overwrites identical state
+        val healthy = worst <= PsiGate
+        if (!healthy) b.write.mode("overwrite").parquet(s"$quarantinePath/batch=$id")
+        ingestBatch(if (healthy) b else b.filter(lit(false)), id, indexPath, acceptedPath)
+      } finally { b.unpersist(); () }
+    }
   }
 
-  /** `batch < id` read of a per-batch partitioned store, tolerating a
-    * store with no partitions yet (the tombstone store before the
-    * first erasure): an empty/missing store reads as an empty frame
-    * with the right columns. */
-  private def readStore(spark: SparkSession, path: String, id: Long): DataFrame = {
+  /** `batch < id` read of a per-batch partitioned store with its fixed
+    * `schema` (so no schema-inference job runs), tolerating a store
+    * with no partitions yet (an unseeded store, or the tombstone store
+    * before the first erasure): that reads as an empty frame. */
+  private def readStore(spark: SparkSession, path: String, schema: StructType,
+                        id: Long): DataFrame = {
     val dirs = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.startsWith("batch="))
-    if (dirs.isEmpty) {
-      import spark.implicits._
-      Seq.empty[(Long, String, Int, String)]
-        .toDF("doc_id", "text", "band", "sig")
-        .withColumn("batch", lit(-1))
-    } else spark.read.parquet(path).filter(col("batch") < id)
+    if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+    else spark.read.schema(schema).parquet(path).filter(col("batch") < id)
   }
+
+  private def storeSchema(cols: (String, DataType)*): StructType =
+    StructType((cols :+ ("batch" -> IntegerType)).map { case (n, t) => StructField(n, t) })
+  private val IndexSchema =
+    storeSchema("doc_id" -> LongType, "band" -> IntegerType, "sig" -> StringType)
+  private val AcceptedSchema = storeSchema("doc_id" -> LongType, "text" -> StringType)
+  private val TombSchema = storeSchema("doc_id" -> LongType)
 
   /** In-place compaction of a LIVE ingest store — the maintenance twin
     * of the [[indexCompact]] query, operating on the store the stream
@@ -537,7 +529,7 @@ object IngestDedup {
     * so the base would sit BELOW every surviving tombstone and a
     * pre-`upTo` tombstone — correctly applied by this rewrite — would
     * re-erase a re-ingested doc the fold kept, for as long as the
-    * tombstone outlives the compaction (the round-11 advice window).
+    * tombstone outlives the compaction.
     * The fix is a max-folded-batch marker (`_compacted_upto`, written
     * after the base swap commits): every scoped read lifts base rows
     * to `greatest(batch, floor)`, so tombstones ≤ floor are inert
@@ -560,7 +552,7 @@ object IngestDedup {
     // reading the store: without this, a crash between demoting the
     // base and promoting the staged copy would make this run read the
     // store base-less and then publish that hole as the new base —
-    // permanent row loss (the round-10 advice finding)
+    // permanent row loss
     recoverBase(storePath)
     val prevFloor = compactedUpTo(storePath)
     val staged = new java.io.File(storePath, ".base-staging")
@@ -572,7 +564,7 @@ object IngestDedup {
     val folded = spark.read.parquet(storePath)
       .filter(col("batch") <= upTo)
     val cleaned = tombPath.fold(folded) { tp =>
-      val tombs = readStore(spark, tp, upTo + 1)
+      val tombs = readStore(spark, tp, TombSchema, upTo + 1)
         .select(col("doc_id").as("t_id"), col("batch").cast("long").as("t_batch"))
       folded.join(broadcast(tombs),
         col("doc_id") === col("t_id") &&
@@ -654,8 +646,8 @@ object IngestDedup {
   }
 
   /** Commit the staged base via two renames (never a delete-then-
-    * rename: the round-10 advice showed that protocol loses the base
-    * forever if the writer dies in the millisecond between them —
+    * rename: that protocol loses the base forever if the writer dies
+    * in the millisecond between them —
     * the documented repair, re-running compaction, would read the
     * base-less store and publish the hole). Here the live base is
     * DEMOTED to `.base-old` (a rename, not a delete), the staged copy
@@ -755,7 +747,7 @@ object IngestDedup {
     s"(CASE WHEN $c % 2 = 0 THEN 0 WHEN $c % 6 = 1 THEN 1 " +
       s"WHEN $c % 6 = 3 THEN 2 ELSE 3 END)"
 
-  /** The fold's PROBE-CLOSURE replay (round-12 verdict #1): a probe's
+  /** The fold's PROBE-CLOSURE replay: a probe's
     * acceptance depends only on verified partners in strictly earlier
     * batches; an earlier ODD partner's own status recurses the same
     * way — and the chain is at most 2 odd hops deep (batch 3 → 2 → 1),

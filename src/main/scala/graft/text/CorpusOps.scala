@@ -177,17 +177,25 @@ object CorpusOps {
     * populations binned by counting edges below, smoothed PSI with
     * DECIMAL-summed terms (see [[qualityDriftPsi]]'s Scaladoc). */
   private[graft] def psiBetween(spark: SparkSession, refFeats: DataFrame,
-                                batchFeats: DataFrame): DataFrame = {
+                                batchFeats: DataFrame): DataFrame =
+    psiWithCheckpoints(spark, refFeats, batchFeats)._1
+
+  /** [[psiBetween]] together with the two checkpointed frames its table
+    * reads. A stream that scores every micro-batch frees them
+    * ([[graft.SessionCaches.free]]) once the batch's table is written,
+    * so its cached blocks stay flat instead of growing per batch until
+    * garbage collection runs. */
+  private[graft] def psiWithCheckpoints(spark: SparkSession, refFeats: DataFrame,
+                                        batchFeats: DataFrame): (DataFrame, Seq[DataFrame]) = {
     val feats = refFeats.withColumn("is_ref", lit(true))
       .unionByName(batchFeats.withColumn("is_ref", lit(false)))
     // `cuts` (one row per feature) is referenced by the binning join
     // AND the bin census, and `perBin` (features × 10 rows) by the
     // totals AND the final join — and Catalyst re-derives a
-    // referenced subtree per reference, so the r16 plan re-ran the
-    // corpus scan + tokenization 28 TIMES (plan audit). Round-17
-    // (guide §1.2): eagerly truncate both tiny frames; every
-    // downstream reference reads the materialized rows. The corpus is
-    // now scanned once per side.
+    // referenced subtree per reference, which re-ran the corpus scan
+    // and tokenization once per reference. Eagerly truncate both tiny
+    // frames; every downstream reference reads the materialized rows,
+    // so the corpus is scanned once per side.
     val cuts = refFeats
       .groupBy("feature")
       .agg(percentile(col("v"),
@@ -213,7 +221,7 @@ object CorpusOps {
     val term = round((pBatch - pRef) * log(pBatch / pRef), 12)
       .cast(DecimalType(24, 12))
     val w = Window.partitionBy("feature")
-    allBins
+    val table = allBins
       .join(perBin, Seq("feature", "bin"), "left")
       .na.fill(0L, Seq("n_ref", "n_batch"))
       .join(broadcast(totals), "feature")
@@ -222,6 +230,7 @@ object CorpusOps {
         round(pRef, 6).as("p_ref"), round(pBatch, 6).as("p_batch"),
         round(col("t").cast(DoubleType), 6).as("psi_term"),
         round(sum(col("t")).over(w).cast(DoubleType), 6).as("psi"))
+    (table, Seq(cuts, perBin))
   }
 
   def qualityDriftPsi(spark: SparkSession, dir: String): DataFrame = {

@@ -5,10 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.IngestDedup
 
-/** Streaming ingest dedup (round-9 verdict #4): the foreachBatch
-  * pipeline over the standing index — stream == batch fold over the
-  * same feed, index growth observable across batches, and exactly-once
-  * through a torn-commit restart. */
+/** Streaming ingest dedup: the foreachBatch pipeline over the standing
+  * index — stream == batch fold over the same feed, index growth
+  * observable across batches, exactly-once through a torn-commit
+  * restart, and the micro-batch step's plan shape. */
 class IngestDedupSpec extends AnyFunSuite with SharedSpark {
 
   private def tmp(p: String) =
@@ -377,6 +377,141 @@ class IngestDedupSpec extends AnyFunSuite with SharedSpark {
     val accepted = spark.read.parquet(acc).filter(col("batch") >= 0)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(accepted == (101L to 110L), s"unseeded first batch accepted $accepted")
+  }
+
+  test("start on unseeded stores: the first batch is accepted, not an AnalysisException") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def mkText(tag: String, n: Int) = (0 until n).map(j => s"$tag$j").mkString(" ")
+    val idx = tmp("unst_idx"); val acc = tmp("unst_acc"); val ckpt = tmp("unst_ckpt")
+    // NO seed() call: both stores start with zero batch= partitions
+    val mem = MemoryStream[(Long, String)]
+    val q = IngestDedup.start(spark, mem.toDF.toDF("doc_id", "text"), idx, acc, ckpt)
+    try {
+      mem.addData((0 until 10).map(i => (101L + i, mkText(s"a${i}t", 5 + 2 * i))))
+      q.processAllAvailable()
+      // the second batch reads what the first wrote: 201 is a near-dup
+      // of accepted 102, 202 is fresh
+      mem.addData(Seq((201L, mkText("a1t", 7) + " extra"), (202L, mkText("fresh", 9))))
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, s"stream died: ${q.exception}")
+    } finally q.stop()
+    val accepted = spark.read.parquet(acc).filter(col("batch") >= 0)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(accepted == (101L to 110L) :+ 202L, s"unseeded stream accepted $accepted")
+  }
+
+  test("start: no micro-batch shuffles the index or the accepted store, and none infers a schema") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
+    val inDir = tmp("pin_in"); val ckpt = tmp("pin_ckpt")
+    val indexPath = tmp("pin_idx"); val accPath = tmp("pin_acc")
+    IngestDedup.seed(spark, docs.filter(col("doc_id") % 2 === 0), indexPath, accPath)
+    for ((k, i) <- Seq(1, 3, 5).zipWithIndex) {
+      val sub = new java.io.File(inDir, s"b$i")
+      docs.filter(col("doc_id") % 6 === k).coalesce(1)
+        .write.mode("overwrite").json(sub.getAbsolutePath)
+      for (f <- sub.listFiles(); if f.getName.endsWith(".json"))
+        assert(f.setLastModified(1000000000000L + i * 60000L))
+    }
+
+    // every executed plan, and every job with its stream id and whether
+    // its RDD chain starts from a driver-side collection (the shape of
+    // parquet schema inference)
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val jobs = new ConcurrentLinkedQueue[(String, Boolean)]()
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add((Option(e.properties).map(_.getProperty("sql.streaming.queryId")).orNull,
+          e.stageInfos.exists(_.rddInfos.exists(_.name == "ParallelCollectionRDD")))); ()
+      }
+    }
+    spark.listenerManager.register(planListener)
+    spark.sparkContext.addSparkListener(jobListener)
+    val queryId = try {
+      val q = IngestDedup.start(spark,
+        spark.readStream.schema(docs.schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("recursiveFileLookup", "true").json(inDir),
+        indexPath, accPath, ckpt)
+      try q.processAllAvailable() finally q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      q.id.toString
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+
+    // walked through AQE: final plans, query stages, reused exchanges,
+    // a write command's plan, cached relations and subqueries
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => Nil
+    }) ++ p.children ++ p.subqueries).flatMap(walk)
+    def storeScan(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.exists { r =>
+        val path = r.toUri.getPath.stripSuffix("/")
+        Seq(indexPath, accPath).exists(d => path == d || path.startsWith(d + "/"))
+      }
+      case _ => false
+    }
+    val all = plans.asScala.toSeq.flatMap(walk)
+    assert(all.exists(storeScan), "no executed plan scanned the stores")
+    val shuffled = all.collect { case e: ShuffleExchangeLike => e }
+      .filter(e => walk(e).exists(storeScan))
+    assert(shuffled.isEmpty,
+      s"${shuffled.size} exchanges shuffle a store scan:\n${shuffled.headOption.fold("")(_.treeString)}")
+    val streamJobs = jobs.asScala.toSeq.filter(_._1 == queryId)
+    assert(streamJobs.nonEmpty, "no job carried the stream's query id")
+    assert(!streamJobs.exists(_._2),
+      s"${streamJobs.count(_._2)} schema-inference jobs (ParallelCollectionRDD) ran")
+  }
+
+  test("startGated: 20 micro-batches leave the count of persistent RDDs flat") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def mkText(tag: String, n: Int) = (0 until n).map(j => s"$tag$j").mkString(" ")
+    val ref = (0 until 20).map(i => (i.toLong, mkText(s"r${i}t", 5 + i)))
+      .toDF("doc_id", "text")
+    val idx = tmp("flat_idx"); val acc = tmp("flat_acc")
+    val qua = tmp("flat_qua"); val mon = tmp("flat_mon"); val ckpt = tmp("flat_ckpt")
+    IngestDedup.seed(spark, ref, idx, acc)
+    val mem = MemoryStream[(Long, String)]
+    val q = IngestDedup.startGated(spark, ref, mem.toDF.toDF("doc_id", "text"),
+      idx, acc, qua, mon, ckpt)
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    var settled = Set.empty[Int]
+    try {
+      for (b <- 0 until 20) {
+        // healthy batches: the reference's length spread, fresh tokens
+        mem.addData((0 until 10).map(i => (1000L * (b + 1) + i, mkText(s"b${b}x${i}t", 5 + 2 * i))))
+        q.processAllAvailable()
+        if (b == 1) settled = persistent
+      }
+      assert(q.exception.isEmpty, s"gated stream died: ${q.exception}")
+    } finally q.stop()
+    val grown = persistent -- settled
+    assert(grown.isEmpty, s"${grown.size} persistent RDDs accumulated over 18 micro-batches")
   }
 
   test("startGated: drifted batch quarantined before the fold, healthy batches dedup normally") {
