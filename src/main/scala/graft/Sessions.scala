@@ -14,7 +14,13 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session time zone (oracle comparisons and any date math);
   *  - nanosecond parquet timestamps read as longs (`events.ts` is
   *    TIMESTAMP(NANOS), which Spark's µs TimestampType rejects);
-  *  - [[GraftExtensions]] so engine functions work from plain SQL.
+  *  - [[GraftExtensions]] so engine functions work from plain SQL;
+  *  - the `file` scheme through [[ForkFreeLocalFileSystem]] and, for
+  *    `FileContext` (streaming checkpoints), [[ForkFreeLocalFs]]:
+  *    without the native Hadoop library the stock local filesystem forks
+  *    one `chmod` per file and directory it creates and one `readlink`
+  *    per checkpoint rename, about a fifth of an ingest stream's time.
+  *    Same permissions, same `.crc` files, no forks.
   */
 object Sessions {
 
@@ -26,6 +32,8 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
       .withExtensions(new GraftExtensions())
 
   /** local[n] convenience used by the driver mains. */

@@ -528,36 +528,42 @@ object Dedup {
     *
     * ZERO-shuffle form: each doc's shingle array is already on one row,
     * so the whole k-vector is a narrow per-partition computation — no
-    * explode, no exchange (round 1's explode + [[MinSig]] Aggregator
-    * shuffled map-side-combined (doc, h) rows; the Aggregator remains
-    * the right tool when input arrives as ungrouped (doc, shingle)
-    * streams — DedupSpec pins its equivalence to this form). Docs with
-    * no shingles are dropped, matching the explode form and the oracle. */
+    * explode, no exchange. (The [[MinSig]] Aggregator is the tool when
+    * input arrives as ungrouped (doc, shingle) streams; DedupSpec pins
+    * its equivalence to this form.) Docs with no shingles are dropped,
+    * matching the explode form and the oracle. */
   def minhashSignaturesOf(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     docs.select(col("doc_id"), col("sh"))
       .as[(Long, Array[String])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        val as = Array.tabulate(NumHashes)(hashA)
-        val bs = Array.tabulate(NumHashes)(hashB)
-        it.filter(_._2.nonEmpty).map { case (id, sh) =>
-          val sig = Array.fill(NumHashes)(Long.MaxValue)
-          var j = 0
-          while (j < sh.length) {
-            val h = baseHashJvm(md, sh(j))
-            var i = 0
-            while (i < NumHashes) {
-              val v = (as(i) * h + bs(i)) % P
-              if (v < sig(i)) sig(i) = v
-              i += 1
-            }
-            j += 1
-          }
-          (id, sig.toSeq)
-        }
+        it.filter(_._2.nonEmpty).map { case (id, sh) => (id, signature(sh, md).toSeq) }
       }
       .toDF("doc_id", "sig")
+  }
+
+  private val HashAs = Array.tabulate(NumHashes)(hashA)
+  private val HashBs = Array.tabulate(NumHashes)(hashB)
+
+  /** One doc's MinHash signature over its shingle set: the kernel of
+    * [[minhashSignaturesOf]], also run on the driver by the ingest step.
+    * `md` is a reusable MD5 digest (one per partition or caller). */
+  def signature(sh: Array[String],
+                md: java.security.MessageDigest = java.security.MessageDigest.getInstance("MD5")): Array[Long] = {
+    val sig = Array.fill(NumHashes)(Long.MaxValue)
+    var j = 0
+    while (j < sh.length) {
+      val h = baseHashJvm(md, sh(j))
+      var i = 0
+      while (i < NumHashes) {
+        val v = (HashAs(i) * h + HashBs(i)) % P
+        if (v < sig(i)) sig(i) = v
+        i += 1
+      }
+      j += 1
+    }
+    sig
   }
 
   /** LSH bucket cap: buckets holding more than this many doc ids are
@@ -592,6 +598,11 @@ object Dedup {
     sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
+
+  /** Driver twin of [[bandsOf]] for one signature: its (band, sig) keys,
+    * row-equal to the frame form (pinned by a spec). */
+  private[graft] def bandKeys(sig: Array[Long]): Seq[(Int, String)] =
+    sig.grouped(BandRows).zipWithIndex.map { case (s, b) => (b, s.mkString(",")) }.toSeq
 
   /** Session-memoized full-corpus banding frame — the (doc_id, band,
     * sig) output of the 32-hash signature kernel + banding over

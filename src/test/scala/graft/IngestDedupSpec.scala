@@ -788,4 +788,142 @@ class IngestDedupSpec extends AnyFunSuite with SharedSpark {
     assert(comp.exceptAll(frag).isEmpty && frag.exceptAll(comp).isEmpty,
       "compacted content differs from the fragmented store")
   }
+
+  test("start: at most 5 jobs per non-empty micro-batch over the three-file feed") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
+    val inDir = tmp("jobs_in"); val ckpt = tmp("jobs_ckpt")
+    val indexPath = tmp("jobs_idx"); val accPath = tmp("jobs_acc")
+    IngestDedup.seed(spark, docs.filter(col("doc_id") % 2 === 0), indexPath, accPath)
+    // the fold's three batches as three feed files, in the fold's order
+    for ((k, i) <- Seq(1, 3, 5).zipWithIndex) {
+      val sub = new java.io.File(inDir, s"b$i")
+      docs.filter(col("doc_id") % 6 === k).coalesce(1)
+        .write.mode("overwrite").json(sub.getAbsolutePath)
+      for (f <- sub.listFiles(); if f.getName.endsWith(".json"))
+        assert(f.setLastModified(1000000000000L + i * 60000L))
+    }
+    // (stream query id, micro-batch id) of every job
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          jobs.add((p.getProperty("sql.streaming.queryId"), p.getProperty("streaming.sql.batchId")))
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (queryId, batches) = try {
+      val q = IngestDedup.start(spark,
+        spark.readStream.schema(docs.schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("recursiveFileLookup", "true").json(inDir),
+        indexPath, accPath, ckpt)
+      try q.processAllAvailable() finally q.stop()
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      (q.id.toString, q.recentProgress.filter(_.numInputRows > 0).map(_.batchId))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(batches.length == 3)
+    val perBatch = batches.map(b => b -> jobs.asScala.count(_ == ((queryId, b.toString)))).toMap
+    assert(perBatch.values.forall(n => n > 0 && n <= 5), s"jobs per micro-batch: $perBatch")
+  }
+
+  test("the driver's band keys equal the bandsOf rows on the sf0.01 documents") {
+    import spark.implicits._
+    import graft.dedup.Dedup
+    val dir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01").getPath
+    val docs = Tables.load(spark, dir, "documents").select("doc_id", "text").as[(Long, String)]
+    val frame = Dedup.bandsOf(Dedup.minhashSignaturesOf(spark,
+        docs.map { case (d, t) => (d, Dedup.shingleSet(t)) }.toDF("doc_id", "sh")))
+      .as[(Long, Int, String)].collect().sorted.toSeq
+    val driver = docs.collect().toSeq.flatMap { case (d, t) =>
+      val sh = Dedup.shingleSet(t)
+      if (sh.isEmpty) Nil else Dedup.bandKeys(Dedup.signature(sh)).map { case (b, s) => (d, b, s) }
+    }.sorted
+    assert(frame.size == 500 * Dedup.NumHashes / Dedup.BandRows)
+    assert(driver == frame)
+  }
+
+  test("a re-sent doc_id is verified against its stored copies only, never against itself") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    import graft.dedup.Dedup
+    implicit val sqlCtx = spark.sqlContext
+    val words = (0 until 40).map(i => s"w$i")
+    val a = words.mkString(" ")
+    def jaccard(x: String, y: String) = {
+      val (s, t) = (Dedup.shingleSet(x).toSet, Dedup.shingleSet(y).toSet)
+      (s & t).size.toDouble / (s | t).size
+    }
+    def keys(t: String) = Dedup.bandKeys(Dedup.signature(Dedup.shingleSet(t))).toSet
+    // new text for doc 1: below the Jaccard bar against its stored copy,
+    // but sharing a band bucket with it, so the pair is verified
+    val b = (0 until 2000).iterator.map { i =>
+      val r = new scala.util.Random(i)
+      val swap = r.shuffle(words.indices.toList).take(6).toSet
+      words.indices.map(j => if (swap(j)) s"x${i}_$j" else words(j)).mkString(" ")
+    }.find(t => jaccard(a, t) < 0.5 && (keys(a) & keys(t)).nonEmpty).get
+    val idx = tmp("rs_idx"); val acc = tmp("rs_acc"); val ckpt = tmp("rs_ckpt")
+    IngestDedup.seed(spark, Seq((1L, a)).toDF("doc_id", "text"), idx, acc)
+    val mem = MemoryStream[(Long, String)]
+    val q = IngestDedup.start(spark, mem.toDF.toDF("doc_id", "text"), idx, acc, ckpt)
+    try {
+      // batch 0: doc 1 re-sent with new text b is accepted (b vs stored a
+      // fails the bar; a union of copies would match stored a to itself);
+      // doc 2, a near-dup of stored a, is rejected
+      mem.addData(Seq((1L, b), (2L, a + " extra")))
+      q.processAllAvailable()
+      // batch 1: doc 1 now has stored copies a and b. Re-sending a is
+      // rejected (a vs stored a), and doc 3, a near-dup of the stored
+      // copy b only, is rejected too
+      mem.addData(Seq((1L, a), (3L, b + " more")))
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, s"stream died: ${q.exception}")
+    } finally q.stop()
+    val accepted = spark.read.parquet(acc).filter(col("batch") >= 0)
+      .select("doc_id", "batch").as[(Long, Long)].collect().sorted.toSeq
+    assert(accepted == Seq((1L, 0L)), s"accepted $accepted")
+  }
+
+  test("start and startWithRetraction: 20 micro-batches leave the count of persistent RDDs flat") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def mkText(tag: String, n: Int) = (0 until n).map(j => s"$tag$j").mkString(" ")
+    def batch(b: Int) = (0 until 10).map(i => (1000L * (b + 1) + i, mkText(s"b${b}x${i}t", 5 + 2 * i)))
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    /** persistent RDDs that appeared after the second of 20 batches */
+    def growth(q: StreamingQuery)(add: Int => Unit): Set[Int] = {
+      var settled = Set.empty[Int]
+      try for (b <- 0 until 20) {
+        add(b)
+        q.processAllAvailable()
+        if (b == 1) settled = persistent
+      } finally q.stop()
+      assert(q.exception.isEmpty, s"stream died: ${q.exception}")
+      persistent -- settled
+    }
+    val seed = (0 until 20).map(i => (i.toLong, mkText(s"r${i}t", 5 + i))).toDF("doc_id", "text")
+
+    val idx = tmp("flat_s_idx"); val acc = tmp("flat_s_acc")
+    IngestDedup.seed(spark, seed, idx, acc)
+    val docs = MemoryStream[(Long, String)]
+    val plain = growth(IngestDedup.start(spark, docs.toDF.toDF("doc_id", "text"), idx, acc,
+      tmp("flat_s_ckpt")))(b => docs.addData(batch(b)))
+    assert(plain.isEmpty, s"start: ${plain.size} persistent RDDs accumulated over 18 micro-batches")
+
+    val ridx = tmp("flat_r_idx"); val racc = tmp("flat_r_acc")
+    IngestDedup.seed(spark, seed, ridx, racc)
+    val events = MemoryStream[(Long, String, String)]
+    // every third batch also erases a doc the batch before accepted
+    val retracting = growth(IngestDedup.startWithRetraction(spark,
+        events.toDF.toDF("doc_id", "text", "op"), ridx, racc, tmp("flat_r_tmb"), tmp("flat_r_ckpt"))) { b =>
+      events.addData(batch(b).map { case (d, t) => (d, t, "ingest") } ++
+        (if (b % 3 == 2) Seq((1000L * b, "", "erase")) else Nil))
+    }
+    assert(retracting.isEmpty,
+      s"startWithRetraction: ${retracting.size} persistent RDDs accumulated over 18 micro-batches")
+  }
 }
