@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, FutureTask}
 import java.util.concurrent.atomic.LongAdder
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
@@ -19,7 +20,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * Entries are immutable for a session's lifetime: the engine's inputs
   * are read-only, so a (dir, table) pair never changes under a memo. A
-  * session that rewrites a path it already read calls [[release]]. */
+  * session that rewrites a path it already read calls [[release]].
+  *
+  * Keys hold their session strongly, so garbage collection never drops
+  * an entry: a caller done with a session calls [[release]], or stops
+  * its context. */
 object SessionCaches {
 
   private type Key = (SparkSession, String, Any)
@@ -70,11 +75,17 @@ object SessionCaches {
   /** Free a frame's blocks: unpersist it and, when it is a
     * (local)checkpointed frame, the checkpoint RDD under its
     * `LogicalRDD` — `Dataset.unpersist()` alone leaves that RDD in
-    * `getPersistentRDDs`. The frame must not be read afterwards. */
+    * `getPersistentRDDs` — and a reliable checkpoint's files. The frame
+    * must not be read afterwards. */
   def free(df: Dataset[_]): Unit = {
     df.unpersist()
     df.queryExecution.logical match {
-      case lr: LogicalRDD => lr.rdd.unpersist(); ()
+      case lr: LogicalRDD =>
+        lr.rdd.unpersist()
+        lr.rdd.getCheckpointFile.foreach { f =>
+          val p = new Path(f)
+          p.getFileSystem(lr.rdd.context.hadoopConfiguration).delete(p, true)
+        }
       case _ => ()
     }
   }

@@ -9,10 +9,9 @@ import graft.operators.ConnectedComponents
 /** The PERSISTED form of the near-dup machinery's standing state —
   * minhash band index and CC labels written once to fingerprint-keyed
   * parquet ([[graft.IndexStore]]) and read back by every later
-  * session, closing the gap between the module docstrings' 100 TB
-  * posture ("corpus bands are a standing index read from storage, not
-  * recomputed") and what the code did through round 8 (per-session
-  * memos, rebuilt from the corpus every session).
+  * session, as the module docstrings' 100 TB posture has it: corpus
+  * bands are a standing index read from storage, not recomputed, and
+  * not rebuilt from the corpus in every session.
   *
   * Three queries ride the store:
   *
@@ -71,9 +70,9 @@ object BandIndex {
     }
 
   /** Bands of the incoming batch — the ONLY signature-kernel pass in
-    * the indexed queries' plans. Session-memoized per corpus (round-16
-    * optimization): five indexed queries consume this frame and each
-    * re-ran the batch-half kernel per invocation. The memo's lineage
+    * the indexed queries' plans. Session-memoized per corpus: five
+    * indexed queries consume this frame, and each would otherwise re-run
+    * the batch-half kernel per invocation. The memo's lineage
     * hashes ONLY the batch half, so the indexed plans' "no corpus-side
     * signature pass" contract (BandIndexSpec's one-kernel pin) is
     * untouched. */
@@ -152,7 +151,7 @@ object BandIndex {
     * 10⁶ (cluster_id, count) rows are tens of MB of build state; a
     * corpus whose near-dup graph resolves to more clusters than that
     * merges instead (a pinned broadcast there is a driver OOM at the
-    * module's stated 100 TB posture — round-9 advice). */
+    * module's stated 100 TB posture). */
   val ClusterBroadcastMaxRows = 1000000L
 
   /** [[Dedup.neardupClusters]] over the stored label artifact — the
@@ -180,7 +179,7 @@ object BandIndex {
   private[graft] def erasedFilter = col("doc_id") % 10 === 4
 
   /** GDPR-style index retraction — the DELETE path the standing index
-    * family was missing (round-9 verdict #6): an erasure set must
+    * family was missing: an erasure set must
     * vanish from every derived artifact, not just the source table.
     *
     * The query (1) anti-joins the erased doc_ids out of the standing
@@ -271,9 +270,9 @@ object BandIndex {
     * artifact. Returned for the spec; `index_retract`'s oracle covers
     * the band side, this covers the label side.
     *
-    * The resolution is session-memoized (round-16 optimization): the
-    * label propagation is a ~12-job synchronous loop (measured 2.3 s
-    * warm at sf0.1, the bulk of `index_retract`), and its input — the
+    * The resolution is session-memoized: the label propagation is a
+    * synchronous multi-job loop (the bulk of `index_retract`), and its
+    * input — the
     * memoized pair frame minus erased endpoints — is session-constant,
     * so resolving it once per (session, corpus) and re-PUBLISHING per
     * invocation keeps the declared operation (every run publishes a
@@ -289,9 +288,9 @@ object BandIndex {
       resolved, Dedup.MinhashIndexParams)
   }
 
-  /** [[neardupClustersIndexed]]'s probe slice — since round 14 the
-    * probe-seeded closure ([[Dedup.probeComponentClosure]], r13
-    * verdict #7) over the INDEXED banding frame: the corpus half's
+  /** [[neardupClustersIndexed]]'s probe slice — the probe-seeded
+    * closure ([[Dedup.probeComponentClosure]]) over the INDEXED banding
+    * frame: the corpus half's
     * bands come from the standing parquet artifact (a FileScan, no
     * corpus-side signature kernel — the property that makes this the
     * "indexed" twin), merged with the batch half's computed bands
@@ -337,8 +336,8 @@ object BandIndex {
         s"band-index expire left ${survivors.map(_.getName)}")
     }
 
-  /** Declared retention query for VERSIONED INDEX ARTIFACTS (round-12
-    * verdict #4 — the `snapshot_expire` verb applied to
+  /** Declared retention query for VERSIONED INDEX ARTIFACTS (the
+    * `snapshot_expire` verb applied to
     * [[IndexStore.writeVersioned]]-style publishes): build the
     * 3-version history, expire past the keep window, and census the
     * SURVIVORS per (ver_back, band), where ver_back = 0 is the newest

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.{SessionCaches, Tables}
+import graft.{Fixpoint, SessionCaches, Tables}
 import graft.operators.ConnectedComponents
 
 /** Deduplication operators for a training-data pipeline, smallest to
@@ -88,7 +88,7 @@ object Dedup {
   /** Session-scoped persisted shingle frame, memoized per (session,
     * dir): the shingle scan feeds minhash's signature pass + both
     * verify-join sides and ngram_jaccard's three consumers. A
-    * per-CALL `.persist()` (round 2 initially) leaked one cached RDD
+    * per-CALL `.persist()` would leak one cached RDD
     * per invocation for the session lifetime; the memo bounds the
     * cache at one entry per corpus and makes repeated queries reuse
     * it. */
@@ -208,7 +208,7 @@ object Dedup {
     val keyed = documents
       .select(substring(col("text"), 1, 8).as("blk"),
         struct(col("doc_id"), substring(col("text"), 1, 40).as("pfx")).as("rec"))
-    // pre-cap BEFORE collect_list (round-4 advice): a post-collect size
+    // pre-cap BEFORE collect_list: a post-collect size
     // filter still buffered the entire over-cap block into one
     // aggregation row before discarding it — a million-doc boilerplate
     // block is a single-task OOM even without pair expansion. Counting
@@ -309,15 +309,14 @@ object Dedup {
           .map(i => (id, i + 1, ws.slice(i, i + WinTokens).mkString(" ")))
       }
       .toDF("doc_id", "pos", "w")
-    // (A round-16 collect_list + analytic-count restructure was
+    // (A collect_list + analytic-count restructure was
     // measured and REJECTED here: WindowExec's per-partition sort of
     // the grouped stream cost more than the join it replaced —
     // 1.5→2.5 s. The positioned stream needs its positions carried
     // through, which is exactly what makes the window form heavy.)
-    // "appears in ≥ 2 docs" ⟺ min(doc_id) ≠ max(doc_id) per window —
-    // round-17 (guide §2.3/§2.4): the r16 shape was distinct on
-    // (doc_id, w) THEN groupBy(w), i.e. two full exchanges of the
-    // window stream; min/max aggregate map-side (same-doc repeats
+    // "appears in ≥ 2 docs" ⟺ min(doc_id) ≠ max(doc_id) per window:
+    // distinct on (doc_id, w) THEN groupBy(w) would be two full
+    // exchanges of the window stream; min/max aggregate map-side (same-doc repeats
     // collapse before the shuffle) and need ONE exchange for the
     // identical dup-window set.
     val dup = wins.groupBy("w")
@@ -342,14 +341,13 @@ object Dedup {
     * `w` may be the raw window string or its 60-bit hash — the plan is
     * identical either way; only the shuffle-key width differs.
     *
-    * Round-16 shape (guide §2.4 — remove shuffles outright): through
-    * r15 this was a groupBy(w) count + join-back, which exchanged the
+    * Why a window count: a groupBy(w) count + join-back exchanges the
     * FULL window stream by `w` twice (the distinct/agg side and the
-    * join probe side) and ran the window kernel once per side — the
+    * join probe side) and runs the window kernel once per side — the
     * optimizer shares neither (different exchange keys above the same
     * scan). `count(*) OVER (PARTITION BY w)` is the identical number
     * with ONE exchange of the stream and ONE kernel pass. Hot-key
-    * profile is unchanged: both shapes hash the full stream by `w`, so
+    * profile is the same: both shapes hash the full stream by `w`, so
     * a boilerplate window lands on one reducer either way (the
     * [[MaxBucket]]-class risk the audit queries exist to surface). */
   private def dupStatsOverWindows(wins: DataFrame): DataFrame = {
@@ -433,10 +431,10 @@ object Dedup {
   // ---- exact n-gram Jaccard (quadratic baseline) ----
 
   /** Hard corpus-size cap for the DECLARED-quadratic audit baselines
-    * (r15 verdict #4): `ngram_jaccard` is kept solely to certify its
-    * scalable twins, and its shared-shingle self-join shuffles
-    * Σf²-many candidate pairs — measured ENOSPC at sf10 (r15, the
-    * engine shuffle, not the oracle). The cap admits every certified
+    * `ngram_jaccard` is kept solely to certify its scalable twins,
+    * and its shared-shingle self-join shuffles Σf²-many candidate
+    * pairs — measured ENOSPC at sf10 (the engine shuffle, not the
+    * oracle). The cap admits every certified
     * audit rung (sf3 = 150k docs) and REFUSES larger corpora with an
     * explicit error instead of spilling the box: Bench records the
     * message as the query's error row and a Verify dump records an
@@ -488,7 +486,7 @@ object Dedup {
   /** Algorithm-parameter fingerprint for MinHash-family artifacts in
     * [[graft.IndexStore]] (shingle width 3 is [[shingleSet]]'s window):
     * changing any constant re-keys the standing band/label artifacts so
-    * old-parameter indexes are never silently reused (round-9 advice). */
+    * old-parameter indexes are never silently reused. */
   private[graft] def MinhashIndexParams =
     s"sh=3,p=$P,h=$NumHashes,r=$BandRows,jac=0.5"
 
@@ -583,8 +581,8 @@ object Dedup {
     *
     * Uses the session-scoped [[cachedDocShingles]]: the frame feeds the
     * signature pipeline once and the verify join twice, and without the
-    * persist the parquet scan + shingling re-ran for each — the round-1
-    * driver bench measured that re-materialization at 3×. */
+    * persist the parquet scan + shingling re-ran for each (measured at
+    * 3× on the driver bench). */
   /** (doc_id, band, sig) banded-signature frame: [[BandRows]]-row
     * slices of the MinHash signature, stringified per band. Shared by
     * the self-dedup candidates, the incremental form, and containment. */
@@ -606,11 +604,11 @@ object Dedup {
 
   /** Session-memoized full-corpus banding frame — the (doc_id, band,
     * sig) output of the 32-hash signature kernel + banding over
-    * [[cachedDocShingles]], persisted per (session, corpus) (round-16
-    * optimization). Through r15 every consumer — the self-dedup candidates,
-    * containment, the recall certification, the bucket audit, the
-    * probe slices — re-ran the signature kernel per INVOCATION; the
-    * memo runs it once per session and the ~6 consumers share the
+    * [[cachedDocShingles]], persisted per (session, corpus). Its
+    * consumers — the self-dedup candidates, containment, the recall
+    * certification, the bucket audit, the probe slices — would
+    * otherwise re-run the signature kernel per INVOCATION; the memo
+    * runs it once per session and the ~6 consumers share the
     * materialized rows; the first-vs-median split in the bench
     * keeps the materialization cost visible. (The incremental twin
     * `minhash_incremental` deliberately keeps its own two per-parity
@@ -716,7 +714,7 @@ object Dedup {
     // parity filters go UNDER the signature kernel: a filter above
     // minhashSignaturesOf can't push through the typed mapPartitions,
     // so each join side would re-run the 32-hash kernel over the WHOLE
-    // corpus and discard half (the round-8 review caught the 2× form)
+    // corpus and discard half
     val batch = bandsOf(minhashSignaturesOf(spark,
         docs.filter(col("doc_id") % 2 === 1)))
       .select(col("doc_id").as("dn"), col("band"), col("sig"))
@@ -774,7 +772,7 @@ object Dedup {
   /** Shared (labels → clusters) tail of both resolution modes: size
     * census per label, then a CARDINALITY-GATED size join — broadcast
     * under [[BandIndex.ClusterBroadcastMaxRows]] clusters, sort-merge
-    * above, the same round-9-advice gate
+    * above, the same gate
     * [[BandIndex.neardupClustersIndexed]] applies (a pinned broadcast
     * of a corpus-scale cluster census is a driver OOM at 100 TB). The
     * gate count runs over the memoized, truncated label frame, so it
@@ -908,8 +906,8 @@ object Dedup {
     Tables.rowCount(spark, dir, "documents")
 
   /** MinHash banding RECALL certification — the quality number the
-    * whole text near-dup family rides on, put under the oracle (round-10
-    * verdict #1): for a bounded probe sample, compare the docs whose
+    * whole text near-dup family rides on, put under the oracle: for a
+    * bounded probe sample, compare the docs whose
     * exact word-3gram Jaccard with the probe is ≥ 0.5 (the TRUTH, from
     * the same shingle algebra as [[ngramJaccard]], restricted to the
     * probe sample) against the PRODUCTION candidate generation — shared
@@ -946,9 +944,8 @@ object Dedup {
     // the probe sides are ≈RecallProbes docs' rows — broadcast them
     // EXPLICITLY: without the hint the optimizer's post-filter size
     // estimate decides, and a wrong estimate shuffles the corpus-scale
-    // shingle explode to answer a 64-probe audit (the r8
-    // minhash_neardup lesson in the opposite direction; round-11
-    // verdict "what's wrong" #1). PlanShapeSpec pins the shape.
+    // shingle explode to answer a 64-probe audit. PlanShapeSpec pins
+    // the shape.
     val inter = broadcast(exP).join(ex, Seq("s"))
       .filter(col("p") =!= col("doc_id"))
       .groupBy(col("p"), col("doc_id").as("d"))
@@ -1000,11 +997,11 @@ object Dedup {
           / col("n_true").cast(DoubleType), 6).as("recall"))
   }
 
-  // ---- probe-sliced certification twins (round-12 verdict #1) ----
+  // ---- probe-sliced certification twins ----
   //
   // The pair-bound family's oracles replay Σf² bucket self-joins as
-  // SQL, which is DuckDB-disk-infeasible above sf3 (the r12 sf10 gate:
-  // 8 queries, spill exhaustion twice with 68 GB free). These `*_slice`
+  // SQL, which is DuckDB-disk-infeasible above sf3 (at sf10, 8 queries
+  // exhausted spill twice with 68 GB free). These `*_slice`
   // twins certify EXACTLY the same pipelines — same banding, same
   // MaxBucket cap, same verify arithmetic, same cluster resolution —
   // restricted to a constant probe budget, so the oracle stays
@@ -1076,17 +1073,15 @@ object Dedup {
   }
 
   /** Probe-seeded component closure over a banded candidate frame —
-    * the engine twin of the cluster-slice oracle's frontier unroll
-    * (round-13 verdict #7): BFS from each [[sliceProbe]] doc over
-    * VERIFIED near-dup edges, with edges computed ON DEMAND for each
-    * round's frontier (bucket join under the global [[MaxBucket]] cap
-    * + exact-Jaccard verify), so the engine's work per round is
-    * bounded by frontier · bands · cap — the probes' component
-    * volume, never the corpus pair graph. Through round 13 the
-    * cluster slices filtered the FULL resolution (labels are global
-    * state), which kept them Σf²-bound on the engine side and
-    * excluded from sf30+ bench rungs; this closure makes them
-    * end-to-end linear, while the full cluster queries stay
+    * the engine twin of the cluster-slice oracle's frontier unroll: BFS
+    * from each [[sliceProbe]] doc over VERIFIED near-dup edges, with
+    * edges computed ON DEMAND for each round's frontier (bucket join
+    * under the global [[MaxBucket]] cap + exact-Jaccard verify), so the
+    * engine's work per round is bounded by frontier · bands · cap — the
+    * probes' component volume, never the corpus pair graph. Filtering
+    * the FULL resolution instead (labels are global state) would keep
+    * the cluster slices Σf²-bound; the closure makes them end-to-end
+    * linear, while the full cluster queries stay
     * [[graft.Bench.PairBoundQueries]]-tiered.
     *
     * Equality contract: at fixpoint the closure IS the probe's whole
@@ -1104,62 +1099,48 @@ object Dedup {
     * cap-free full resolution (the suite's guard), while cap-safe
     * shapes reach fixpoint early and match it exactly.
     *
-    * Plan shape per round: the banding frame streams against a
-    * broadcast frontier-bucket list; frontier-hit buckets are kept
-    * WHOLE by the semi-join so the window occupancy equals the full
-    * census and every cap decision is the full query's; the verify
-    * join runs on the round's deduped candidate pairs only. Frontier
-    * state is `localCheckpoint`ed per round (the
-    * [[graft.operators.ConnectedComponents]] lineage discipline). */
+    * The loop runs on [[graft.Fixpoint]]: the state is one frame,
+    * `reached` (p, d, round), and round r checkpoints `reached ∪ fresh`
+    * with the flag "some row of round r", so the frontier is
+    * `round = r − 1` and no action tests it for emptiness. Plan shape
+    * per round: the banding frame streams against a broadcast
+    * frontier-bucket list; buckets over the cap leave by a broadcast
+    * anti join against the over-cap list computed once per call; the
+    * verify join runs on the round's deduped candidate pairs only.
+    * The result is checkpointed, and every frame the call made is
+    * freed before it returns, so freeing the result leaves nothing. */
   private[graft] def probeComponentClosure(spark: SparkSession, dir: String,
                                            bands: DataFrame): DataFrame = {
     val docs = cachedDocShingles(spark, dir)
     val every = recallEvery(docCount(spark, dir))
     // one banding pass feeds every closure round — persist for the
-    // loop, released before the (checkpoint-rooted) result returns.
-    // An ALREADY-persisted frame (the session-memoized corpus bands)
-    // is used as-is and left alone: unpersisting it here would evict
-    // every sibling query's memo.
+    // loop, released before the result returns. An ALREADY-persisted
+    // frame (the session-memoized corpus bands) is used as-is and left
+    // alone: unpersisting it here would evict every sibling query's
+    // memo.
     val prePersisted =
       bands.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val b = if (prePersisted) bands
       else SessionCaches.persist(bands)
-    // Bucket occupancy is a property of the BANDS FRAME ALONE — the
-    // old per-round shape (semi-join the corpus bands down to
-    // frontier-hit buckets, then window-count within) recomputed the
-    // identical occupancy for every round's frontier, because the
-    // semi-join kept buckets whole, making the windowed count equal
-    // the corpus-wide count by construction. Round-17 (guide §1.2 —
-    // don't compute things twice, §2.3 shuffle fewer bytes): compute
-    // the OVER-CAP bucket list once per closure call — a map-side-
-    // aggregated groupBy whose shuffle carries bucket counts, never
-    // band rows, and whose result is tiny by construction (a bucket
-    // lands here only past [[MaxBucket]] members, so the list is
-    // ≤ |bands|/MaxBucket rows) — and each round replaces the
-    // {semi-join + window sort} pair with one broadcast anti join
-    // against it. One checkpointed row-count job per invocation
-    // instead of a window shuffle per round.
+    // Bucket occupancy is a property of the bands frame alone, so the
+    // over-cap bucket list is computed once per call: a map-side
+    // aggregated groupBy whose shuffle carries bucket counts, never band
+    // rows, and whose result is tiny by construction (a bucket lands
+    // here only past [[MaxBucket]] members, so ≤ |bands|/MaxBucket
+    // rows). Each round drops those buckets with one broadcast anti join.
     val hotBuckets = b.groupBy("band", "sig")
       .agg(count(lit(1)).as("occ"))
       .filter(col("occ") > MaxBucket)
       .select("band", "sig")
       .localCheckpoint(true)
     try {
-      var reached = Tables.load(spark, dir, "documents")
+      val probes = Tables.load(spark, dir, "documents")
         .filter(col("doc_id") % every <= 1)
-        .select(col("doc_id").as("p"), col("doc_id").as("d"))
-        .localCheckpoint(true)
-      var frontier = reached
-      var round = 0
-      while (round < ComponentOracleRounds && !frontier.isEmpty) {
-        // (A fused no-intermediate-checkpoint variant was measured in
-        // round 16 and REJECTED: collapsing the round into one action
-        // duplicated the window/distinct subtrees past what
-        // ReusedExchange recovers — 3.6→4.9 s. The eager per-stage
-        // checkpoints stay; the win below is the probe-bounded verify.)
+        .select(col("doc_id").as("p"), col("doc_id").as("d"), lit(0).as("round"))
+      val (reached, _, _) = Fixpoint.iterate(probes, ComponentOracleRounds) { r =>
+        val frontier = r.state.filter(col("round") === r.index - 1)
         // the frontier docs' band rows (≤ frontier·bands — broadcast
-        // side; referenced once per round since the occupancy hoist,
-        // so no checkpoint — the one consumer builds it directly)
+        // side; one consumer, so no checkpoint)
         val fBands = b.join(
             broadcast(frontier.select(col("d").as("doc_id")).distinct()),
             Seq("doc_id"))
@@ -1172,65 +1153,52 @@ object Dedup {
           .distinct()
         // attach probes; prune (p, d2) already closed BEFORE the
         // verify join (the oracle prunes AFTER via EXCEPT — same sets,
-        // pruning early only drops verify work)
-        // (A fully-fused round — pPairs and vdocs NOT checkpointed,
-        // leaning on ReusedExchange inside the one action — was
-        // re-measured in round 17 after the occupancy hoist and is
-        // STILL slower: 45 → 59 AQE stage-jobs, 4.7 → 5.2 s warm. The
-        // three references to pPairs re-derive the partners pipeline
-        // past what exchange reuse recovers. The per-stage eager
-        // checkpoints stay.)
-        val pPairs = partners
-          .join(broadcast(frontier.withColumnRenamed("d", "d1")), Seq("d1"))
-          .join(reached.withColumnRenamed("d", "d2"), Seq("p", "d2"), "left_anti")
-          .localCheckpoint(true)
+        // pruning early only drops verify work). pPairs and vdocs are
+        // checkpointed: the round reads pPairs three times, and a fused
+        // round re-derives the partners pipeline past what exchange
+        // reuse recovers (measured slower: 45 → 59 jobs, 4.7 → 5.2 s).
+        val pPairs = r.checkpoint(partners
+          .join(broadcast(frontier.select(col("p"), col("d").as("d1"))), Seq("d1"))
+          .join(r.state.select(col("p"), col("d").as("d2")), Seq("p", "d2"), "left_anti"))
         val jac = col("c").cast(DoubleType) /
           (col("n1") + col("n2") - col("c")).cast(DoubleType)
-        // Probe-bounded verify (round-16 optimization; guide §2.4 —
-        // remove shuffles outright): the round's candidate set is
-        // ≤ frontier·bands·[[MaxBucket]] pairs BY DESIGN (that is the
-        // slice family's contract), so unlike the corpus-bound verifies
-        // this one may cut the docs side down FIRST — a broadcast
-        // semi-join on the candidates' id list (longs; ≤2·|cands| of
-        // them) leaves a docs subset of component size, and the
-        // shared merge-pinned verify then sorts hundreds of rows, not
-        // the corpus. The previous shape re-shuffled the FULL persisted
-        // shingle frame by d1 and d2 EVERY round (plan audit: 2 corpus
-        // Exchanges per round; shuffle reuse never fires across the
-        // loop's separate actions). Results are identical — the semi-
-        // join drops only docs no candidate pair references.
+        // Probe-bounded verify: the round's candidate set is
+        // ≤ frontier·bands·[[MaxBucket]] pairs by design (the slice
+        // family's contract), so unlike the corpus-bound verifies this
+        // one cuts the docs side down FIRST — a broadcast semi-join on
+        // the candidates' id list leaves a docs subset of component
+        // size, and the shared merge-pinned verify sorts hundreds of
+        // rows, not the corpus. Results are identical — the semi-join
+        // drops only docs no candidate pair references.
         val cands = pPairs.select("d1", "d2").distinct()
         val candIds = cands.select(col("d1").as("doc_id"))
           .union(cands.select(col("d2").as("doc_id"))).distinct()
-        val vdocs = docs.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
+        val vdocs = r.checkpoint(
+          docs.join(broadcast(candIds), Seq("doc_id"), "left_semi"))
         val verified = verifiedIntersections(vdocs, cands, "d1", "d2")
           .filter(jac >= 0.5).select("d1", "d2")
         val fresh = pPairs.join(verified, Seq("d1", "d2"), "left_semi")
-          .select(col("p"), col("d2").as("d")).distinct()
-          .localCheckpoint(true)
-        // reached stays a LAZY union of the per-round checkpointed
-        // frames (round-17; guide §1.2 job-count trim): every member
-        // is already materialized, so checkpointing the union spent
-        // one more blocking job per round only to re-copy cached
-        // blocks. The union's readers (the per-round anti join, the
-        // final agg) scan the same cached partitions either way.
-        reached = reached.unionByName(fresh)
-        frontier = fresh
-        round += 1
+          .select(col("p"), col("d2").as("d"), lit(r.index).as("round")).distinct()
+        (r.state.unionByName(fresh), max(col("round") === r.index))
       }
-      reached.groupBy("p").agg(
+      val clusters = reached.groupBy("p").agg(
           min(col("d")).as("cluster_id"),
           countDistinct(col("d")).as("cluster_size"))
         .filter(col("cluster_size") > 1)
         .select(col("p").as("doc_id"), col("cluster_id"), col("cluster_size"))
-    } finally { if (!prePersisted) b.unpersist(); () }
+        .localCheckpoint(true)
+      SessionCaches.free(reached)
+      clusters
+    } finally {
+      SessionCaches.free(hotBuckets)
+      if (!prePersisted) b.unpersist()
+      ()
+    }
   }
 
   /** [[neardupClusters]]' probe slice: the probe docs' component rows
     * via [[probeComponentClosure]] over the recomputed banding frame —
-    * end-to-end probe-bounded since round 14 (the oracle was always
-    * the frontier unroll; now the engine is too). */
+    * end-to-end probe-bounded, like the oracle's frontier unroll. */
   def neardupClustersSlice(spark: SparkSession, dir: String): DataFrame =
     probeComponentClosure(spark, dir, cachedCorpusBands(spark, dir))
 
@@ -1379,13 +1347,12 @@ object Dedup {
     * buckets (equal to the global census by the semi-join argument in
     * [[slicedCandidates]]), and the verify join runs over the bounded
     * pair list — never the Σf² full self-join that exhausted DuckDB's
-    * spill disk at sf10 (round-12 gate). The verify explodes (`cex`)
+    * spill disk at sf10. The verify explodes (`cex`)
     * are RESTRICTED to candidate docs and materialized: an inline
     * full-corpus explode per side leaves DuckDB free to misorder the
     * e1⋈e2 shingle-equality join ahead of the doc restriction, and
     * its estimate-free inlined-CTE replay of the signature pipeline
-    * per reference is what actually ENOSPC'd the first r13 sf10
-    * attempt. */
+    * per reference is what ENOSPC'd at sf10. */
   private val slicePairCtes =
     s"""$sigBandsCtes,
        |prb AS (SELECT greatest(1, count(*) // $RecallProbes) AS e FROM documents),
@@ -1480,16 +1447,14 @@ object Dedup {
   /** Connected components over the minhash pair list as UNROLLED
     * min-label propagation — the same algorithm the Spark side runs
     * ([[graft.operators.ConnectedComponents]]), one materialized
-    * n-row label frame per round. Through round 8 this was a
-    * recursive-CTE transitive closure (`reach(n, l)` = "label l
-    * reaches n"), whose intermediate is Σ K² rows per K-node
-    * component — at sf3 the dup-family components grow to thousands
-    * of docs and the reach table spilled DuckDB past 70 GB of temp
-    * disk (the round-9 sf3 gate caught it). Label propagation carries
-    * one row per node per round instead. `AS MATERIALIZED` is
-    * load-bearing: each round references the previous twice, and
-    * DuckDB's CTE inlining would otherwise double the plan per round
-    * (2^rounds blowup — the round-8 mmr lesson). Ends with
+    * n-row label frame per round. A recursive-CTE transitive closure
+    * (`reach(n, l)` = "label l reaches n") would hold Σ K² rows per
+    * K-node component — at sf3 the dup-family components grow to
+    * thousands of docs and the reach table spilled DuckDB past 70 GB
+    * of temp disk. Label propagation carries one row per node per
+    * round instead. `AS MATERIALIZED` is load-bearing: each round
+    * references the previous twice, and DuckDB's CTE inlining would
+    * otherwise double the plan per round (2^rounds blowup). Ends with
     * comp(doc_id, cluster_id) open for a caller-appended SELECT. */
   private[graft] val componentCtes = {
     val rounds = (1 to ComponentOracleRounds).map { i =>

@@ -1,13 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
-import graft.SessionCaches
+import graft.{Fixpoint, SessionCaches}
 
 /** Connected components over an undirected edge list, in pure DataFrame
   * algebra (no graph library): iterative min-label propagation.
@@ -21,28 +17,29 @@ import graft.SessionCaches
   * Scale design:
   *  - each round is one join (edges ⋈ labels on src) + one min-aggregate
   *    — both shuffle on the same key domain, nothing quadratic;
-  *  - labels decrease monotonically, so convergence is detected by an
-  *    exact DECIMAL(38,0) label-sum (order-independent, overflow-free)
-  *    going flat — one tiny aggregate per round, no driver-side diff;
-  *  - rounds needed = component DIAMETER. Near-dup clusters are
-  *    near-cliques (diameter ~1-2), so this converges in 2-3 rounds; a
-  *    general 100 TB graph with long chains uses [[resolveAlternating]]
-  *    — the alternating large-star/small-star algorithm (Kiveris et
-  *    al., SoCC'14), implemented below on the same join/agg
-  *    primitives, which contracts any diameter in O(log² n) rounds
-  *    worst case (spec-pinned result-equal to this mode);
-  *  - each round ends in an EAGER `localCheckpoint`, which both
-  *    materializes the labels and TRUNCATES the logical plan. The
-  *    truncation is load-bearing, not hygiene: `next` references
-  *    `labels` twice (union branch + propagation join), so without it
-  *    the plan DOUBLES per round — at diameter ~8 the explain string
-  *    AQE renders per plan update is already hundreds of MB and OOMs
-  *    the driver (caught by the random-graph spec). With the
-  *    checkpoint every round starts from a constant-size LogicalRDD.
-  *    On a real cluster, pass `checkpointDir` to swap
-  *    `localCheckpoint` (lost on executor failure) for reliable
-  *    `checkpoint` against shared storage — same truncation,
-  *    failure-tolerant. The swap is a parameter, not an edit.
+  *  - the same aggregate keeps each node's own label beside the new
+  *    one, so the round's changed-row flag (some label dropped) is
+  *    computed in the round's own job ([[graft.Fixpoint]]): no
+  *    separate convergence action;
+  *  - rounds needed = component DIAMETER + 1 (the last round confirms
+  *    nothing moved). Near-dup clusters are near-cliques (diameter
+  *    ~1-2), so this converges in 2-3 rounds; a general graph with long
+  *    chains uses [[resolveAlternating]] — the alternating
+  *    large-star/small-star algorithm (Kiveris et al., SoCC'14),
+  *    implemented below on the same join/agg primitives, which
+  *    contracts any diameter in O(log² n) rounds worst case
+  *    (spec-pinned result-equal to this mode);
+  *  - each round ends in an eager checkpoint, which both materializes
+  *    the labels and TRUNCATES the logical plan. The truncation is
+  *    load-bearing, not hygiene: `next` references `labels` twice
+  *    (union branch + propagation join), so without it the plan
+  *    DOUBLES per round — at diameter ~8 the explain string AQE
+  *    renders per plan update is already hundreds of MB and OOMs the
+  *    driver (caught by the random-graph spec). With the checkpoint
+  *    every round starts from a constant-size LogicalRDD. On a real
+  *    cluster, pass `checkpointDir` to swap `localCheckpoint` (lost on
+  *    executor failure) for reliable `checkpoint` against shared
+  *    storage — same truncation, failure-tolerant.
   *
   * Fails loudly (IllegalStateException) if `maxIters` rounds pass
   * without convergence — a silently-unconverged labeling would be
@@ -50,39 +47,17 @@ import graft.SessionCaches
   */
 object ConnectedComponents {
 
-  /** Per-round truncation for one resolution. Eager checkpoint, not
-    * persist: it truncates the logical plan each round (see object
-    * Scaladoc — the plan doubles per round otherwise) AND materializes
-    * the frame in one move. `discard` frees a superseded round's
-    * blocks and, in reliable mode, its ReliableCheckpointRDD directory
-    * (the fs handle comes from the frame's own conf). */
-  private final class Rounds(sc: SparkContext, checkpointDir: Option[String]) {
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-
-    def discard(df: DataFrame): Unit = {
-      SessionCaches.free(df)
-      if (checkpointDir.isDefined) df.queryExecution.logical match {
-        case lr: LogicalRDD =>
-          lr.rdd.getCheckpointFile.foreach { f =>
-            val p = new Path(f)
-            p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-          }
-        case _ => ()
-      }
+  /** [[Fixpoint.iterate]], failing loudly without a fixpoint: the
+    * unconverged state is freed and `what` names the mode. */
+  private def converge(init: DataFrame, maxIters: Int, checkpointDir: Option[String],
+                       what: String)
+                      (step: Fixpoint.Round => (DataFrame, Column)): (DataFrame, Int) = {
+    val (state, rounds, converged) = Fixpoint.iterate(init, maxIters, checkpointDir)(step)
+    if (!converged) {
+      SessionCaches.free(state)
+      throw new IllegalStateException(s"$what did not converge in $maxIters rounds")
     }
-  }
-
-  /** Run `body` with the GLOBAL checkpoint dir scoped to
-    * `checkpointDir`: the session's own setting (even when unset) is
-    * put back once resolution finishes. */
-  private def withRounds[A](sc: SparkContext, checkpointDir: Option[String])
-                           (body: Rounds => A): A = {
-    val priorDir = org.apache.spark.graft.CheckpointDirAccessor.get(sc)
-    checkpointDir.foreach(sc.setCheckpointDir)
-    try body(new Rounds(sc, checkpointDir))
-    finally org.apache.spark.graft.CheckpointDirAccessor.restore(sc, priorDir)
+    (state, rounds)
   }
 
   /** @param edges     two-column frame of undirected edges
@@ -93,18 +68,14 @@ object ConnectedComponents {
     *                  `checkpoint` into this (shared-storage) path —
     *                  the cluster-grade mode that survives executor
     *                  loss; when None, `localCheckpoint` (executor
-    *                  blocks — right for local[k] and fastest).
-    *                  Hygiene (round-4 advice): the session's global
-    *                  checkpoint dir is restored on exit (even to
-    *                  None), so the override never leaks to other
-    *                  users of a shared session; and each round's
-    *                  checkpoint files are deleted as soon as the next
-    *                  round is materialized, so a long run holds at
-    *                  most two round snapshots in shared storage, not
-    *                  one per round. Only the RETURNED frame's files
-    *                  survive — callers own that cleanup (or rely on
-    *                  `spark.cleaner.referenceTracking
-    *                  .cleanCheckpoints`).
+    *                  blocks — right for local[k] and fastest). The
+    *                  session's global checkpoint dir is restored on
+    *                  exit (even to None), and each round's checkpoint
+    *                  files are deleted as soon as the next round is
+    *                  materialized, so a long run holds at most two
+    *                  round snapshots in shared storage. Only the
+    *                  RETURNED frame's files survive, until the caller
+    *                  frees it.
     * @return columns (id, label): one row per distinct node in
     *         `edges`, label = min node id of its component. The
     *         returned frame is checkpointed (materialized); callers
@@ -112,45 +83,24 @@ object ConnectedComponents {
     */
   def resolve(edges: DataFrame, srcCol: String, dstCol: String,
               maxIters: Int = 50,
-              checkpointDir: Option[String] = None): DataFrame =
-    withRounds(edges.sparkSession.sparkContext, checkpointDir) { r =>
-      val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      // symmetrize once; both propagation sides read this frame each round
-      val sym = SessionCaches.persist(
-        e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
-
-      var labels = r.truncate(sym.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")))
-      var prevSum: Option[java.math.BigDecimal] = None
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIters) {
-        val prop = sym.join(labels, sym("src") === labels("id"))
-          .select(sym("dst").as("id"), labels("label"))
-        val next = r.truncate(labels.select("id", "label").union(prop)
-          .groupBy("id").agg(min("label").as("label")))
-        // null sum <=> empty node set: trivially converged
-        val s = Option(next.agg(sum(col("label").cast(DecimalType(38, 0))))
-          .head().getDecimal(0))
-        converged = s.isEmpty ||
-          prevSum.exists(_.compareTo(s.get) == 0)
-        if (converged) r.discard(next) // fixpoint: next == labels elementwise
-        else {
-          r.discard(labels) // next is materialized; round N is done
-          labels = next
-          prevSum = s
-          iter += 1
-        }
-      }
-      sym.unpersist()
-      if (!converged) {
-        r.discard(labels)
-        throw new IllegalStateException(
-          s"connected components did not converge in $maxIters rounds")
-      }
-      labels
-    }
+              checkpointDir: Option[String] = None): DataFrame = {
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+    // symmetrize once; both propagation sides read this frame each round
+    val sym = SessionCaches.persist(
+      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
+    val init = sym.select(col("src").as("id")).distinct().withColumn("label", col("id"))
+    try converge(init, maxIters, checkpointDir, "connected components") { r =>
+      val labels = r.state
+      val prop = sym.join(labels, col("src") === col("id"))
+        .select(col("dst").as("id"), col("label"))
+      val next = labels.withColumn("own", col("label"))
+        .union(prop.withColumn("own", lit(null).cast("long")))
+        .groupBy("id").agg(min("label").as("label"), min("own").as("own"))
+      (next, max(col("label") < col("own")))
+    }._1
+    finally { sym.unpersist(); () }
+  }
 
   /** Alternating large-star/small-star connected components (Kiveris,
     * Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected
@@ -172,10 +122,10 @@ object ConnectedComponents {
     * Both preserve connectivity and never raise a node's minimum
     * reachable id; at the fixpoint (edge set stable) every component
     * is a star rooted at its minimum id, read off directly as the
-    * label frame. Convergence check per round: edge count equal AND
-    * one-sided set-difference empty (both sides are `distinct`
-    * frames, so count+⊆ ⇔ equality) — two tiny jobs on frames
-    * already materialized by the round's checkpoint.
+    * label frame. The round's flag is "the edge set changed": one
+    * aggregation both deduplicates the small-star output and groups it
+    * with the round's input edges, so an edge seen on one side only
+    * sets the flag inside the round's own job.
     *
     * Result contract is [[resolve]]'s exactly: one (id, label =
     * component min id) row per distinct node of `edges`
@@ -192,8 +142,7 @@ object ConnectedComponents {
   private[graft] def resolveAlternatingWithRounds(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIters: Int = 50,
-      checkpointDir: Option[String] = None): (DataFrame, Int) =
-    withRounds(edges.sparkSession.sparkContext, checkpointDir) { r =>
+      checkpointDir: Option[String] = None): (DataFrame, Int) = {
     // m(u) = min(N(u) ∪ {u}) over the symmetrized frame, then link
     // strictly larger neighbors to it; emitted edges are naturally
     // (hi → lo) oriented since m ≤ u < v
@@ -208,59 +157,49 @@ object ConnectedComponents {
     }
 
     // input already (hi → lo); m(u) = min of the ≤-neighborhood, link
-    // that whole neighborhood AND u itself to it (minus m's self-link)
+    // that whole neighborhood AND u itself to it (minus m's self-link).
+    // Not deduplicated here: the round's comparison groups by edge.
     def smallStar(e: DataFrame): DataFrame = {
       val m = e.groupBy("src").agg(min(col("dst")).as("m"))
       val relink = e.join(m, "src")
         .filter(col("dst") =!= col("m"))
         .select(col("dst").as("src"), col("m").as("dst"))
       relink.union(m.select(col("src"), col("m").as("dst")))
-        .distinct()
     }
 
-      val raw = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      // the node universe (kept through to the label read-off: star
-      // contraction drops self-loop-only and fully-contracted nodes
-      // from the edge frame, but the contract is one row per node)
-      val nodes = r.truncate(
-        raw.select(col("src").as("id"))
-          .union(raw.select(col("dst").as("id"))).distinct())
-      var e = r.truncate(raw.filter(col("src") =!= col("dst"))
-        .select(greatest(col("src"), col("dst")).as("src"),
-          least(col("src"), col("dst")).as("dst"))
-        .distinct())
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIters) {
-        val next = r.truncate(smallStar(largeStar(e)))
-        // equality of two distinct frames: |next| = |e| and next ⊆ e
-        converged = next.count() == e.count() &&
-          next.except(e).isEmpty
-        if (!converged) {
-          r.discard(e)
-          e = next
-          iter += 1
-        } else {
-          r.discard(next)
-        }
-      }
-      if (!converged) {
-        r.discard(nodes)
-        r.discard(e)
-        throw new IllegalStateException(
-          s"alternating connected components did not converge in $maxIters rounds")
-      }
-      // fixpoint edges are stars (v → component min): labels read off
-      // as each node's out-neighbor, roots (and self-loop-only nodes)
-      // label themselves
-      val labels = nodes
-        .join(e.select(col("src").as("id"), col("dst").as("star")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("star"), col("id")).as("label"))
-      val out = r.truncate(labels)
-      r.discard(nodes)
-      r.discard(e)
-      (out, iter + 1)
+    val raw = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+    val init = raw.filter(col("src") =!= col("dst"))
+      .select(greatest(col("src"), col("dst")).as("src"),
+        least(col("src"), col("dst")).as("dst"))
+      .distinct()
+    val (stars, rounds) = converge(init, maxIters, checkpointDir,
+        "alternating connected components") { r =>
+      // an edge the previous round dropped is kept as a null row (see
+      // below): it joins nothing and is skipped here
+      val e = r.state.filter(col("src").isNotNull)
+      // side bits: 1 = an input edge, 2 = an output edge, 3 = both
+      val sides = smallStar(largeStar(e)).withColumn("side", lit(2))
+        .union(e.withColumn("side", lit(1)))
+        .groupBy("src", "dst").agg(bit_or(col("side")).as("side"))
+      val out = col("side") >= 2
+      (sides.select(when(out, col("src")).as("src"), when(out, col("dst")).as("dst"),
+          col("side")),
+        max(col("side") =!= 3))
     }
+    // the node universe: star contraction drops self-loop-only and
+    // fully-contracted nodes from the edge frame, but the contract is
+    // one row per node. Fixpoint edges are stars (v → component min):
+    // labels read off as each node's out-neighbor, roots (and
+    // self-loop-only nodes) label themselves
+    val nodes = raw.select(col("src").as("id"))
+      .union(raw.select(col("dst").as("id"))).distinct()
+    val labels = nodes
+      .join(stars.select(col("src").as("id"), col("dst").as("star")),
+        Seq("id"), "left")
+      .select(col("id"), coalesce(col("star"), col("id")).as("label"))
+    val out = Fixpoint.truncate(labels, checkpointDir)
+    SessionCaches.free(stars)
+    (out, rounds)
+  }
 }

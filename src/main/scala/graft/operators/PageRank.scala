@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{SessionCaches, Tables}
+import graft.{Fixpoint, SessionCaches, Tables}
 
 /** PageRank over the customer–supplier trade network — the fourth
   * iterative-algebra family in the engine (after connected components,
@@ -29,9 +29,8 @@ import graft.{SessionCaches, Tables}
   * round is one equi-join on src (rank flows to edges) plus one
   * aggregate on dst (inflow), both AQE-planned shuffles on graph keys;
   * nothing ever collects to the driver and no per-round state grows.
-  * For unbounded rounds swap the static loop for the convergence loop
-  * + per-round lineage truncation of ConnectedComponents.scala:75 —
-  * the per-round algebra is identical.
+  * For unbounded rounds, [[PageRank.pagerankConverged]] runs the same
+  * per-round algebra as a convergence loop.
   */
 object PageRank {
 
@@ -40,9 +39,8 @@ object PageRank {
   val Teleport = 150000L
 
   /** Node-count ceiling for broadcasting the per-round rank/inflow
-    * frames (round-16 optimization; guide §3.1 — pick the join
-    * strategy deliberately). Ranks are one (node, long) row per graph
-    * node: ≤10⁶ nodes is tens of MB of build state, safely inside
+    * frames (the join strategy is picked deliberately). Ranks are one
+    * (node, long) row per graph node: ≤10⁶ nodes is tens of MB of build state, safely inside
     * executor budgets, and broadcasting them makes each round ONE scan
     * of the cached edge frame (no per-round shuffle+sort of the edges —
     * the plan audit showed SortMergeJoin re-exchanging the 2·|pairs|
@@ -77,8 +75,7 @@ object PageRank {
       val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       // one materialization feeds all rounds (the unrolled plan would
       // otherwise recompute the orders ⋈ lineitem distinct per round).
-      // Cached PRE-PARTITIONED BY dst (round-17, guide §2.4): under the
-      // broadcast gate each round streams this frame into a broadcast
+      // Cached PRE-PARTITIONED BY dst: under the broadcast gate each round streams this frame into a broadcast
       // join (partitioning preserved) and then aggregates inflow BY
       // dst — with the cache laid out on dst the per-round groupBy
       // plans with NO Exchange, so the 2·|pairs| edge rows shuffle
@@ -118,24 +115,23 @@ object PageRank {
     ranks
   }
 
-  /** Convergence-mode PageRank — the unbounded-rounds form the static
-    * loop's Scaladoc promises: iterate the identical integer recurrence
-    * until the largest per-node rank change is ≤ `tol` micro-units (or
-    * `maxRounds` as a backstop). Each round is eagerly
-    * `localCheckpoint`ed — the lineage-truncation move from
-    * ConnectedComponents.scala:75 — so the plan stays one-round deep no
-    * matter how many rounds convergence takes (the unrolled static form
-    * doubles its plan per round, fine for 6, fatal for 60), and the
-    * superseded round's blocks are unpersisted as soon as its successor
-    * is materialized, holding at most two round snapshots. The Δ check
-    * rides the SAME materialization as the round's update (prev and new
-    * rank live in one checkpointed frame), so convergence costs one
-    * cheap agg over cached blocks per round, not an extra join.
+  /** Convergence-mode PageRank — the unbounded-rounds form of the
+    * static loop: iterate the identical integer recurrence until the
+    * largest per-node rank change is ≤ `tol` micro-units (or
+    * `maxRounds` as a backstop) through [[graft.Fixpoint]]. Each round
+    * keeps the previous rank beside the new one, so the round's flag,
+    * `max |rank_u − rank_prev| > tol`, is computed in the round's own
+    * materialization; the eager checkpoint keeps the plan one round deep
+    * no matter how many rounds convergence takes (the unrolled static
+    * form doubles its plan per round, fine for 6, fatal for 60), and the
+    * superseded round's blocks are freed as soon as its successor is
+    * materialized.
     *
     * With `tol = 0` and `maxRounds = n` this executes exactly the
     * static n-round recurrence — PageRankSpec pins bit-equality against
-    * [[pagerankTradeGraph]] on the fixture graph. Caller owns the
-    * returned frame's unpersist (same contract as CC.resolve). */
+    * [[pagerankTradeGraph]] on the fixture graph. Returns the last
+    * round's checkpointed (node, rank_u) frame, converged or not; the
+    * caller frees it ([[graft.SessionCaches.free]]). */
   def pagerankConverged(spark: SparkSession, dir: String,
                         tol: Long = 1000L,
                         maxRounds: Int = 50): DataFrame = {
@@ -143,29 +139,19 @@ object PageRank {
     val nodes = cachedNodes(spark, dir)
     val hint = rankSideHint(spark, dir)
 
-    var ranks = nodes.withColumn("rank_u", lit(RankInit))
-    var lastCp: DataFrame = null
-    var delta = Long.MaxValue
-    var round = 0
-    while (round < maxRounds && delta > tol) {
+    Fixpoint.iterate(nodes.withColumn("rank_u", lit(RankInit)), maxRounds) { r =>
+      val ranks = r.state
       val inflow = edgeDeg.join(hint(ranks), col("src") === col("node"))
         .select(col("dst"), expr("rank_u div outdeg").as("contrib"))
         .groupBy("dst").agg(sum("contrib").as("inflow"))
       // ranks carries the full node set every round (it starts as
       // nodes and each step is a left join), so joining it directly
-      // keeps prev and new rank in one frame for the Δ check
-      val stepped = ranks.join(hint(inflow), col("node") === col("dst"), "left")
+      // keeps prev and new rank in one frame for the flag
+      val next = ranks.join(hint(inflow), col("node") === col("dst"), "left")
         .select(col("node"), col("rank_u").as("rank_prev"),
           (lit(Teleport) + expr("85 * coalesce(inflow, 0L) div 100")).as("rank_u"))
-        .localCheckpoint(true)
-      delta = stepped.agg(max(abs(col("rank_u") - col("rank_prev"))))
-        .first().getLong(0)
-      if (lastCp != null) SessionCaches.free(lastCp)
-      lastCp = stepped
-      ranks = stepped.select("node", "rank_u")
-      round += 1
-    }
-    ranks
+      (next, max(abs(col("rank_u") - col("rank_prev"))) > tol)
+    }._1
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -177,7 +163,7 @@ object PageRank {
     * from inlining all [[Rounds]] rounds into one pipeline that
     * re-derives the edge list per round — at sf3 that inlined tree
     * spilled past the sandbox disk; materialized, peak state is one
-    * round's frame (the componentCtes lesson, round 9). */
+    * round's frame, as in the component oracle's CTEs. */
   private def roundCtes: Seq[String] =
     (1 to Rounds).map { i =>
       s"""r$i AS MATERIALIZED (

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -72,19 +72,24 @@ object IngestDedup {
     val batchSh = shingler(batchDocs)
     val batchBands = Dedup.bandsOf(Dedup.minhashSignaturesOf(spark, batchSh))
       .select(col("doc_id").as("dn"), col("band"), col("sig"))
+    // the verify keys each side by (side, doc_id): a doc_id that is both
+    // in the batch and stored has its batch copy verified against the
+    // stored copies only, never a stored copy against itself
+    def keyed(side: Int, id: Column): Column = struct(lit(side).as("side"), id.as("id"))
     val cand = batchBands
       .join(indexBands.select(col("doc_id").as("dc"), col("band"), col("sig")),
         Seq("band", "sig"))
-      .select("dn", "dc").distinct()
+      .select(keyed(0, col("dn")).as("dn"), keyed(1, col("dc")).as("dc")).distinct()
     val candCorpusSh = shingler(
-      knownDocs.join(cand.select(col("dc").as("doc_id")).distinct(),
+      knownDocs.join(cand.select(col("dc.id").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi"))
-    val allSh = batchSh.unionByName(candCorpusSh)
+    val allSh = batchSh.withColumn("doc_id", keyed(0, col("doc_id")))
+      .unionByName(candCorpusSh.withColumn("doc_id", keyed(1, col("doc_id"))))
     val jac = col("c").cast("double") /
       (col("n1") + col("n2") - col("c")).cast("double")
     val matched = Dedup.verifiedIntersections(allSh, cand, "dn", "dc")
       .filter(jac >= 0.5)
-      .select(col("dn").as("doc_id")).distinct()
+      .select(col("dn.id").as("doc_id")).distinct()
     batchDocs.select("doc_id").join(matched, Seq("doc_id"), "left_anti")
   }
 

@@ -4,10 +4,10 @@ import org.apache.spark.SparkContext
 
 /** `SparkContext.checkpointDir` is `private[spark]`, so restoring it
   * (including back to None) after a scoped override needs an accessor
-  * inside the `org.apache.spark` namespace. Used by
-  * [[graft.operators.ConnectedComponents]] to keep its reliable-mode
-  * checkpoint directory from leaking into global session state for
-  * every other user of a shared SparkSession: the public
+  * inside the `org.apache.spark` namespace. Used by [[graft.Fixpoint]]
+  * to keep a loop's reliable-mode checkpoint directory from leaking
+  * into global session state for every other user of a shared
+  * SparkSession: the public
   * `setCheckpointDir` can only ever SET, never unset. */
 object CheckpointDirAccessor {
 

@@ -46,6 +46,20 @@ class BandIndexSpec extends AnyFunSuite with SharedSpark {
     assert(IndexStore.builds.get() == before + 1)
   }
 
+  test("storedComponents: a cold build leaves no persistent RDD once the artifact is published") {
+    val text = (0 until 30).map(i => s"w$i").mkString(" ")
+    val dir = tempCorpus(Seq((1L, text), (2L, text + " dup"), (3L, "some other words entirely")))
+    Dedup.cachedMinhashPairs(spark, dir).count() // the registry's memo, built first
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val builds = IndexStore.builds.get()
+    val labels = BandIndex.storedComponents(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(IndexStore.builds.get() == builds + 1, "the call did not build")
+    assert(labels == Map(1L -> 1L, 2L -> 1L))
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"the build left persistent RDDs $left")
+  }
+
   test("IndexStore: a changed corpus moves the artifact directory (staleness key)") {
     import spark.implicits._
     val dir = tempCorpus(Seq((1L, "a b c")))

@@ -50,6 +50,27 @@ class SessionCachesSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("the probe closure leaves nothing persistent but registry memos once its result is freed") {
+    def sliceOnce(s: SparkSession): Unit = {
+      val clusters = Dedup.neardupClustersSlice(s, sfDir)
+      assert(clusters.collect().nonEmpty)
+      SessionCaches.free(clusters)
+    }
+    // cold, in a child session: what the registry owns goes with release
+    val before = persistentIds()
+    val child = spark.newSession()
+    sliceOnce(child)
+    SessionCaches.release(child)
+    val coldLeft = persistentIds() -- before
+    assert(coldLeft.isEmpty, s"a cold closure left persistent RDDs $coldLeft")
+    // warm: the memos exist, so the call itself must leave nothing
+    sliceOnce(spark)
+    val warm = persistentIds()
+    sliceOnce(spark)
+    val warmLeft = persistentIds() -- warm
+    assert(warmLeft.isEmpty, s"a warm closure left persistent RDDs $warmLeft")
+  }
+
   test("release frees a child session's frames, checkpoints and broadcasts; the shared session keeps its own") {
     // the shared session holds entries of its own throughout,
     // among them the persisted partsupp frame
