@@ -45,7 +45,7 @@ class RecordCounterListener extends SparkListener {
 
 object Bench {
 
-  /** The 29 queries of the round-0 binding baseline (BASELINE.md's
+  /** The 29 queries of the binding baseline (BASELINE.md's
     * 25.9 s figure). Bench reports their subtotal beside the
     * full-surface total so the against-baseline ratio stays
     * apples-to-apples as the declared surface grows — the full total
@@ -61,7 +61,7 @@ object Bench {
     "running_sum_per_user", "orders_by_month", "wordcount_total",
     "group_count_by_key", "distinct_keys")
 
-  /** The AUDIT tier (round-7 verdict #5): declared quadratic truth
+  /** The AUDIT tier: declared quadratic truth
     * baselines kept solely to certify their scalable production twins
     * (`minhash_neardup`, `embedding_neardup_lsh`, the hashed
     * substring stats). They are O(n²) BY DESIGN and 18% of the sf1
@@ -97,22 +97,21 @@ object Bench {
     // MODE, which has no probe-bounded variant — a closure engine
     // there would duplicate neardup_clusters_slice's plan) and the
     // fold/compact slices (the fold is sequential global state).
-    // Since r14 neardup_clusters_slice and _indexed_slice run the
-    // probe-seeded closure (Dedup.probeComponentClosure) and sit in
+    // neardup_clusters_slice and _indexed_slice run the
+    // probe-seeded closure (Dedup.probeComponentClosure) and so sit in
     // the scale tier with the pair slices and knn_graph_lsh_slice.
     "neardup_clusters_bigstar_slice", "ingest_dedup_fold_slice",
     "index_compact_slice")
-    // knn_graph_lsh was briefly in this set mid-round-11: the sf100
-    // rung measured its scored-pair volume going family-bound
-    // (near-identical vectors share every band bucket, so pairs track
-    // Σ_families f² — ~8 G vector-carrying pairs at f≈1000, ENOSPC
-    // twice solo). Fixed the same round by KnnBucketCap (the MaxBucket
-    // move on the neighbor side): 112.6 s / 545 M shuffle records at
-    // sf100 — back in the scale tier.
+    // knn_graph_lsh stays in the scale tier: uncapped, its scored
+    // pairs go family-bound at sf100 (near-identical vectors share
+    // every band bucket, so pairs track Σ_families f² — ~8 G
+    // vector-carrying pairs at f≈1000, out of disk). KnnBucketCap (the
+    // MaxBucket move on the neighbor side) bounds them: 112.6 s / 545 M
+    // shuffle records at sf100.
 
   /** Run one query to FULL materialization; (seconds, error). A failed
     * query reports its error message instead of masquerading as a fast
-    * success (round-2 swallowed failures into a small timing). */
+    * success. */
   def timeQuery(spark: SparkSession, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                 sfDir: String): (Double, Option[String]) = {
     val t0 = System.nanoTime()
@@ -161,14 +160,14 @@ object Bench {
       Tables.load(spark, sfDir, "region").groupBy("r_name").count().collect()
     } catch { case _: Throwable => () }
 
-    // repeat mode (round-3 verdict): single samples on this box vary
-    // 43-56 s run-to-run under external load (BASELINE.md:131-133),
-    // making per-query cross-round deltas unreadable. Each query runs
-    // `reps` times; `queries` carries the MEDIAN (the comparison
-    // number), `queries_first` the cold first sample (what single-shot
-    // rounds measured — for cache-fed queries the first run also
-    // absorbs any session-scoped pipeline materialization, so the
-    // first/median split makes that cost visible instead of hidden).
+    // repeat mode: single samples on one box vary 43-56 s run to run
+    // under external load (BASELINE.md:131-133), which makes per-query
+    // deltas between runs unreadable. Each query runs `reps` times;
+    // `queries` carries the MEDIAN (the comparison number),
+    // `queries_first` the cold first sample (for cache-fed queries the
+    // first run also absorbs any session-scoped pipeline
+    // materialization, so the first/median split makes that cost
+    // visible instead of hidden).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -177,10 +176,10 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val records = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
     val firsts = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // per-query MIN across reps (round-5 verdict task #7): on a box
-    // with 110 sibling queries sharing the session, the median still
-    // absorbs external load spikes — the min is the least-loaded
-    // sample and clears load-artifact outliers without a judge re-run
+    // per-query MIN across reps: on a box with 110 sibling queries
+    // sharing the session, the median still absorbs external load
+    // spikes — the min is the least-loaded sample and clears
+    // load-artifact outliers without a judge re-run
     val mins = scala.collection.mutable.LinkedHashMap[String, Double]()
     // builder-side iteration aid, mirroring Verify: comma-separated
     // query-name filter; the driver never sets it, so its runs time
@@ -199,9 +198,9 @@ object Bench {
       case "audit" => AuditQueries
       case _ => _ => true
     }
-    // the tier's exclusion list rides the emitted JSON (round-10
-    // advice): an sf30 "scale" total and an sf10 "shipping" total cover
-    // different query sets, and a consumer comparing them must be able
+    // the tier's exclusion list rides the emitted JSON: an sf30 "scale"
+    // total and an sf10 "shipping" total cover different query sets,
+    // and a consumer comparing them must be able
     // to see that from the artifact alone — not from SCALING.md prose
     val excluded = SparkEntry.queries.keys.filterNot(inTier).toSeq.sorted
     val results = SparkEntry.queries
@@ -253,9 +252,9 @@ object Bench {
     val auditTotal = results.collect {
       case (k, v) if v >= 0 && AuditQueries(k) => v }.sum
     val shippingTotal = total - auditTotal
-    // per-family median subtotals (round-17 addition, r16 verdict #9):
-    // session memos make per-query medians inside a memo-sharing
-    // family "warm" numbers, so cross-round comparisons should read
+    // per-family median subtotals: session memos make per-query
+    // medians inside a memo-sharing family "warm" numbers, so
+    // comparisons between runs should read
     // these family sums — the only per-family attributable quantity
     val familyOf = SparkEntry.families
     val famTotals = results.toSeq
@@ -266,11 +265,9 @@ object Bench {
     val ex = excluded.map(jstr).mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_first":$fs,"queries_min":$ms,"records":$rs,"errors":$es,"baseline_subset_sec":$baselineSubset,"total_first_sec":$totalFirst,"tier":${jstr(tier)},"excluded_queries":$ex,"audit_total_sec":$auditTotal,"shipping_total_sec":$shippingTotal,"families":$fams,"reps":$reps,"n_queries":${results.size},"sf":"$sfDir"}"""
     println(line)
-    // stdout tail gets truncated in transit EVERY round (BENCH_r03
-    // through r14 all carried parsed:null — the driver keeps only the
-    // last ~2 KB of stdout, and the full line with 196-query maps is
-    // ~25 KB) — persist the full line to a file so the per-query
-    // numbers survive regardless
+    // a consumer that keeps only the last ~2 KB of stdout cannot parse
+    // the full line (~25 KB with 196-query maps), so persist it to a
+    // file and the per-query numbers survive regardless
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json")
     try {
       val p = java.nio.file.Paths.get(out)
@@ -279,11 +276,10 @@ object Bench {
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case e: Throwable =>
       System.err.println(s"bench: could not write $out: ${e.getMessage}") }
-    // … and emit a COMPACT summary as the LAST stdout line (r14 verdict
-    // #4): totals + error map + the artifact path, no per-query maps,
-    // sized well inside the driver's stdout-tail budget so its JSON
-    // parse finally succeeds. The per-query medians/mins/records live
-    // in the file above.
+    // … and emit a COMPACT summary as the LAST stdout line: totals +
+    // error map + the artifact path, no per-query maps, sized well
+    // inside such a stdout tail so its JSON parses. The per-query
+    // medians/mins/records live in the file above.
     val compact = s"""{"metric":"total","value":$total,"unit":"sec","baseline_subset_sec":$baselineSubset,"total_first_sec":$totalFirst,"audit_total_sec":$auditTotal,"shipping_total_sec":$shippingTotal,"errors":$es,"n_excluded":${excluded.size},"tier":${jstr(tier)},"reps":$reps,"n_queries":${results.size},"sf":"$sfDir","per_query_artifact":${jstr(out)}}"""
     println(compact)
     spark.stop()

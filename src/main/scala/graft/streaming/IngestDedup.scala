@@ -1,6 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.spark.sql.{classic, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -40,8 +44,11 @@ import graft.dedup.{BandIndex, Dedup}
   * only stream through filtered scans: neither is ever shuffled, and
   * only their matching rows reach the driver, so the per-batch cost
   * tracks the batch plus the matched-bucket corpus rows — never the
-  * corpus. A micro-batch runs 5 Spark jobs (the batch collect, two
-  * store probes, two writes). The batch fold
+  * corpus. The micro-batch source is read once: both partitions are
+  * written from the rows the driver verified, with the band keys it
+  * computed to decide, so no doc is signed twice. A micro-batch runs 5
+  * Spark jobs (the batch collect, two store probes, two concurrent
+  * writes). The batch fold
   * [[ingestDedupFold]] is not trigger-bounded (each step is a sixth of
   * the corpus) and keeps [[dedupStep]]'s shuffle joins.
   */
@@ -105,14 +112,16 @@ object IngestDedup {
 
   /** Seed the stream's state stores: the standing corpus docs land in
     * the accepted store and their bands in the index, both as the
-    * `batch=-1` partition (before every stream batch id). */
+    * `batch=-1` partition (before every stream batch id). The two
+    * writes run concurrently. */
   def seed(spark: SparkSession, corpusDocs: DataFrame,
            indexPath: String, acceptedPath: String): Unit = {
-    corpusDocs.select("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$acceptedPath/batch=-1")
-    Dedup.bandsOf(Dedup.minhashSignaturesOf(spark,
-        shinglesOf(spark, corpusDocs)))
-      .write.mode("overwrite").parquet(s"$indexPath/batch=-1")
+    concurrently(spark)(
+      corpusDocs.select("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$acceptedPath/batch=-1"),
+      Dedup.bandsOf(Dedup.minhashSignaturesOf(spark,
+          shinglesOf(spark, corpusDocs)))
+        .write.mode("overwrite").parquet(s"$indexPath/batch=-1"))
   }
 
   /** Start the ingest stream: `docsStream` rows are (doc_id, text);
@@ -151,19 +160,22 @@ object IngestDedup {
     *
     * The stores are read before this batch's partitions are written,
     * with fixed schemas (no inference job) and the `batch < id` guard,
-    * so a torn-commit replay makes the same decisions. Both writes
-    * re-derive their rows from the micro-batch source, filtered by the
-    * rejected ids: 5 jobs per batch, 4 when nothing collides. */
+    * so a torn-commit replay makes the same decisions. Both writes come
+    * from the collected rows: the batch rows minus the rejected ids, and
+    * the band keys the driver already computed for them, one data file
+    * per partition. The source is read once, and the two writes run
+    * concurrently ([[concurrently]]): 5 jobs per batch, 4 when nothing
+    * collides. */
   private def ingestBatch(docs: DataFrame, id: Long, indexPath: String, acceptedPath: String,
                           live: (DataFrame, String) => DataFrame = (store, _) => store): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
     def probe(path: String, schema: StructType, key: String, in: Iterable[Any]) =
       live(readStore(spark, path, schema, id), path).filter(col(key).isInCollection(in))
-    val sh = docs.select("doc_id", "text").as[(Long, String)].collect()
-      .map { case (d, t) => (d, Dedup.shingleSet(t)) }.filter(_._2.nonEmpty)
-    val byKey = sh.flatMap { case (d, s) => Dedup.bandKeys(Dedup.signature(s)).map(_ -> d) }
-      .groupMap(_._1)(_._2)
+    val rows = docs.select("doc_id", "text").as[(Long, String)].collect()
+    val sh = rows.map { case (d, t) => (d, Dedup.shingleSet(t)) }.filter(_._2.nonEmpty)
+    val keys = sh.map { case (d, s) => (d, Dedup.bandKeys(Dedup.signature(s))) }
+    val byKey = keys.flatMap { case (d, ks) => ks.map(_ -> d) }.groupMap(_._1)(_._2)
     val cand = if (byKey.isEmpty) Array.empty[(Long, Long)]
       else probe(indexPath, IndexSchema, "sig", byKey.keySet.map(_._2))
         .select("doc_id", "band", "sig").as[(Long, Int, String)].collect()
@@ -175,11 +187,33 @@ object IngestDedup {
     val copies = sh.groupMap(_._1)(_._2)
     def near(a: Array[String], b: Set[String]) = { val c = a.count(b); c.toDouble / (a.length + b.size - c) >= 0.5 }
     val dups = cand.collect { case (dn, dc)
-      if copies(dn).exists(a => stored.getOrElse(dc, Array.empty).exists(near(a, _))) => dn }
-    val accepted = docs.select("doc_id", "text").filter(!col("doc_id").isInCollection(dups.toSet))
-    accepted.write.mode("overwrite").parquet(s"$acceptedPath/batch=$id")
-    Dedup.bandsOf(Dedup.minhashSignaturesOf(spark, shinglesOf(spark, accepted)))
-      .write.mode("overwrite").parquet(s"$indexPath/batch=$id")
+      if copies(dn).exists(a => stored.getOrElse(dc, Array.empty).exists(near(a, _))) => dn }.toSet
+    val bands = for ((d, ks) <- keys if !dups(d); (b, s) <- ks) yield (d, b, s)
+    concurrently(spark)(
+      rows.filterNot(r => dups(r._1)).toSeq.toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(s"$acceptedPath/batch=$id"),
+      bands.toSeq.toDF("doc_id", "band", "sig").coalesce(1)
+        .write.mode("overwrite").parquet(s"$indexPath/batch=$id"))
+  }
+
+  /** Runs `a` on a pool thread and `b` on the caller's, returning once
+    * both are done and rethrowing the first failure. The pool thread
+    * runs with the caller's session and Spark local properties
+    * (`SQLExecution.withThreadLocalCaptured`), so its jobs keep the
+    * caller's job group and, inside a micro-batch, the stream's
+    * `sql.streaming.queryId` and `streaming.sql.batchId`. */
+  private def concurrently(spark: SparkSession)(a: => Unit, b: => Unit): Unit = {
+    val first = new AtomicReference[Throwable]()
+    def run(w: => Unit): Unit = try w catch { case e: Throwable => first.compareAndSet(null, e); () }
+    val pending = SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], WritePool)(run(a))
+    run(b)
+    pending.join()
+    Option(first.get).foreach(e => throw e)
+  }
+
+  private lazy val WritePool = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "ingest-store-write"); t.setDaemon(true); t
   }
 
   /** The batch twin, oracled: odd doc_ids arrive as three ingest

@@ -158,13 +158,12 @@ object TextAnalysis {
     "fr" -> Seq("le", "les", "et"),
     "zh" -> Seq("的", "是"))
 
-  /** Round-5 rewrite under the interpreted-lambda rule (SCALING.md):
-    * the declarative form evaluated FIVE `filter(toks, isin)` array
-    * lambdas interpreted per row and re-evaluated them inside the
-    * argmax `when` chain — the exact pattern this codebase measured
-    * 10–25× slower than a typed kernel everywhere else (the query sat
-    * at 2.0× the round-0 baseline for two rounds because of it). Now
-    * one mapPartitions pass: a marker→langs hash map is built once per
+  /** A typed kernel, per the interpreted-lambda rule (SCALING.md): the
+    * declarative form evaluates FIVE `filter(toks, isin)` array lambdas
+    * interpreted per row and again inside the argmax `when` chain — the
+    * pattern this codebase measured 10–25× slower than a typed kernel
+    * (it held this query at 2.0× the binding baseline). Instead, one
+    * mapPartitions pass: a marker→langs hash map is built once per
     * partition, each doc is tokenized in a single char scan (same
     * single-space split-with-empties-dropped convention as
     * [[graft.operators.WordCount.tokens]]), and the argmax takes the
@@ -234,10 +233,10 @@ object TextAnalysis {
     * The rolling hash folds codepoints left-to-right — the same order
     * the oracle's list_reduce uses. Both hashes run in ONE typed
     * mapPartitions kernel (tight JVM loop, one MessageDigest per
-    * partition): the round-2 `aggregate` higher-order-lambda form
-    * evaluated interpreted over a per-character split array — the
-    * pattern this codebase measured 10–25× slower everywhere else
-    * (0.74 s at sf0.1 vs ~0.1 here). Narrow, zero-shuffle either way. */
+    * partition): an `aggregate` higher-order-lambda form evaluates
+    * interpreted over a per-character split array — the pattern this
+    * codebase measured 10–25× slower (0.74 s at sf0.1 vs ~0.1 here).
+    * Narrow, zero-shuffle either way. */
   def docFingerprint(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.load(spark, dir, "documents")
@@ -830,8 +829,8 @@ object TextAnalysis {
     * kernel as `cooccurrence_pmi`), memoized and PERSISTED per
     * (session, corpus) because it feeds BOTH the LM-training
     * aggregate and the scoring join — without the persist the bigram
-    * kernel and documents scan ran twice per invocation (round-8
-    * review). ONE map-side-combining aggregate trains the LM, the
+    * kernel and documents scan would run twice per invocation. ONE
+    * map-side-combining aggregate trains the LM, the
     * prefix marginal is a second aggregate over the MODEL
     * (vocab²-bounded, not corpus-scale), and scoring re-joins doc
     * bigrams to the model, so the only corpus-scale shuffle is the
@@ -840,8 +839,8 @@ object TextAnalysis {
     * The model join's strategy is CARDINALITY-GATED, not pinned: a
     * synthetic corpus's bigram vocabulary is broadcast-sized, but a
     * real web corpus's is 10⁸–10⁹ rows — a pinned broadcast there is
-    * a driver OOM (the defect class the round-8 sf10 probe caught on
-    * the minhash candidate frame). At or under [[LmBroadcastMaxRows]]
+    * a driver OOM (the failure an sf10 run hit on the minhash
+    * candidate frame). At or under [[LmBroadcastMaxRows]]
     * model rows the join broadcasts; above, it falls back to
     * sort-merge. The gate's row count is memoized per (session,
     * corpus) — one aggregate over the persisted bigrams on first use,
@@ -1302,7 +1301,7 @@ object TextAnalysis {
          |FROM s""".stripMargin,
     // Outer CAST(... AS BIGINT): DuckDB SUM(BIGINT) -> HUGEINT, which
     // the driver's pandas fetch turns into float64 and the hash compare
-    // then fails against Spark's int64 (round-1 mismatch).
+    // then fails against Spark's int64.
     "token_count" ->
       s"""SELECT lang,
          |  CAST(SUM(len(list_filter(string_split(text,' '), w -> w <> ''))) AS BIGINT) AS n_ws_tokens,
