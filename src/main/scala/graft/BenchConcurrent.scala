@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.SparkSession
 
-/** Multi-tenant bench (round-9 verdict #6): N concurrent query streams
+/** Multi-tenant bench: N concurrent query streams
   * over ONE session with the FAIR scheduler, at the same SF the serial
   * bench runs. Three passes, one JSON line:
   *

@@ -100,10 +100,6 @@ object IndexStore {
 
   private def isComplete(d: File): Boolean = new File(d, "_SUCCESS").exists()
 
-  /** Read the persisted index `kind` over (`dir`, `table`), building
-    * and atomically publishing it on miss. The returned frame is a
-    * plain parquet scan of the stored artifact — downstream plans see
-    * a FileScan, never the builder's kernels. */
   /** Number of artifact BUILDS this JVM has run (reads don't count) —
     * spec observability for "the second session read, not rebuilt". */
   private[graft] val builds = new java.util.concurrent.atomic.AtomicLong(0)
@@ -119,6 +115,14 @@ object IndexStore {
     * knob, no local-only constant. */
   private def sizedForWrite(df: DataFrame): DataFrame = df.hint("rebalance")
 
+  /** Read the persisted index `kind` over (`dir`, `table`), building
+    * and atomically publishing it on miss. The returned frame is a
+    * plain parquet scan of the stored artifact — downstream plans see
+    * a FileScan, never the builder's kernels. A session reads each
+    * published artifact once: the frame, with its inferred schema and
+    * file listing, is memoized on (artifact dir, `_SUCCESS` mtime), so
+    * a warm call runs no schema-inference job and lists no files, and
+    * an artifact deleted and rebuilt under the session is read afresh. */
   def getOrBuild(spark: SparkSession, dir: String, table: String,
                  kind: String, params: String = "")
                 (build: => DataFrame): DataFrame = {
@@ -129,7 +133,11 @@ object IndexStore {
       // resolution, say) are dead weight, unless a registry memo owns it
       if (!SessionCaches.valuesOf(spark).contains(built)) SessionCaches.free(built)
     }
-    spark.read.parquet(target.getAbsolutePath)
+    val path = target.getAbsolutePath
+    SessionCaches.memo(spark, "indexStore.read",
+        (path, new File(target, "_SUCCESS").lastModified())) {
+      spark.read.parquet(path)
+    }
   }
 
   /** [[getOrBuild]] for artifacts with a CUSTOM directory layout (the

@@ -12,8 +12,7 @@ object PlanAudit {
     // an injected strategy/rule (topk_per_key_exec, topk_window_auto,
     // range_join_auto) failed planning with "No plan for
     // TopKPerKeyNode" — which killed the main and silently cut every
-    // entry after them from the audit output (latent since round 7,
-    // surfaced by the round-11 additions landing after the crash)
+    // entry after them from the audit output
     val spark = Sessions.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // default sf0.001 keeps the audit instant; the optimization rounds

@@ -40,10 +40,9 @@ object SparkEntry {
     ("multimodal", multimodal.Multimodal.queries, multimodal.Multimodal.oracles))
 
   /** Query name → declared module family — the grouping the bench uses
-    * for its per-family subtotals (round-17, r16 verdict #9: the
-    * session-memo era made per-query medians inside a memo-sharing
-    * family "warm" numbers, so only family subtotals are attributable
-    * round-over-round). */
+    * for its per-family subtotals: session memos make per-query medians
+    * inside a memo-sharing family "warm" numbers, so only family
+    * subtotals are attributable from one board to the next. */
   def families: Map[String, String] =
     modules.iterator.flatMap { case (fam, qs, _) => qs.keys.map(_ -> fam) }.toMap
 

@@ -19,8 +19,7 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Session-memoized load PLAN (round-17 optimization; guide §1 —
-    * measured: `spark.read.parquet` costs 150–300 ms per call in
+  /** Session-memoized load PLAN (measured: `spark.read.parquet` costs 150–300 ms per call in
     * datasource resolution (file listing, footer/schema read, and for
     * kernel tables the [[balance]] stats pass), all driver-side, and
     * the query surface calls [[load]] 2–7 times per query build. The

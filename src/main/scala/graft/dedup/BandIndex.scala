@@ -60,14 +60,14 @@ object BandIndex {
     }
 
   /** Stored CC labels of the minhash near-dup pair graph — (id, label)
-    * with label = min member id, the artifact `neardup_clusters` and
-    * training-set selection resolve per session today. */
+    * with label = min member id. A cold build publishes the session's
+    * [[Dedup.neardupComponents]] memo, the same label frame
+    * `neardup_clusters` and the near-dup split and selection read, so a
+    * session resolves the graph once whichever of them runs first; the
+    * memo stays alive for them after the write. */
   def storedComponents(spark: SparkSession, dir: String): DataFrame =
     IndexStore.getOrBuild(spark, dir, "documents", "neardup_cc_labels",
-      Dedup.MinhashIndexParams) {
-      ConnectedComponents.resolve(
-        Dedup.cachedMinhashPairs(spark, dir).select("d1", "d2"), "d1", "d2")
-    }
+      Dedup.MinhashIndexParams)(Dedup.neardupComponents(spark, dir))
 
   /** Bands of the incoming batch — the ONLY signature-kernel pass in
     * the indexed queries' plans. Session-memoized per corpus: five
@@ -146,32 +146,11 @@ object BandIndex {
         countDistinct("doc_id").as("n_docs"))
   }
 
-  /** Cluster count above which the size join abandons the broadcast
-    * hint — same budget rationale as TextAnalysis.LmBroadcastMaxRows:
-    * 10⁶ (cluster_id, count) rows are tens of MB of build state; a
-    * corpus whose near-dup graph resolves to more clusters than that
-    * merges instead (a pinned broadcast there is a driver OOM at the
-    * module's stated 100 TB posture). */
-  val ClusterBroadcastMaxRows = 1000000L
-
   /** [[Dedup.neardupClusters]] over the stored label artifact — the
     * session that ANSWERS cluster queries is rarely the session that
-    * RESOLVED them; this is the read path. The size join's strategy is
-    * cardinality-gated, not pinned (one memoized count over the stored
-    * labels decides broadcast vs sort-merge). */
-  def neardupClustersIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val comp = storedComponents(spark, dir)
-    val sizes = comp.groupBy(col("label").as("cluster_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-    val nClusters =
-      SessionCaches.memo(spark, "bandIndex.clusterCount", dir)(sizes.count())
-    val hinted =
-      if (nClusters <= ClusterBroadcastMaxRows) broadcast(sizes)
-      else sizes.hint("merge")
-    comp.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .join(hinted, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-  }
+    * RESOLVED them; this is the read path. */
+  def neardupClustersIndexed(spark: SparkSession, dir: String): DataFrame =
+    Dedup.clustersFrom(storedComponents(spark, dir))
 
   /** The erasure set for [[indexRetract]]: corpus doc_ids ≡ 4 (mod
     * 10) — deterministic, even-only (so every erased doc is a standing-
@@ -224,8 +203,8 @@ object BandIndex {
     // correct retraction), published beside the bands
     retractedComponents(spark, dir)
     // ONE signature kernel and ONE shingle-carrying verify join serve
-    // both decisions (through round 10 each decision ran its own —
-    // the verify is the pairs-bound cost, so this halves the query).
+    // both decisions (the verify is the pairs-bound cost, so sharing it
+    // halves the query).
     // The "after" candidates still come from a FileScan of the
     // PUBLISHED retracted artifact, so the write/read cycle stays
     // under the oracle hash: verified pairs that survive in the

@@ -750,8 +750,10 @@ object Dedup {
     * survivor (min-id election falls out of min-label propagation for
     * free, see [[graft.operators.ConnectedComponents]]). Memoized per
     * (session, corpus): the component resolution runs once and its
-    * checkpointed label frame is shared by `neardup_clusters` and
-    * `training_set_select_neardup`. */
+    * checkpointed label frame is shared by `neardup_clusters`,
+    * `train_eval_split_neardup`, `training_set_select_neardup` and the
+    * cold build of [[BandIndex.storedComponents]], which publishes this
+    * frame instead of resolving the graph a second time. */
   def neardupComponents(spark: SparkSession, dir: String): DataFrame =
     SessionCaches.memo(spark, "dedup.components", dir) {
       ConnectedComponents.resolve(
@@ -769,34 +771,27 @@ object Dedup {
         cachedMinhashPairs(spark, dir).select("d1", "d2"), "d1", "d2")
     }
 
-  /** Shared (labels → clusters) tail of both resolution modes: size
-    * census per label, then a CARDINALITY-GATED size join — broadcast
-    * under [[BandIndex.ClusterBroadcastMaxRows]] clusters, sort-merge
-    * above, the same gate
-    * [[BandIndex.neardupClustersIndexed]] applies (a pinned broadcast
-    * of a corpus-scale cluster census is a driver OOM at 100 TB). The
-    * gate count runs over the memoized, truncated label frame, so it
-    * costs one cheap job, memoized per (session, corpus, mode). */
-  private def clustersFrom(spark: SparkSession, dir: String, mode: String,
-                           comp: DataFrame): DataFrame = {
+  /** Shared (labels → clusters) tail of both resolution modes and of
+    * [[BandIndex.neardupClustersIndexed]]: a size census per label,
+    * joined back to the labels. The join is a plain one that AQE plans:
+    * it broadcasts the census only while it is below
+    * `autoBroadcastJoinThreshold`, so a corpus-scale census merges
+    * instead of being pinned into a driver-side broadcast. */
+  private[dedup] def clustersFrom(comp: DataFrame): DataFrame = {
     val sizes = comp.groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
-    val nClusters =
-      SessionCaches.memo(spark, "dedup.clusterCount", (dir, mode))(sizes.count())
-    val hinted =
-      if (nClusters <= BandIndex.ClusterBroadcastMaxRows) broadcast(sizes)
-      else sizes.hint("merge")
     comp.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .join(hinted, "cluster_id")
+      .join(sizes, "cluster_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
   }
 
   /** The missing stage between "pairs exist" and "the pipeline works":
     * minhash pairs grouped into clusters, one row per clustered doc
     * with its cluster id (= min member id = survivor) and cluster size.
-    * Docs in no near-dup pair are absent (they survive trivially). */
+    * Docs in no near-dup pair are absent (they survive trivially). The
+    * size join runs no count gate: AQE picks its strategy. */
   def neardupClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersFrom(spark, dir, "prop", neardupComponents(spark, dir))
+    clustersFrom(neardupComponents(spark, dir))
 
   /** [[neardupClusters]] with the components resolved by the
     * alternating-star algorithm — declared as its own query (oracle =
@@ -804,7 +799,7 @@ object Dedup {
     * certified at the ORACLE level, not only by the result-equality
     * spec on hand-built graphs. */
   def neardupClustersBigstar(spark: SparkSession, dir: String): DataFrame =
-    clustersFrom(spark, dir, "bigstar", neardupComponentsBigstar(spark, dir))
+    clustersFrom(neardupComponentsBigstar(spark, dir))
 
   // ---- SimHash ----
 

@@ -430,7 +430,7 @@ object Multimodal {
   }
 
   /** The REAL binary-media source: `spark.read.format("binaryFile")`
-    * over actual files (the round-1 gap), feeding the identical decode
+    * over actual files (not only an inline byte column), feeding the identical decode
     * pipeline as [[multimodalMeta]] — so the oracle is unchanged. The
     * source carries (path, modificationTime, length, content) with
     * pushdown on path/length; doc_id is recovered from the file name.

@@ -48,9 +48,9 @@ object Bucketed {
     * need a persistent (Hive) metastore, which this sandbox lacks.
     *
     * The staleness fingerprint covers BOTH tables and every projected
-    * column (round-4 advice: an orders-only key let a regenerated
-    * lineitem — or a changed o_totalprice with keys and count
-    * unchanged — silently reuse stale buckets). */
+    * column: an orders-only key would let a regenerated lineitem — or
+    * a changed o_totalprice with keys and count unchanged — silently
+    * reuse stale buckets. */
   def ensureBucketed(spark: SparkSession, dir: String): String =
     SessionCaches.memo(spark, "bucketed.db", dir) {
       import spark.implicits._

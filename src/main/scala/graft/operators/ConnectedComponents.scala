@@ -8,11 +8,13 @@ import graft.{Fixpoint, SessionCaches}
 /** Connected components over an undirected edge list, in pure DataFrame
   * algebra (no graph library): iterative min-label propagation.
   *
-  * Every node starts labeled with its own id; each round replaces a
-  * node's label with the min of its own and its neighbors' labels; at
-  * the fixpoint every node carries the MIN id of its component — which
-  * doubles as the deterministic survivor election for dedup (min-doc_id
-  * per near-dup cluster), so no separate election pass is needed.
+  * Every node starts labeled with the min id of its closed neighborhood
+  * (itself and its neighbors, read off the aggregate that collects the
+  * node set); each round replaces a node's label with the min of its
+  * own and its neighbors' labels; at the fixpoint every node carries
+  * the MIN id of its component — which doubles as the deterministic
+  * survivor election for dedup (min-doc_id per near-dup cluster), so
+  * no separate election pass is needed.
   *
   * Scale design:
   *  - each round is one join (edges ⋈ labels on src) + one min-aggregate
@@ -21,10 +23,11 @@ import graft.{Fixpoint, SessionCaches}
   *    one, so the round's changed-row flag (some label dropped) is
   *    computed in the round's own job ([[graft.Fixpoint]]): no
   *    separate convergence action;
-  *  - rounds needed = component DIAMETER + 1 (the last round confirms
-  *    nothing moved). Near-dup clusters are near-cliques (diameter
-  *    ~1-2), so this converges in 2-3 rounds; a general graph with long
-  *    chains uses [[resolveAlternating]] — the alternating
+  *  - rounds needed = component DIAMETER (the seed already covers one
+  *    hop, and the last round confirms nothing moved). Near-dup clusters
+  *    are near-cliques (diameter ~1-2), so this converges in 1-2
+  *    rounds; a general graph with long chains uses
+  *    [[resolveAlternating]] — the alternating
   *    large-star/small-star algorithm (Kiveris et al., SoCC'14),
   *    implemented below on the same join/agg primitives, which
   *    contracts any diameter in O(log² n) rounds worst case
@@ -89,7 +92,9 @@ object ConnectedComponents {
     // symmetrize once; both propagation sides read this frame each round
     val sym = SessionCaches.persist(
       e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
-    val init = sym.select(col("src").as("id")).distinct().withColumn("label", col("id"))
+    // one-hop seed: each node starts at the min of its closed neighborhood
+    val init = sym.groupBy("src").agg(least(col("src"), min(col("dst"))).as("label"))
+      .withColumnRenamed("src", "id")
     try converge(init, maxIters, checkpointDir, "connected components") { r =>
       val labels = r.state
       val prop = sym.join(labels, col("src") === col("id"))

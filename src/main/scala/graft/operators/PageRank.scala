@@ -46,8 +46,9 @@ object PageRank {
     * the plan audit showed SortMergeJoin re-exchanging the 2·|pairs|
     * edge frame every round). Past the ceiling the joins fall back to
     * the planner's shuffle strategy, the only shape that survives a
-    * billion-node graph — same gate pattern as
-    * [[graft.dedup.BandIndex.ClusterBroadcastMaxRows]]. */
+    * billion-node graph. (The near-dup cluster census needs no such
+    * gate: its size join is planned by AQE alone, see
+    * [[graft.dedup.Dedup.neardupClusters]].) */
   val RankBroadcastMaxRows = 1000000L
 
   /** Broadcast the per-round small side iff the node census (memoized,

@@ -197,7 +197,7 @@ object Relational {
   /** Deterministic array aggregation: sorted distinct active days.
     * The collected set is emitted as a canonical comma-joined string, not
     * an array column — the driver's pandas row-sort cannot hash numpy
-    * arrays (round-1 harness error), and a canonical string carries the
+    * arrays, and a canonical string carries the
     * same information. */
   def collectDaysPerType(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "events")

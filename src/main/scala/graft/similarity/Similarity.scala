@@ -89,14 +89,13 @@ object Similarity {
 
   /** Session-memoized (vec_id, v, nrm) frame — the parquet scan, the
     * double-cast, and the norm computed once per (session, corpus)
-    * instead of once per invocation (round-16 optimization): 14 call
+    * instead of once per invocation: 14 call
     * sites across the ANN/kNN/quantization family each re-paid the
     * load-balance probe and the norm pass. */
   private def vectors(spark: SparkSession, dir: String): DataFrame =
     SessionCaches.memo(spark, "similarity.vectors", dir) {
-      // Round-17 (r16 verdict #1, guide §5): the r16 persist of this
-      // frame made ann_recall's WARM reps slower than cold at the
-      // driver's local[32] config (13.3 s median vs 2.4 s at 8 cores) —
+      // A persist of this frame made ann_recall's WARM reps slower than
+      // cold at local[32] (13.3 s median vs 2.4 s at 8 cores) —
       // every consumer read the wide array<double> column through an
       // InMemoryTableScan columnar decode at the cache boundary, which
       // also breaks whole-stage codegen fusion into the dot-product
@@ -945,10 +944,9 @@ object Similarity {
     // Candidate codes come from the STORED artifact (the full
     // `embedding_pq_codes` output persisted by IndexStore) — one
     // parquet FileScan, no per-candidate encode kernel anywhere in the
-    // plan. Through round 9 the query PQ-encoded candidates at query
-    // time even though `embedding_pq_codes_indexed` persisted exactly
-    // those codes; this is the "codes are a stored column" posture the
-    // docstring promises, implemented (round-9 verdict #4).
+    // plan: the codes `embedding_pq_codes_indexed` persists are read,
+    // not re-encoded per candidate at query time — the "codes are a
+    // stored column" posture the docstring promises.
     // SemanticsSpec-style guarantee: the artifact's codes are the same
     // deterministic argmin the in-line kernel computed (BandIndexSpec
     // pins the artifact bit-identical to a fresh encode), so adcq is
@@ -1436,7 +1434,7 @@ object Similarity {
     * though: near-identical vectors share every band bucket, so a
     * near-dup family of f members puts f vectors in one bucket
     * regardless of bits, and scored pairs grow as Σ_families f² —
-    * the round-11 sf100 rung measured that blowup for real (f≈1000 →
+    * an sf100 run measured that blowup for real (f≈1000 →
     * ~8 G vector-carrying pairs, ENOSPC twice with the sandbox's full
     * headroom). [[KnnBucketCap]] is the [[graft.dedup.Dedup.MaxBucket]]
     * move applied here: the NEIGHBOR side of the bucket join keeps
@@ -1452,7 +1450,7 @@ object Similarity {
     * because the [[KnnBucketCap]] window caps the NEIGHBOR side
     * globally and each probe's top-k depends only on its own candidate
     * set (SimilaritySpec pins the equality). The certifiable twin of
-    * the pair-bound graph build above sf3 (round-12 verdict #1). */
+    * the pair-bound graph build above sf3. */
   def knnGraphLshSlice(spark: SparkSession, dir: String): DataFrame =
     knnGraphLshOf(spark, vectors(spark, dir),
       knnBitsFor(vecCount(spark, dir)),
@@ -1507,8 +1505,7 @@ object Similarity {
   }
 
   /** kNN-graph recall certification — the quality number the
-    * [[KnnBucketCap]] contract rides on, MEASURED (round-11 verdict
-    * #1): for the [[NumProbes]] probe sample, compare the exact
+    * [[KnnBucketCap]] contract rides on, MEASURED: for the [[NumProbes]] probe sample, compare the exact
     * brute-force top-[[KnnGraphK]] ([[cachedExactTopk]] — the same
     * memoized pass `ann_recall` certifies the probe-search family
     * against) with the rows the PRODUCTION capped graph build
@@ -1526,7 +1523,7 @@ object Similarity {
     * including the capped lowest-id bucket slice — so a cap or ladder
     * change lands here as a measured recall shift before it ships.
     *
-    * REGIME column (round-12 verdict #5): each row carries
+    * REGIME column: each row carries
     * `over_cap_buckets` — how many of the probe's own band buckets
     * exceed [[KnnBucketCap]] — so the census is self-interpreting. A
     * low recall with over_cap_buckets = 0 is the BANDING's number (the
@@ -1541,7 +1538,7 @@ object Similarity {
     // top-[[KnnGraphK]] lists, so dividing by KnnGraphK is a recall
     // only while the two k's agree — if they ever diverge this census
     // (and its oracle, which replays the same arithmetic) would ship a
-    // mislabeled ratio with no hash mismatch (round-12 advice).
+    // mislabeled ratio with no hash mismatch.
     require(K == KnnGraphK,
       s"knnGraphRecall: exact top-K (K=$K) and graph list width " +
         s"(KnnGraphK=$KnnGraphK) must agree for found/$KnnGraphK to be a recall")
@@ -2159,7 +2156,7 @@ object Similarity {
          |WHERE nn_rank <= $KnnGraphK""".stripMargin,
     // the probe slice of the capped graph: same bbc lowest-id neighbor
     // cap, cand probe-filtered — identical per-probe rows to the full
-    // build, feasible for DuckDB at any SF (round-12 verdict #1)
+    // build, feasible for DuckDB at any SF
     "knn_graph_lsh_slice" ->
       s"""WITH $knnBandedCtes,
          |bbc AS (SELECT vec_id, band, bucket FROM (

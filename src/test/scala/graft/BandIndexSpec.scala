@@ -1,9 +1,16 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.{BandIndex, Dedup}
+import graft.operators.ConnectedComponents
 
 /** The persisted-index layer (round-9 verdict #1): IndexStore artifact
   * lifecycle, the indexed minhash queries' equivalence to their
@@ -49,7 +56,9 @@ class BandIndexSpec extends AnyFunSuite with SharedSpark {
   test("storedComponents: a cold build leaves no persistent RDD once the artifact is published") {
     val text = (0 until 30).map(i => s"w$i").mkString(" ")
     val dir = tempCorpus(Seq((1L, text), (2L, text + " dup"), (3L, "some other words entirely")))
-    Dedup.cachedMinhashPairs(spark, dir).count() // the registry's memo, built first
+    // the registry's memos, built first: the build publishes the second
+    Dedup.cachedMinhashPairs(spark, dir).count()
+    Dedup.neardupComponents(spark, dir).count()
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val builds = IndexStore.builds.get()
     val labels = BandIndex.storedComponents(spark, dir)
@@ -58,6 +67,80 @@ class BandIndexSpec extends AnyFunSuite with SharedSpark {
     assert(labels == Map(1L -> 1L, 2L -> 1L))
     val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(left.isEmpty, s"the build left persistent RDDs $left")
+  }
+
+  /** `body`'s value and the stages of every job it started, once the
+    * listener bus has delivered them. */
+  private def withJobs[A](body: => A): (A, Seq[Seq[StageInfo]]) = {
+    val jobs = new ConcurrentLinkedQueue[Seq[StageInfo]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.add(e.stageInfos); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      (out, jobs.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Jobs of a [[Fixpoint]] loop: their stages are called from it. */
+  private def fixpointJobs(jobs: Seq[Seq[StageInfo]]): Int =
+    jobs.count(_.exists(_.name.contains("Fixpoint.scala")))
+
+  test("one resolution per session: storedComponents publishes the neardupComponents memo") {
+    val text = (0 until 30).map(i => s"w$i").mkString(" ")
+    val rows = Seq((1L, text), (2L, text + " dup"), (4L, text + " dup"),
+      (3L, "some other words entirely"))
+    def labelsOf(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (storedFirst <- Seq(false, true)) {
+      val s = spark.newSession() // fresh memos over a fresh corpus: a cold key
+      val dir = tempCorpus(rows)
+      try {
+        // the pair graph first, so that only the loops' own jobs are counted
+        Dedup.cachedMinhashPairs(s, dir).count()
+        val builds = IndexStore.builds.get()
+        val ((memo, stored), jobs) = withJobs {
+          if (storedFirst) {
+            val st = labelsOf(BandIndex.storedComponents(s, dir))
+            (labelsOf(Dedup.neardupComponents(s, dir)), st)
+          } else {
+            val m = labelsOf(Dedup.neardupComponents(s, dir))
+            (m, labelsOf(BandIndex.storedComponents(s, dir)))
+          }
+        }
+        assert(memo == Map(1L -> 1L, 2L -> 1L, 4L -> 1L) && stored == memo)
+        assert(IndexStore.builds.get() == builds + 1)
+        // one loop: as many Fixpoint jobs as one resolution of the graph
+        val (one, loop) = withJobs(ConnectedComponents.resolve(
+          Dedup.cachedMinhashPairs(s, dir).select("d1", "d2"), "d1", "d2"))
+        SessionCaches.free(one)
+        assert(fixpointJobs(loop) > 0)
+        assert(fixpointJobs(jobs) == fixpointJobs(loop),
+          s"storedFirst=$storedFirst: ${fixpointJobs(jobs)} Fixpoint jobs, one loop is " +
+            fixpointJobs(loop))
+      } finally SessionCaches.release(s)
+    }
+  }
+
+  test("IndexStore: a session reads an artifact once; a rebuilt artifact is read afresh") {
+    import spark.implicits._
+    val dir = tempCorpus(Seq((1L, "a b c")))
+    def read(n: Long): DataFrame = IndexStore.getOrBuild(spark, dir, "documents", "spec_read") {
+      spark.range(n).toDF("id")
+    }
+    assert(read(3).count() == 3)
+    // parquet schema inference parallelizes the footers to read outside
+    // any plan node: its collection keeps the `parallelize` scope
+    val (again, jobs) = withJobs(read(3).as[Long].collect().toSet)
+    assert(again == Set(0L, 1L, 2L))
+    val inference = jobs.count(_.exists(_.rddInfos.exists(r =>
+      r.name == "ParallelCollectionRDD" && r.scope.forall(_.name == "parallelize"))))
+    assert(inference == 0, s"a warm read ran $inference schema-inference jobs")
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      IndexStore.indexDir(spark, dir, "documents", "spec_read"))
+    assert(read(5).as[Long].collect().toSet == (0L until 5L).toSet)
   }
 
   test("IndexStore: a changed corpus moves the artifact directory (staleness key)") {

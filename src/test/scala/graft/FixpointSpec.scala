@@ -73,6 +73,26 @@ class FixpointSpec extends AnyFunSuite with SharedSpark {
     assert((persistentIds() -- before).isEmpty, "an unconverged resolution left blocks behind")
   }
 
+  test("the one-hop seed: a component of diameter d resolves in d rounds") {
+    import spark.implicits._
+    // a 4-clique plus a disjoint edge: diameter 1, so the seed is the fixpoint
+    val clique = (for (a <- 1L to 4L; b <- a + 1 to 4L) yield (a, b)) :+ ((10L, 11L))
+    val labels = ConnectedComponents.resolve(clique.toDF("a", "b"), "a", "b", maxIters = 1)
+    assert(labels.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    SessionCaches.free(labels)
+    for (d <- Seq(2, 5)) {
+      // a path 0 - 1 - ... - d: the far end is d hops from the min id
+      val path = (0L until d.toLong).map(i => (i + 1, i)).toDF("a", "b")
+      val ok = ConnectedComponents.resolve(path, "a", "b", maxIters = d)
+      assert(ok.as[(Long, Long)].collect().toMap == (0L to d.toLong).map(_ -> 0L).toMap)
+      SessionCaches.free(ok)
+      val short = intercept[IllegalStateException](
+        ConnectedComponents.resolve(path, "a", "b", maxIters = d - 1))
+      assert(short.getMessage == s"connected components did not converge in ${d - 1} rounds")
+    }
+  }
+
   test("reliable mode deletes superseded rounds' files and restores the checkpoint dir") {
     def rddDirs(root: Path): Long =
       Files.walk(root).filter(p => Files.isDirectory(p) &&
@@ -96,7 +116,7 @@ class FixpointSpec extends AnyFunSuite with SharedSpark {
 
   test("the round's flag is read without waiting on query-execution listeners") {
     import spark.implicits._
-    // diameter 2: two rounds of change and one that confirms
+    // diameter 2: one round of change and one that confirms
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
     SessionCaches.free(ConnectedComponents.resolve(edges, "a", "b")) // warm
     val slow = new QueryExecutionListener {
@@ -110,7 +130,7 @@ class FixpointSpec extends AnyFunSuite with SharedSpark {
       val secs = (System.nanoTime() - t0) / 1e9
       assert(labels.as[(Long, Long)].collect().toMap == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
       SessionCaches.free(labels)
-      assert(secs < 2.0, f"a 3-round resolve took $secs%.2f s behind a 1 s listener")
+      assert(secs < 2.0, f"a 2-round resolve took $secs%.2f s behind a 1 s listener")
     } finally spark.listenerManager.unregister(slow)
   }
 }

@@ -21,8 +21,11 @@ pair wins, and two verdicts:
   wider than the bound (unless every change run beats every parent run),
   else "within_bound".
 
-With --trace 1 every `layer` line of the run's report is kept, and the
-run's span file gives the Spark jobs inside each micro-batch span.
+Every run also keeps each op's cold ms and warm median ms, read from the
+`[perfbench] op ...` lines of its stderr, so a move in `cold_pass_s` can
+be attributed to an op from the artifact alone. With --trace 1 every
+`layer` line of the run's report is kept, and the run's span file gives
+the Spark jobs inside each micro-batch span.
 """
 import argparse
 import json
@@ -34,6 +37,7 @@ import sys
 import time
 
 LINE = re.compile(r"^\s+(layer\s+)?(\S+)\s+(-?[0-9.]+(?:e[-+]?\d+)?|nan|inf)\s+(\S+)$")
+OP = re.compile(r"^\[perfbench\] op (\S+)\s+cold\s+(\S+) ms\s+warm median\s+(\S+) ms")
 
 
 def quartiles(xs):
@@ -60,7 +64,9 @@ def run_once(root, a, seed):
             values[m.group(2)] = float(m.group(3))
     run = {"seed": seed, "wall_s": round(time.time() - t, 1), "correct": res["correct"],
            "attempted": res["attempted"], "failed": res["failed"],
-           "metrics": {k: v["value"] for k, v in res["metrics"].items()}}
+           "metrics": {k: v["value"] for k, v in res["metrics"].items()},
+           "ops": {m.group(1): {"cold_ms": float(m.group(2)), "warm_median_ms": float(m.group(3))}
+                   for m in map(OP.match, p.stderr.splitlines()) if m}}
     if a.trace:
         run["layers"] = values
         spans = os.path.join(root, ".bench_work", "traces", f"{a.workload}-seed{seed}.json")
@@ -74,6 +80,14 @@ def jobs_per_batch(spans):
     jobs = [s for s in spans if s["name"].startswith("job ")]
     return [sum(1 for j in jobs if j["op"] == b["op"] and b["start"] <= j["start"] and j["end"] <= b["end"])
             for b in spans if b["name"].startswith("batch ")]
+
+
+def op_medians(runs):
+    """Per op and side: the median over runs of its cold ms and warm median ms."""
+    names = sorted({n for rs in runs.values() for r in rs for n in r["ops"]})
+    return {n: {f"{side}_{k}": statistics.median([r["ops"][n][k] for r in rs if n in r["ops"]])
+                for side, rs in runs.items() for k in ("cold_ms", "warm_median_ms")}
+            for n in names}
 
 
 def compare(parent, change, better, bound):
@@ -132,7 +146,7 @@ def main():
            "correct_all": all(r["correct"] for side in runs.values() for r in side),
            "failed_ops": {s: sum(r["failed"] for r in rs) for s, rs in runs.items()},
            "attempted_ops": {s: sum(r["attempted"] for r in rs) for s, rs in runs.items()},
-           "metrics": metrics, "runs": runs}
+           "metrics": metrics, "ops": op_medians(runs), "runs": runs}
     os.makedirs(os.path.dirname(os.path.abspath(a.out)), exist_ok=True)
     with open(a.out, "w") as f:
         json.dump(doc, f, indent=1)
