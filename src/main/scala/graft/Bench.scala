@@ -129,7 +129,7 @@ object Bench {
     }
   }
 
-  private def jstr(s: String): String =
+  private[graft] def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

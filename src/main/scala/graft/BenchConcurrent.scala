@@ -31,14 +31,6 @@ import org.apache.spark.sql.SparkSession
   * stream at sf1), SPARK_GRAFT_BENCH_OUT. */
 object BenchConcurrent {
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Run `names` split round-robin across `streams` FAIR pools;
     * returns (wall seconds, per-query seconds, errors). */
   private def concurrentPass(spark: SparkSession, sfDir: String,
@@ -104,12 +96,12 @@ object BenchConcurrent {
     val allErrs = (coldErrs.map { case (k, v) => s"cold:$k" -> v } ++
       serialErrs.map { case (k, v) => s"serial:$k" -> v } ++
       warmErrs.map { case (k, v) => s"warm:$k" -> v })
-    val es = allErrs.map { case (k, v) => jstr(k) + ":" + jstr(v) }
+    val es = allErrs.map { case (k, v) => Bench.jstr(k) + ":" + Bench.jstr(v) }
       .mkString("{", ",", "}")
     val qs = warmTimes.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+      .map { case (k, v) => Bench.jstr(k) + ":" + v }.mkString("{", ",", "}")
     val speedup = if (warmSec > 0) serialSec / warmSec else -1.0
-    val line = s"""{"metric":"concurrent","streams":$streams,"unit":"sec","concurrent_cold_sec":$coldSec,"serial_warm_sec":$serialSec,"concurrent_warm_sec":$warmSec,"speedup":$speedup,"n_queries":${names.size},"tier":${jstr(tier)},"errors":$es,"queries_warm_concurrent":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"concurrent","streams":$streams,"unit":"sec","concurrent_cold_sec":$coldSec,"serial_warm_sec":$serialSec,"concurrent_warm_sec":$warmSec,"speedup":$speedup,"n_queries":${names.size},"tier":${Bench.jstr(tier)},"errors":$es,"queries_warm_concurrent":$qs,"sf":"$sfDir"}"""
     println(line)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_concurrent.json")
     try {

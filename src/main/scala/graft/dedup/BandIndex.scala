@@ -84,31 +84,17 @@ object BandIndex {
 
   /** The indexed acceptance decision, parameterized by WHICH corpus
     * band frame plays the index — [[minhashIncrementalIndexed]] passes
-    * the standing artifact, [[indexRetract]] passes both the standing
-    * and the retracted copy. Batch bands join the index's buckets,
-    * candidates verify with the shared merge-pinned exact-Jaccard
-    * stage, and a batch doc is accepted iff nothing verifies at ≥ 0.5.
-    * Returns the accepted batch doc_ids. Erased/absent index docs can
-    * never suppress a batch doc: candidates exist only where the index
-    * has bands. */
+    * the standing artifact. The batch bands' [[Dedup.collisions]] with
+    * the index are decided by [[Dedup.acceptedBatch]], the same verify
+    * stage and [[Dedup.nearDup]] rule as `minhash_incremental`. Returns
+    * the accepted batch doc_ids. Erased/absent index docs can never
+    * suppress a batch doc: collisions exist only where the index has
+    * bands. */
   private def acceptedAgainst(spark: SparkSession, dir: String,
                               corpusBands: DataFrame): DataFrame = {
     val docs = Dedup.cachedDocShingles(spark, dir)
-    val batch = batchBands(spark, dir)
-      .select(col("doc_id").as("dn"), col("band"), col("sig"))
-    val corpus = corpusBands
-      .select(col("doc_id").as("dc"), col("band"), col("sig"))
-    val cand = batch.join(corpus, Seq("band", "sig"))
-      .select("dn", "dc").distinct()
-    val jac = col("c").cast("double") /
-      (col("n1") + col("n2") - col("c")).cast("double")
-    val matched = Dedup.verifiedIntersections(docs, cand, "dn", "dc")
-      .filter(jac >= 0.5)
-      .select(col("dn").as("doc_id")).distinct()
-    Tables.load(spark, dir, "documents")
-      .filter(batchFilter)
-      .select("doc_id")
-      .join(matched, Seq("doc_id"), "left_anti")
+    Dedup.acceptedBatch(Tables.load(spark, dir, "documents").filter(batchFilter),
+      Dedup.collisions(batchBands(spark, dir), corpusBands), docs, docs)
   }
 
   /** [[Dedup.minhashIncremental]] against the STORED index: the corpus
@@ -171,10 +157,10 @@ object BandIndex {
     * min-id label — BandIndexSpec pins both artifacts erased-free),
     * and (3) reports the USER-VISIBLE consequence: for every batch
     * (odd-id) doc, its acceptance decision against the full index vs
-    * against the retracted copy. A doc whose only ≥0.5-Jaccard
-    * near-dups were erased flips rejected → accepted — exactly the
-    * behavior the next `ingest_dedup_fold` step inherits, since the
-    * "after" decision reads the PUBLISHED artifact (write/read loss
+    * against the retracted copy. A doc whose only near-dups were
+    * erased flips rejected → accepted — exactly the behavior the next
+    * `ingest_dedup_fold` step inherits, since the "after" decision
+    * reads the PUBLISHED artifact (write/read loss
     * would break the hash). Acceptance is monotone (erasure only
     * removes suppressors), which the spec pins as before ⇒ after.
     *
@@ -212,21 +198,10 @@ object BandIndex {
     // the suppressors the erasure did not remove.
     val docs = Dedup.cachedDocShingles(spark, dir)
     val batch = batchBands(spark, dir)
-      .select(col("doc_id").as("dn"), col("band"), col("sig"))
-    val candB = batch
-      .join(standingBands(spark, dir)
-        .select(col("doc_id").as("dc"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .select("dn", "dc").distinct()
-    val candA = batch
-      .join(retracted
-        .select(col("doc_id").as("dc"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .select("dn", "dc").distinct()
-    val jac = col("c").cast("double") /
-      (col("n1") + col("n2") - col("c")).cast("double")
-    val verified = Dedup.verifiedIntersections(docs, candB, "dn", "dc")
-      .filter(jac >= 0.5)
+    val candA = Dedup.collisions(batch, retracted)
+    val verified = Dedup.verifiedIntersections(
+        Dedup.collisions(batch, standingBands(spark, dir)), docs, docs)
+      .filter(Dedup.nearDup)
       .select("dn", "dc")
     // flags: a row means "matched before"; m_after = some verified
     // suppressor is still present in the retracted index

@@ -443,7 +443,32 @@ object Dedup {
   val AuditMaxDocs: Long =
     sys.env.get("SPARK_GRAFT_AUDIT_MAX_DOCS").map(_.toLong).getOrElse(200000L)
 
-  /** All pairs with word-3gram Jaccard >= 0.5. Shared-shingle self-join:
+  // ---- the near-dup rule ----
+
+  /** The one near-dup threshold: a pair of documents is a near-dup iff
+    * the exact Jaccard of their word-3gram shingle sets is at least this.
+    * [[nearDup]] is the rule as a Column, [[isNearDup]] on the driver;
+    * every near-dup query, the band index and the ingest streams decide
+    * with one of the two. */
+  val NearDupJaccard = 0.5
+
+  /** Exact Jaccard |A∩B| / (|A|+|B|−|A∩B|) of a pair, from its
+    * intersection size `c` and set sizes `n1`, `n2` (the columns
+    * [[verifiedIntersections]] attaches). */
+  def jaccard: Column =
+    col("c").cast(DoubleType) / (col("n1") + col("n2") - col("c")).cast(DoubleType)
+
+  /** The near-dup rule over [[jaccard]]. */
+  def nearDup: Column = jaccard >= NearDupJaccard
+
+  /** Driver twin of [[nearDup]]: `a` is a distinct shingle array (a
+    * [[shingleSet]]), `b` a shingle set. */
+  def isNearDup(a: Array[String], b: Set[String]): Boolean = {
+    val c = a.count(b)
+    c.toDouble / (a.length + b.size - c) >= NearDupJaccard
+  }
+
+  /** All pairs that are near-dups by [[nearDup]]. Shared-shingle self-join:
     * explode distinct shingles, join on shingle, count intersections,
     * Jaccard = |∩| / (|A|+|B|-|∩|). Refuses corpora beyond
     * [[AuditMaxDocs]] — see the cap's docstring. */
@@ -468,13 +493,11 @@ object Dedup {
       .agg(count(lit(1)).as("c"))
     val s1 = sizes.select(col("doc_id").as("jd1"), col("n").as("n1"))
     val s2 = sizes.select(col("doc_id").as("jd2"), col("n").as("n2"))
-    val jac = col("c").cast(DoubleType) /
-      (col("n1") + col("n2") - col("c")).cast(DoubleType)
     inter
       .join(broadcast(s1), col("d1") === col("jd1"))
       .join(broadcast(s2), col("d2") === col("jd2"))
-      .filter(jac >= 0.5)
-      .select(col("d1"), col("d2"), round(jac, 6).as("jaccard"))
+      .filter(nearDup)
+      .select(col("d1"), col("d2"), round(jaccard, 6).as("jaccard"))
   }
 
   // ---- MinHash + LSH ----
@@ -488,7 +511,7 @@ object Dedup {
     * changing any constant re-keys the standing band/label artifacts so
     * old-parameter indexes are never silently reused. */
   private[graft] def MinhashIndexParams =
-    s"sh=3,p=$P,h=$NumHashes,r=$BandRows,jac=0.5"
+    s"sh=3,p=$P,h=$NumHashes,r=$BandRows,jac=$NearDupJaccard"
 
   /** 60-bit md5 prefix of the shingle, reduced mod p — the base hash the
     * permutation family acts on. Same bytes, same hex, same value in
@@ -574,15 +597,6 @@ object Dedup {
     * from stalling a task. */
   val MaxBucket = 1000
 
-  /** LSH banding: 8 bands × 4 rows; band signature joins docs sharing
-    * any band; candidates verified with exact Jaccard >= 0.5. Output
-    * matches `ngram_jaccard` whenever LSH recall is total (it is for
-    * the ~0.98-Jaccard injected dups: miss prob (1-j⁴)⁸ ≈ 1e-9).
-    *
-    * Uses the session-scoped [[cachedDocShingles]]: the frame feeds the
-    * signature pipeline once and the verify join twice, and without the
-    * persist the parquet scan + shingling re-ran for each (measured at
-    * 3× on the driver bench). */
   /** (doc_id, band, sig) banded-signature frame: [[BandRows]]-row
     * slices of the MinHash signature, stringified per band. Shared by
     * the self-dedup candidates, the incremental form, and containment. */
@@ -626,7 +640,8 @@ object Dedup {
     * near-identical cluster) explodes in the join just the same —
     * here the quadratic expansion is explicit, local to its bucket,
     * and bounded by [[MaxBucket]]. Takes the banding frame directly
-    * (corpus callers pass [[cachedCorpusBands]]). */
+    * (corpus callers pass [[cachedCorpusBands]], the slices its
+    * probe-hit buckets). */
   private def minhashCandidates(bands: DataFrame): DataFrame = {
     val pairsUdf = udf { ids: Seq[Long] =>
       val s = ids.sorted
@@ -640,8 +655,25 @@ object Dedup {
       .distinct()
   }
 
-  /** Candidate pairs joined back to both docs' shingle sets with the
-    * exact intersection size `c` computed — the shared verify stage.
+  /** The one collision step of a batch against an index: distinct
+    * (dn, dc) pairs of a batch doc and an index doc that share a
+    * (band, sig) bucket. Both inputs are (doc_id, band, sig) frames
+    * ([[bandsOf]]); index docs without bands (erased or absent) can
+    * never collide. */
+  private[graft] def collisions(batchBands: DataFrame, indexBands: DataFrame): DataFrame =
+    batchBands.select(col("doc_id").as("dn"), col("band"), col("sig"))
+      .join(indexBands.select(col("doc_id").as("dc"), col("band"), col("sig")),
+        Seq("band", "sig"))
+      .select("dn", "dc").distinct()
+
+  /** The one verify stage: candidate pairs joined back to both docs'
+    * shingle sets, with the exact intersection size `c` and the set
+    * sizes `n1`, `n2` attached (the inputs of [[jaccard]]). `cand`
+    * holds two doc_id columns: the first is looked up in `lhsSh`, the
+    * second in `rhsSh`, both (doc_id, sh) frames. A corpus verified
+    * against itself passes its shingle frame twice; a batch verified
+    * against an index passes each side's own frame, so a doc_id that is
+    * in both is verified only across them, never against itself.
     *
     * The candidate frame's static size estimate is garbage (groupBy →
     * explode → distinct erases it) while its TRUE size is output-bound
@@ -650,26 +682,59 @@ object Dedup {
     * driver; the merge hint pins both verify joins to sort-merge,
     * which is the only shape that survives any corpus. (At tiny SFs
     * AQE's local shuffle reader keeps the cost near-broadcast.) */
-  private[graft] def verifiedIntersections(docs: DataFrame, cand: DataFrame,
-                                    lhs: String, rhs: String): DataFrame =
+  private[graft] def verifiedIntersections(cand: DataFrame, lhsSh: DataFrame,
+                                           rhsSh: DataFrame): DataFrame = {
+    val (lhs, rhs) = (cand.columns(0), cand.columns(1))
     cand.hint("merge")
-      .join(docs.select(col("doc_id").as(lhs), col("sh").as("sh1"), size(col("sh")).as("n1")), lhs)
+      .join(lhsSh.select(col("doc_id").as(lhs), col("sh").as("sh1"), size(col("sh")).as("n1")), lhs)
       .hint("merge")
-      .join(docs.select(col("doc_id").as(rhs), col("sh").as("sh2"), size(col("sh")).as("n2")), rhs)
+      .join(rhsSh.select(col("doc_id").as(rhs), col("sh").as("sh2"), size(col("sh")).as("n2")), rhs)
       .withColumn("c", size(array_intersect(col("sh1"), col("sh2"))).cast(LongType))
-
-  def minhashNeardup(spark: SparkSession, dir: String): DataFrame = {
-    val docs = cachedDocShingles(spark, dir)
-    val cand = minhashCandidates(cachedCorpusBands(spark, dir))
-    val jac = col("c").cast(DoubleType) /
-      (col("n1") + col("n2") - col("c")).cast(DoubleType)
-    verifiedIntersections(docs, cand, "d1", "d2")
-      .filter(jac >= 0.5)
-      .select(col("d1"), col("d2"), round(jac, 6).as("jaccard"))
   }
+
+  /** The batch side of the near-dup decision: the doc_ids of `batch`
+    * that no collision in `cand` ((dn, dc), from [[collisions]])
+    * verifies as a near-dup, with batch shingles from `batchSh` and
+    * index shingles from `indexSh`. Batch docs too short to shingle have
+    * no bands, hence no collisions, and are accepted. */
+  private[graft] def acceptedBatch(batch: DataFrame, cand: DataFrame,
+                                   batchSh: DataFrame, indexSh: DataFrame): DataFrame = {
+    val matched = verifiedIntersections(cand, batchSh, indexSh)
+      .filter(nearDup)
+      .select(col("dn").as("doc_id")).distinct()
+    batch.select("doc_id").join(matched, Seq("doc_id"), "left_anti")
+  }
+
+  /** The scoring body of the pair queries: `cand` (d1, d2) verified
+    * against the corpus shingles, kept where `measure` reaches
+    * `threshold`, and projected as (d1, d2, `name` rounded to 6 dp). */
+  private def scoredPairs(spark: SparkSession, dir: String, cand: DataFrame,
+                          measure: Column, threshold: Double, name: String): DataFrame = {
+    val docs = cachedDocShingles(spark, dir)
+    verifiedIntersections(cand, docs, docs)
+      .filter(measure >= threshold)
+      .select(col("d1"), col("d2"), round(measure, 6).as(name))
+  }
+
+  /** LSH banding: 8 bands × 4 rows; band signature joins docs sharing
+    * any band; candidates verified by the [[nearDup]] rule. Output
+    * matches `ngram_jaccard` whenever LSH recall is total (it is for
+    * the ~0.98-Jaccard injected dups: miss prob (1-j⁴)⁸ ≈ 1e-9).
+    *
+    * Uses the session-scoped [[cachedDocShingles]]: the frame feeds the
+    * signature pipeline once and the verify join twice, and without the
+    * persist the parquet scan + shingling re-ran for each (measured at
+    * 3× on the driver bench). */
+  def minhashNeardup(spark: SparkSession, dir: String): DataFrame =
+    scoredPairs(spark, dir, minhashCandidates(cachedCorpusBands(spark, dir)),
+      jaccard, NearDupJaccard, "jaccard")
 
   /** Containment threshold for [[shingleContainment]]. */
   val ContainmentThreshold = 0.8
+
+  /** |A∩B| / min(|A|,|B|) of a verified pair. */
+  private def containment: Column =
+    col("c").cast(DoubleType) / least(col("n1"), col("n2")).cast(DoubleType)
 
   /** Asymmetric containment near-dup: for each banded candidate pair,
     * containment = |A∩B| / min(|A|,|B|) — the measure that catches a
@@ -684,25 +749,18 @@ object Dedup {
     * different-sized containment (a tweet inside a book) needs
     * partial-signature banding — at 100 TB you band the contained
     * side's signature only, an index-build variant of this same plan. */
-  def shingleContainment(spark: SparkSession, dir: String): DataFrame = {
-    val docs = cachedDocShingles(spark, dir)
-    val cand = minhashCandidates(cachedCorpusBands(spark, dir))
-    val cont = col("c").cast(DoubleType) /
-      least(col("n1"), col("n2")).cast(DoubleType)
-    verifiedIntersections(docs, cand, "d1", "d2")
-      .filter(cont >= ContainmentThreshold)
-      .select(col("d1"), col("d2"), round(cont, 6).as("containment"))
-  }
+  def shingleContainment(spark: SparkSession, dir: String): DataFrame =
+    scoredPairs(spark, dir, minhashCandidates(cachedCorpusBands(spark, dir)),
+      containment, ContainmentThreshold, "containment")
 
   /** Incremental near-dup — the steady-state daily shape (the MinHash
     * twin of [[dedupIncremental]]'s exact form): odd doc_ids play the
     * incoming batch, even ids the standing corpus. Band signatures are
     * computed ONCE over both sides (in production the corpus side's
     * bands are a standing index read from storage, not recomputed);
-    * candidates are batch-band ⋈ corpus-band bucket matches; a new doc
-    * is accepted iff NO candidate verifies at Jaccard ≥ 0.5. Batch
-    * docs too short to shingle have no bands, hence no candidates, and
-    * are accepted — same as the oracle.
+    * candidates are the batch's [[collisions]] with the corpus, and a
+    * new doc is accepted iff none of them is a [[nearDup]]
+    * ([[acceptedBatch]]) — same as the oracle.
     *
     * Scale shape: the join keys are (band, sig) constant-width
     * strings; the verify joins are merge-pinned like every candidate
@@ -715,23 +773,10 @@ object Dedup {
     // minhashSignaturesOf can't push through the typed mapPartitions,
     // so each join side would re-run the 32-hash kernel over the WHOLE
     // corpus and discard half
-    val batch = bandsOf(minhashSignaturesOf(spark,
-        docs.filter(col("doc_id") % 2 === 1)))
-      .select(col("doc_id").as("dn"), col("band"), col("sig"))
-    val corpus = bandsOf(minhashSignaturesOf(spark,
-        docs.filter(col("doc_id") % 2 === 0)))
-      .select(col("doc_id").as("dc"), col("band"), col("sig"))
-    val cand = batch.join(corpus, Seq("band", "sig"))
-      .select("dn", "dc").distinct()
-    val jac = col("c").cast(DoubleType) /
-      (col("n1") + col("n2") - col("c")).cast(DoubleType)
-    val matched = verifiedIntersections(docs, cand, "dn", "dc")
-      .filter(jac >= 0.5)
-      .select(col("dn").as("doc_id")).distinct()
-    Tables.load(spark, dir, "documents")
-      .filter(col("doc_id") % 2 === 1)
-      .select("doc_id")
-      .join(matched, Seq("doc_id"), "left_anti")
+    def bands(parity: Int) =
+      bandsOf(minhashSignaturesOf(spark, docs.filter(col("doc_id") % 2 === parity)))
+    acceptedBatch(Tables.load(spark, dir, "documents").filter(col("doc_id") % 2 === 1),
+      collisions(bands(1), bands(0)), docs, docs)
   }
 
   // ---- near-dup cluster resolution (pairs -> components -> survivors) ----
@@ -903,7 +948,7 @@ object Dedup {
   /** MinHash banding RECALL certification — the quality number the
     * whole text near-dup family rides on, put under the oracle: for a
     * bounded probe sample, compare the docs whose
-    * exact word-3gram Jaccard with the probe is ≥ 0.5 (the TRUTH, from
+    * exact word-3gram Jaccard with the probe passes [[nearDup]] (the TRUTH, from
     * the same shingle algebra as [[ngramJaccard]], restricted to the
     * probe sample) against the PRODUCTION candidate generation — shared
     * (band, sig) buckets under the [[MaxBucket]] cap, exactly what
@@ -934,8 +979,6 @@ object Dedup {
     val ex = docs.select(col("doc_id"), explode(col("sh")).as("s"))
     val exP = ex.filter(isProbe(col("doc_id")))
       .select(col("doc_id").as("p"), col("s"))
-    val jac = col("c").cast(DoubleType) /
-      (col("n1") + col("n2") - col("c")).cast(DoubleType)
     // the probe sides are ≈RecallProbes docs' rows — broadcast them
     // EXPLICITLY: without the hint the optimizer's post-filter size
     // estimate decides, and a wrong estimate shuffles the corpus-scale
@@ -952,7 +995,7 @@ object Dedup {
     val truePairs = broadcast(broadcast(inter)
         .join(sizes.select(col("doc_id").as("p"), col("n").as("n1")), Seq("p")))
       .join(sizes.select(col("doc_id").as("d"), col("n").as("n2")), Seq("d"))
-      .filter(jac >= 0.5)
+      .filter(nearDup)
       .select("p", "d")
 
     // production candidates, probe-filtered: same bands, same bucket
@@ -1013,59 +1056,36 @@ object Dedup {
   def sliceProbe(spark: SparkSession, dir: String): Column =
     col("doc_id") % recallEvery(docCount(spark, dir)) <= 1
 
-  /** [[minhashCandidates]] restricted to pairs with a [[sliceProbe]]
-    * endpoint — the same grouped-bucket pair expansion under the same
-    * global [[MaxBucket]] occupancy (probe-hit buckets are kept WHOLE
-    * by the semi-join, so each kept bucket's size equals the full
-    * census and the cap decision is the full query's; a pair touching
-    * a probe shares a bucket CONTAINING that probe, so probe-hit
-    * buckets see every such pair). Plan shape is [[minhashRecall]]'s:
-    * the corpus banding pass streams against a broadcast probe-bucket
-    * list, nothing corpus-sized shuffles, output bounded by
-    * probes · bands · cap. */
+  /** [[minhashCandidates]] over the probe-hit buckets, restricted to
+    * pairs with a [[sliceProbe]] endpoint — the same grouped-bucket pair
+    * expansion under the same global [[MaxBucket]] occupancy (probe-hit
+    * buckets are kept WHOLE by the semi-join, so each kept bucket's
+    * size equals the full census and the cap decision is the full
+    * query's; a pair touching a probe shares a bucket CONTAINING that
+    * probe, so probe-hit buckets see every such pair). Plan shape is
+    * [[minhashRecall]]'s: the corpus banding pass streams against a
+    * broadcast probe-bucket list, nothing corpus-sized shuffles, output
+    * bounded by probes · bands · cap. */
   private def slicedCandidates(spark: SparkSession, dir: String): DataFrame = {
     val every = recallEvery(docCount(spark, dir))
+    val isProbe = (c: Column) => c % every <= 1
     val bands = cachedCorpusBands(spark, dir)
-    val bandsP = bands.filter(col("doc_id") % every <= 1)
-    val bucketRows = bands.join(
-      broadcast(bandsP.select("band", "sig").distinct()),
-      Seq("band", "sig"), "left_semi")
-    val pairsUdf = udf { ids: Seq[Long] =>
-      val s = ids.sorted
-      for (i <- s.indices; j <- i + 1 until s.length
-           if s(i) % every <= 1 || s(j) % every <= 1) yield (s(i), s(j))
-    }
-    bucketRows.groupBy("band", "sig")
-      .agg(collect_list("doc_id").as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= MaxBucket)
-      .select(explode(pairsUdf(col("ids"))).as("p"))
-      .select(col("p._1").as("d1"), col("p._2").as("d2"))
-      .distinct()
+    val probeBuckets = bands.filter(isProbe(col("doc_id"))).select("band", "sig").distinct()
+    minhashCandidates(bands.join(broadcast(probeBuckets), Seq("band", "sig"), "left_semi"))
+      .filter(isProbe(col("d1")) || isProbe(col("d2")))
   }
 
   /** [[minhashNeardup]]'s probe slice: identical rows for every pair
     * touching a probe, certifiable by a linear oracle at any SF. */
-  def minhashNeardupSlice(spark: SparkSession, dir: String): DataFrame = {
-    val docs = cachedDocShingles(spark, dir)
-    val cand = slicedCandidates(spark, dir)
-    val jac = col("c").cast(DoubleType) /
-      (col("n1") + col("n2") - col("c")).cast(DoubleType)
-    verifiedIntersections(docs, cand, "d1", "d2")
-      .filter(jac >= 0.5)
-      .select(col("d1"), col("d2"), round(jac, 6).as("jaccard"))
-  }
+  def minhashNeardupSlice(spark: SparkSession, dir: String): DataFrame =
+    scoredPairs(spark, dir, slicedCandidates(spark, dir),
+      jaccard, NearDupJaccard, "jaccard")
 
   /** [[shingleContainment]]'s probe slice — same candidates, the
     * containment acceptance. */
-  def shingleContainmentSlice(spark: SparkSession, dir: String): DataFrame = {
-    val docs = cachedDocShingles(spark, dir)
-    val cand = slicedCandidates(spark, dir)
-    val cont = col("c").cast(DoubleType) /
-      least(col("n1"), col("n2")).cast(DoubleType)
-    verifiedIntersections(docs, cand, "d1", "d2")
-      .filter(cont >= ContainmentThreshold)
-      .select(col("d1"), col("d2"), round(cont, 6).as("containment"))
-  }
+  def shingleContainmentSlice(spark: SparkSession, dir: String): DataFrame =
+    scoredPairs(spark, dir, slicedCandidates(spark, dir),
+      containment, ContainmentThreshold, "containment")
 
   /** Probe-seeded component closure over a banded candidate frame —
     * the engine twin of the cluster-slice oracle's frontier unroll: BFS
@@ -1155,8 +1175,6 @@ object Dedup {
         val pPairs = r.checkpoint(partners
           .join(broadcast(frontier.select(col("p"), col("d").as("d1"))), Seq("d1"))
           .join(r.state.select(col("p"), col("d").as("d2")), Seq("p", "d2"), "left_anti"))
-        val jac = col("c").cast(DoubleType) /
-          (col("n1") + col("n2") - col("c")).cast(DoubleType)
         // Probe-bounded verify: the round's candidate set is
         // ≤ frontier·bands·[[MaxBucket]] pairs by design (the slice
         // family's contract), so unlike the corpus-bound verifies this
@@ -1170,8 +1188,8 @@ object Dedup {
           .union(cands.select(col("d2").as("doc_id"))).distinct()
         val vdocs = r.checkpoint(
           docs.join(broadcast(candIds), Seq("doc_id"), "left_semi"))
-        val verified = verifiedIntersections(vdocs, cands, "d1", "d2")
-          .filter(jac >= 0.5).select("d1", "d2")
+        val verified = verifiedIntersections(cands, vdocs, vdocs)
+          .filter(nearDup).select("d1", "d2")
         val fresh = pPairs.join(verified, Seq("d1", "d2"), "left_semi")
           .select(col("p"), col("d2").as("d"), lit(r.index).as("round")).distinct()
         (r.state.unionByName(fresh), max(col("round") === r.index))

@@ -3,7 +3,7 @@ package graft.streaming
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{classic, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -57,10 +57,10 @@ object IngestDedup {
   /** One ingest step: batch docs (doc_id, text) against the current
     * index bands, with `knownDocs` (the accepted corpus store)
     * providing text for candidate verification. Returns accepted
-    * doc_ids. A doc is accepted iff NO index collision verifies at
-    * exact Jaccard ≥ 0.5 — the same acceptance rule as
-    * `minhash_incremental`. Only corpus docs that COLLIDE get
-    * shingled for verify. */
+    * doc_ids. A doc is accepted iff none of its index collisions is a
+    * near-dup ([[Dedup.acceptedBatch]]) — the same acceptance rule as
+    * `minhash_incremental`. Only corpus docs that COLLIDE get shingled
+    * for verify. */
   def dedupStep(spark: SparkSession, batchDocs: DataFrame,
                 indexBands: DataFrame, knownDocs: DataFrame): DataFrame =
     dedupStepWith(spark, batchDocs, indexBands, knownDocs,
@@ -70,34 +70,25 @@ object IngestDedup {
     * above shingles its frames directly; the batch FOLD's frames are
     * all subsets of the corpus, so it passes a semi-join against the
     * session-memoized corpus shingle frame instead, which saves the
-    * shingle kernel about four passes per step (batch bands, the verify
-    * union, the candidate-corpus side, the index update). The rows are
-    * identical either way: the kernel is the same `Dedup.shingleSet`. */
+    * shingle kernel about four passes per step (batch bands, the batch
+    * verify side, the candidate-corpus side, the index update). The rows
+    * are identical either way: the kernel is the same `Dedup.shingleSet`.
+    *
+    * The batch's [[Dedup.collisions]] with the index pick the stored
+    * docs to shingle, and the verify takes the batch shingles as its
+    * batch side and those stored shingles as its index side. So a doc_id
+    * that is both in the batch and stored has its batch copy verified
+    * against the stored copies only, never against itself. */
   private[graft] def dedupStepWith(spark: SparkSession, batchDocs: DataFrame,
                 indexBands: DataFrame, knownDocs: DataFrame,
                 shingler: DataFrame => DataFrame): DataFrame = {
     val batchSh = shingler(batchDocs)
-    val batchBands = Dedup.bandsOf(Dedup.minhashSignaturesOf(spark, batchSh))
-      .select(col("doc_id").as("dn"), col("band"), col("sig"))
-    // the verify keys each side by (side, doc_id): a doc_id that is both
-    // in the batch and stored has its batch copy verified against the
-    // stored copies only, never a stored copy against itself
-    def keyed(side: Int, id: Column): Column = struct(lit(side).as("side"), id.as("id"))
-    val cand = batchBands
-      .join(indexBands.select(col("doc_id").as("dc"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .select(keyed(0, col("dn")).as("dn"), keyed(1, col("dc")).as("dc")).distinct()
+    val cand = Dedup.collisions(
+      Dedup.bandsOf(Dedup.minhashSignaturesOf(spark, batchSh)), indexBands)
     val candCorpusSh = shingler(
-      knownDocs.join(cand.select(col("dc.id").as("doc_id")).distinct(),
+      knownDocs.join(cand.select(col("dc").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi"))
-    val allSh = batchSh.withColumn("doc_id", keyed(0, col("doc_id")))
-      .unionByName(candCorpusSh.withColumn("doc_id", keyed(1, col("doc_id"))))
-    val jac = col("c").cast("double") /
-      (col("n1") + col("n2") - col("c")).cast("double")
-    val matched = Dedup.verifiedIntersections(allSh, cand, "dn", "dc")
-      .filter(jac >= 0.5)
-      .select(col("dn.id").as("doc_id")).distinct()
-    batchDocs.select("doc_id").join(matched, Seq("doc_id"), "left_anti")
+    Dedup.acceptedBatch(batchDocs, cand, batchSh, candCorpusSh)
   }
 
   /** (doc_id, sh) via the shared typed shingle kernel, over an
@@ -154,9 +145,9 @@ object IngestDedup {
     * `doc_id IN (…)` filter (skipped when nothing collides), and verifies
     * exact Jaccard on the driver. The acceptance rule is [[dedupStep]]'s:
     * a doc is rejected iff it shares a band bucket with an index doc
-    * whose stored text is at exact Jaccard ≥ 0.5. A batch copy is
-    * verified against the stored copies only, so a re-sent doc_id is
-    * rejected iff its new text is a near-dup of a stored copy.
+    * whose stored text is a near-dup of it by [[Dedup.isNearDup]]. A
+    * batch copy is verified against the stored copies only, so a re-sent
+    * doc_id is rejected iff its new text is a near-dup of a stored copy.
     *
     * The stores are read before this batch's partitions are written,
     * with fixed schemas (no inference job) and the `batch < id` guard,
@@ -185,9 +176,8 @@ object IngestDedup {
         .select("doc_id", "text").as[(Long, String)].collect()
         .groupMap(_._1)(r => Dedup.shingleSet(r._2).toSet)
     val copies = sh.groupMap(_._1)(_._2)
-    def near(a: Array[String], b: Set[String]) = { val c = a.count(b); c.toDouble / (a.length + b.size - c) >= 0.5 }
     val dups = cand.collect { case (dn, dc)
-      if copies(dn).exists(a => stored.getOrElse(dc, Array.empty).exists(near(a, _))) => dn }.toSet
+      if copies(dn).exists(a => stored.getOrElse(dc, Array.empty).exists(Dedup.isNearDup(a, _))) => dn }.toSet
     val bands = for ((d, ks) <- keys if !dups(d); (b, s) <- ks) yield (d, b, s)
     concurrently(spark)(
       rows.filterNot(r => dups(r._1)).toSeq.toDF("doc_id", "text").coalesce(1)
