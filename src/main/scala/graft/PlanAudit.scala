@@ -20,41 +20,40 @@ object PlanAudit {
     // size-dependent) — override via SPARK_GRAFT_SF_DIR
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq else Seq(
-      "filter_project", "join_orders_customers", "wordcount_total",
-      "group_agg_sum", "anti_join_no_big_orders", "minhash_neardup",
-      "similar_topk", "topk_per_group", "embedding_neardup",
-      "similar_ann_ivf", "sessionize_events", "tfidf_top_terms",
-      "ngram_counts", "outer_join_order_counts",
-      // round 3
-      "neardup_clusters", "training_set_select_neardup",
-      "similar_ann_multiprobe", "intersect_except_keys",
-      "eval_decontamination", "skew_salted_sum", "fuzzy_match_prefix",
-      // round 4
-      "sql_exists_not_in", "sql_local_supplier_volume",
-      "bucketed_join_rollup", "substring_dup_stats", "locf_gap_fill",
-      // round 5
-      "substring_dup_stats_hashed", "sql_shipping_priority",
-      "sql_large_volume_customer", "sql_promo_effect",
-      "csv_roundtrip_agg", "json_roundtrip_agg", "partition_prune_agg", "sequence_packing",
-      "quality_decile_bins", "bpe_pair_counts", "merge_upsert_orders",
-      "eval_decontamination_bloom",
-      // round 7
-      "sql_waiting_orders", "skew_salted_join",
-      "inverted_index", "cooccurrence_pmi",
+      // relational and SQL
+      "filter_project", "join_orders_customers", "group_agg_sum",
+      "anti_join_no_big_orders", "topk_per_group", "outer_join_order_counts",
+      "intersect_except_keys", "skew_salted_sum", "skew_salted_join",
+      "sql_exists_not_in", "sql_local_supplier_volume", "sql_shipping_priority",
+      "sql_large_volume_customer", "sql_promo_effect", "sql_waiting_orders",
       "sql_min_cost_supplier", "sql_potential_promotion",
+      "bucketed_join_rollup", "locf_gap_fill", "sessionize_events",
+      "partition_prune_agg", "merge_upsert_orders",
+      "snapshot_read_asof", "snapshot_expire",
+      // the injected top-k strategies
       "topk_per_key_exec", "topk_window_auto",
-      // round 11
-      "minhash_recall", "snapshot_read_asof",
-      "knn_graph_lsh", "similar_ann_ivfpq",
-      "knn_graph_recall", "snapshot_expire",
-      // round 13: the pair-bound slice twins (the probe-restricted
-      // plans must stay broadcast-shaped like minhash_recall's) and
-      // the index-retention verb
-      "minhash_neardup_slice", "neardup_clusters_slice",
-      "knn_graph_lsh_slice", "ingest_dedup_fold_slice",
-      "index_compact_slice", "index_expire",
-      // round 14: the forced two-level quantizer census
-      "hier_cluster_balance")
+      // file sources
+      "csv_roundtrip_agg", "json_roundtrip_agg",
+      // text and corpus
+      "wordcount_total", "tfidf_top_terms", "ngram_counts",
+      "substring_dup_stats", "substring_dup_stats_hashed", "sequence_packing",
+      "quality_decile_bins", "bpe_pair_counts", "inverted_index",
+      "cooccurrence_pmi", "fuzzy_match_prefix",
+      "eval_decontamination", "eval_decontamination_bloom",
+      // near-dup and the index store (the slice twins must stay
+      // broadcast-shaped like minhash_recall's)
+      "minhash_neardup", "minhash_recall", "neardup_clusters",
+      "training_set_select_neardup", "minhash_neardup_slice",
+      "neardup_clusters_slice", "ingest_dedup_fold_slice",
+      "index_compact_slice", "index_expire", "embedding_neardup",
+      // ANN search and vector quantizers: every query of the family
+      "similar_topk", "similar_ann_lsh", "similar_ann_multiprobe",
+      "similar_ann_ivf", "similar_ann_ivfpq", "ann_recall", "mmr_diversify",
+      "embedding_neardup_lsh", "knn_graph_lsh", "knn_graph_lsh_slice",
+      "knn_graph_recall", "knn_bucket_audit", "semdedup_prune",
+      "embedding_cluster_balance", "hier_cluster_balance",
+      "embedding_drift_psi", "embedding_pq_codes",
+      "embedding_pq_codes_indexed", "embedding_quantize")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, dir).explain("formatted")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.{Fixpoint, SessionCaches, Tables}
 import graft.operators.ConnectedComponents
+import graft.similarity.Similarity
 
 /** Deduplication operators for a training-data pipeline, smallest to
   * largest reach: exact (hash group-by), SimHash (per-doc signature),
@@ -881,11 +882,12 @@ object Dedup {
     * when exact all-pairs is off the table entirely. */
   val GridBlocks = 8
 
-  /** All pairs with cosine >= 0.35 over the 64-dim embeddings —
-    * the exact O(n²) baseline the ANN path approximates, executed as a
-    * grid-blocked pair product (see [[GridBlocks]]): one shuffle of
-    * B-replicated vectors into cells, then a tight JVM dot-product loop
-    * per cell. The expression-tree formulation (self-join +
+  /** All pairs with cosine >= [[Similarity.NeardupCosine]] over the
+    * 64-dim embeddings — the exact O(n²) baseline the ANN path
+    * approximates, executed as a grid-blocked pair product (see
+    * [[GridBlocks]]): one shuffle of B-replicated vectors into cells,
+    * then a tight JVM dot-product loop ([[Similarity.dotA]]) per cell.
+    * The expression-tree formulation (self-join +
     * zip_with/aggregate lambdas per pair) measured 22 s at sf0.1; this
     * shape is sub-second and cluster-safe. Arithmetic matches the
     * oracle bit-for-bit: left-to-right double dot folds (index-order
@@ -896,11 +898,6 @@ object Dedup {
     val vecs = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .as[(Long, Array[Double])]
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
     val cells = for (i <- 0 until B; j <- i until B) yield (i, j)
     vecs.flatMap { case (id, v) =>
       val b = (id % B).toInt
@@ -909,11 +906,11 @@ object Dedup {
         .map { case (i, j) => (i * B + j, id, v) }
     }.groupByKey(_._1).flatMapGroups { (cell, it) =>
       val i = cell / B; val j = cell % B
-      val items = it.map { case (_, id, v) => (id, v, math.sqrt(dot(v, v))) }
+      val items = it.map { case (_, id, v) => (id, v, math.sqrt(Similarity.dotA(v, v))) }
         .toArray.sortBy(_._1)
       def emit(a: (Long, Array[Double], Double), b: (Long, Array[Double], Double)) = {
         val (lo, hi) = if (a._1 < b._1) (a, b) else (b, a)
-        (lo._1, hi._1, dot(lo._2, hi._2) / (lo._3 * hi._3))
+        (lo._1, hi._1, Similarity.dotA(lo._2, hi._2) / (lo._3 * hi._3))
       }
       val pairs =
         if (i == j)
@@ -925,7 +922,7 @@ object Dedup {
           for (a <- bi.iterator; b <- bj)
             yield emit(a, b)
         }
-      pairs.filter(_._3 >= 0.35)
+      pairs.filter(_._3 >= Similarity.NeardupCosine)
     }.toDF("id1", "id2", "sim")
       .select(col("id1"), col("id2"), round(col("sim"), 6).as("sim"))
   }

@@ -3,7 +3,8 @@ package graft.similarity
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -11,18 +12,26 @@ import graft.{SessionCaches, Tables}
 
 /** Approximate-nearest-neighbor search over the embedding column.
   *
-  * Two paths:
-  *  - `similar_topk`: brute-force cosine top-k — the exactness baseline.
-  *    The probe set is tiny and broadcast; candidates stream through one
-  *    narrow pass; per-probe top-k runs through a bounded
+  * Every probe search has three steps: pick each probe's candidates,
+  * score them by cosine, keep each probe's top k. Only the first step
+  * differs between methods; the other two are one helper each:
+  *  - [[probeSide]] and [[cosine]]: the broadcast probe frame and the
+  *    one cosine column every search scores with;
+  *  - [[topPerProbe]]: the one per-probe heap, a bounded
   *    [[graft.operators.BoundedTopK]] Aggregator with map-side partial
-  *    merge, so the shuffle
-  *    carries k rows per (partition, probe), never the full candidate
-  *    score list. That shape survives a 100 TB candidate table.
-  *  - `similar_ann_lsh`: random-hyperplane sign-LSH (16 bits). Bucket
-  *    ids are computed in one narrow pass; probes search only their own
-  *    bucket, turning the quadratic scan into a per-bucket join keyed on
-  *    a 16-bit value.
+  *    merge, so the shuffle carries k rows per (partition, probe),
+  *    never the full candidate score list.
+  *
+  * Candidate generation per method:
+  *  - `similar_topk`: every vector (the exactness baseline);
+  *  - `similar_ann_lsh`: the probe's random-hyperplane sign-LSH bucket
+  *    ([[signBands]], 6 bits), a per-bucket equi-join instead of the
+  *    quadratic scan;
+  *  - `similar_ann_multiprobe`: that bucket and its Hamming-1
+  *    neighbors;
+  *  - `similar_ann_ivf` / `similar_ann_ivfpq`: the members of the
+  *    probe's [[IvfProbeCells]] best coarse cells ([[ivfProbeCells]]),
+  *    reranked exactly ([[rerank]]), IVF-PQ after an ADC shortlist.
   *
   * Determinism: cosine is dot/(√Σa²·√Σb²) with left-to-right double
   * folds (same arithmetic as the DuckDB oracle's list_dot_product);
@@ -41,6 +50,13 @@ object Similarity {
   val LshBits = 6
   val Dim = 64
 
+  /** The cosine at or above which two embeddings are near-duplicates:
+    * the one rule of `embedding_neardup`, `embedding_neardup_lsh` and
+    * `semdedup_prune` (the synthetic embeddings are near-orthogonal
+    * outside their cluster structure; real text embeddings would sit
+    * near 0.95). */
+  val NeardupCosine = 0.35
+
   /** dot(a, b) as a left-to-right double fold — the native codegen'd
     * [[graft.functions.DotProductExpr]], not zip_with/aggregate lambdas
     * (Catalyst evaluates higher-order functions interpreted, ~10×
@@ -54,38 +70,99 @@ object Similarity {
   def norm(v: Column): Column = sqrt(dot(v, v))
 
   /** Hyperplane entry r(j, d) ∈ {−1, +1}: parity of the 60-bit md5
-    * prefix of "j_d" — reproduced verbatim by the SQL oracle. */
+    * prefix of "j_d" — reproduced verbatim by the SQL oracle. The
+    * prefix is the first 15 hex digits, so its parity is bit 4 of the
+    * digest's byte 7. */
   def planeEntry(j: Int, d: Int): Double = {
-    val hex = MessageDigest.getInstance("MD5")
+    val md5 = MessageDigest.getInstance("MD5")
       .digest(s"${j}_$d".getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    if (java.lang.Long.parseLong(hex.substring(0, 15), 16) % 2 == 0) 1.0 else -1.0
+    if ((md5(7) & 0x10) == 0) 1.0 else -1.0
   }
 
-  private lazy val planesArr: Array[Array[Double]] =
-    Array.tabulate(LshBits, Dim)(planeEntry)
+  /** Hyperplanes of a `bands` × `bits` sign-LSH family: plane (k, j)
+    * is [[planeEntry]](k·bits + j) — the global indexing the oracle
+    * derives, so every bit width re-derives a consistent family. */
+  private def planeTable(bands: Int, bits: Int): Array[Array[Array[Double]]] =
+    Array.tabulate(bands, bits, Dim)((k, j, d) => planeEntry(k * bits + j, d))
 
-  lazy val planes: Seq[Seq[Double]] = planesArr.map(_.toSeq).toSeq
+  /** The ANN hyperplanes, planes 0 to [[LshBits]] − 1: band 0 of the
+    * (1, [[LshBits]]) family. */
+  lazy val planes: Seq[Seq[Double]] = planeTable(1, LshBits)(0).map(_.toSeq).toSeq
 
-  /** Sign-LSH bucket of a (64-dim double) vector column: bit j set iff
-    * dot(v, plane_j) > 0. One `v.toArray` copy per row, then the same
-    * [[dotA]] kernel every dot product in this module uses (ONE
-    * sequential-fold implementation to keep in IEEE lockstep with the
-    * oracles, review round 3). */
-  val lshBucket: UserDefinedFunction = udf { (v: Seq[Double]) =>
-    val a = v.toArray
-    var b = 0L; var j = 0
-    while (j < LshBits) {
-      if (dotA(a, planesArr(j)) > 0) b |= 1L << j
-      j += 1
+  /** The one sign-LSH kernel: every band's bucket of a (64-dim double)
+    * vector column, bit j of band k set iff dot(v, plane(k, j)) > 0.
+    * The plane table is built on the driver and rides in the closure;
+    * each row pays one `v.toArray` copy and the [[dotA]] fold every
+    * dot product in this module uses. */
+  def signBands(bands: Int, bits: Int): UserDefinedFunction = {
+    val ps = planeTable(bands, bits)
+    udf { (v: Seq[Double]) =>
+      val a = v.toArray
+      Array.tabulate(bands) { k =>
+        var b = 0L; var j = 0
+        while (j < bits) { if (dotA(a, ps(k)(j)) > 0) b |= 1L << j; j += 1 }
+        b
+      }
     }
-    b
   }
+
+  /** The ANN bucket of `similar_ann_lsh` and `similar_ann_multiprobe`:
+    * band 0 of the (1, [[LshBits]]) family. The element always exists,
+    * so it is marked not-null: a bucket join would otherwise infer an
+    * `isnotnull` filter that hashes every vector a second time. */
+  private[graft] def lshBucket(v: Column): Column = GraftSqlBridge.column(KnownNotNull(
+    GraftSqlBridge.expression(signBands(1, LshBits)(v).getItem(0))))
+
+  /** `vecs` with one row per (vector, band): its [[NeardupBands]]
+    * `bits`-wide buckets as (band, bucket). */
+  private[graft] def banded(vecs: DataFrame, bits: Int): DataFrame =
+    vecs.select(col("*"),
+      posexplode(signBands(NeardupBands, bits)(col("v"))).as(Seq("band", "bucket")))
 
   /** Neighbor ranking order: sim desc, vec_id asc tie-break — shared by
     * every top-k aggregation in this module. */
   val neighborBetter: (Neighbor, Neighbor) => Boolean =
     (a, b) => a.sim > b.sim || (a.sim == b.sim && a.id < b.id)
+
+  /** The one per-probe heap: each probe's best `k` of `scored`
+    * (probe_id, neighbor_id, sim) rows under [[neighborBetter]], as
+    * (probe_id, rank, neighbor_id, sim) with rank 0 the best. */
+  private def topPerProbe(scored: DataFrame, k: Int): DataFrame = {
+    import scored.sparkSession.implicits._
+    val top = new graft.operators.BoundedTopK[Neighbor](k, neighborBetter).toColumn
+    scored.as[Scored]
+      .groupByKey(_.probe_id)
+      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
+      .agg(top.name("top"))
+      .toDF("probe_id", "top")
+      .select(col("probe_id"), posexplode(col("top")).as(Seq("rank", "n")))
+      .select(col("probe_id"), col("rank"), col("n.id").as("neighbor_id"),
+        col("n.sim").as("sim"))
+  }
+
+  /** A search's answer: each probe's top [[K]], sims rounded to 6
+    * places. */
+  private def topK(scored: DataFrame): DataFrame =
+    topPerProbe(scored, K)
+      .select(col("probe_id"), col("neighbor_id"), round(col("sim"), 6).as("sim"))
+
+  /** The probe frame: (probe_id, pv, pnrm) of the [[NumProbes]] probe
+    * vectors of a (vec_id, v, nrm) frame, plus `extra` columns. */
+  private def probeSide(vecs: DataFrame, extra: Column*): DataFrame =
+    vecs.filter(col("vec_id") < NumProbes)
+      .select(Seq(col("vec_id").as("probe_id"), col("v").as("pv"),
+        col("nrm").as("pnrm")) ++ extra: _*)
+
+  /** The one cosine column: probe (pv, pnrm) against candidate (v, nrm). */
+  private def cosine: Column = dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))
+
+  /** The probe search's candidates and scores: every vector of `vecs`
+    * where `on` holds against the broadcast `probes`, the probe itself
+    * excluded, as (probe_id, neighbor_id, [[cosine]] sim). The big side
+    * streams through one narrow pass and never shuffles. */
+  private def probeScores(vecs: DataFrame, probes: DataFrame, on: Column): DataFrame =
+    vecs.join(broadcast(probes), on && col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"), cosine.as("sim"))
 
   /** Session-memoized (vec_id, v, nrm) frame — the parquet scan, the
     * double-cast, and the norm computed once per (session, corpus)
@@ -107,48 +184,18 @@ object Similarity {
       rawVectors(spark, dir).withColumn("nrm", norm(col("v")))
     }
 
-  /** Exact top-k: broadcast the probes, one pass over candidates, heap
-    * aggregate per probe. */
+  /** Exact top-k: every vector is a candidate. */
   def similarTopk(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val vecs = vectors(spark, dir)
-    val probes = vecs.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pnrm"))
-    val sim = dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))
-    val scored = vecs.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), sim.as("sim"))
-    val topk = new graft.operators.BoundedTopK[Neighbor](K, neighborBetter).toColumn
-    scored.as[Scored]
-      .groupByKey(_.probe_id)
-      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
-      .agg(topk.name("top"))
-      .toDF("probe_id", "top")
-      .select(col("probe_id"), explode(col("top")).as("n"))
-      .select(col("probe_id"), col("n.id").as("neighbor_id"),
-        round(col("n.sim"), 6).as("sim"))
+    topK(probeScores(vecs, probeSide(vecs), lit(true)))
   }
 
-  /** ANN: candidates restricted to the probe's LSH bucket, then the
-    * same top-k heap. The bucket join replaces the all-pairs scan. */
+  /** ANN: candidates restricted to the probe's LSH bucket. The bucket
+    * join replaces the all-pairs scan. */
   def similarAnnLsh(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val vecs = vectors(spark, dir).withColumn("bucket", lshBucket(col("v")))
-    val probes = vecs.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("nrm").as("pnrm"), col("bucket").as("pbucket"))
-    val sim = dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))
-    val scored = vecs.join(broadcast(probes),
-        col("bucket") === col("pbucket") && col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), sim.as("sim"))
-    val topk = new graft.operators.BoundedTopK[Neighbor](K, neighborBetter).toColumn
-    scored.as[Scored]
-      .groupByKey(_.probe_id)
-      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
-      .agg(topk.name("top"))
-      .toDF("probe_id", "top")
-      .select(col("probe_id"), explode(col("top")).as("n"))
-      .select(col("probe_id"), col("n.id").as("neighbor_id"),
-        round(col("n.sim"), 6).as("sim"))
+    val probes = probeSide(vecs, col("bucket").as("pbucket"))
+    topK(probeScores(vecs, probes, col("bucket") === col("pbucket")))
   }
 
   /** Multi-probe ANN: each probe searches its own bucket PLUS every
@@ -164,28 +211,13 @@ object Similarity {
     * shuffle, and each (probe, candidate) pair matches at most once
     * (a candidate has one bucket; the probed set is distinct). */
   def similarAnnMultiprobe(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val vecs = vectors(spark, dir).withColumn("bucket", lshBucket(col("v")))
     val neighborBuckets = (0 until LshBits)
       .map(j => col("pbucket").bitwiseXOR(lit(1L << j)))
-    val probes = vecs.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"),
-        col("nrm").as("pnrm"), col("bucket").as("pbucket"))
+    val probes = probeSide(vecs, col("bucket").as("pbucket"))
       .withColumn("target",
         explode(array(col("pbucket") +: neighborBuckets: _*)))
-    val sim = dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))
-    val scored = vecs.join(broadcast(probes),
-        col("bucket") === col("target") && col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), sim.as("sim"))
-    val topk = new graft.operators.BoundedTopK[Neighbor](K, neighborBetter).toColumn
-    scored.as[Scored]
-      .groupByKey(_.probe_id)
-      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
-      .agg(topk.name("top"))
-      .toDF("probe_id", "top")
-      .select(col("probe_id"), explode(col("top")).as("n"))
-      .select(col("probe_id"), col("n.id").as("neighbor_id"),
-        round(col("n.sim"), 6).as("sim"))
+    topK(probeScores(vecs, probes, col("bucket") === col("target")))
   }
 
   /** [[similarTopk]]'s (probe, neighbor) id pairs, persisted and
@@ -308,7 +340,10 @@ object Similarity {
   private[graft] def IvfIndexParams =
     s"dim=$Dim,cells=$IvfCells,iters=$IvfIters,q=$QuantScale,tpc=$TrainPointsPerCell"
 
-  private def dotA(a: Array[Double], b: Array[Double]): Double = {
+  /** dot(a, b) as a left-to-right double fold over arrays — the
+    * kernel twin of [[dot]], the one fold every driver- and
+    * kernel-side dot product in the engine uses. */
+  private[graft] def dotA(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { s += a(i) * b(i); i += 1 }
     s
@@ -660,31 +695,51 @@ object Similarity {
       (sup.map(_._3.toArray), cells)
     }
 
-  /** IVF-style ANN: assign every vector to its nearest of [[IvfCells]]
-    * centroids (one narrow n×C scoring pass — centroids broadcast, no
-    * driver collect), then each probe searches only its
-    * [[IvfProbeCells]] best cells. The candidate join is
-    * broadcast(probe cells) ⋈ assignments, so the big side never
-    * shuffles; per-probe top-k runs through the same
-    * [[graft.operators.BoundedTopK]] as the exact path. Recall/latency
-    * trades via IvfProbeCells exactly like production IVF indexes. */
-  /** The PROBE-side n_probes×C cosine frame (trained centroids as a
-    * broadcast local-rows dimension table) — tiny (NumProbes·C rows),
-    * recomputed per caller from a pushdown-pruned probe scan. The
-    * Column arithmetic ([[dot]] = the native DotProductExpr) runs the
-    * identical IEEE sequence as the kernel [[dotA]], so probe scores
-    * and [[ivfAssign]]'s kernel scores are bit-equal. */
+  /** The probe side against the trained centroids: (probe_id,
+    * neighbor_id = cid, sim) over NumProbes·C rows, the centroids a
+    * broadcast local-rows frame in [[cosine]]'s candidate columns
+    * (v, nrm). Recomputed per caller from a pushdown-pruned probe scan.
+    * The Column arithmetic ([[dot]] = the native DotProductExpr) runs
+    * the identical IEEE sequence as the kernel [[dotA]], so probe
+    * scores and [[ivfAssign]]'s kernel scores are bit-equal. */
   private def probeSims(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cents = spark.createDataset(
         trainIvfCentroids(spark, dir).zipWithIndex
           .map { case (c, i) => (i.toLong, c) })
-      .toDF("cid", "cv")
-      .withColumn("cnrm", norm(col("cv")))
-    val s = dot(col("v"), col("cv")) / (col("nrm") * col("cnrm"))
-    vectors(spark, dir).filter(col("vec_id") < NumProbes)
+      .toDF("cid", "v")
+      .withColumn("nrm", norm(col("v")))
+    probeSide(vectors(spark, dir))
       .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cid"), s.as("s"))
+      .select(col("probe_id"), col("cid").as("neighbor_id"), cosine.as("sim"))
+  }
+
+  /** The IVF probe-cell election: each probe's [[IvfProbeCells]] best
+    * cells by cosine, (probe_id, cid). */
+  private def ivfProbeCells(spark: SparkSession, dir: String): DataFrame =
+    topPerProbe(probeSims(spark, dir), IvfProbeCells)
+      .select(col("probe_id"), col("neighbor_id").as("cid"))
+
+  /** IVF candidates, (probe_id, vec_id, cid): the members of each
+    * probe's elected `cells`, the probe itself excluded. The join is
+    * broadcast(probe cells) ⋈ assignments, so the big side never
+    * shuffles. */
+  private def ivfCandidates(spark: SparkSession, dir: String,
+                            cells: DataFrame): DataFrame = {
+    val assign = ivfAssign(spark, dir)
+    assign.join(broadcast(cells),
+        assign("cid") === cells("cid") && assign("vec_id") =!= cells("probe_id"))
+      .select(col("probe_id"), col("vec_id"), assign("cid"))
+  }
+
+  /** Exact cosine rerank of a (probe_id, neighbor_id) candidate frame:
+    * each probe's top [[K]]. */
+  private def rerank(spark: SparkSession, dir: String, cand: DataFrame): DataFrame = {
+    val vecs = vectors(spark, dir)
+    topK(cand
+      .join(vecs, col("neighbor_id") === col("vec_id"))
+      .join(broadcast(probeSide(vecs)), "probe_id")
+      .select(col("probe_id"), col("neighbor_id"), cosine.as("sim")))
   }
 
   /** Every vector's trained-cluster assignment — ONE NARROW PASS of
@@ -732,8 +787,8 @@ object Similarity {
     * stage, and the two-stage assignment all face a DuckDB hash-match
     * at EVERY oracle-gated SF (S = 4 groups at sf0.01 through sf3
     * where C = 16; multi-group coverage widens only on the bigger
-    * fixtures — S = 7 at n=200k, 39 at the n=6M production rung,
-    * `artifacts/correctness_hier_r14.json`) — the certification form the S = 1 bit-equivalence spec and the
+    * fixtures — S = 7 at n=200k, 39 at the n=6M production rung) —
+    * the certification form the S = 1 bit-equivalence spec and the
     * recall-parity A/Bs could not provide. Above the threshold
     * (C > 512), where [[ivfAssign]] dispatches to the identical
     * hierState + [[ivfAssignHierOf]] pair on its own, this query IS
@@ -834,43 +889,15 @@ object Similarity {
       .toDF("id", "cid")
   }
 
-  def similarAnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val vecs = vectors(spark, dir)
-    val assign = ivfAssign(spark, dir)
-    val probeTop = new graft.operators.BoundedTopK[Neighbor](
-      IvfProbeCells, neighborBetter).toColumn
-    val probeCells = probeSims(spark, dir)
-      .select(col("vec_id").as("probe_id"), col("cid").as("neighbor_id"),
-        col("s").as("sim"))
-      .as[Scored]
-      .groupByKey(_.probe_id)
-      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
-      .agg(probeTop.name("top"))
-      .toDF("probe_id", "top")
-      .select(col("probe_id"), explode(col("top")).as("c"))
-      .select(col("probe_id"), col("c.id").as("cid"))
-    val cand = assign.join(broadcast(probeCells),
-        assign("cid") === probeCells("cid") &&
-          assign("vec_id") =!= probeCells("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-    val probes = vecs.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pnrm"))
-    val psim = dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))
-    val scored = cand
-      .join(vecs, col("neighbor_id") === col("vec_id"))
-      .join(broadcast(probes), "probe_id")
-      .select(col("probe_id"), col("neighbor_id"), psim.as("sim"))
-    val topk = new graft.operators.BoundedTopK[Neighbor](K, neighborBetter).toColumn
-    scored.as[Scored]
-      .groupByKey(_.probe_id)
-      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
-      .agg(topk.name("top"))
-      .toDF("probe_id", "top")
-      .select(col("probe_id"), explode(col("top")).as("n"))
-      .select(col("probe_id"), col("n.id").as("neighbor_id"),
-        round(col("n.sim"), 6).as("sim"))
-  }
+  /** IVF-style ANN: assign every vector to its nearest of [[IvfCells]]
+    * centroids (one narrow n×C scoring pass — centroids broadcast, no
+    * driver collect), then each probe searches only its
+    * [[IvfProbeCells]] best cells ([[ivfCandidates]]) and reranks them
+    * exactly. Recall/latency trades via IvfProbeCells exactly like
+    * production IVF indexes. */
+  def similarAnnIvf(spark: SparkSession, dir: String): DataFrame =
+    rerank(spark, dir, ivfCandidates(spark, dir, ivfProbeCells(spark, dir))
+      .select(col("probe_id"), col("vec_id").as("neighbor_id")))
 
   /** Exact-rerank shortlist size for [[similarAnnIvfPq]] — 8×K, the
     * standard query-time recall knob: ADC over the coarse test
@@ -919,38 +946,17 @@ object Similarity {
       rawVectors(spark, dir).filter(col("vec_id") < NumProbes)
         .as[(Long, Array[Double])].collect().toMap
 
-    // IVF candidate generation — same shape as similarAnnIvf
-    val probeTop = new graft.operators.BoundedTopK[Neighbor](
-      IvfProbeCells, neighborBetter).toColumn
-    val probeCells = probeSims(spark, dir)
-      .select(col("vec_id").as("probe_id"), col("cid").as("neighbor_id"),
-        col("s").as("sim"))
-      .as[Scored]
-      .groupByKey(_.probe_id)
-      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
-      .agg(probeTop.name("top"))
-      .toDF("probe_id", "top")
-      .select(col("probe_id"), explode(col("top")).as("c"))
-      .select(col("probe_id"), col("c.id").as("cid"))
-    val assign = ivfAssign(spark, dir)
     // cand carries the cell: the residual ADC distance table is keyed
     // per (probe, PROBED cell) — a candidate's code decodes relative to
     // its cell's centroid, so the probe side must subtract the same one
-    val cand = assign.join(broadcast(probeCells),
-        assign("cid") === probeCells("cid") &&
-          assign("vec_id") =!= probeCells("probe_id"))
-      .select(col("probe_id"), col("vec_id"), assign("cid").as("cid"))
+    val probeCells = ivfProbeCells(spark, dir)
+    val cand = ivfCandidates(spark, dir, probeCells)
 
     // Candidate codes come from the STORED artifact (the full
     // `embedding_pq_codes` output persisted by IndexStore) — one
     // parquet FileScan, no per-candidate encode kernel anywhere in the
-    // plan: the codes `embedding_pq_codes_indexed` persists are read,
-    // not re-encoded per candidate at query time — the "codes are a
-    // stored column" posture the docstring promises.
-    // SemanticsSpec-style guarantee: the artifact's codes are the same
-    // deterministic argmin the in-line kernel computed (BandIndexSpec
-    // pins the artifact bit-identical to a fresh encode), so adcq is
-    // numerically unchanged.
+    // plan. BandIndexSpec pins the artifact bit-identical to a fresh
+    // encode, so adcq is the in-line kernel's.
     val codes = embeddingPqCodesIndexed(spark, dir)
       .select(col("vec_id"), col("subspace"), col("code"))
 
@@ -987,39 +993,13 @@ object Similarity {
       .agg(sum("d2").as("adcq"))
 
     // shortlist by (adcq asc, vec_id asc) — Neighbor sim = −adcq rides
-    // the existing (sim desc, id asc) heap order; int64 < 2^53 so the
-    // double negation is exact
-    val shortTop = new graft.operators.BoundedTopK[Neighbor](
-      PqRerank, neighborBetter).toColumn
-    val shortlist = adc
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        negate(col("adcq")).cast("double").as("sim"))
-      .as[Scored]
-      .groupByKey(_.probe_id)
-      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
-      .agg(shortTop.name("top"))
-      .toDF("probe_id", "top")
-      .select(col("probe_id"), explode(col("top")).as("c"))
-      .select(col("probe_id"), col("c.id").as("neighbor_id"))
-
-    // exact cosine re-rank of the shortlist
-    val vecs = vectors(spark, dir)
-    val probes = vecs.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pnrm"))
-    val psim = dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))
-    val scored = shortlist
-      .join(vecs, col("neighbor_id") === col("vec_id"))
-      .join(broadcast(probes), "probe_id")
-      .select(col("probe_id"), col("neighbor_id"), psim.as("sim"))
-    val topk = new graft.operators.BoundedTopK[Neighbor](K, neighborBetter).toColumn
-    scored.as[Scored]
-      .groupByKey(_.probe_id)
-      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
-      .agg(topk.name("top"))
-      .toDF("probe_id", "top")
-      .select(col("probe_id"), explode(col("top")).as("n"))
-      .select(col("probe_id"), col("n.id").as("neighbor_id"),
-        round(col("n.sim"), 6).as("sim"))
+    // the (sim desc, id asc) heap order; int64 < 2^53 so the double
+    // negation is exact
+    val shortlist = topPerProbe(adc
+        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
+          negate(col("adcq")).cast("double").as("sim")), PqRerank)
+      .select(col("probe_id"), col("neighbor_id"))
+    rerank(spark, dir, shortlist)
   }
 
   /** MMR result size, candidate-shortlist size, and λ. λ = 0.5 is
@@ -1036,8 +1016,9 @@ object Similarity {
     * λ·rel(c) − (1−λ)·max_{s∈S} cos(c, s), ties to the lower id.
     *
     * Two-stage shape, the standard reranker split: the DISTRIBUTED
-    * stage scores the whole corpus against the probe (vector 0) and a
-    * bounded heap keeps the [[MmrCandidates]]-deep shortlist; the
+    * stage is the probe search ([[probeScores]]) for probe vector 0
+    * alone, and the per-probe heap ([[topPerProbe]]) keeps the
+    * [[MmrCandidates]]-deep shortlist; the
     * greedy loop is O(k·C²) on that bounded shortlist and runs
     * driver-side — like Lloyd's centroid state, it is bounded driver
     * compute (50 vectors), not a corpus collect, and is inherently
@@ -1048,19 +1029,12 @@ object Similarity {
   def mmrDiversify(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vecs = vectors(spark, dir)
-    val probe = vecs.filter(col("vec_id") === 0)
-      .select(col("v").as("pv"), col("nrm").as("pnrm"))
-    val rel = dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))
-    val topC = new graft.operators.BoundedTopK[Neighbor](
-      MmrCandidates, neighborBetter).toColumn
-    val shortlist: Array[Neighbor] = vecs.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(probe))
-      .select(lit(0L).as("probe_id"), col("vec_id").as("neighbor_id"), rel.as("sim"))
-      .as[Scored]
-      .groupByKey(_.probe_id)
-      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
-      .agg(topC.name("top"))
-      .collect().head._2.toArray
+    val shortlist: Array[Neighbor] = topPerProbe(
+        probeScores(vecs, probeSide(vecs).filter(col("probe_id") === 0), lit(true)),
+        MmrCandidates)
+      .select(col("rank"), col("sim"), col("neighbor_id").as("id"))
+      .as[(Int, Double, Long)].collect().sortBy(_._1)
+      .map { case (_, sim, id) => Neighbor(sim, id) }
     val ids = shortlist.map(_.id).toSet
     val byId: Map[Long, Array[Double]] = vecs
       .filter(col("vec_id").isInCollection(ids))
@@ -1097,12 +1071,6 @@ object Similarity {
         round(col("rel"), 6).as("rel"), round(col("mmr_score"), 6).as("mmr_score"))
   }
 
-  /** Cosine threshold for semantic pruning — matches the near-dup
-    * queries' 0.35 band (the synthetic embeddings are near-orthogonal
-    * outside their cluster structure; real text embeddings would sit
-    * near 0.95). */
-  val SemThreshold = 0.35
-
   /** SemDeDup-style semantic pruning (Abbas et al. 2023,
     * arXiv:2303.09540): cluster the embedding space with the trained
     * coarse quantizer, then WITHIN each cluster drop every vector that
@@ -1130,7 +1098,7 @@ object Similarity {
     val dropped = lhs.join(rhs,
         col("cid") === col("cid2") && col("id1") < col("id2"))
       .filter(dot(col("v1"), col("v2")) / (col("n1") * col("n2"))
-        >= SemThreshold)
+        >= NeardupCosine)
       .select(col("cid"), col("id2").as("vec_id")).distinct()
     av.groupBy("cid").agg(count(lit(1)).as("n_vectors"))
       .join(dropped.groupBy("cid").agg(count(lit(1)).as("p")),
@@ -1311,44 +1279,28 @@ object Similarity {
     * bits reuses [[planeEntry]] hyperplanes 0–23. */
   val NeardupBands = 4
 
-  private lazy val bandPlanes: Array[Array[Array[Double]]] =
-    Array.tabulate(NeardupBands, LshBits, Dim)((k, j, d) => planeEntry(k * LshBits + j, d))
-
-  /** All [[NeardupBands]] band buckets of a vector in one narrow pass —
-    * same [[dotA]] kernel as [[lshBucket]] (band 0 IS the ANN bucket). */
-  val bandBuckets: UserDefinedFunction = udf { (v: Seq[Double]) =>
-    val a = v.toArray
-    Array.tabulate(NeardupBands) { k =>
-      var b = 0L; var j = 0
-      while (j < LshBits) { if (dotA(a, bandPlanes(k)(j)) > 0) b |= 1L << j; j += 1 }
-      b
-    }
-  }
-
   /** ALL-PAIRS near-dup at LSH scale — the declared production twin of
     * [[graft.dedup.Dedup.embeddingNeardup]]'s exact O(n²) grid: each
     * vector is replicated to [[NeardupBands]] (band, bucket) cells, a
     * per-band bucket equi-join yields the candidates (rows only meet
     * inside a 64-way bucket, never across the corpus), and the exact
-    * cosine filter keeps only true >= 0.35 pairs, so emitted pairs are
-    * always a SUBSET of the exact query's (SimilaritySpec pins subset +
-    * recall). A pair matching several bands collapses via distinct on
+    * cosine filter keeps only true >= [[NeardupCosine]] pairs, so
+    * emitted pairs are always a SUBSET of the exact query's
+    * (SimilaritySpec pins subset + recall). A pair matching several bands collapses via distinct on
     * the identically-computed row. At 100 TB you raise bits with corpus
     * size (bucket occupancy ≈ n/2^bits) and bands with the recall
     * target — the plumbing is this exact plan. */
   def embeddingNeardupLsh(spark: SparkSession, dir: String): DataFrame = {
-    val banded = vectors(spark, dir)
-      .select(col("vec_id"), col("v"), col("nrm"),
-        posexplode(bandBuckets(col("v"))).as(Seq("band", "bucket")))
-    val lhs = banded.select(col("band"), col("bucket"),
+    val bands = banded(vectors(spark, dir), LshBits)
+    val lhs = bands.select(col("band"), col("bucket"),
       col("vec_id").as("id1"), col("v").as("v1"), col("nrm").as("n1"))
-    val rhs = banded.select(col("band").as("band2"), col("bucket").as("bucket2"),
+    val rhs = bands.select(col("band").as("band2"), col("bucket").as("bucket2"),
       col("vec_id").as("id2"), col("v").as("v2"), col("nrm").as("n2"))
     lhs.join(rhs, col("band") === col("band2") && col("bucket") === col("bucket2") &&
         col("id1") < col("id2"))
       .select(col("id1"), col("id2"),
         (dot(col("v1"), col("v2")) / (col("n1") * col("n2"))).as("sim"))
-      .filter(col("sim") >= 0.35)
+      .filter(col("sim") >= NeardupCosine)
       .select(col("id1"), col("id2"), round(col("sim"), 6).as("sim"))
       .distinct()
   }
@@ -1388,28 +1340,6 @@ object Similarity {
 
   private def vecCount(spark: SparkSession, dir: String): Long =
     Tables.rowCount(spark, dir, "embeddings")
-
-  private val knnPlanesCache =
-    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Array[Array[Double]]]]()
-
-  /** Hyperplanes for a `bits`-wide band family: plane (k, j) is
-    * [[planeEntry]](k·bits + j) — the same global indexing the oracle
-    * derives, so changing bits re-derives a consistent family. */
-  private def knnPlanes(bits: Int): Array[Array[Array[Double]]] =
-    knnPlanesCache.computeIfAbsent(bits, { _ =>
-      Array.tabulate(NeardupBands, bits, Dim)((k, j, d) => planeEntry(k * bits + j, d))
-    })
-
-  /** [[bandBuckets]] at a corpus-scaled bit width. */
-  def knnBandBuckets(bits: Int): UserDefinedFunction = udf { (v: Seq[Double]) =>
-    val a = v.toArray
-    val ps = knnPlanes(bits)
-    Array.tabulate(NeardupBands) { k =>
-      var b = 0L; var j = 0
-      while (j < bits) { if (dotA(a, ps(k)(j)) > 0) b |= 1L << j; j += 1 }
-      b
-    }
-  }
 
   /** k-NN GRAPH over the whole corpus — one top-[[KnnGraphK]] neighbor
     * list PER VECTOR (not per probe), the all-vectors index build that
@@ -1464,11 +1394,8 @@ object Similarity {
   private[graft] def knnGraphLshOf(spark: SparkSession, vecs: DataFrame,
                                    bits: Int,
                                    probeOnly: Option[Column] = None): DataFrame = {
-    import spark.implicits._
-    val banded = vecs
-      .select(col("vec_id"), col("v"), col("nrm"),
-        posexplode(knnBandBuckets(bits)(col("v"))).as(Seq("band", "bucket")))
-    val lhs = probeOnly.fold(banded)(banded.filter)
+    val bands = banded(vecs, bits)
+    val lhs = probeOnly.fold(bands)(bands.filter)
       .select(col("band"), col("bucket"),
       col("vec_id").as("id1"), col("v").as("v1"), col("nrm").as("n1"))
     // neighbor-side bucket cap: a hot bucket is by construction a set
@@ -1480,7 +1407,7 @@ object Similarity {
     // being quadratically many candidates for each other.
     val capW = org.apache.spark.sql.expressions.Window
       .partitionBy("band", "bucket").orderBy("vec_id")
-    val rhs = banded
+    val rhs = bands
       .withColumn("rn", row_number().over(capW))
       .filter(col("rn") <= KnnBucketCap)
       .select(col("band").as("band2"), col("bucket").as("bucket2"),
@@ -1491,17 +1418,11 @@ object Similarity {
       .select(col("id1").as("probe_id"), col("id2").as("neighbor_id"),
         (dot(col("v1"), col("v2")) / (col("n1") * col("n2"))).as("sim"))
       .distinct()
-    val topk = new graft.operators.BoundedTopK[Neighbor](KnnGraphK, neighborBetter).toColumn
-    pairs.as[Scored]
-      .groupByKey(_.probe_id)
-      .mapValues(s => Neighbor(s.sim, s.neighbor_id))
-      .agg(topk.name("top"))
-      .toDF("vec_id", "top")
-      .select(col("vec_id"), posexplode(col("top")).as(Seq("r", "n")))
-      .select(col("vec_id"),
-        (col("r") + 1).cast("long").as("nn_rank"),
-        col("n.id").as("neighbor_id"),
-        round(col("n.sim"), 6).as("sim"))
+    topPerProbe(pairs, KnnGraphK)
+      .select(col("probe_id").as("vec_id"),
+        (col("rank") + 1).cast("long").as("nn_rank"),
+        col("neighbor_id"),
+        round(col("sim"), 6).as("sim"))
   }
 
   /** kNN-graph recall certification — the quality number the
@@ -1558,12 +1479,10 @@ object Similarity {
     // banding pass (big side); the probe cell list (NumProbes·bands
     // rows) broadcasts — nothing corpus-sized shuffles.
     val bits = knnBitsFor(vecCount(spark, dir))
-    val banded = vectors(spark, dir)
-      .select(col("vec_id"),
-        posexplode(knnBandBuckets(bits)(col("v"))).as(Seq("band", "bucket")))
-    val probeCells = banded.filter(col("vec_id") < NumProbes)
+    val bands = banded(vectors(spark, dir), bits)
+    val probeCells = bands.filter(col("vec_id") < NumProbes)
       .select(col("vec_id").as("probe_id"), col("band"), col("bucket"))
-    val overCap = banded.groupBy("band", "bucket")
+    val overCap = bands.groupBy("band", "bucket")
       .agg(count(lit(1)).as("occ"))
       .filter(col("occ") > KnnBucketCap)
       .join(broadcast(probeCells), Seq("band", "bucket"))
@@ -1591,9 +1510,7 @@ object Similarity {
     * narrow aggregates. */
   def knnBucketAudit(spark: SparkSession, dir: String): DataFrame = {
     val bits = knnBitsFor(vecCount(spark, dir))
-    vectors(spark, dir)
-      .select(col("vec_id"),
-        posexplode(knnBandBuckets(bits)(col("v"))).as(Seq("band", "bucket")))
+    banded(vectors(spark, dir), bits)
       .groupBy("band", "bucket")
       .agg(count(lit(1)).as("occupancy"))
       .groupBy("band", "occupancy")
@@ -2080,7 +1997,7 @@ object Similarity {
     * `bb` is `AS MATERIALIZED` in both banding CTEs below — DuckDB
     * inlines plain CTEs per reference, and the banded-bucket frame is
     * referenced 2–4× downstream (self-join sides, cap window, occ
-    * census, the r13 over-cap probe census), each replaying the
+    * census, the over-cap probe census), each replaying the
     * n·bands·bits·dim projection hash-agg whose GROUP BY carries the
     * embedding ARRAY as a key. Four concurrent replays pushed the
     * sf10 knn_graph_recall oracle past 50 GB for a 200k-vector
@@ -2290,7 +2207,7 @@ object Similarity {
          |  FROM av a JOIN av b ON a.cid = b.cid AND a.vec_id < b.vec_id
          |  WHERE list_dot_product(a.v, b.v) /
          |        (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-         |        >= $SemThreshold)
+         |        >= $NeardupCosine)
          |SELECT t.cid, CAST(count(*) AS BIGINT) AS n_vectors,
          |       CAST(count(d.vec_id) AS BIGINT) AS n_pruned,
          |       CAST(count(*) - count(d.vec_id) AS BIGINT) AS n_kept

@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
+import graft.similarity.Similarity
 
 /** Multi-tenant correctness (round-9 verdict #6): the session-scoped
   * memos ([[SessionCaches.memo]]) under real racing
@@ -59,6 +60,27 @@ class ConcurrencySpec extends AnyFunSuite with SharedSpark {
       "racing builders returned different components")
     assert(results.head == Dedup.neardupComponents(spark, sfDir)
       .as[(Long, Long)].collect().sorted.toSeq)
+    SessionCaches.release(s)
+  }
+
+  test("ANN memo chain: 4 threads cold-build ann_recall, each key built once") {
+    import spark.implicits._
+    // a fresh session: the vectors, exact top-k, IVF centroid,
+    // assignment and PQ codebook memos are all cold, and the IVF and
+    // PQ builds nest inside each other
+    val s = spark.newSession()
+    val chain = Seq("similarity.vectors", "similarity.exactTopk",
+      "similarity.centroids", "similarity.ivfAssign", "similarity.pq")
+    val before = chain.map(SessionCaches.buildCount)
+    def recall(session: org.apache.spark.sql.SparkSession) =
+      Similarity.annRecall(session, sfDir)
+        .as[(Long, String, Long, Double)].collect().sorted.toSeq
+    val results = inThreads(4)(_ => recall(s))
+    assert(chain.map(SessionCaches.buildCount).zip(before).map { case (a, b) => a - b } ==
+      Seq.fill(chain.size)(1L), s"builds per key of $chain")
+    assert(results.size == 4 && results.forall(_ == results.head),
+      "racing builders returned different recall rows")
+    assert(results.head == recall(spark))
     SessionCaches.release(s)
   }
 
