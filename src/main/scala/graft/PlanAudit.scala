@@ -33,13 +33,20 @@ object PlanAudit {
       // the injected top-k strategies
       "topk_per_key_exec", "topk_window_auto",
       // file sources
-      "csv_roundtrip_agg", "json_roundtrip_agg",
-      // text and corpus
-      "wordcount_total", "tfidf_top_terms", "ngram_counts",
-      "substring_dup_stats", "substring_dup_stats_hashed", "sequence_packing",
-      "quality_decile_bins", "bpe_pair_counts", "inverted_index",
-      "cooccurrence_pmi", "fuzzy_match_prefix",
+      "csv_roundtrip_agg", "json_roundtrip_agg", "gzip_text_roundtrip_agg",
+      // text: tokens, word windows, content hashes and splits
+      "wordcount_total", "text_langid", "tfidf_top_terms", "ngram_counts",
+      "ngram_novelty", "lm_doc_likelihood", "cooccurrence_pmi",
+      "vocab_coverage", "inverted_index", "winnow_fingerprints",
+      "doc_fingerprint", "train_eval_split", "train_eval_split_neardup",
       "eval_decontamination", "eval_decontamination_bloom",
+      // corpus (bpe_merge_rounds is a driver loop: its plan is the
+      // LocalTableScan of the collected merge table)
+      "sequence_packing", "quality_decile_bins", "bpe_pair_counts",
+      "bpe_encode_stats", "temperature_sample",
+      // substring and SimHash dedup
+      "substring_dup_stats", "substring_dup_stats_hashed",
+      "substring_dup_scrub", "simhash", "fuzzy_match_prefix",
       // near-dup and the index store (the slice twins must stay
       // broadcast-shaped like minhash_recall's)
       "minhash_neardup", "minhash_recall", "neardup_clusters",

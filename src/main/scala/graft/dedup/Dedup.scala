@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.{Fixpoint, SessionCaches, Tables}
-import graft.operators.ConnectedComponents
+import graft.operators.{ConnectedComponents, WordCount}
 import graft.similarity.Similarity
 
 /** Deduplication operators for a training-data pipeline, smallest to
@@ -37,54 +37,42 @@ object Dedup {
 
   // ---- shared shingling (word 3-grams over single-space tokens) ----
 
-  def tokenize(c: Column): Column =
-    filter(split(c, " ", -1), w => length(w) > lit(0))
+  /** Shingle width in tokens, and the separator joining a shingle's
+    * tokens. Every shingler and the MinHash artifact key read these. */
+  val ShingleWidth = 3
+  val ShingleSep = "|"
 
-  /** Distinct word-3gram shingles over an ALREADY-MATERIALIZED token
-    * array column. Callers must project the token array first
-    * (`docShingles`) — inlining the tokenizer here would re-run
-    * `filter(split(text))` for every `element_at` in the lambda (3 per
-    * shingle), which measured ~10× slower than the two-step projection. */
-  def shingleArr(ws: Column): Column =
+  /** Distinct shingles of a text column as a Column expression, for
+    * tests and tiny inputs: Catalyst evaluates the lambdas interpreted,
+    * so the queries shingle with [[shingleSet]]. */
+  def shingles(c: Column): Column = {
+    val ws = WordCount.tokens(c)
     array_distinct(
-      when(size(ws) < 3, typedlit(Seq.empty[String]))
+      when(size(ws) < ShingleWidth, typedlit(Seq.empty[String]))
         .otherwise(transform(
-          sequence(lit(0), size(ws) - 3),
-          i => concat_ws("|",
-            element_at(ws, i + 1),
-            element_at(ws, i + 2),
-            element_at(ws, i + 3)))))
-
-  /** Single-column convenience (tests, tiny inputs) — see shingleArr. */
-  def shingles(c: Column): Column = shingleArr(tokenize(c))
-
-  /** Scala twin of [[shingles]] — identical semantics (pinned by a
-    * parity spec and the DuckDB oracles), used on hot paths because
-    * Catalyst evaluates higher-order lambdas interpreted (~5 ms/row on
-    * 300-token docs vs ~µs here). Order-preserving distinct, like
-    * array_distinct. */
-  def shingleSet(text: String): Array[String] = {
-    val ws = text.split(" ", -1).filter(_.nonEmpty)
-    if (ws.length < 3) Array.empty[String]
-    else {
-      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-      var i = 0
-      while (i + 2 < ws.length) {
-        seen += (ws(i) + "|" + ws(i + 1) + "|" + ws(i + 2)); i += 1
-      }
-      seen.toArray
-    }
+          sequence(lit(0), size(ws) - ShingleWidth),
+          i => concat_ws(ShingleSep,
+            (1 to ShingleWidth).map(k => element_at(ws, i + k)): _*))))
   }
 
-  /** (doc_id, sh: array<string>) via the typed Scala shingler. */
-  def docShingles(spark: SparkSession, dir: String): DataFrame = {
+  /** The distinct shingles of `text` in first-seen order, like
+    * array_distinct (parity with [[shingles]] and the DuckDB oracles
+    * is pinned by DedupSpec). */
+  def shingleSet(text: String): Array[String] =
+    WordCount.grams(WordCount.words(text), ShingleWidth, ShingleSep).distinct.toArray
+
+  /** (doc_id, sh: array<string>) over a (doc_id, text, …) frame. */
+  def shinglesOf(docs: DataFrame): DataFrame = {
+    val spark = docs.sparkSession
     import spark.implicits._
-    Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) => (id, shingleSet(text)) }
       .toDF("doc_id", "sh")
   }
+
+  /** [[shinglesOf]] the corpus. */
+  def docShingles(spark: SparkSession, dir: String): DataFrame =
+    shinglesOf(Tables.load(spark, dir, "documents"))
 
   /** Session-scoped persisted shingle frame, memoized per (session,
     * dir): the shingle scan feeds minhash's signature pass + both
@@ -265,10 +253,7 @@ object Dedup {
     val wins = documents
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        val ws = t.split(" ").filter(_.nonEmpty)
-        if (ws.length < WinTokens) Iterator.empty
-        else (0 to ws.length - WinTokens).iterator
-          .map(i => (id, ws.slice(i, i + WinTokens).mkString(" ")))
+        WordCount.grams(WordCount.words(t), WinTokens, " ").map((id, _))
       }
       .toDF("doc_id", "w").distinct()
     dupStatsOverWindows(wins)
@@ -297,17 +282,14 @@ object Dedup {
   def substringDupScrubOf(spark: SparkSession, documents: DataFrame): DataFrame = {
     import spark.implicits._
     val toks = documents.select(col("doc_id"),
-      size(graft.operators.WordCount.tokens(col("text")))
-        .cast("long").as("n_tokens"))
-    // positioned windows (1-based), via the same typed kernel as the
-    // stats form — positions are needed for coverage, so no distinct
+      size(WordCount.tokens(col("text"))).cast("long").as("n_tokens"))
+    // windows with their 1-based start position — positions are needed
+    // for coverage, so no distinct
     val wins = documents
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        val ws = t.split(" ").filter(_.nonEmpty)
-        if (ws.length < WinTokens) Iterator.empty
-        else (0 to ws.length - WinTokens).iterator
-          .map(i => (id, i + 1, ws.slice(i, i + WinTokens).mkString(" ")))
+        WordCount.grams(WordCount.words(t), WinTokens, " ").zipWithIndex
+          .map { case (w, i) => (id, i + 1, w) }
       }
       .toDF("doc_id", "pos", "w")
     // (A collect_list + analytic-count restructure was
@@ -398,7 +380,7 @@ object Dedup {
     val wins = documents
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, t) =>
-        val ws = t.split(" ").filter(_.nonEmpty)
+        val ws = WordCount.words(t)
         if (ws.length < WinTokens) Iterator.empty
         else {
           val th = new Array[Long](ws.length)
@@ -508,29 +490,17 @@ object Dedup {
   val BandRows = 4 // -> 8 bands
 
   /** Algorithm-parameter fingerprint for MinHash-family artifacts in
-    * [[graft.IndexStore]] (shingle width 3 is [[shingleSet]]'s window):
-    * changing any constant re-keys the standing band/label artifacts so
-    * old-parameter indexes are never silently reused. */
+    * [[graft.IndexStore]]: changing any constant re-keys the standing
+    * band/label artifacts so old-parameter indexes are never silently
+    * reused. */
   private[graft] def MinhashIndexParams =
-    s"sh=3,p=$P,h=$NumHashes,r=$BandRows,jac=$NearDupJaccard"
+    s"sh=$ShingleWidth,p=$P,h=$NumHashes,r=$BandRows,jac=$NearDupJaccard"
 
-  /** 60-bit md5 prefix of the shingle, reduced mod p — the base hash the
-    * permutation family acts on. Same bytes, same hex, same value in
-    * DuckDB. */
-  private def baseHash(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast(LongType) % P
-
-  /** JVM twin of [[baseHash]]: first 15 hex nibbles of md5 = first 7
-    * bytes + the high nibble of the 8th, reduced mod p. Byte-exact with
-    * the Column form (pinned by the minhash oracle at 3 SFs). */
-  def baseHashJvm(md: java.security.MessageDigest, s: String): Long = {
-    val b = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 7) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-    v = (v << 4) | ((b(7) & 0xffL) >>> 4)
-    v % P
-  }
+  /** The md5-60 fold of a shingle reduced mod p — the base hash the
+    * permutation family acts on. The DuckDB oracles spell it as
+    * `fp60 % p` (pinned by DedupSpec and the minhash oracle). */
+  def baseHashJvm(md: java.security.MessageDigest, s: String): Long =
+    WordCount.fp60(md, s) % P
 
   def hashA(i: Int): Long = (2654435761L * (i + 1)) % P
   def hashB(i: Int): Long = (1013904223L * (i + 1)) % P
@@ -858,9 +828,8 @@ object Dedup {
     import spark.implicits._
     val agg = new SimHashAgg(SimBits).toColumn
     Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), explode(tokenize(col("text"))).as("w"))
-      .select(col("doc_id"),
-        conv(substring(md5(col("w")), 1, 15), 16, 10).cast(LongType).as("h"))
+      .select(col("doc_id"), explode(WordCount.tokens(col("text"))).as("w"))
+      .select(col("doc_id"), WordCount.fp60(col("w")).as("h"))
       .as[(Long, Long)]
       .groupByKey(_._1)
       .mapValues(_._2)

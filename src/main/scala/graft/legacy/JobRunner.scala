@@ -5,6 +5,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.operators.WordCount
+
 /** The reference's user-job surface (`Job.java:19,31`): an arbitrary
   * `map(key, value) => (key, value)*` followed by a grouped
   * `reduce(key, values[]) => (key, value)*`, both over strings. */
@@ -89,10 +91,9 @@ object JobRunner {
 object WordCountJob extends GraftJob {
   def map(key: String, value: String, emit: (String, String) => Unit): Unit = {
     val counts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    // split on single space like `value.split(" ")` (WordCount.java:26);
-    // Java drops trailing empties, we drop all empties (SURVEY.md §7)
-    value.split(" ", -1).iterator.filter(_.nonEmpty)
-      .foreach(w => counts.update(w, counts.getOrElse(w, 0) + 1))
+    // `value.split(" ")` (WordCount.java:26), with all empty tokens
+    // dropped where Java drops only trailing ones (SURVEY.md §7)
+    WordCount.words(value).foreach(w => counts.update(w, counts.getOrElse(w, 0) + 1))
     counts.foreach { case (w, c) => emit(w, c.toString) }
   }
   def reduce(key: String, values: Seq[String], emit: (String, String) => Unit): Unit =

@@ -9,6 +9,7 @@ import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.{SessionCaches, Tables}
+import graft.operators.WordCount
 
 /** Approximate-nearest-neighbor search over the embedding column.
   *
@@ -323,8 +324,7 @@ object Similarity {
     * engines; DuckDB replays it verbatim. */
   private def trainSampleCond(every: Long): Column =
     if (every <= 1L) lit(true)
-    else conv(substring(md5(col("vec_id").cast("string")), 1, 15), 16, 10)
-      .cast("long") % every === 0
+    else WordCount.fp60(col("vec_id").cast("string")) % every === 0
 
   /** Centroid means are computed over vectors quantized to
     * floor(x·10⁶) longs: LONG sums are exact and ASSOCIATIVE, so the

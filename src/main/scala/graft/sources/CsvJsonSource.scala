@@ -1,8 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.operators.WordCount
 
 /** CSV + JSON source/sink round-trips — the two most common ingest
   * formats, certified end-to-end on the [[OrcSource]] pattern: write
@@ -77,21 +79,22 @@ object CsvJsonSource {
       }
     }
 
+  /** The md5-60 fold mod 1e9+7, so a whole-corpus SUM stays in range. */
+  private def fp1e9(c: Column): Column =
+    WordCount.fp60(c.cast("binary")) % 1000000007L
+
   /** Per-lang fidelity aggregate over a parsed-back copy: row count,
     * text char total, and 60-bit-md5 fingerprint sums of both the text
     * and the tricky column (mod 1e9+7 so a whole-corpus SUM stays in
     * long range). The oracle recomputes all four from the original
     * parquet, predicting `tricky` from doc_id/lang. */
   private def fidelityAgg(copy: DataFrame): DataFrame = {
-    def fp60(c: org.apache.spark.sql.Column) =
-      conv(substring(md5(c.cast("binary")), 1, 15), 16, 10)
-        .cast(LongType) % 1000000007L
     copy.groupBy("lang")
       .agg(
         count(lit(1)).as("n_docs"),
         sum(length(col("text"))).as("sum_chars"),
-        sum(fp60(col("text"))).as("text_fp"),
-        sum(fp60(col("tricky"))).as("tricky_fp"))
+        sum(fp1e9(col("text"))).as("text_fp"),
+        sum(fp1e9(col("tricky"))).as("tricky_fp"))
   }
 
   def csvRoundtripAgg(spark: SparkSession, dir: String): DataFrame =
@@ -118,9 +121,6 @@ object CsvJsonSource {
     * zstd/bzip2-style splittable storage on first touch. The oracle
     * reads the original parquet. */
   def gzipTextRoundtripAgg(spark: SparkSession, dir: String): DataFrame = {
-    def fp60(c: org.apache.spark.sql.Column) =
-      conv(substring(md5(c.cast("binary")), 1, 15), 16, 10)
-        .cast(LongType) % 1000000007L
     val parsed = spark.read.text(stagedDir(spark, dir, "textgz"))
       .select(split(col("value"), "\t", 3).as("p"))
       .select(col("p")(0).cast(LongType).as("doc_id"),
@@ -128,7 +128,7 @@ object CsvJsonSource {
     parsed.groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(length(col("text"))).as("sum_chars"),
-        sum(fp60(col("text"))).as("text_fp"))
+        sum(fp1e9(col("text"))).as("text_fp"))
   }
 
   /** Dirty-ingest certificate — 100 TB feeds ALWAYS carry malformed

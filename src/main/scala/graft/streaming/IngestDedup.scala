@@ -63,8 +63,7 @@ object IngestDedup {
     * for verify. */
   def dedupStep(spark: SparkSession, batchDocs: DataFrame,
                 indexBands: DataFrame, knownDocs: DataFrame): DataFrame =
-    dedupStepWith(spark, batchDocs, indexBands, knownDocs,
-      shinglesOf(spark, _))
+    dedupStepWith(spark, batchDocs, indexBands, knownDocs, Dedup.shinglesOf)
 
   /** [[dedupStep]] with an injectable shingle source. The default
     * above shingles its frames directly; the batch FOLD's frames are
@@ -72,7 +71,7 @@ object IngestDedup {
     * session-memoized corpus shingle frame instead, which saves the
     * shingle kernel about four passes per step (batch bands, the batch
     * verify side, the candidate-corpus side, the index update). The rows
-    * are identical either way: the kernel is the same `Dedup.shingleSet`.
+    * are identical either way: both are [[Dedup.shinglesOf]] rows.
     *
     * The batch's [[Dedup.collisions]] with the index pick the stored
     * docs to shingle, and the verify takes the batch shingles as its
@@ -91,16 +90,6 @@ object IngestDedup {
     Dedup.acceptedBatch(batchDocs, cand, batchSh, candCorpusSh)
   }
 
-  /** (doc_id, sh) via the shared typed shingle kernel, over an
-    * arbitrary (doc_id, text) frame (the dir-loading twin is
-    * [[Dedup.docShingles]]). */
-  private def shinglesOf(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, text) => (id, Dedup.shingleSet(text)) }
-      .toDF("doc_id", "sh")
-  }
-
   /** Seed the stream's state stores: the standing corpus docs land in
     * the accepted store and their bands in the index, both as the
     * `batch=-1` partition (before every stream batch id). The two
@@ -111,7 +100,7 @@ object IngestDedup {
       corpusDocs.select("doc_id", "text")
         .write.mode("overwrite").parquet(s"$acceptedPath/batch=-1"),
       Dedup.bandsOf(Dedup.minhashSignaturesOf(spark,
-          shinglesOf(spark, corpusDocs)))
+          Dedup.shinglesOf(corpusDocs)))
         .write.mode("overwrite").parquet(s"$indexPath/batch=-1"))
   }
 
@@ -220,8 +209,8 @@ object IngestDedup {
       // Every frame the fold shingles is a SUBSET OF THE CORPUS, so
       // ride the session-memoized corpus shingle frame instead of
       // re-running the single-task shingle kernel per consumer (about
-      // four passes per step otherwise). Identical rows: the memo is the
-      // same `Dedup.shingleSet` kernel over the same docs.
+      // four passes per step otherwise). Identical rows: the memo is
+      // `Dedup.shinglesOf` over the same docs.
       val memoShingles: DataFrame => DataFrame = d =>
         Dedup.cachedDocShingles(spark, dir)
           .join(d.select("doc_id"), Seq("doc_id"), "left_semi")
@@ -287,7 +276,7 @@ object IngestDedup {
       // (the three batches partition the odd ids, so membership is
       // recoverable without per-step state)
       val accDocs = docs.join(accepted, Seq("doc_id"), "left_semi")
-      Dedup.bandsOf(Dedup.minhashSignaturesOf(spark, shinglesOf(spark, accDocs)))
+      Dedup.bandsOf(Dedup.minhashSignaturesOf(spark, Dedup.shinglesOf(accDocs)))
         .withColumn("batch", expr("CAST((doc_id % 6 - 1) DIV 2 AS INT)"))
         .write.mode("overwrite").partitionBy("batch")
         .parquet(root.getAbsolutePath)

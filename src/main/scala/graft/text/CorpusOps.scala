@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -142,27 +142,6 @@ object CorpusOps {
         min("n_chars").as("min_chars"), max("n_chars").as("max_chars"))
   }
 
-  /** Distribution-drift monitor — the Population Stability Index of
-    * the incoming batch (odd doc_ids) against the standing corpus
-    * (even doc_ids), per quality feature, over the CORPUS's decile
-    * bins. This is the check a production pipeline runs on every
-    * ingest before the batch touches the training mix: a crawl whose
-    * length or token distribution shifts (new boilerplate, a broken
-    * extractor, a new domain mix) shows up here days before it shows
-    * up in model evals. Convention: PSI < 0.1 stable, 0.1–0.25 drift
-    * worth a look, > 0.25 act.
-    *
-    * Mechanics, all scale-safe: bin edges are the REFERENCE deciles
-    * (exact [[qualityDecileBins]]-style percentile — one tiny
-    * aggregate, broadcast), both populations are binned by
-    * counting edges below (narrow pass, no sort), and
-    * `PSI = Σ_bins (p_batch − p_ref) · ln(p_batch / p_ref)` with
-    * additive smoothing `p = (n + 0.5) / (N + 5)` so empty bins stay
-    * finite (10 bins × 0.5). Per-bin terms are rounded to 12 decimals
-    * and summed as DECIMAL so the per-feature total is
-    * order-independent — a raw double window-sum would make the hash
-    * depend on partition order. Output: one row per (feature, bin),
-    * 20 rows total, each carrying its feature's PSI. */
   /** Per-doc quality features as (doc_id, feature, v) rows — the
     * frame both the batch PSI query and the streaming monitor bin. */
   private[graft] def qualityFeats(docs: DataFrame): DataFrame =
@@ -233,6 +212,27 @@ object CorpusOps {
     (table, Seq(cuts, perBin))
   }
 
+  /** Distribution-drift monitor — the Population Stability Index of
+    * the incoming batch (odd doc_ids) against the standing corpus
+    * (even doc_ids), per quality feature, over the CORPUS's decile
+    * bins. This is the check a production pipeline runs on every
+    * ingest before the batch touches the training mix: a crawl whose
+    * length or token distribution shifts (new boilerplate, a broken
+    * extractor, a new domain mix) shows up here days before it shows
+    * up in model evals. Convention: PSI < 0.1 stable, 0.1–0.25 drift
+    * worth a look, > 0.25 act.
+    *
+    * Mechanics, all scale-safe: bin edges are the REFERENCE deciles
+    * (exact [[qualityDecileBins]]-style percentile — one tiny
+    * aggregate, broadcast), both populations are binned by
+    * counting edges below (narrow pass, no sort), and
+    * `PSI = Σ_bins (p_batch − p_ref) · ln(p_batch / p_ref)` with
+    * additive smoothing `p = (n + 0.5) / (N + 5)` so empty bins stay
+    * finite (10 bins × 0.5). Per-bin terms are rounded to 12 decimals
+    * and summed as DECIMAL so the per-feature total is
+    * order-independent — a raw double window-sum would make the hash
+    * depend on partition order. Output: one row per (feature, bin),
+    * 20 rows total, each carrying its feature's PSI. */
   def qualityDriftPsi(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     psiBetween(spark,
@@ -248,29 +248,18 @@ object CorpusOps {
     * the token stream. Only the word count touches corpus-scale data,
     * and that is one map-side-combining shuffle; the pair explode,
     * aggregate, and top-50 all run on vocab-sized frames (the top-k is
-    * a TakeOrderedAndProject, never a global sort). Full BPE training
-    * iterates this round with merges applied to the symbol sequences;
-    * each round is this same kernel, so certifying the round certifies
-    * the loop body.
+    * a TakeOrderedAndProject, never a global sort). This is round 1 of
+    * [[bpeLearnMerges]]: the same [[bpeInitVocab]], [[bpePairsOf]] and
+    * [[bpeTopPairs]].
     *
     * Determinism: ties at the top-50 boundary are broken by the pair
     * string itself — a total order, so the selected SET is unique. */
-  def bpePairCounts(spark: SparkSession, dir: String): DataFrame = {
-    val words = Tables.load(spark, dir, "documents")
-      .select(explode(WordCount.tokens(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("wc"))
-      // 1-char words have no pairs; Spark's sequence(1, 0) would step
-      // BACKWARD (not empty like generate_series), so filter first
-      .filter(length(col("word")) >= 2)
-    words
-      .select(col("wc"), explode(expr(
-        """transform(sequence(1, length(word) - 1),
-          |  i -> concat(substring(word, i, 1), ' ', substring(word, i + 1, 1)))"""
-          .stripMargin)).as("pair"))
-      .groupBy("pair").agg(sum("wc").as("n"))
-      .orderBy(desc("n"), asc("pair"))
-      .limit(50)
-  }
+  def bpePairCounts(spark: SparkSession, dir: String): DataFrame =
+    bpeTopPairs(bpePairsOf(bpeInitVocab(Tables.load(spark, dir, "documents"))), 50)
+
+  /** The `k` most frequent pairs, `n` descending, then pair ascending. */
+  private def bpeTopPairs(pairs: DataFrame, k: Int): DataFrame =
+    pairs.orderBy(desc("n"), asc("pair")).limit(k)
 
   /** Symbol separator for the BPE merge loop — a control char that
     * cannot appear in whitespace-split tokens, so a symbol boundary is
@@ -302,26 +291,31 @@ object CorpusOps {
     documents
       .select(explode(WordCount.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("wc"))
-      .select(
-        concat(lit(BpeSep),
-          concat_ws(BpeSep + BpeSep, array_remove(split(col("word"), ""), "")),
-          lit(BpeSep)).as("wstr"),
-        col("wc"))
+      .select(bpeSymbols(col("word")).as("wstr"), col("wc"))
+
+  /** A word as its [[BpeSep]]-bracketed character symbols (see
+    * [[bpeInitVocab]]). */
+  private def bpeSymbols(word: Column): Column =
+    concat(lit(BpeSep),
+      concat_ws(BpeSep + BpeSep, array_remove(split(word, ""), "")),
+      lit(BpeSep))
 
   /** Adjacent-pair counts over a symbol-string vocabulary: splitting
     * the per-symbol-bracketed form on [[BpeSep]] yields
     * `['', sym1, '', sym2, …, '']` — a word of n symbols has list
     * length 2n+1 with symbols at even 1-based indices 2, 4, …, 2n —
     * so pair i (1..n−1) is `(l[2i], l[2i+2])`; word counts sum per
-    * pair. Single-symbol words (list size 3) are filtered BEFORE the
-    * sequence() call — Spark's `sequence(1, 0)` steps backward where
-    * DuckDB's `generate_series(1, 0)` is empty. */
+    * pair. Single-symbol words get a null sequence, so no pairs:
+    * Spark's `sequence(1, 0)` steps backward where DuckDB's
+    * `generate_series(1, 0)` is empty. (A `filter` would do the same,
+    * but Catalyst pushes it below [[bpeInitVocab]]'s word count, where
+    * it rebuilds the symbol string once per token instead of once per
+    * word.) */
   def bpePairsOf(vocab: DataFrame): DataFrame = {
     val l = split(col("wstr"), BpeSep)
     val nSyms = ((size(l) - 1) / 2).cast("int")
-    vocab.filter(size(l) >= 5)
-      .select(col("wc"),
-        explode(transform(sequence(lit(1), nSyms - 1),
+    vocab.select(col("wc"),
+        explode(transform(when(nSyms >= 2, sequence(lit(1), nSyms - 1)),
           i => concat(element_at(l, i * 2), lit(" "),
             element_at(l, i * 2 + 2))))
           .as("pair"))
@@ -332,14 +326,13 @@ object CorpusOps {
     * string `replace`, which both engines run as a left-to-right
     * NON-OVERLAPPING scan that resumes after each replacement — so
     * `a a a` under merge (a,a) becomes `[aa, a]`, the standard BPE
-    * greedy application (CorpusOpsSpec pins this). Narrow map, no
-    * shuffle. */
+    * greedy application (CorpusOpsSpec pins this). Other columns pass
+    * through. Narrow map, no shuffle. */
   def bpeApplyMerge(vocab: DataFrame, x: String, y: String): DataFrame =
-    vocab.select(
+    vocab.withColumn("wstr",
       replace(col("wstr"),
         lit(BpeSep + x + BpeSep + BpeSep + y + BpeSep),
-        lit(BpeSep + x + y + BpeSep)).as("wstr"),
-      col("wc"))
+        lit(BpeSep + x + y + BpeSep)))
 
   /** [[BpeRounds]] rounds of the full BPE-training recurrence: count
     * pairs → elect the best (max count, pair string as the total-order
@@ -373,8 +366,7 @@ object CorpusOps {
         var vocab = vocab0
         val merges = Seq.newBuilder[(Long, String, Long)]
         for (r <- 1 to BpeRounds) {
-          val (pair, n) = bpePairsOf(vocab)
-            .orderBy(desc("n"), asc("pair")).limit(1)
+          val (pair, n) = bpeTopPairs(bpePairsOf(vocab), 1)
             .as[(String, Long)].head()
           merges += ((r.toLong, pair, n))
           val Array(x, y) = pair.split(' ')
@@ -394,8 +386,8 @@ object CorpusOps {
     * The 100 TB shape is the classic tokenizer-application trick:
     * encoding is a function of the WORD, so the merges are applied to
     * the distinct-word VOCABULARY (tens of thousands of rows for any
-    * natural corpus — each merge a narrow literal `replace`, the same
-    * greedy left-to-right application [[bpeApplyMerge]] pins), and the
+    * natural corpus — each merge a narrow literal `replace` by
+    * [[bpeApplyMerge]]), and the
     * per-word token count broadcast-joins back to the per-(source,
     * word) count frame. The corpus-scale text is touched exactly once
     * (the word count); no merge ever rewrites a corpus-scale row.
@@ -410,16 +402,10 @@ object CorpusOps {
       .select(col("source"), explode(WordCount.tokens(col("text"))).as("word"))
       .groupBy("source", "word").agg(count(lit(1)).as("wc"))
     val vocab = perWord.select("word").distinct()
-      .select(col("word"),
-        concat(lit(BpeSep),
-          concat_ws(BpeSep + BpeSep, array_remove(split(col("word"), ""), "")),
-          lit(BpeSep)).as("wstr"))
+      .select(col("word"), bpeSymbols(col("word")).as("wstr"))
     val encoded = merges.foldLeft(vocab) { case (v, (_, pair, _)) =>
       val Array(x, y) = pair.split(' ')
-      v.select(col("word"),
-        replace(col("wstr"),
-          lit(BpeSep + x + BpeSep + BpeSep + y + BpeSep),
-          lit(BpeSep + x + y + BpeSep)).as("wstr"))
+      bpeApplyMerge(v, x, y)
     }.select(col("word"),
       ((size(split(col("wstr"), BpeSep)) - 1) / 2).cast(LongType).as("n_bpe"))
     perWord.join(broadcast(encoded), "word")
@@ -522,8 +508,7 @@ object CorpusOps {
     val docs = Tables.load(spark, dir, "documents")
       .select(col("source"), col("text"),
         size(WordCount.tokens(col("text"))).cast(LongType).as("n_tok"),
-        (conv(substring(md5(col("text")), 1, 15), 16, 10)
-          .cast(LongType) % 1000000L).as("h6"))
+        (WordCount.fp60(col("text")) % 1000000L).as("h6"))
     val per = docs.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("t"))
       .withColumn("w", sqrt(col("t").cast(DoubleType)).cast(DecimalType(28, 10)))

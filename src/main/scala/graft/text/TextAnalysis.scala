@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.{SessionCaches, Tables}
+import graft.dedup.Dedup
 import graft.operators.WordCount
 
 /** Text-analysis operators for a training-data pipeline: corpus stats,
@@ -73,18 +74,6 @@ object TextAnalysis {
       q.score.as("quality_score"))
   }
 
-  /** Gopher-style hard quality gates (Rae et al. 2021 §A1.1, the
-    * published rule bundle production corpora filter with) as ONE fused
-    * narrow pass. Every ratio rule is INTEGER CROSS-MULTIPLIED
-    * (3·n ≤ chars instead of chars/n ≥ 3) so the gates are exact in
-    * both engines — no double division anywhere, which is what lets a
-    * pass/fail bitmap be hash-oracled at all. Gates: word count in
-    * [50, 100k]; mean word length in [3, 10]; distinct-token fraction
-    * ≥ 0.3 (the repetition rule); ≥ 2 distinct stopwords (the zh docs
-    * fail this one by construction — gates are language-aware
-    * upstream, which is why lang-ID runs before gating in a real
-    * pipeline). `pass` is the product, so one flipped gate flips the
-    * census. */
   /** Classifier-based quality filtering — the MODEL-inference stage
     * (the CCNet / FineWeb-style fastText-classifier analog) that runs
     * after the rule gates: a linear scorer over exact integer features
@@ -130,6 +119,18 @@ object TextAnalysis {
         round(max(col("score")), 6).as("max_score"))
   }
 
+  /** Gopher-style hard quality gates (Rae et al. 2021 §A1.1, the
+    * published rule bundle production corpora filter with) as ONE fused
+    * narrow pass. Every ratio rule is INTEGER CROSS-MULTIPLIED
+    * (3·n ≤ chars instead of chars/n ≥ 3) so the gates are exact in
+    * both engines — no double division anywhere, which is what lets a
+    * pass/fail bitmap be hash-oracled at all. Gates: word count in
+    * [50, 100k]; mean word length in [3, 10]; distinct-token fraction
+    * ≥ 0.3 (the repetition rule); ≥ 2 distinct stopwords (the zh docs
+    * fail this one by construction — gates are language-aware
+    * upstream, which is why lang-ID runs before gating in a real
+    * pipeline). `pass` is the product, so one flipped gate flips the
+    * census. */
   def gopherQualityGates(spark: SparkSession, dir: String): DataFrame = {
     val toks = WordCount.tokens(col("text"))
     val n = size(toks).cast(LongType)
@@ -164,12 +165,10 @@ object TextAnalysis {
     * pattern this codebase measured 10–25× slower than a typed kernel
     * (it held this query at 2.0× the binding baseline). Instead, one
     * mapPartitions pass: a marker→langs hash map is built once per
-    * partition, each doc is tokenized in a single char scan (same
-    * single-space split-with-empties-dropped convention as
-    * [[graft.operators.WordCount.tokens]]), and the argmax takes the
-    * FIRST language in [[langMarkers]] order among maximal scores —
-    * bit-identical to the old CASE-priority semantics and to the
-    * unchanged SQL oracle. */
+    * partition, each doc is tokenized by [[WordCount.words]], and the
+    * argmax takes the FIRST language in [[langMarkers]] order among
+    * maximal scores — bit-identical to the old CASE-priority
+    * semantics and to the unchanged SQL oracle. */
   def textLangid(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val markers = langMarkers
@@ -185,21 +184,9 @@ object TextAnalysis {
         }
         it.map { case (id, lang, text) =>
           val counts = new Array[Long](langs.length)
-          val n = text.length
-          var start = 0
-          var i = 0
-          while (i <= n) {
-            if (i == n || text.charAt(i) == ' ') {
-              if (i > start) {
-                val hit = index.get(text.substring(start, i))
-                if (hit != null) {
-                  var k = 0
-                  while (k < hit.length) { counts(hit(k)) += 1; k += 1 }
-                }
-              }
-              start = i + 1
-            }
-            i += 1
+          WordCount.words(text).foreach { w =>
+            val hit = index.get(w)
+            if (hit != null) hit.foreach(counts(_) += 1)
           }
           var bi = 0
           var j = 1
@@ -245,13 +232,7 @@ object TextAnalysis {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.map { case (id, text) =>
-          // first 15 hex nibbles of md5 = 60-bit fingerprint (same
-          // bytes-to-long fold as Dedup.baseHashJvm, without the mod p)
-          val b = md.digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var m = 0L
-          var i = 0
-          while (i < 7) { m = (m << 8) | (b(i) & 0xffL); i += 1 }
-          m = (m << 4) | ((b(7) & 0xffL) >>> 4)
+          val m = WordCount.fp60(md, text)
           var r = 0L
           val cps = text.codePoints().iterator()
           while (cps.hasNext) { r = (r * 31L + cps.next()) % 2147483647L }
@@ -293,17 +274,11 @@ object TextAnalysis {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, t) =>
-          val ws = t.split(" ").filter(_.nonEmpty)
-          if (ws.length < 3) Iterator.empty
+          val hs = WordCount.grams(WordCount.words(t), Dedup.ShingleWidth, Dedup.ShingleSep)
+            .map(Dedup.baseHashJvm(md, _)).toArray
+          val n = hs.length
+          if (n == 0) Iterator.empty
           else {
-            val n = ws.length - 2
-            val hs = new Array[Long](n)
-            var i = 0
-            while (i < n) {
-              hs(i) = graft.dedup.Dedup.baseHashJvm(
-                md, ws(i) + "|" + ws(i + 1) + "|" + ws(i + 2))
-              i += 1
-            }
             val sel = scala.collection.mutable.Set.empty[Long]
             val nStarts = math.max(1, n - (WinnowW - 1))
             var s = 0
@@ -343,7 +318,7 @@ object TextAnalysis {
     * pipeline [[trainingSetSelect]] only approximates: exact-dedup
     * survivors, MINUS non-survivor members of minhash near-dup clusters
     * (pairs → connected components → min-doc_id survivor, see
-    * [[graft.dedup.Dedup.neardupComponents]]), then the same quality
+    * [[Dedup.neardupComponents]]), then the same quality
     * threshold. Without the cluster stage two 98%-similar docs both
     * pass selection; here only the min-id member of each near-dup
     * cluster survives. One content-key shuffle + one broadcast
@@ -353,7 +328,7 @@ object TextAnalysis {
     val docs = Tables.load(spark, dir, "documents")
     val exactSurvivors = docs.groupBy("text").agg(min("doc_id").as("doc_id"))
       .select("doc_id")
-    val losers = graft.dedup.Dedup.neardupComponents(spark, dir)
+    val losers = Dedup.neardupComponents(spark, dir)
       .filter(col("id") =!= col("label"))
       .select(col("id").as("doc_id"))
     val q = qualityExprs
@@ -476,13 +451,14 @@ object TextAnalysis {
     * counts. */
   val EvalPct = 5
 
-  private def splitCol: Column =
-    when(conv(substring(md5(col("text")), 1, 15), 16, 10)
-      .cast(LongType) % 100 < lit(100 - EvalPct), "train").otherwise("eval")
+  /** The split rule: `train` when the md5-60 fold of `key` mod 100 is
+    * under 100 − [[EvalPct]], else `eval`. */
+  private def splitOf(key: Column): Column =
+    when(WordCount.fp60(key) % 100 < lit(100 - EvalPct), "train").otherwise("eval")
 
   def trainEvalSplit(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
-      .select(col("lang"), splitCol.as("split"))
+      .select(col("lang"), splitOf(col("text")).as("split"))
       .groupBy("lang", "split")
       .agg(count(lit(1)).as("n_docs"))
 
@@ -492,15 +468,12 @@ object TextAnalysis {
   private[graft] def neardupSplitAssign(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"))
-    val comp = graft.dedup.Dedup.neardupComponents(spark, dir)
+    val comp = Dedup.neardupComponents(spark, dir)
       .select(col("id").as("doc_id"), col("label"))
     docs.join(comp, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"),
         coalesce(col("label"), col("doc_id")).as("cid"))
-      .select(col("doc_id"), col("lang"),
-        when(conv(substring(md5(col("cid").cast("string")), 1, 15), 16, 10)
-          .cast(LongType) % 100 < lit(100 - EvalPct), "train")
-          .otherwise("eval").as("split"))
+      .select(col("doc_id"), col("lang"), splitOf(col("cid").cast("string")).as("split"))
   }
 
   /** LEAKAGE-SAFE train/eval split — [[trainEvalSplit]] hashes CONTENT,
@@ -530,9 +503,9 @@ object TextAnalysis {
     * join key, approximate membership; this is the exact form the
     * approximation is audited against. */
   def evalDecontamination(spark: SparkSession, dir: String): DataFrame = {
-    val sh = graft.dedup.Dedup.cachedDocShingles(spark, dir)
+    val sh = Dedup.cachedDocShingles(spark, dir)
     val split = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), splitCol.as("split"))
+      .select(col("doc_id"), splitOf(col("text")).as("split"))
     val tagged = sh.join(split, "doc_id")
     val trainShingles = tagged.filter(col("split") === "train")
       .select(explode(col("sh")).as("s")).distinct()
@@ -571,9 +544,9 @@ object TextAnalysis {
     * engine-specific; the spec pins behavior instead. */
   def evalDecontaminationBloom(spark: SparkSession, dir: String,
                                fpp: Double = 0.001): DataFrame = {
-    val sh = graft.dedup.Dedup.cachedDocShingles(spark, dir)
+    val sh = Dedup.cachedDocShingles(spark, dir)
     val split = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), splitCol.as("split"))
+      .select(col("doc_id"), splitOf(col("text")).as("split"))
     val tagged = sh.join(split, "doc_id")
     // the (count + bloomFilter aggregate) build is the expensive half
     // of the query; the train corpus is immutable per (session, dir,
@@ -603,25 +576,26 @@ object TextAnalysis {
           / col("n_shingles").cast(DoubleType), 6).as("contamination"))
   }
 
-  /** Session-scoped persisted (doc_id, w1, w2) bigram frame — the
-    * shared input of `lm_doc_likelihood`'s training aggregate and
-    * scoring join. */
-  private[graft] def cachedDocBigrams(spark: SparkSession, dir: String): DataFrame =
-    SessionCaches.persisted(spark, "text.bigrams", dir) {
-      import spark.implicits._
-      Tables.load(spark, dir, "documents")
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .flatMap { case (id, t) =>
-          val ws = t.split(" ").filter(_.nonEmpty)
-          ws.iterator.zip(ws.iterator.drop(1)).map { case (a, b) => (id, a, b) }
-        }.toDF("doc_id", "w1", "w2")
-    }
+  /** The (doc_id, w1, w2) frame of every adjacent token pair of a
+    * (doc_id, text, …) frame, in a typed flatMap (higher-order Column
+    * lambdas evaluate interpreted). */
+  private[graft] def docBigrams(documents: DataFrame): DataFrame = {
+    val spark = documents.sparkSession
+    import spark.implicits._
+    documents.select(col("doc_id"), col("text")).as[(Long, String)]
+      .flatMap { case (id, t) =>
+        val ws = WordCount.words(t)
+        ws.iterator.zip(ws.iterator.drop(1)).map { case (a, b) => (id, a, b) }
+      }.toDF("doc_id", "w1", "w2")
+  }
 
-  /** Global top-20 bigrams by count (ties broken lexicographically).
-    * Tokenization in a tight typed flatMap (higher-order Column lambdas
-    * evaluate interpreted); `orderBy.limit` plans as
-    * TakeOrderedAndProject — per-partition bounded top-k merged on one
-    * reducer, NOT a global sort, so it survives an open vocabulary. */
+  /** Session-scoped persisted [[docBigrams]] of the corpus — the shared
+    * input of `lm_doc_likelihood`'s training aggregate and scoring
+    * join. */
+  private[graft] def cachedDocBigrams(spark: SparkSession, dir: String): DataFrame =
+    SessionCaches.persisted(spark, "text.bigrams", dir)(
+      docBigrams(Tables.load(spark, dir, "documents")))
+
   /** N-gram novelty — the "unseen n-gram rate" quality signal: per
     * doc, how many of its DISTINCT bigrams appear in no other document
     * (corpus document-frequency 1). High novelty marks original text;
@@ -636,11 +610,8 @@ object TextAnalysis {
     import spark.implicits._
     val bg = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, t) =>
-        val ws = t.split(" ").filter(_.nonEmpty)
-        if (ws.length < 2) Iterator.empty
-        else ws.iterator.zip(ws.iterator.drop(1)).map(p => (id, p._1 + " " + p._2))
-      }.toDF("doc_id", "bigram").distinct()
+      .flatMap { case (id, t) => WordCount.grams(WordCount.words(t), 2, " ").map((id, _)) }
+      .toDF("doc_id", "bigram").distinct()
     val dfreq = bg.groupBy("bigram").agg(count(lit(1)).as("dfreq"))
     bg.join(dfreq, "bigram")
       .groupBy("doc_id")
@@ -648,15 +619,16 @@ object TextAnalysis {
         sum(when(col("dfreq") === 1, 1L).otherwise(0L)).as("n_unique"))
   }
 
+  /** Global top-20 bigrams by count (ties broken lexicographically).
+    * Tokenization in a tight typed flatMap (higher-order Column lambdas
+    * evaluate interpreted); `orderBy.limit` plans as
+    * TakeOrderedAndProject — per-partition bounded top-k merged on one
+    * reducer, NOT a global sort, so it survives an open vocabulary. */
   def ngramCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.load(spark, dir, "documents")
       .select("text").as[String]
-      .flatMap { t =>
-        val ws = t.split(" ").filter(_.nonEmpty)
-        if (ws.length < 2) Iterator.empty
-        else ws.iterator.zip(ws.iterator.drop(1)).map(p => p._1 + " " + p._2)
-      }
+      .flatMap(t => WordCount.grams(WordCount.words(t), 2, " "))
       .toDF("bigram")
       .groupBy("bigram").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("bigram").asc)
@@ -733,9 +705,7 @@ object TextAnalysis {
 
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"),
-        explode(split(col("text"), " ")).as("t"))
-      .filter(col("t") =!= "")
+      .select(col("doc_id"), explode(WordCount.tokens(col("text"))).as("t"))
     val vocab = toks.groupBy("t").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("t").asc)
       .limit(VocabSize)
@@ -766,8 +736,7 @@ object TextAnalysis {
     * composite key — while df stays this exact shape. */
   def invertedIndex(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "")
+      .select(col("doc_id"), explode(WordCount.tokens(col("text"))).as("term"))
       .distinct()
       .groupBy("term")
       .agg(
@@ -790,15 +759,9 @@ object TextAnalysis {
   def cooccurrencePmi(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-    val bigrams = docs.flatMap { case (_, t) =>
-      val ws = t.split(" ").filter(_.nonEmpty)
-      if (ws.length < 2) Iterator.empty
-      else ws.iterator.zip(ws.iterator.drop(1))
-    }.toDF("w1", "w2")
-    val unigrams = docs.flatMap { case (_, t) =>
-      t.split(" ").filter(_.nonEmpty)
-    }.toDF("w")
+    val bigrams = docBigrams(docs).select("w1", "w2")
+    val unigrams = docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .flatMap { case (_, t) => WordCount.words(t) }.toDF("w")
     val uniCounts = unigrams.groupBy("w").agg(count(lit(1)).as("c"))
     // memoized per (session, corpus) — the scalar broadcasts as a
     // literal, and repeated invocations skip the extra corpus pass
@@ -825,9 +788,8 @@ object TextAnalysis {
     * hash-exact cross-engine because every step is int64 floor
     * division.
     *
-    * Plan: one corpus pass explodes bigrams (the same typed-flatMap
-    * kernel as `cooccurrence_pmi`), memoized and PERSISTED per
-    * (session, corpus) because it feeds BOTH the LM-training
+    * Plan: one corpus pass explodes bigrams ([[cachedDocBigrams]]),
+    * memoized and PERSISTED per (session, corpus) because it feeds BOTH the LM-training
     * aggregate and the scoring join — without the persist the bigram
     * kernel and documents scan would run twice per invocation. ONE
     * map-side-combining aggregate trains the LM, the
@@ -856,8 +818,8 @@ object TextAnalysis {
 
   private[graft] def lmDocLikelihoodImpl(spark: SparkSession, dir: String,
                                          broadcastMaxRows: Long): DataFrame = {
-    val docBigrams = cachedDocBigrams(spark, dir)
-    val lm = docBigrams.groupBy("w1", "w2").agg(count(lit(1)).as("nb"))
+    val bigrams = cachedDocBigrams(spark, dir)
+    val lm = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("nb"))
     val prefix = lm.groupBy("w1").agg(sum("nb").as("np"))
     val model = lm.join(prefix, "w1")
       .select(col("w1"), col("w2"),
@@ -866,11 +828,38 @@ object TextAnalysis {
     val hinted =
       if (modelRows <= broadcastMaxRows) broadcast(model)
       else model.hint("merge")
-    docBigrams.join(hinted, Seq("w1", "w2"))
+    bigrams.join(hinted, Seq("w1", "w2"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum("q").as("qs"))
       .select(col("doc_id"), col("n_bigrams"),
         expr("qs DIV n_bigrams").as("lm_score"))
+  }
+
+  /** The funnel's per-doc inputs, shared VERBATIM by
+    * `corpus_pipeline_funnel` (aggregate report) and
+    * `corpus_rejection_ledger` (per-doc audit rows) so the two views
+    * of the pipeline cannot drift. */
+  private case class FunnelFrames(base: DataFrame, exactSurv: DataFrame,
+                                  losers: DataFrame, contaminated: DataFrame)
+
+  private def funnelFrames(spark: SparkSession, dir: String): FunnelFrames = {
+    val docs = Tables.load(spark, dir, "documents")
+    val q = qualityExprs
+    val base = docs.select(col("doc_id"), q.nTok.as("n_tokens"),
+      q.score.as("quality_score"), splitOf(col("text")).as("split"))
+    val exactSurv = docs.groupBy("text").agg(min("doc_id").as("doc_id"))
+      .select("doc_id")
+    val losers = Dedup.neardupComponents(spark, dir)
+      .filter(col("id") =!= col("label"))
+      .select(col("id").as("doc_id"))
+    val sh = Dedup.cachedDocShingles(spark, dir)
+    val evalShingles = sh
+      .join(docs.select(col("doc_id"), splitOf(col("text")).as("split")), "doc_id")
+      .filter(col("split") === "eval")
+      .select(explode(col("sh")).as("s")).distinct()
+    val contaminated = sh.select(col("doc_id"), explode(col("sh")).as("s"))
+      .join(evalShingles, "s").select("doc_id").distinct()
+    FunnelFrames(base, exactSurv, losers, contaminated)
   }
 
   /** The end-to-end curation funnel — the whole pipeline's stages run
@@ -896,33 +885,6 @@ object TextAnalysis {
     * 400 surviving at sf0.01, 0 at sf1 where the mutated copy families
     * blanket the shingle space). The oracle agrees exactly; on a real
     * corpus the stage-5 drop is a few percent. */
-  /** The funnel's per-doc inputs, shared VERBATIM by
-    * `corpus_pipeline_funnel` (aggregate report) and
-    * `corpus_rejection_ledger` (per-doc audit rows) so the two views
-    * of the pipeline cannot drift. */
-  private case class FunnelFrames(base: DataFrame, exactSurv: DataFrame,
-                                  losers: DataFrame, contaminated: DataFrame)
-
-  private def funnelFrames(spark: SparkSession, dir: String): FunnelFrames = {
-    val docs = Tables.load(spark, dir, "documents")
-    val q = qualityExprs
-    val base = docs.select(col("doc_id"), q.nTok.as("n_tokens"),
-      q.score.as("quality_score"), splitCol.as("split"))
-    val exactSurv = docs.groupBy("text").agg(min("doc_id").as("doc_id"))
-      .select("doc_id")
-    val losers = graft.dedup.Dedup.neardupComponents(spark, dir)
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("doc_id"))
-    val sh = graft.dedup.Dedup.cachedDocShingles(spark, dir)
-    val evalShingles = sh
-      .join(docs.select(col("doc_id"), splitCol.as("split")), "doc_id")
-      .filter(col("split") === "eval")
-      .select(explode(col("sh")).as("s")).distinct()
-    val contaminated = sh.select(col("doc_id"), explode(col("sh")).as("s"))
-      .join(evalShingles, "s").select("doc_id").distinct()
-    FunnelFrames(base, exactSurv, losers, contaminated)
-  }
-
   def corpusPipelineFunnel(spark: SparkSession, dir: String): DataFrame = {
     val FunnelFrames(base, exactSurv, losers, contaminated) =
       funnelFrames(spark, dir)
@@ -1045,7 +1007,7 @@ object TextAnalysis {
       |      - 0.2 * (CASE WHEN n_chars = 0 THEN 0.0
       |               ELSE CAST(n_punct AS DOUBLE)/n_chars END), 6)""".stripMargin
 
-  /** The content-hash train/eval split (SQL twin of [[splitCol]]). */
+  /** The content-hash train/eval split (SQL twin of [[splitOf]] over `text`). */
   private val splitCaseSql =
     s"""CASE WHEN CAST(('0x' || substring(md5(text), 1, 15)) AS BIGINT)
        |          % 100 < ${100 - EvalPct}
@@ -1056,7 +1018,7 @@ object TextAnalysis {
     * componentCtes opens WITH RECURSIVE and already defines `sh` (the
     * shingle frame) and `comp` (near-dup components); both reused. */
   private lazy val funnelFlagCtes =
-    s"""${graft.dedup.Dedup.componentCtes},
+    s"""${Dedup.componentCtes},
        |spl AS (SELECT doc_id, $splitCaseSql AS split FROM documents),
        |evs AS (SELECT DISTINCT s FROM (SELECT doc_id, unnest(sh) AS s FROM sh) t
        |        JOIN spl USING (doc_id) WHERE spl.split = 'eval'),
@@ -1207,7 +1169,7 @@ object TextAnalysis {
     // prepends comp(doc_id, cluster_id); the selection then excludes
     // cluster members whose id is not the cluster minimum
     "training_set_select_neardup" ->
-      s"""${graft.dedup.Dedup.componentCtes},
+      s"""${Dedup.componentCtes},
          |m AS (
          |  SELECT doc_id, lang,
          |    $qualityMetricsSql
@@ -1318,7 +1280,7 @@ object TextAnalysis {
          |grams AS (
          |  SELECT doc_id, i, len(ts) - 2 AS n,
          |         CAST(('0x' || substring(md5(ts[i] || '|' || ts[i+1] || '|' || ts[i+2]), 1, 15)) AS BIGINT)
-         |           % ${graft.dedup.Dedup.P} AS h
+         |           % ${Dedup.P} AS h
          |  FROM toks, LATERAL unnest(generate_series(1, len(ts) - 2)) t(i)
          |  WHERE len(ts) >= 3),
          |mins AS (
@@ -1363,7 +1325,7 @@ object TextAnalysis {
     // the full component resolution replayed, then the cluster-id hash
     // (docs outside any cluster are their own cluster)
     "train_eval_split_neardup" ->
-      s"""${graft.dedup.Dedup.componentCtes},
+      s"""${Dedup.componentCtes},
          |cl AS (SELECT d.lang, coalesce(c.cluster_id, d.doc_id) AS cid
          |       FROM documents d LEFT JOIN comp c USING (doc_id))
          |SELECT lang,
@@ -1373,7 +1335,7 @@ object TextAnalysis {
          |       count(*) AS n_docs
          |FROM cl GROUP BY 1, 2""".stripMargin,
     "eval_decontamination" ->
-      s"""WITH sh AS (${graft.dedup.Dedup.docShinglesSql}),
+      s"""WITH sh AS (${Dedup.docShinglesSql}),
          |sp AS (SELECT doc_id, $splitCaseSql AS split
          |       FROM documents),
          |tr AS (SELECT DISTINCT s FROM (

@@ -33,6 +33,13 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
       .as[(Long, String)].collect()
       .map { case (id, t) => id -> Dedup.shingleSet(t).toSeq }.toMap
     assert(viaScala == viaColumn)
+
+    // and on the token-rule edge cases the corpus never holds
+    for (text <- WordCountSpec.edgeCases.map(_._1)) {
+      val col1 = Seq(text).toDF("text").select(Dedup.shingles(col("text")))
+        .as[Seq[String]].head()
+      assert(Dedup.shingleSet(text).toSeq == col1, s"shingles(${text.map(_.toInt)})")
+    }
   }
 
   test("minhash LSH finds exactly the exact-jaccard pairs on the fixture") {
