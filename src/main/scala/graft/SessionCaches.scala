@@ -13,7 +13,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** The one registry for state the engine creates per session: plans,
   * persisted and checkpointed frames, Bloom broadcasts, trained
-  * quantizers, staged-copy paths and corpus scalars, each memoized
+  * quantizers and corpus scalars, each memoized
   * under (session, family, key). Reuse across one session's queries is
   * the design; [[release]] is the one teardown call, and a listener
   * drops a context's entries when that context stops.

@@ -257,35 +257,34 @@ object BandIndex {
     Dedup.probeComponentClosure(spark, dir,
       mergeBands(standingBands(spark, dir), batchBands(spark, dir)))
 
+  /** The band expire log's generations: `bands-v<n>`. */
+  private val BandsLog = "bands-v"
+
   /** A 3-version band-index publish history with retention ALREADY
-    * applied ([[IndexStore.VersionRetentionKeep]] newest kept), built
-    * once per corpus fingerprint inside the atomic layout publish so
-    * concurrent readers only ever see the post-retention state — the
+    * applied ([[IndexStore.RetentionKeep]] newest kept), built once per
+    * corpus fingerprint inside the atomic layout publish so concurrent
+    * readers only ever see the post-retention state — the
     * `orders_expire_log` pattern applied to the index family's
-    * versioned artifacts. Version 0 = the standing corpus bands,
-    * version 1 = the refresh merge ([[mergeBands]] of the change
-    * batch), version 2 = the retraction (version 1 minus erased docs'
-    * bands) — the index lifecycle's own write history. `_SUCCESS`
-    * mtimes are pinned to the publish order so the retention sweep's
-    * newest-first election is deterministic on any filesystem. */
+    * versioned artifacts, on the same [[IndexStore]] generation log.
+    * Version 0 = the standing corpus bands, version 1 = the refresh
+    * merge ([[mergeBands]] of the change batch), version 2 = the
+    * retraction (version 1 minus erased docs' bands) — the index
+    * lifecycle's own write history. */
   private def bandsExpireLog(spark: SparkSession, dir: String): java.io.File =
     IndexStore.getOrBuildLayout(spark, dir, "documents", "bands_expire_log",
       Dedup.MinhashIndexParams) { root =>
-      root.mkdirs()
       val erased = Tables.load(spark, dir, "documents")
         .filter(erasedFilter).select("doc_id")
       val v0 = standingBands(spark, dir)
       val v1 = mergeBands(v0, batchBands(spark, dir))
       val v2 = v1.join(erased, Seq("doc_id"), "left_anti")
-      Seq(v0, v1, v2).zipWithIndex.foreach { case (df, k) =>
-        val d = new java.io.File(root, s"bands-v$k")
-        df.write.mode("overwrite").parquet(d.getAbsolutePath)
-        // deterministic publish order for the mtime-keyed retention
-        new java.io.File(d, "_SUCCESS").setLastModified(1000L * (k + 1))
-        ()
+      Seq(v0, v1, v2).foreach { df =>
+        IndexStore.publishVersion(root, BandsLog) { d =>
+          df.write.mode("overwrite").parquet(d.getAbsolutePath)
+        }
       }
-      val survivors = IndexStore.expireVersionsAt(root, "bands-v",
-        IndexStore.VersionRetentionKeep)
+      val survivors = IndexStore.expireVersionsAt(root, BandsLog,
+        IndexStore.RetentionKeep)
       require(survivors.map(_.getName) == Seq("bands-v2", "bands-v1"),
         s"band-index expire left ${survivors.map(_.getName)}")
     }
@@ -301,22 +300,18 @@ object BandIndex {
     * hash, and version 0's absence is itself under the row count.
     * Read-beyond-retention fails loudly (the directory is gone) —
     * BandIndexSpec pins that and survivor row-identity. */
-  def indexExpire(spark: SparkSession, dir: String): DataFrame = {
-    val root = bandsExpireLog(spark, dir)
-    val survivors = (0 until IndexStore.VersionRetentionKeep).map { back =>
-      new java.io.File(root, s"bands-v${2 - back}")
-    }
-    survivors.zipWithIndex.map { case (d, back) =>
-      spark.read.parquet(d.getAbsolutePath)
-        .groupBy("band")
-        .agg(
-          count(lit(1)).as("n_entries"),
-          countDistinct("sig").as("n_buckets"),
-          countDistinct("doc_id").as("n_docs"))
-        .select(lit(back).as("ver_back"), col("band"),
-          col("n_entries"), col("n_buckets"), col("n_docs"))
-    }.reduce(_ unionByName _)
-  }
+  def indexExpire(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.versionsAt(bandsExpireLog(spark, dir), BandsLog)
+      .zipWithIndex.map { case ((d, _), back) =>
+        spark.read.parquet(d.getAbsolutePath)
+          .groupBy("band")
+          .agg(
+            count(lit(1)).as("n_entries"),
+            countDistinct("sig").as("n_buckets"),
+            countDistinct("doc_id").as("n_docs"))
+          .select(lit(back).as("ver_back"), col("band"),
+            col("n_entries"), col("n_buckets"), col("n_docs"))
+      }.reduce(_ unionByName _)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "minhash_incremental_indexed" -> (minhashIncrementalIndexed _),

@@ -5,7 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{IndexStore, Tables}
 
 /** Multimodal-column plumbing: opaque binary payloads + typed metadata.
   *
@@ -391,29 +391,14 @@ object Multimodal {
   }
 
   /** Materialize each document's payload as a real on-disk file, once
-    * per CORPUS — written from EXECUTORS via foreachPartition so bytes
-    * never pass through the driver. `stagingRoot` is an EXPLICIT
-    * parameter because its default (`java.io.tmpdir`) is only correct
-    * under local[k], where driver and executors share one filesystem —
-    * a real cluster MUST pass a shared/object-storage path here or the
-    * reader will see only the files its own host wrote. The
-    * directory is keyed by a corpus fingerprint (row count + summed
-    * text crc32), not just the input path: regenerated fixture data at
-    * the same path gets a fresh directory instead of stale files, and
-    * a shrunk corpus cannot leave orphaned extra files in view.
-    * Idempotent: a marker file skips the write on reruns; concurrent
-    * writers race benignly (identical bytes). */
-  def binaryFileDir(spark: SparkSession, dir: String,
-                    stagingRoot: String = sys.props("java.io.tmpdir")): String = {
-    import spark.implicits._
-    val (nDocs, fp) = Tables.load(spark, dir, "documents")
-      .agg(count(lit(1)), sum(crc32(col("text"))))
-      .as[(Long, Long)].head()
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val out = new java.io.File(
-      stagingRoot, s"graft_binary_${key}_${nDocs}_$fp")
-    val marker = new java.io.File(out, "_WRITTEN")
-    if (!marker.exists()) {
+    * per CORPUS, as an [[IndexStore]] layout — written from
+    * EXECUTORS via foreachPartition so bytes never pass through the
+    * driver. The directory is content-keyed, so regenerated fixture data
+    * at the same path gets a fresh directory instead of stale files, and
+    * a shrunk corpus cannot leave orphaned extra files in view. */
+  def binaryFileDir(spark: SparkSession, dir: String): String =
+    IndexStore.getOrBuildLayout(spark, dir, "documents", "binary") { out =>
+      import spark.implicits._
       out.mkdirs()
       val outPath = out.getAbsolutePath
       blobs(spark, dir).as[MediaBlob].foreachPartition {
@@ -424,10 +409,7 @@ object Multimodal {
               b.payload)
           }
       }
-      marker.createNewFile()
-    }
-    out.getAbsolutePath
-  }
+    }.getAbsolutePath
 
   /** The REAL binary-media source: `spark.read.format("binaryFile")`
     * over actual files (not only an inline byte column), feeding the identical decode

@@ -101,23 +101,20 @@ object MergeUpsert {
 
   // ---- snapshot log + time travel ----
 
-  /** Generations present in a snapshot log, ascending. */
-  private def listGens(root: java.io.File): Seq[Int] =
-    Option(root.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.startsWith("gen="))
-      .map(_.getName.stripPrefix("gen=").toInt).toSeq.sorted
+  /** Snapshot-log generations are `gen=<n>` partition directories, an
+    * [[graft.IndexStore]] generation log. */
+  private val Gen = "gen="
 
   /** Append `df` as the next generation of the snapshot log at `root`
-    * (`gen=<n>` partition directories — a minimal Delta-style version
-    * log: every publish is a NEW immutable generation, never an
-    * overwrite of a readable one, so in-flight readers of gen n are
-    * undisturbed by the publish of n+1). Returns the generation id. */
-  def appendSnapshot(root: java.io.File, df: DataFrame): Int = {
-    val next = listGens(root).lastOption.fold(0)(_ + 1)
-    df.write.mode("overwrite")
-      .parquet(new java.io.File(root, s"gen=$next").getAbsolutePath)
-    next
-  }
+    * (a minimal Delta-style version log: every publish is a NEW
+    * immutable generation, staged out of sight and claimed by atomic
+    * rename, never an overwrite of a readable one, so in-flight readers
+    * of gen n are undisturbed by the publish of n+1). Returns the
+    * generation id. */
+  def appendSnapshot(root: java.io.File, df: DataFrame): Int =
+    graft.IndexStore.publishVersion(root, Gen) { d =>
+      df.write.mode("overwrite").parquet(d.getAbsolutePath)
+    }._2.toInt
 
   /** Time travel: read the snapshot log as of `back` generations before
     * the newest (back = 0 → current, 1 → the pre-publish state, …).
@@ -127,11 +124,11 @@ object MergeUpsert {
     * and retention is a directory sweep of generations past the policy
     * window. */
   def readAsOf(spark: SparkSession, root: java.io.File, back: Int): DataFrame = {
-    val gens = listGens(root)
+    val gens = graft.IndexStore.versionsAt(root, Gen)
     require(back >= 0 && back < gens.length,
       s"snapshot log at $root has ${gens.length} generations; cannot go back $back")
     spark.read.parquet(root.getAbsolutePath)
-      .filter(col("gen") === gens(gens.length - 1 - back))
+      .filter(col("gen") === gens(back)._2.toInt)
       .drop("gen")
   }
 
@@ -151,19 +148,9 @@ object MergeUpsert {
     * reads as "gone", never as silently-wrong data. Returns the
     * survivors, ascending. */
   def expireSnapshots(root: java.io.File, keep: Int): Seq[Int] = {
-    require(keep >= 1,
-      s"retention must keep at least one generation, got keep=$keep")
-    listGens(root).dropRight(keep)
-      .foreach(g => rmTree(new java.io.File(root, s"gen=$g")))
-    listGens(root)
+    graft.IndexStore.expireVersionsAt(root, Gen, keep)
+    graft.IndexStore.versionsAt(root, Gen).map(_._2.toInt).reverse
   }
-
-  private def rmTree(f: java.io.File): Unit = {
-    val cs = f.listFiles(); if (cs != null) cs.foreach(rmTree); f.delete(); ()
-  }
-
-  /** Generations [[snapshotExpire]] retains. */
-  val RetentionKeep = 2
 
   /** The orders snapshot log: gen 0 = the pre-merge base, gen 1 = the
     * merged result of [[mergeUpsertOrders]]'s publish. Built once per
@@ -173,7 +160,6 @@ object MergeUpsert {
     graft.IndexStore.getOrBuildLayout(spark, dir, "orders",
       "orders_snapshot_log") { root =>
       val (base, merged) = upsertSnapshots(spark, dir)
-      root.mkdirs()
       appendSnapshot(root, base)
       appendSnapshot(root, merged)
       ()
@@ -195,30 +181,29 @@ object MergeUpsert {
 
   /** A 3-generation log (gen 0 = base, gen 1 = the upsert-merged
     * snapshot, gen 2 = the CDC-merged state) with retention ALREADY
-    * applied at publish time (newest [[RetentionKeep]] kept): the
-    * expire runs inside the atomic build, so concurrent readers only
-    * ever see the post-retention layout — the same publish-then-read
-    * discipline every artifact here follows. */
+    * applied at publish time (newest [[graft.IndexStore.RetentionKeep]]
+    * kept): the expire runs inside the atomic build, so concurrent
+    * readers only ever see the post-retention layout — the same
+    * publish-then-read discipline every artifact here follows. */
   private def ordersExpireLog(spark: SparkSession, dir: String): java.io.File =
     graft.IndexStore.getOrBuildLayout(spark, dir, "orders",
       "orders_expire_log") { root =>
       val (base, merged) = upsertSnapshots(spark, dir)
-      root.mkdirs()
       appendSnapshot(root, base)
       appendSnapshot(root, merged)
       appendSnapshot(root, applyCdc(base, cdcFeed(base)))
-      val survivors = expireSnapshots(root, RetentionKeep)
+      val survivors = expireSnapshots(root, graft.IndexStore.RetentionKeep)
       require(survivors == Seq(1, 2), s"expire left $survivors")
       ()
     }
 
   /** Declared retention query: publish three generations, expire past
-    * the [[RetentionKeep]] window, and census the SURVIVORS per
-    * generation. The oracle recomputes both surviving snapshots from
-    * the raw table — so an expire that dropped the wrong generation,
-    * leaked expired rows into a read, or renumbered survivors all
-    * break the hash, and gen 0's absence from the output is itself
-    * under the row-count check. */
+    * the [[graft.IndexStore.RetentionKeep]] window, and census the
+    * SURVIVORS per generation. The oracle recomputes both surviving
+    * snapshots from the raw table — so an expire that dropped the wrong
+    * generation, leaked expired rows into a read, or renumbered
+    * survivors all break the hash, and gen 0's absence from the output
+    * is itself under the row-count check. */
   def snapshotExpire(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(ordersExpireLog(spark, dir).getAbsolutePath)
       .groupBy(col("gen").cast("long").as("gen"))

@@ -90,22 +90,28 @@ object Similarity {
     * (1, [[LshBits]]) family. */
   lazy val planes: Seq[Seq[Double]] = planeTable(1, LshBits)(0).map(_.toSeq).toSeq
 
+  private val signBandsUdfs =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int), UserDefinedFunction]()
+
   /** The one sign-LSH kernel: every band's bucket of a (64-dim double)
     * vector column, bit j of band k set iff dot(v, plane(k, j)) > 0.
     * The plane table is built on the driver and rides in the closure;
     * each row pays one `v.toArray` copy and the [[dotA]] fold every
-    * dot product in this module uses. */
-  def signBands(bands: Int, bits: Int): UserDefinedFunction = {
-    val ps = planeTable(bands, bits)
-    udf { (v: Seq[Double]) =>
-      val a = v.toArray
-      Array.tabulate(bands) { k =>
-        var b = 0L; var j = 0
-        while (j < bits) { if (dotA(a, ps(k)(j)) > 0) b |= 1L << j; j += 1 }
-        b
+    * dot product in this module uses. One UDF per (bands, bits) per
+    * JVM: building it (`udf`'s TypeTag reflection and the plane table)
+    * costs driver time on every query build otherwise. */
+  def signBands(bands: Int, bits: Int): UserDefinedFunction =
+    signBandsUdfs.computeIfAbsent((bands, bits), _ => {
+      val ps = planeTable(bands, bits)
+      udf { (v: Seq[Double]) =>
+        val a = v.toArray
+        Array.tabulate(bands) { k =>
+          var b = 0L; var j = 0
+          while (j < bits) { if (dotA(a, ps(k)(j)) > 0) b |= 1L << j; j += 1 }
+          b
+        }
       }
-    }
-  }
+    })
 
   /** The ANN bucket of `similar_ann_lsh` and `similar_ann_multiprobe`:
     * band 0 of the (1, [[LshBits]]) family. The element always exists,

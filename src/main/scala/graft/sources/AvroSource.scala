@@ -9,15 +9,17 @@ import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{IndexStore, Tables}
+
 /** Avro source/sink round-trip — the mainstream ROW-oriented ingest
   * format beside the columnar parquet/ORC pair (Kafka pipelines and
   * CDC feeds overwhelmingly land as Avro container files). The
   * declared query writes the documents table to `.avro` container
-  * files once per corpus (fingerprint-keyed directory, `_SUCCESS`
-  * gated like the ORC twin), reads them BACK, and aggregates — while
-  * the ORACLE reads the ORIGINAL parquet: any field loss, string
-  * mangling, or id drift across the Avro write/read cycle mismatches
-  * the hash.
+  * files once per corpus (content-keyed [[IndexStore]] directory,
+  * `_SUCCESS` gated like the ORC twin), reads them BACK, and
+  * aggregates — while the ORACLE reads the ORIGINAL parquet: any field
+  * loss, string mangling, or id drift across the Avro write/read cycle
+  * mismatches the hash.
   *
   * This sandbox has the public Apache Avro core + `avro-mapred` jars
   * but not the `spark-avro` DataFrame connector module, so the
@@ -45,14 +47,13 @@ object AvroSource {
       |  {"name":"text","type":"string"}
       |]}""".stripMargin
 
-  /** The documents table staged as Avro container files
-    * ([[StagedCopy]]; `FileOutputCommitter` writes the `_SUCCESS`
-    * marker). */
+  /** The documents table staged as Avro container files (an
+    * [[IndexStore]] layout). */
   def avroDir(spark: SparkSession, dir: String): String =
-    StagedCopy.path(spark, dir, "avro") { (docs, out) =>
+    IndexStore.getOrBuildLayout(spark, dir, "documents", "avro") { out =>
       val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
       AvroJob.setOutputKeySchema(job, new Schema.Parser().parse(SchemaJson))
-      docs
+      Tables.load(spark, dir, "documents")
         .select("doc_id", "lang", "source", "text")
         .rdd
         .mapPartitions { it =>
@@ -70,11 +71,11 @@ object AvroSource {
           }
         }
         .saveAsNewAPIHadoopFile(
-          out,
+          out.getAbsolutePath,
           classOf[AvroKey[GenericRecord]], classOf[NullWritable],
           classOf[AvroKeyOutputFormat[GenericRecord]],
           job.getConfiguration)
-    }
+    }.getAbsolutePath
 
   /** Per-(lang, source) doc count, char total, and id checksum,
     * computed FROM THE AVRO COPY; the oracle computes the same from

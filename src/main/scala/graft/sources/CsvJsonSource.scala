@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.{IndexStore, Tables}
 import graft.operators.WordCount
 
 /** CSV + JSON source/sink round-trips — the two most common ingest
@@ -56,9 +57,11 @@ object CsvJsonSource {
     StructField("n_chars", LongType),
     StructField("tricky", StringType)))
 
-  /** Documents (+ tricky) staged as `fmt` ([[StagedCopy]]). */
+  /** Documents (+ tricky) staged as `fmt` (an [[IndexStore]] layout). */
   private def stagedDir(spark: SparkSession, dir: String, fmt: String): String =
-    StagedCopy.path(spark, dir, fmt) { (docs, out) =>
+    IndexStore.getOrBuildLayout(spark, dir, "documents", fmt) { dest =>
+      val out = dest.getAbsolutePath
+      val docs = Tables.load(spark, dir, "documents")
       val staged = docs.withColumn("tricky", tricky)
       fmt match {
         case "csv" => staged.write.mode("overwrite")
@@ -77,7 +80,7 @@ object CsvJsonSource {
             .as("value"))
           .write.mode("overwrite").text(out)
       }
-    }
+    }.getAbsolutePath
 
   /** The md5-60 fold mod 1e9+7, so a whole-corpus SUM stays in range. */
   private def fp1e9(c: Column): Column =

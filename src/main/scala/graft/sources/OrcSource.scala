@@ -3,12 +3,14 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{IndexStore, Tables}
+
 /** ORC source/sink round-trip — the second columnar format beside
   * parquet (built into Spark; vectorized reader, predicate pushdown,
   * column pruning all apply just like parquet). The declared query
   * writes the documents table to ORC once per corpus (executor-side
-  * `df.write.orc`, fingerprint-keyed directory like the binaryFile
-  * staging dir — regenerated fixtures get a fresh dir), reads it BACK
+  * `df.write.orc` into a content-keyed [[IndexStore]] directory —
+  * regenerated fixtures get a fresh dir), reads it BACK
   * through `spark.read.orc`, and aggregates — while the ORACLE reads
   * the ORIGINAL parquet: any loss, truncation, or type drift in the
   * ORC write/read cycle mismatches the hash. PlanShapeSpec pins that
@@ -19,10 +21,11 @@ import org.apache.spark.sql.functions._
   * compare is the driver's oracle harness itself. */
 object OrcSource {
 
-  /** The documents table staged as ORC ([[StagedCopy]]). */
+  /** The documents table staged as ORC (an [[IndexStore]] layout). */
   def orcDir(spark: SparkSession, dir: String): String =
-    StagedCopy.path(spark, dir, "orc")((docs, out) =>
-      docs.write.mode("overwrite").orc(out))
+    IndexStore.getOrBuildLayout(spark, dir, "documents", "orc") { out =>
+      Tables.load(spark, dir, "documents").write.mode("overwrite").orc(out.getAbsolutePath)
+    }.getAbsolutePath
 
   /** Per-lang doc count + total text chars, computed FROM THE ORC COPY;
     * the oracle computes the same from the original parquet. */

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{IndexStore, Tables}
 
 /** Hive-style partitioned parquet — the single biggest scan lever at
   * 100 TB: data laid out as `lang=<v>/part-*.parquet` lets a
@@ -25,11 +25,13 @@ import graft.Tables
   */
 object PartitionedParquetSource {
 
-  /** The documents table staged partitioned by `lang`
-    * ([[StagedCopy]]). */
+  /** The documents table staged partitioned by `lang` (an
+    * [[IndexStore]] layout). */
   def partitionedDir(spark: SparkSession, dir: String): String =
-    StagedCopy.path(spark, dir, "partpq")((docs, out) =>
-      docs.write.mode("overwrite").partitionBy("lang").parquet(out))
+    IndexStore.getOrBuildLayout(spark, dir, "documents", "partpq") { out =>
+      Tables.load(spark, dir, "documents").write.mode("overwrite")
+        .partitionBy("lang").parquet(out.getAbsolutePath)
+    }.getAbsolutePath
 
   /** Per-source census of ONE language, read through the partitioned
     * layout — the partition filter prunes every other lang directory

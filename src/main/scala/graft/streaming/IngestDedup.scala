@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import graft.{SessionCaches, Tables}
+import graft.{IndexStore, SessionCaches, Tables}
 import graft.dedup.{BandIndex, Dedup}
 
 /** Streaming ingest dedup — the composition of the persisted standing
@@ -267,7 +267,7 @@ object IngestDedup {
     * bottleneck — every reader opens thousands of footers to read
     * megabytes. */
   private[graft] def fragmentedStore(spark: SparkSession, dir: String): java.io.File =
-    graft.IndexStore.getOrBuildLayout(spark, dir, "documents",
+    IndexStore.getOrBuildLayout(spark, dir, "documents",
       "ingest_band_store", Dedup.MinhashIndexParams) { root =>
       val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
       val accepted = ingestDedupFold(spark, dir)
@@ -311,7 +311,7 @@ object IngestDedup {
     val nRows = frag.count()
     val nFiles = math.max(1L, (nRows + CompactRowsPerFile - 1) / CompactRowsPerFile).toInt
     val compacted = frag.select("doc_id", "band", "sig").repartition(nFiles)
-    graft.IndexStore.writeVersioned(spark, dir, "documents",
+    IndexStore.writeVersioned(spark, dir, "documents",
         "ingest_bands_compacted", compacted, Dedup.MinhashIndexParams,
         // file count is THIS query's declared contract
         // (ceil(rows/CompactRowsPerFile) via the repartition above) —
@@ -510,9 +510,7 @@ object IngestDedup {
     * before the first erasure): that reads as an empty frame. */
   private def readStore(spark: SparkSession, path: String, schema: StructType,
                         id: Long): DataFrame = {
-    val dirs = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("batch="))
-    if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+    if (batchDirs(path).isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
     else spark.read.schema(schema).parquet(path).filter(col("batch") < id)
   }
 
@@ -635,16 +633,13 @@ object IngestDedup {
     * it stays paired with compaction so the tombstone store itself
     * never grows without bound. */
   def sweepTombstones(tombPath: String, upTo: Long): Unit =
-    Option(new java.io.File(tombPath).listFiles()).getOrElse(Array.empty)
-      .filter { d =>
-        val n = d.getName
-        n.startsWith("batch=") && n.stripPrefix("batch=").toLong <= upTo
-      }
-      .foreach(rmTree)
+    batchDirs(tombPath).filter(_._2 <= upTo)
+      .foreach(b => IndexStore.deleteRecursively(b._1))
 
-  private def rmTree(f: java.io.File): Unit = {
-    val cs = f.listFiles(); if (cs != null) cs.foreach(rmTree); f.delete(); ()
-  }
+  /** A store's `batch=<id>` partition directories with their parsed
+    * ids: a plain directory listing, no Spark job. */
+  private def batchDirs(path: String): Seq[(java.io.File, Long)] =
+    IndexStore.numbered(new java.io.File(path), "batch=")
 
   /** Crash repair for [[swapBase]]'s two-rename protocol. States a
     * crash can leave behind (dot-prefixed dirs are invisible to every
@@ -663,7 +658,7 @@ object IngestDedup {
       if (!base.exists()) {
         if (!old.renameTo(base))
           throw new IllegalStateException(s"base recovery failed for $base")
-      } else rmTree(old)
+      } else IndexStore.deleteRecursively(old)
     }
   }
 
@@ -679,7 +674,7 @@ object IngestDedup {
   private def swapBase(storePath: String, staged: java.io.File, upTo: Long): Unit = {
     val base = new java.io.File(storePath, "batch=-1")
     val old = new java.io.File(storePath, ".base-old")
-    rmTree(old) // recoverBase ran at entry; any residue here is dead
+    IndexStore.deleteRecursively(old) // recoverBase ran at entry; any residue here is dead
     if (base.exists() && !base.renameTo(old))
       throw new IllegalStateException(s"compaction demote failed for $base")
     if (!staged.renameTo(base)) {
@@ -688,14 +683,9 @@ object IngestDedup {
       old.renameTo(base)
       throw new IllegalStateException(s"compaction swap failed for $base")
     }
-    rmTree(old)
-    new java.io.File(storePath).listFiles()
-      .filter { d =>
-        val n = d.getName
-        n.startsWith("batch=") && n != "batch=-1" &&
-          n.stripPrefix("batch=").toLong <= upTo
-      }
-      .foreach(rmTree)
+    IndexStore.deleteRecursively(old)
+    batchDirs(storePath).filter { case (_, b) => b != -1 && b <= upTo }
+      .foreach(b => IndexStore.deleteRecursively(b._1))
   }
 
   /** [[ingestDedupFold]]'s probe slice: the fold's accepted rows for

@@ -304,11 +304,7 @@ class BandIndexSpec extends AnyFunSuite with SharedSpark {
       val df = IndexStore.writeVersioned(spark, dir, "documents",
         "spec_expire", spark.range(10).select(col("id"), lit(k).as("ver")))
       // inputFiles points into the version's own directory (file: URI)
-      val vdir = new java.io.File(new java.net.URI(df.inputFiles.head))
-        .getParentFile
-      // pin publish order for the mtime-keyed election (same-ms writes)
-      new java.io.File(vdir, "_SUCCESS").setLastModified(1000L * (k + 1))
-      vdir
+      new java.io.File(new java.net.URI(df.inputFiles.head)).getParentFile
     }
     val survivors = IndexStore.expireVersions(spark, dir, "documents",
       "spec_expire", keep = 2)
@@ -332,46 +328,6 @@ class BandIndexSpec extends AnyFunSuite with SharedSpark {
     intercept[IllegalArgumentException] {
       IndexStore.expireVersions(spark, dir, "documents", "spec_expire", keep = 0)
     }
-  }
-
-  test("writeVersioned retain knob: refresh-then-autoexpire keeps readers " +
-    "of the newest N generations live; default leaves versions alone " +
-    "(round-13 verdict #6)") {
-    import spark.implicits._
-    val dir = tempCorpus(Seq((1L, "a b c d"), (2L, "e f g h")))
-    def publish(k: Int, retain: Option[Int]): java.io.File = {
-      val df = IndexStore.writeVersioned(spark, dir, "documents",
-        "spec_retain", spark.range(10).select(col("id"), lit(k).as("ver")),
-        retain = retain)
-      val vdir = new java.io.File(new java.net.URI(df.inputFiles.head))
-        .getParentFile
-      // pin publish order for the mtime-keyed election (same-ms writes)
-      new java.io.File(vdir, "_SUCCESS").setLastModified(1000L * (k + 1))
-      vdir
-    }
-    // default (None, no env knob in tests): publishes accumulate —
-    // certified-board behavior unchanged
-    val v0 = publish(0, None)
-    val v1 = publish(1, None)
-    assert(v0.exists() && v1.exists(),
-      "retain=None must not expire anything")
-    // opt-in retain=2 on the next publish: the new version is the
-    // newest, v1 is the handoff generation, v0 expires at publish time
-    val v2 = publish(2, Some(2))
-    assert(!v0.exists(), "publish with retain=2 must expire the third-newest")
-    assert(v1.exists() && v2.exists())
-    // readers of the surviving N generations stay live — row-identical
-    for ((d, k) <- Seq((v2, 2), (v1, 1)))
-      assert(spark.read.parquet(d.getAbsolutePath)
-        .as[(Long, Int)].collect().toSet == (0L until 10L).map((_, k)).toSet)
-    // a read beyond retention fails loudly, never as silent data
-    intercept[Exception] {
-      spark.read.parquet(v0.getAbsolutePath).collect()
-    }
-    // retain=1: only the fresh publish survives its own expire
-    val v3 = publish(3, Some(1))
-    assert(v3.exists() && !v1.exists() && !v2.exists())
-    assert(spark.read.parquet(v3.getAbsolutePath).count() == 10)
   }
 
   test("index_expire: survivor census matches recomputation; version 0 " +

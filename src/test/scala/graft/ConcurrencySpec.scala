@@ -113,6 +113,25 @@ class ConcurrencySpec extends AnyFunSuite with SharedSpark {
     assert(leftovers.isEmpty, s"orphaned staging dirs: ${leftovers.toSeq}")
   }
 
+  test("binaryFileDir: 4 threads stage a fresh corpus cold, one build") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_binrace").toString
+    spark.read.parquet(s"$sfDir/documents.parquet").filter(col("doc_id") < 20)
+      .write.parquet(s"$dir/documents.parquet")
+    val before = IndexStore.builds.get()
+    val dirs = inThreads(4)(_ => multimodal.Multimodal.binaryFileDir(spark, dir))
+    assert(dirs.distinct.size == 1, s"racing stagers resolved to ${dirs.distinct}")
+    val built = IndexStore.builds.get() - before
+    assert(built == 1, s"racing stagers ran $built builds")
+    val target = new java.io.File(dirs.head)
+    assert(new java.io.File(target, "_SUCCESS").exists())
+    assert(target.listFiles().count(_.getName.endsWith(".bin")) ==
+      spark.read.parquet(s"$dir/documents.parquet").count())
+    val leftovers = IndexStore.root.listFiles().map(_.getName)
+      .filter(n => n.startsWith(target.getName) && n.contains(".tmp-"))
+    assert(leftovers.isEmpty, s"orphaned staging dirs: ${leftovers.toSeq}")
+  }
+
   test("4 concurrent streams of mixed queries equal their serial results") {
     // memo-heavy + join-heavy + kernel queries, the mix a multi-tenant
     // session serves; FAIR pool labels exercise per-thread scheduling

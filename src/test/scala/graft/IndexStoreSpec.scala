@@ -6,12 +6,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Versioned-publish ordering and retention contracts of
-  * [[IndexStore]] (round-15 verdict #2 and #6): generation order is
-  * the MONOTONIC `-v<seq>` number claimed at publish — `_SUCCESS`
-  * mtime is only a tiebreak for legacy unnumbered names — so election
-  * and retention are deterministic even when two publishes land in
-  * the same filesystem-mtime tick, and portable to stores with
-  * unreliable mtime semantics. */
+  * [[IndexStore]]: generation order is the MONOTONIC `-v<seq>` number
+  * claimed at publish, never a `_SUCCESS` mtime, so election and
+  * retention are deterministic even when two publishes land in the same
+  * filesystem-mtime tick, and portable to stores with unreliable mtime
+  * semantics. */
 class IndexStoreSpec extends AnyFunSuite with SharedSpark {
 
   private def tempCorpus(rows: Seq[(Long, String)]): String = {
@@ -22,10 +21,9 @@ class IndexStoreSpec extends AnyFunSuite with SharedSpark {
     dir
   }
 
-  private def publish(dir: String, kind: String, k: Int,
-                      retain: Option[Int] = None): File = {
+  private def publish(dir: String, kind: String, k: Int): File = {
     val df = IndexStore.writeVersioned(spark, dir, "documents", kind,
-      spark.range(10).select(col("id"), lit(k).as("ver")), retain = retain)
+      spark.range(10).select(col("id"), lit(k).as("ver")))
     new File(new java.net.URI(df.inputFiles.head)).getParentFile
   }
 
@@ -51,8 +49,7 @@ class IndexStoreSpec extends AnyFunSuite with SharedSpark {
     assert(!v0.exists() && v1.exists())
   }
 
-  test("sequence claims skip in-progress directories; legacy UUID names " +
-    "order below every numbered generation") {
+  test("sequence claims skip claimed-but-unpublished directories") {
     val dir = tempCorpus(Seq((1L, "e f"), (2L, "g h")))
     val v0 = publish(dir, "spec_claim", 0)
     val parent = v0.getParentFile
@@ -67,39 +64,32 @@ class IndexStoreSpec extends AnyFunSuite with SharedSpark {
     // the unpublished claim is invisible to election
     assert(IndexStore.versionsAt(parent, prefix).map(_._1.getName) ==
       Seq(v2.getName, v0.getName))
-    // a legacy -v<UUID> publish (pre-r16 layout) with a FRESHER mtime
-    // still orders below numbered generations: seq wins, mtime only
-    // breaks ties among the unnumbered
-    val legacy = new File(parent, prefix + "0b2a7c1e-legacy")
-    val reRead = spark.read.parquet(v0.getAbsolutePath)
-    reRead.write.mode("overwrite").parquet(legacy.getAbsolutePath)
-    new File(legacy, "_SUCCESS").setLastModified(System.currentTimeMillis() + 60000)
-    assert(IndexStore.versionsAt(parent, prefix).map(_._1.getName) ==
-      Seq(v2.getName, v0.getName, legacy.getName))
   }
 
-  test("retention-on-publish race guard: a reader inside the retained " +
-    "window completes; a reader whose generation falls out of retain=N " +
-    "fails LOUDLY, never silently-wrong (r15 verdict #6)") {
+  test("retention race guard: readers inside keep=2 complete, outside fail loudly") {
     import spark.implicits._
     val dir = tempCorpus(Seq((1L, "i j"), (2L, "k l")))
-    val v0 = publish(dir, "spec_race", 0, retain = Some(2))
+    def publishAndExpire(k: Int): File = {
+      val v = publish(dir, "spec_race", k)
+      IndexStore.expireVersions(spark, dir, "documents", "spec_race", keep = 2)
+      v
+    }
+    val v0 = publishAndExpire(0)
     // reader holds a scan of generation 0
     val reader = spark.read.parquet(v0.getAbsolutePath)
-    // one more publish: gen 0 is still inside retain=2 — the reader's
+    // one more publish: gen 0 is still inside keep=2 — the reader's
     // generation survives and the scan completes
-    val v1 = publish(dir, "spec_race", 1, retain = Some(2))
+    val v1 = publishAndExpire(1)
     assert(v0.exists())
     assert(reader.as[(Long, Int)].collect().toSet ==
       (0L until 10L).map((_, 0)).toSet)
     // second publish: gen 0 falls out of the newest-2 window and the
-    // publish-time cut deletes it UNCONDITIONALLY (no age guard on the
-    // explicit retain path — the deployment asserted its reader
-    // concurrency fits inside N generations, IndexStore.scala
-    // RetentionDefault contract). The held reader now fails loudly.
-    val v2 = publish(dir, "spec_race", 2, retain = Some(2))
+    // explicit expire deletes it UNCONDITIONALLY (no age guard: the
+    // caller asserted its reader concurrency fits inside 2
+    // generations). The held reader now fails loudly.
+    val v2 = publishAndExpire(2)
     assert(!v0.exists() && v1.exists() && v2.exists(),
-      "retain=2 must cut exactly the generations beyond the newest two")
+      "keep=2 must cut exactly the generations beyond the newest two")
     intercept[Exception] {
       spark.read.parquet(v0.getAbsolutePath).collect()
     }

@@ -769,17 +769,9 @@ class IngestDedupSpec extends AnyFunSuite with SharedSpark {
     // out-rank this test's publish (round-16 flake).
     val fixturePrefix = graft.IndexStore.indexDir(spark, sfDir, "documents",
       "ingest_bands_compacted", graft.dedup.Dedup.MinhashIndexParams).getName + "-v"
-    val versions = graft.IndexStore.root.listFiles()
-      .filter(_.getName.startsWith(fixturePrefix))
-      .filter(d => new java.io.File(d, "_SUCCESS").exists())
+    val versions = graft.IndexStore.versionsAt(graft.IndexStore.root, fixturePrefix)
     assert(versions.nonEmpty)
-    // election order = parsed generation sequence (mtime only breaks
-    // legacy unnumbered names) — same rule as IndexStore.versionsAt
-    val newest = versions.maxBy { d =>
-      val seq = d.getName.split("-v").last
-      (if (seq.nonEmpty && seq.forall(_.isDigit)) seq.toLong else -1L,
-        new java.io.File(d, "_SUCCESS").lastModified())
-    }
+    val newest = versions.head._1
     val frag = spark.read.parquet(store.getAbsolutePath)
       .select("doc_id", "band", "sig")
     val comp = spark.read.parquet(newest.getAbsolutePath)

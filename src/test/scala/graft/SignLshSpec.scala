@@ -81,4 +81,9 @@ class SignLshSpec extends AnyFunSuite with SharedSpark {
     val got = Similarity.similarAnnLsh(spark, sfDir).as[(Long, Long, Double)].collect().toSet
     assert(got == want)
   }
+
+  test("signBands returns one UDF per (bands, bits)") {
+    assert(Similarity.signBands(4, 6) eq Similarity.signBands(4, 6))
+    assert(Similarity.signBands(4, 6) ne Similarity.signBands(4, 10))
+  }
 }

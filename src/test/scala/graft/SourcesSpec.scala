@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -122,5 +123,32 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
     assert(one.count() ==
       Tables.load(spark, sfDir, "events")
         .filter(org.apache.spark.sql.functions.col("event_type") === "click").count())
+  }
+
+  test("staged copies re-key on a change to any column, not only text") {
+    import org.apache.spark.sql.{Row, SparkSession}
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("graft_stale").toString
+    val src = spark.read.parquet(s"$sfDir/documents.parquet")
+    val rows = java.util.Arrays.asList(src.filter(col("doc_id") < 40).collect(): _*)
+    def writeDocs(relang: Column => Column): Unit =
+      spark.createDataFrame(rows, src.schema)
+        .withColumn("lang", relang(col("lang")))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def staged(s: SparkSession) = Seq(
+      sources.OrcSource.orcRoundtripAgg(s, dir),
+      sources.CsvJsonSource.csvRoundtripAgg(s, dir).select("lang", "n_docs", "sum_chars"))
+    def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map((r: Row) => r.toSeq).toSet
+    writeDocs(identity)
+    staged(spark).foreach(_.collect())
+    // same doc_ids and texts, only the langs change
+    writeDocs(l => concat(l, lit("_x")))
+    val fresh = spark.newSession()
+    val want = rowSet(fresh.read.parquet(s"$dir/documents.parquet")
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"), sum(length(col("text"))).as("sum_chars")))
+    assert(want.forall(_.head.toString.endsWith("_x")))
+    for (q <- staged(fresh)) assert(rowSet(q) == want)
   }
 }

@@ -10,8 +10,10 @@
 #   spark-warehouse/graft_bucketed_*  bucketed-table caches, keyed by
 #                                     (corpus path, rows, crc) — rebuilt
 #                                     by the next bucketed-join query
-#   /tmp/graft_index_$USER/           IndexStore artifacts (bands, PQ
-#                                     codes, CC labels) — content-keyed,
+#   /tmp/graft_index_$USER/           IndexStore directories (bands, PQ
+#                                     codes, CC labels, the source
+#                                     round-trips' staged copies,
+#                                     generation logs) — content-keyed,
 #                                     rebuilt on first read
 #   /tmp/graft_data/sf*               gen_sf.py scale corpora — exactly
 #                                     regenerated (deterministic, byte-
@@ -22,21 +24,11 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-#   /tmp/graft_{binary,json,csv,orc,avro,gzip}_*  source round-trip
-#                                     staging dirs — content-keyed
-#                                     caches, rebuilt on first query;
-#                                     the sf100 binary staging alone is
-#                                     ~20 GB and starved a later bench
-#                                     slice of disk (round-11 lesson)
 APPLY=${1:-}
 targets=()
 [ -d spark-warehouse ] && targets+=(spark-warehouse)
 [ -d "/tmp/graft_index_$(id -un)" ] && targets+=("/tmp/graft_index_$(id -un)")
 [ -d /tmp/graft_data ] && targets+=(/tmp/graft_data)
-for d in /tmp/graft_binary_* /tmp/graft_json_* /tmp/graft_csv_* \
-         /tmp/graft_orc_* /tmp/graft_avro_* /tmp/graft_gzip_*; do
-  [ -d "$d" ] && targets+=("$d")
-done
 
 if [ ${#targets[@]} -eq 0 ]; then echo "nothing to sweep"; exit 0; fi
 du -sh "${targets[@]}"
