@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * in a per-session memo would be rebuilt from the corpus in each new
   * session; here it is written ONCE to a content-keyed directory and
   * every later session, cold or warm, reads it back. The same store
-  * holds the round-trip sources' staged copies of the documents table
-  * and the numbered-generation logs of the write-path queries.
+  * holds the round-trip sources' staged copies of the documents table,
+  * the bucketed twins of orders and lineitem, and the
+  * numbered-generation logs of the write-path queries.
   *
   * Keys: `<root>/<kind>_p<params crc>_<corpus>_<rows>_<fp>`, where the
   * fingerprint is a one-pass crc32 sum over each whole row of the
@@ -164,10 +165,10 @@ object IndexStore {
   private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** [[getOrBuild]] for artifacts with a CUSTOM directory layout (a
-    * staged copy of the documents table, the ingest store's per-batch
-    * partition dirs, a generation log): the builder writes arbitrary
-    * content under a staging directory, publish is the same atomic
-    * rename. Returns the artifact directory. */
+    * staged copy of the documents table, a bucketed twin, the ingest
+    * store's per-batch partition dirs, a generation log): the builder
+    * writes arbitrary content under a staging directory, publish is the
+    * same atomic rename. Returns the artifact directory. */
   def getOrBuildLayout(spark: SparkSession, dir: String, table: String,
                        kind: String, params: String = "")
                       (write: File => Unit): File = {

@@ -788,24 +788,18 @@ object Dedup {
     }
 
   /** Shared (labels → clusters) tail of both resolution modes and of
-    * [[BandIndex.neardupClustersIndexed]]: a size census per label,
-    * joined back to the labels. The join is a plain one that AQE plans:
-    * it broadcasts the census only while it is below
-    * `autoBroadcastJoinThreshold`, so a corpus-scale census merges
-    * instead of being pinned into a driver-side broadcast. */
-  private[dedup] def clustersFrom(comp: DataFrame): DataFrame = {
-    val sizes = comp.groupBy(col("label").as("cluster_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-    comp.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
-  }
+    * [[BandIndex.neardupClustersIndexed]]: each labelled doc with its
+    * label's size, a window count over the label. One exchange on the
+    * label and no join, so no size estimate of the label frame can pick
+    * a join strategy. */
+  private[dedup] def clustersFrom(comp: DataFrame): DataFrame =
+    comp.select(col("id").as("doc_id"), col("label").as("cluster_id"),
+      count(lit(1)).over(Window.partitionBy(col("label"))).as("cluster_size"))
 
   /** The missing stage between "pairs exist" and "the pipeline works":
     * minhash pairs grouped into clusters, one row per clustered doc
     * with its cluster id (= min member id = survivor) and cluster size.
-    * Docs in no near-dup pair are absent (they survive trivially). The
-    * size join runs no count gate: AQE picks its strategy. */
+    * Docs in no near-dup pair are absent (they survive trivially). */
   def neardupClusters(spark: SparkSession, dir: String): DataFrame =
     clustersFrom(neardupComponents(spark, dir))
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.{SessionCaches, Tables}
+import graft.{IndexStore, SessionCaches, Tables}
 
 /** Bucketed CO-LOCATED fact-fact join — the shuffle-elimination
   * mitigation for the one join class broadcast can't save: both sides
@@ -20,14 +20,13 @@ import graft.{SessionCaches, Tables}
   * the plain orders⋈lineitem SQL over the raw parquet, so a bucketing
   * bug (wrong key, dropped rows, stale buckets) hash-mismatches.
   *
-  * The bucketed tables are materialized once per (session, corpus)
-  * into the warehouse, keyed by a corpus fingerprint (row count +
-  * crc32 sum — same staleness defense as the binaryFile staging dir:
-  * regenerated fixture data gets fresh buckets, never stale files).
-  * In production this write IS the ingest step — you pay one shuffle
-  * at load time and never again on the join key; at 100 TB the bucket
-  * count scales with data (thousands, not 32) and the same query text
-  * runs unchanged.
+  * The bucketed twins are [[IndexStore]] layouts, keyed like every
+  * stored artifact by their source table's whole-row fingerprint: a
+  * regenerated table gets fresh buckets, and a published twin is
+  * written once and read by every later session and JVM. In production
+  * this write IS the ingest step — you pay one shuffle at load time and
+  * never again on the join key; at 100 TB the bucket count scales with
+  * data (thousands, not 32) and the same query text runs unchanged.
   *
   * The `merge` hint keeps the demonstration honest at test scale:
   * without it Catalyst would broadcast the small-SF lineitem side and
@@ -38,69 +37,47 @@ object Bucketed {
 
   val NumBuckets = 32
 
-  /** Ensure bucketed twins of orders/lineitem exist for `dir`; returns
-    * the database name. Memoized per (session, corpus). NOTE on fresh
-    * sessions: the in-memory catalog dies with the session, so
-    * `tableExists` is false on a new session even when the warehouse
-    * files survive — the buckets are then deleted and REWRITTEN (the
-    * orphaned location would otherwise fail the CREATE). Within one
-    * session the memo prevents any re-write; cross-session reuse would
-    * need a persistent (Hive) metastore, which this sandbox lacks.
+  /** The bucketed twin of `dir`'s `table`, projected to `cols` and
+    * bucketed and sorted by the first of them.
     *
-    * The staleness fingerprint covers BOTH tables and every projected
-    * column: an orders-only key would let a regenerated lineitem — or
-    * a changed o_totalprice with keys and count unchanged — silently
-    * reuse stale buckets. */
-  def ensureBucketed(spark: SparkSession, dir: String): String =
-    SessionCaches.memo(spark, "bucketed.db", dir) {
-      import spark.implicits._
-      def fingerprint(table: String, cols: Seq[String]): (Long, Long) =
-        Tables.load(spark, dir, table)
-          .agg(count(lit(1)),
-            // concat_ws SKIPS nulls — ('a',NULL,'c') and ('a','c',NULL)
-            // would serialize identically, so a value moving between
-            // columns could reuse stale buckets; a NULL sentinel keeps
-            // placement in the fingerprint
-            sum(crc32(concat_ws("|", cols.map(c =>
-              coalesce(col(c).cast("string"), lit("\u0000NULL"))): _*))))
-          .as[(Long, Long)].head()
-      val (no, fpo) = fingerprint("orders",
-        Seq("o_orderkey", "o_custkey", "o_totalprice"))
-      val (nl, fpl) = fingerprint("lineitem",
-        Seq("l_orderkey", "l_quantity", "l_extendedprice"))
-      val key = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val db = s"graft_bucketed_${key}_${no}_${fpo}_${nl}_$fpl"
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-      // the in-memory catalog dies with the session but managed-table
-      // FILES persist in the warehouse; CREATE refuses to reuse an
-      // existing location, so clear any orphaned files before writing
-      // (same fingerprint = same data — nothing of value is lost)
-      def writeBucketed(table: String, build: => DataFrame,
-                        bucketCol: String): Unit =
-        if (!spark.catalog.tableExists(s"$db.$table")) {
-          val loc = new org.apache.hadoop.fs.Path(
-            spark.catalog.getDatabase(db).locationUri, table)
-          val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(loc)) fs.delete(loc, true)
-          build.write.mode("overwrite")
-            .bucketBy(NumBuckets, bucketCol).sortBy(bucketCol)
-            .saveAsTable(s"$db.$table")
-        }
-      writeBucketed("orders_b",
-        Tables.load(spark, dir, "orders")
-          .select("o_orderkey", "o_custkey", "o_totalprice"), "o_orderkey")
-      writeBucketed("lineitem_b",
-        Tables.load(spark, dir, "lineitem")
-          .select("l_orderkey", "l_quantity", "l_extendedprice"), "l_orderkey")
-      db
+    * Build: `DataFrameWriter.parquet` refuses `bucketBy`, so the twin is
+    * written as an EXTERNAL table under a one-off staging name, with the
+    * store's staging directory as its path; dropping that name leaves
+    * the files. The store then publishes them by its atomic rename.
+    *
+    * Read: Spark reads a directory as buckets only through a catalog
+    * table that declares them, and a session's catalog does not outlive
+    * its SparkContext. So each session registers the published directory
+    * as an external bucketed table (memoized per session; `IF NOT
+    * EXISTS` covers a sibling session of the same context). The explicit
+    * column list is required: Spark will not infer a schema for a
+    * table that declares buckets. */
+  private def twin(spark: SparkSession, dir: String, table: String,
+                   cols: Seq[String]): DataFrame = {
+    val key = cols.head
+    val loc = IndexStore.getOrBuildLayout(spark, dir, table, s"bucketed_$table",
+        s"buckets=$NumBuckets,by=$key,cols=${cols.mkString(",")}") { tmp =>
+      val staging = s"graft_staging_${java.util.UUID.randomUUID().toString.replace('-', '_')}"
+      try Tables.load(spark, dir, table).select(cols.map(col): _*).write
+        .bucketBy(NumBuckets, key).sortBy(key)
+        .option("path", tmp.getAbsolutePath).saveAsTable(staging)
+      finally spark.sql(s"DROP TABLE IF EXISTS $staging")
     }
+    SessionCaches.memo(spark, "bucketed.twin", loc.getPath) {
+      val name = s"graft_${loc.getName.replaceAll("[^A-Za-z0-9]", "_")}"
+      val ddl = spark.read.parquet(loc.getAbsolutePath).schema.toDDL
+      spark.sql(s"CREATE TABLE IF NOT EXISTS $name ($ddl) USING parquet " +
+        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $NumBuckets BUCKETS " +
+        s"LOCATION '${loc.toURI}'")
+      spark.table(name)
+    }
+  }
 
   /** Per-order item rollup over the bucketed twins: join + aggregate,
     * both on the bucket key, zero exchanges end to end. */
   def bucketedJoinRollup(spark: SparkSession, dir: String): DataFrame = {
-    val db = ensureBucketed(spark, dir)
-    val o = spark.table(s"$db.orders_b")
-    val l = spark.table(s"$db.lineitem_b")
+    val o = twin(spark, dir, "orders", Seq("o_orderkey", "o_custkey", "o_totalprice"))
+    val l = twin(spark, dir, "lineitem", Seq("l_orderkey", "l_quantity", "l_extendedprice"))
     o.hint("merge").join(l, col("o_orderkey") === col("l_orderkey"))
       .groupBy("o_orderkey")
       .agg(

@@ -34,9 +34,11 @@ import graft.Tables
   */
 object WordCount {
 
-  /** Single-space tokenization with empty tokens dropped (both engines). */
-  def tokens(c: Column): Column =
-    filter(split(c, " ", -1), w => length(w) > lit(0))
+  /** Single-space tokenization with empty tokens dropped (both engines).
+    * `array_remove` states the rule without a lambda, so it stays inside
+    * whole-stage codegen (a higher-order `filter` is evaluated per
+    * element outside it). */
+  def tokens(c: Column): Column = array_remove(split(c, " ", -1), "")
 
   /** Scala twin of [[tokens]], for typed kernels: U+0020 is the only
     * separator; tabs, case and punctuation stay inside tokens. */

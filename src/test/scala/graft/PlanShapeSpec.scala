@@ -86,7 +86,11 @@ class PlanShapeSpec extends AnyFunSuite with SharedSpark {
   test("neardup cluster resolution has no cartesian and no full-table window") {
     val p = plan("neardup_clusters")
     assert(!p.contains("CartesianProduct"), s"pair graph went quadratic:\n$p")
-    assert(!p.contains("Window"), s"unexpected window in CC plan:\n$p")
+    // the cluster size is a window count over the label: every window
+    // must be partitioned, never one funnelled into a single partition
+    val windows = p.linesIterator.filter(_.contains("Window [")).toSeq
+    assert(windows.forall(_.matches(""".*Window \[.*\], \[[^\]]+\].*""")) &&
+      !p.contains("SinglePartition"), s"full-table window in CC plan:\n$p")
   }
 
   test("multi_distinct_agg plans via Expand in one pipeline, not per-clause scans") {

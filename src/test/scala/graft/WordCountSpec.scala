@@ -43,6 +43,14 @@ class WordCountSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("tokens of a null text is null, as its split is") {
+    import spark.implicits._
+    val toks = Seq(Option.empty[String]).toDF("text")
+      .select(WordCount.tokens(org.apache.spark.sql.functions.col("text")))
+      .as[Option[Seq[String]]].head()
+    assert(toks.isEmpty)
+  }
+
   test("grams: n-token windows in order, none when n exceeds the length") {
     val ws = Array("a", "b", "c")
     assert(WordCount.grams(ws, 4, " ").isEmpty)

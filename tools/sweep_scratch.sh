@@ -7,14 +7,14 @@
 #   sweep_scratch.sh --apply    # delete
 #
 # What it sweeps and why it is safe:
-#   spark-warehouse/graft_bucketed_*  bucketed-table caches, keyed by
-#                                     (corpus path, rows, crc) — rebuilt
-#                                     by the next bucketed-join query
+#   spark-warehouse/                  leftovers of earlier runs only:
+#                                     the engine no longer writes there
 #   /tmp/graft_index_$USER/           IndexStore directories (bands, PQ
 #                                     codes, CC labels, the source
-#                                     round-trips' staged copies,
-#                                     generation logs) — content-keyed,
-#                                     rebuilt on first read
+#                                     round-trips' staged copies, the
+#                                     bucketed twins of orders and
+#                                     lineitem, generation logs) —
+#                                     content-keyed, rebuilt on first read
 #   /tmp/graft_data/sf*               gen_sf.py scale corpora — exactly
 #                                     regenerated (deterministic, byte-
 #                                     stable) by tools/gen_sf.py
